@@ -1,21 +1,21 @@
 package graft
 
 /**
- * Dev measurement tool for optimization rounds: interleaved same-session
- * A/B of the TEMPORARY `graft.ab` variant switch (see
- * [[graft.operators.AbFlag]]), plus per-run Spark JOB counts — the
- * honest statistic for driver-orchestration-bound queries whose final
- * physical plan is just a checkpoint scan.
+ * Dev measurement tool: same-session timer for a few registry queries,
+ * plus per-run Spark JOB counts — the honest statistic for
+ * driver-orchestration-bound queries whose final physical plan is just
+ * a checkpoint scan. One warm-up run per query, then N rounds; prints
+ * the minimum seconds and job count per query.
  *
- * Methodology (r19, reproduced from OPTIMIZATION_r19.md): the sandbox
- * host shows ambient co-tenancy drift up to 2x between sessions with
- * /proc/stat steal ~ 0 throughout, so cross-session numbers are
- * ordering hints only; accepted changes need variants ALTERNATED
- * A,B,A,B within one JVM, min of >=3 runs per variant, 5% tie band.
+ * Methodology (r19, reproduced from OPTIMIZATION_r19.md): hosts show
+ * ambient co-tenancy drift up to 2x between sessions, so cross-session
+ * numbers are ordering hints only; compare two builds by running this
+ * against each, alternated, min of >=3 rounds, 5% tie band.
  *
  * Usage: runMain graft.ProbeAB q_name [q_name ...]
  *   env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench; rounds via
- *   SPARK_GRAFT_PROBE_ROUNDS (default 3).
+ *   SPARK_GRAFT_PROBE_ROUNDS (default 3); SPARK_GRAFT_PROBE_JOBS=1 adds
+ *   a per-job log of one extra run per query.
  */
 object ProbeAB {
 
@@ -56,22 +56,6 @@ object ProbeAB {
     val counter = new JobCounter
     spark.sparkContext.addSparkListener(counter)
 
-    // optional per-variant session-conf overrides (runtime-settable
-    // SQLConf keys only), e.g. SPARK_GRAFT_PROBE_CONF_NEW=
-    //   "spark.sql.adaptive.coalescePartitions.parallelismFirst=false"
-    def confOf(envKey: String): Seq[(String, String)] =
-      sys.env.getOrElse(envKey, "").split(',').toSeq
-        .map(_.trim).filter(_.nonEmpty)
-        .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val confNew = confOf("SPARK_GRAFT_PROBE_CONF_NEW")
-    val confOld = confOf("SPARK_GRAFT_PROBE_CONF_OLD")
-    def setVariant(v: String): Unit = {
-      if (v == "old") System.setProperty("graft.ab", "old")
-      else System.clearProperty("graft.ab")
-      (if (v == "old") confOld else confNew)
-        .foreach { case (k, value) => spark.conf.set(k, value) }
-    }
-
     def run(n: String): (Double, Int) = {
       val j0 = counter.jobs.get()
       val t0 = System.nanoTime()
@@ -79,26 +63,14 @@ object ProbeAB {
       ((System.nanoTime() - t0) / 1e9, counter.jobs.get() - j0)
     }
 
-    // warm-up both variants (codegen/JIT for both code paths)
-    names.foreach { n =>
-      Seq("old", "new").foreach { v => setVariant(v); run(n) }
-    }
-    val res = scala.collection.mutable.Map
-      .empty[(String, String), Vector[(Double, Int)]]
+    names.foreach(run) // warm-up: codegen/JIT, fixture first touch
+    val res = scala.collection.mutable.Map.empty[String, Vector[(Double, Int)]]
     (1 to rounds).foreach { r =>
-      names.foreach { n =>
-        // alternate within the round so a drift window hits both sides
-        Seq("old", "new", "new", "old").foreach { v =>
-          setVariant(v)
-          val t = run(n)
-          res((n, v)) = res.getOrElse((n, v), Vector.empty) :+ t
-        }
-      }
+      names.foreach { n => res(n) = res.getOrElse(n, Vector.empty) :+ run(n) }
       System.err.println(s"[probe] round $r done")
     }
-    setVariant("new")
-    // verbose per-job profile of one extra run per query (new variant):
-    // the honest breakdown for driver-orchestration-bound queries
+    // verbose per-job profile of one extra run per query: the honest
+    // breakdown for driver-orchestration-bound queries
     if (sys.env.get("SPARK_GRAFT_PROBE_JOBS").contains("1")) {
       names.foreach { n =>
         counter.verbose = true
@@ -110,13 +82,10 @@ object ProbeAB {
         counter.log.forEach(l => println(l))
       }
     }
-    println(f"${"query"}%-36s ${"old_min"}%8s ${"new_min"}%8s ${"delta"}%8s  jobs old->new")
+    println(f"${"query"}%-36s ${"min_s"}%8s ${"jobs"}%6s")
     names.foreach { n =>
-      val o = res((n, "old")); val w = res((n, "new"))
-      val om = o.map(_._1).min; val nm = w.map(_._1).min
-      val verdict =
-        if (nm < om * 0.95) "WIN" else if (nm > om * 1.05) "LOSS" else "tie"
-      println(f"$n%-36s $om%8.3f $nm%8.3f ${(nm - om) / om * 100}%7.1f%%  ${o.map(_._2).min}->${w.map(_._2).min}  $verdict")
+      val r = res(n)
+      println(f"$n%-36s ${r.map(_._1).min}%8.3f ${r.map(_._2).min}%6d")
     }
     spark.stop()
   }

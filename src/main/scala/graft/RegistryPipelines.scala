@@ -2164,11 +2164,7 @@ private[graft] object RegistryPipelines {
     Q("q_jsonl_roundtrip",
       (s, d) => {
         val src = new java.io.File(pq(d, "documents"))
-        val root = contentKeyedFixture(src, "graft_jsonl") { dir =>
-          committedData(new java.io.File(dir, "data")) &&
-            new java.io.File(new java.io.File(dir, "data"),
-              "corrupt-0.json").isFile
-        } { tmp =>
+        val root = Fixture(src, "graft_jsonl") { tmp =>
           val data = new java.io.File(tmp, "data")
           graft.sources.Jsonl.write(s.read.parquet(src.getPath),
             data.toString)

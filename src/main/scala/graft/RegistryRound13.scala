@@ -117,16 +117,12 @@ private[graft] object RegistryRound13 {
     Q("q_cdc_novelty_state",
       (s, d) => {
         import graft.operators.Dedup
-        val root = contentKeyedFixture(
+        val root = Fixture(
           new java.io.File(d, "documents.parquet"),
           "graft_chunk_index",
           // chunking params + index layout version: stale fixtures
-          // from older code must not satisfy a newer probe
-          codeKey = "cdc:16,32,256;index:sketch-first") { r =>
-          new java.io.File(r, "chunks/_SUCCESS").isFile &&
-            new java.io.File(r, "sketch").isFile &&
-            new java.io.File(r, "meta.json").isFile
-        } { tmp =>
+          // from older code must not be reused by newer code
+          codeKey = "cdc:16,32,256;index:sketch-first") { tmp =>
           graft.sources.ChunkIndex.create(
             Dedup.cdcChunkHashes(RegistryRound11.cdcNoveltyHistory(s, d),
               "doc_id", "text", minSize = 16, avgSize = 32,
@@ -191,15 +187,13 @@ private[graft] object RegistryRound13 {
       (s, d) => {
         import graft.functions.TextAnalysis
         graft.plans.NativeFunctions.register(s)
-        val root = contentKeyedFixture(
+        val root = Fixture(
           new java.io.File(d, "documents.parquet"),
           "graft_langid_profiles",
           // the fixture IS the compiled-in table: key on its content
           // so widening the table rebuilds instead of reusing stale
           codeKey = TextAnalysis.charNgramProfiles.toSeq
-            .sortBy(_._1).toString.hashCode.toString) { r =>
-          new java.io.File(r, "profiles/_SUCCESS").isFile
-        } { tmp =>
+            .sortBy(_._1).toString.hashCode.toString) { tmp =>
           TextAnalysis.writeNgramProfiles(s,
             TextAnalysis.charNgramProfiles,
             new java.io.File(tmp, "profiles").toString)
@@ -500,12 +494,8 @@ private[graft] object RegistryRound13 {
         // keyed on the dialect too: the fixture's BYTES are a
         // function of the writer configuration, and /tmp outlives
         // code changes
-        val root = contentKeyedFixture(src, "graft_csv",
-            codeKey = Csv.dialectKey) { dir =>
-          committedData(new java.io.File(dir, "data")) &&
-            new java.io.File(new java.io.File(dir, "data"),
-              "corrupt-0.csv").isFile
-        } { tmp =>
+        val root = Fixture(src, "graft_csv",
+            codeKey = Csv.dialectKey) { tmp =>
           val data = new java.io.File(tmp, "data")
           Csv.write(s.read.parquet(src.getPath).unionByName(hostile),
             data.toString, maxRecordsPerFile = 200L)
@@ -546,10 +536,7 @@ private[graft] object RegistryRound13 {
     Q("q_orc_roundtrip",
       (s, d) => {
         val li = new java.io.File(pq(d, "lineitem"))
-        val root = contentKeyedFixture(li, "graft_orc") { dir =>
-          committedData(new java.io.File(dir, "lineitem")) &&
-            committedData(new java.io.File(dir, "embeddings"))
-        } { tmp =>
+        val root = Fixture(li, "graft_orc") { tmp =>
           Seq("lineitem", "embeddings").foreach { t =>
             s.read.parquet(pq(d, t)).write.mode("overwrite")
               .option("compression", "zstd")

@@ -147,13 +147,11 @@ private[graft] object RegistryRound14 {
     Q("q_text_quality_table",
       (s, d) => {
         import graft.functions.TextAnalysis
-        val root = contentKeyedFixture(
+        val root = Fixture(
           new java.io.File(d, "documents.parquet"),
           "graft_stopword_profiles",
           codeKey = TextAnalysis.stopwords.toSeq
-            .sortBy(_._1).toString.hashCode.toString) { r =>
-          new java.io.File(r, "profiles/_SUCCESS").isFile
-        } { tmp =>
+            .sortBy(_._1).toString.hashCode.toString) { tmp =>
           TextAnalysis.writeStopwordProfiles(s, TextAnalysis.stopwords,
             new java.io.File(tmp, "profiles").toString)
         }
@@ -181,13 +179,11 @@ private[graft] object RegistryRound14 {
     Q("q_gopher_signals_table",
       (s, d) => {
         import graft.functions.TextAnalysis
-        val root = contentKeyedFixture(
+        val root = Fixture(
           new java.io.File(d, "documents.parquet"),
           "graft_gopher_words",
           codeKey = TextAnalysis.gopherStopwords.toString
-            .hashCode.toString) { r =>
-          new java.io.File(r, "words/_SUCCESS").isFile
-        } { tmp =>
+            .hashCode.toString) { tmp =>
           TextAnalysis.writeStopwordProfiles(s,
             Map("gopher" -> TextAnalysis.gopherStopwords),
             new java.io.File(tmp, "words").toString)

@@ -280,20 +280,9 @@ private[graft] object RegistryRound15 {
             col("l_returnflag"))
         def ordProj = s.read.parquet(pq(d, "orders"))
           .select(col("o_orderkey"), col("o_orderstatus"))
-        val root = contentKeyedFixture(
+        val root = Fixture(
           new java.io.File(d, "lineitem.parquet"),
-          "graft_bucketed_join", codeKey = "v1:8buckets") { r =>
-          // resolve the versioned-pointer layout (li/_CURRENT → li/vN):
-          // checking `li` directly never sees the _SUCCESS that
-          // writeBucketed commits inside the version dir, so the cached
-          // fixture was rejected — and REBUILT — on every single run
-          // (round-19 optimization: q_bucketed_join 2.03 s → fixture
-          // reuse restores the ~0.3 s steady state)
-          committedData(new java.io.File(Bucketed.dataLocation(
-            new java.io.File(r, "li").toString))) &&
-            committedData(new java.io.File(Bucketed.dataLocation(
-              new java.io.File(r, "ord").toString)))
-        } { tmp =>
+          "graft_bucketed_join", codeKey = "v1:8buckets") { tmp =>
           Bucketed.writeBucketed(liProj, "graft_bli",
             new java.io.File(tmp, "li").toString, "l_orderkey", 8)
           Bucketed.writeBucketed(ordProj, "graft_bord",

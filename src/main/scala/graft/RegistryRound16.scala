@@ -209,18 +209,10 @@ private[graft] object RegistryRound16 {
       (s, d) => {
         import graft.operators.Dedup
         graft.plans.NativeFunctions.register(s)
-        val root = contentKeyedFixture(
+        val root = Fixture(
           new java.io.File(d, "documents.parquet"),
           "graft_theta_log",
-          codeKey = "theta-log:w5;shard=source;lgk20+9") { r =>
-          // partition-aware check (optimization round 19): the logs are
-          // partitionBy("shard") layouts, whose data files live under
-          // shard=... subdirs — the flat committedData check saw none
-          // and REBUILT both logs (two full shingle+sketch+write
-          // passes) on every single run
-          committedPartitionedData(new java.io.File(r, "lgk20")) &&
-            committedPartitionedData(new java.io.File(r, "lgk9"))
-        } { tmp =>
+          codeKey = "theta-log:w5;shard=source;lgk20+9") { tmp =>
           val docs = s.read.parquet(pq(d, "documents"))
             .repartition(s.sparkContext.defaultParallelism)
           Dedup.contaminationSketchLog(docs, "text", "source",
@@ -275,17 +267,9 @@ private[graft] object RegistryRound16 {
           .select(col("doc_id"), col("source"), col("n_chars"))
         def embProj = s.read.parquet(pq(d, "embeddings"))
           .select(col("vec_id"), col("label"))
-        val root = contentKeyedFixture(
+        val root = Fixture(
           new java.io.File(d, "documents.parquet"),
-          "graft_bucketed_docs", codeKey = "v1:8buckets") { r =>
-          // pointer-resolved like q_bucketed_join: the versioned layout
-          // keeps _SUCCESS inside docs/vN, so the unresolved check
-          // rebuilt the fixture every run
-          committedData(new java.io.File(Bucketed.dataLocation(
-            new java.io.File(r, "docs").toString))) &&
-            committedData(new java.io.File(Bucketed.dataLocation(
-              new java.io.File(r, "emb").toString)))
-        } { tmp =>
+          "graft_bucketed_docs", codeKey = "v1:8buckets") { tmp =>
           Bucketed.writeBucketed(docProj, "graft_bdocs",
             new java.io.File(tmp, "docs").toString, "doc_id", 8)
           Bucketed.writeBucketed(embProj, "graft_bemb",

@@ -129,11 +129,7 @@ private[graft] object RegistryRound17 {
     Q("q_jsonl_zst_roundtrip",
       (s, d) => {
         val src = new java.io.File(pq(d, "documents"))
-        val root = contentKeyedFixture(src, "graft_jsonl_zst") { dir =>
-          committedData(new java.io.File(dir, "data")) &&
-            new java.io.File(new java.io.File(dir, "data"),
-              "corrupt-0.jsonl.zst").isFile
-        } { tmp =>
+        val root = Fixture(src, "graft_jsonl_zst") { tmp =>
           val data = new java.io.File(tmp, "data")
           graft.sources.Zstd.writeJsonlZst(s.read.parquet(src.getPath),
             data.toString)
@@ -186,10 +182,7 @@ private[graft] object RegistryRound17 {
     Q("q_export_manifest",
       (s, d) => {
         val src = new java.io.File(pq(d, "documents"))
-        val root = contentKeyedFixture(src, "graft_manifest") { dir =>
-          new java.io.File(new java.io.File(dir, "data"),
-            graft.sources.Manifest.FileName).isFile
-        } { tmp =>
+        val root = Fixture(src, "graft_manifest") { tmp =>
           val data = new java.io.File(tmp, "data")
           s.read.parquet(src.getPath).repartition(4)
             .write.mode("overwrite").parquet(data.toString)

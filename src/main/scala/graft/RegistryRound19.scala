@@ -431,7 +431,7 @@ private[graft] object RegistryRound19 {
     Q("q_cdx_fetch",
       (s, d) => {
         import s.implicits._
-        // shard + index cached via contentKeyedFixture (optimization
+        // shard + index cached via the Fixture store (optimization
         // round 19): the previous form rebuilt the WARC shard into a
         // fresh NEVER-DELETED temp dir on every query construction —
         // every bench warmup/run, every Verify — leaking a dir per
@@ -439,12 +439,9 @@ private[graft] object RegistryRound19 {
         // number now measures the index-driven selective FETCH, which
         // is the operator's actual claim; the one-time build is the
         // fixture, exercised end-to-end by CdxSpec.
-        val root = contentKeyedFixture(
+        val root = Fixture(
           new java.io.File(d, "documents.parquet"),
-          "graft_cdx_fetch", codeKey = "v1:150docs") { r =>
-          new java.io.File(r, "w0.warc.gz").isFile &&
-            committedData(new java.io.File(r, "index"))
-        } { tmp =>
+          "graft_cdx_fetch", codeKey = "v1:150docs") { tmp =>
           val dir = tmp.toString
           val docs0 = s.read.parquet(pq(d, "documents"))
             .where(col("doc_id") < 150)

@@ -272,37 +272,6 @@ object SparkEntry {
        cuts AS (SELECT doc_id, MIN(i) AS s, MAX(e) AS e
          FROM g GROUP BY doc_id, grp)"""
 
-  /** Lazily-materialized admission-state fixture (band index parquet +
-    * Bloom sketch bytes) under java.io.tmpdir — built on first use,
-    * REUSED by every later run in any process, so
-    * q_ingest_admission_state's steady-state bench time measures
-    * admission against prebuilt state (the production shape: state is
-    * maintained incrementally beside the corpus, never rebuilt per
-    * batch — `IngestPipeline.nearDupIngestIncremental` is the writer).
-    * Keyed by the source table's CONTENT identity (path + length +
-    * mtime), not just its path: regenerated testdata at the same path
-    * must invalidate the fixture, or the query would admit against a
-    * stale history while the oracle replays the current data. Build
-    * lands in a temp dir, then one atomic rename publishes it — a
-    * crashed build leaves only unreferenced garbage, never a
-    * half-state the next run would trust; a PARTIALLY deleted fixture
-    * (age-based tmp cleaners remove individual files) fails the
-    * completeness probe and is rebuilt rather than read. */
-  /** The content-keyed on-disk fixture discipline, held ONCE for every
-    * registry fixture (admission state, z-ordered table):
-    *  - keyed by the source table's CONTENT identity (path + length +
-    *    mtime), so regenerated testdata at the same path invalidates
-    *    the fixture rather than being served stale state;
-    *  - `complete` probes for real data, not just the directory —
-    *    age-based tmp cleaners delete oldest-first, so part files
-    *    (written before _SUCCESS) can vanish while markers survive; a
-    *    partially deleted fixture is rebuilt, not read;
-    *  - build lands in a temp dir, ONE atomic rename publishes it — a
-    *    crashed build leaves unreferenced garbage, never half-state a
-    *    later run would trust; losing the rename race to a concurrent
-    *    builder is fine, the published copy wins;
-    *  - self-heal delete may race a concurrent healer mid-walk —
-    *    both fall through to the rebuild. */
   /** Shared CDC change set over orders: base snapshot (version 0) plus
     * updates / tombstones / inserts (version 1) — exact-valued payloads
     * (a cast key), so no FP arithmetic rides the gate. Used by
@@ -340,11 +309,8 @@ object SparkEntry {
     * committed epoch per bucket), the shape a downstream consumer
     * pays. */
   private[graft] def cdcSnapshotFixture(s: SparkSession, d: String): String = {
-    val root = contentKeyedFixture(new java.io.File(d, "orders.parquet"),
-      "graft_cdc_snapshot") { r =>
-      new java.io.File(r, "snap/epoch=0/_SUCCESS").isFile &&
-        new java.io.File(r, "snap/epoch=1/_SUCCESS").isFile
-    } { tmp =>
+    val root = Fixture(new java.io.File(d, "orders.parquet"),
+      "graft_cdc_snapshot") { tmp =>
       val snap = new java.io.File(tmp, "snap").toString
       val (base, updates) = ordersChangeSet(s, d)
       graft.streaming.CdcPipeline.applyBatch(s, base, snap,
@@ -366,12 +332,8 @@ object SparkEntry {
     * empty-now ones, or deleted keys would resurrect. Final state is
     * identical to the uncompacted snapshot, so the oracle is shared. */
   private[graft] def cdcCompactedFixture(s: SparkSession, d: String): String = {
-    val root = contentKeyedFixture(new java.io.File(d, "orders.parquet"),
-      "graft_cdc_compacted") { r =>
-      new java.io.File(r, "snap/epoch=2/_SUCCESS").isFile &&
-        !new java.io.File(r, "snap/epoch=0").exists() &&
-        !new java.io.File(r, "snap/epoch=1").exists()
-    } { tmp =>
+    val root = Fixture(new java.io.File(d, "orders.parquet"),
+      "graft_cdc_compacted") { tmp =>
       val snap = new java.io.File(tmp, "snap").toString
       val (base, updates) = ordersChangeSet(s, d)
       graft.streaming.CdcPipeline.applyBatch(s, base, snap,
@@ -391,60 +353,8 @@ object SparkEntry {
     new java.io.File(root, "snap").toString
   }
 
-  /** `codeKey`: mix a token of the BUILDER'S configuration into the
-    * cache key for fixtures whose bytes depend on code, not just on
-    * the source data (the CSV dialect, the langid profile table, CDC
-    * chunking params). Without it, a code change reuses a stale
-    * fixture built by the old code and the oracle reds mysteriously —
-    * /tmp outlives rounds. */
-  private[graft] def contentKeyedFixture(src: java.io.File, name: String,
-                                         codeKey: String = "")
-      (complete: java.io.File => Boolean)
-      (build: java.io.File => Unit): java.io.File = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${src.getPath}|${src.length}|${src.lastModified}|$codeKey"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"${name}_$key")
-    def ok: Boolean = root.exists() && complete(root)
-    if (root.exists() && !ok)
-      try org.apache.commons.io.FileUtils.deleteDirectory(root)
-      catch { case scala.util.control.NonFatal(_) => () }
-    if (!ok) {
-      val tmp = new java.io.File(root.getParentFile,
-        root.getName + ".build" + System.nanoTime())
-      build(tmp)
-      if (!tmp.renameTo(root))
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-    }
-    root
-  }
-
-  /** Commit marker + at least one visible data file under `dir`. */
-  private[graft] def committedData(dir: java.io.File): Boolean =
-    new java.io.File(dir, "_SUCCESS").isFile &&
-      Option(dir.listFiles).exists(_.exists(f =>
-        f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith(".")))
-
-  /** [[committedData]] for `partitionBy` layouts: those keep NO
-    * top-level data files (only `col=value/` dirs), so the flat check
-    * rejected — and silently REBUILT — a complete partitioned fixture
-    * on every single run (optimization round 19: the theta-log fixture
-    * paid two full shingle+sketch+write passes per bench run). Commit
-    * marker at the root + at least one data file inside a partition
-    * subdir. */
-  private[graft] def committedPartitionedData(dir: java.io.File): Boolean =
-    new java.io.File(dir, "_SUCCESS").isFile &&
-      Option(dir.listFiles).exists(_.exists(sd => sd.isDirectory &&
-        sd.getName.contains("=") &&
-        Option(sd.listFiles).exists(_.exists(f =>
-          f.isFile && !f.getName.startsWith("_") &&
-            !f.getName.startsWith(".")))))
-
   /** Lazily-materialized admission-state fixture (band index parquet +
-    * Bloom sketch bytes) via [[contentKeyedFixture]] — built on first
+    * Bloom sketch bytes) via [[Fixture]] — built on first
     * use, REUSED by every later run in any process, so
     * q_ingest_admission_state's steady-state bench time measures
     * admission against prebuilt state (the production shape: state is
@@ -452,11 +362,8 @@ object SparkEntry {
     * batch — `IngestPipeline.nearDupIngestIncremental` is the writer). */
   private[graft] def admissionState(s: SparkSession, d: String,
                              history: DataFrame): (Array[Byte], DataFrame) = {
-    val root = contentKeyedFixture(new java.io.File(d, "documents.parquet"),
-      "graft_admission_state") { r =>
-      new java.io.File(r, "sketch").isFile &&
-        committedData(new java.io.File(r, "bands"))
-    } { tmp =>
+    val root = Fixture(new java.io.File(d, "documents.parquet"),
+      "graft_admission_state") { tmp =>
       graft.operators.Dedup.minhashBands(history, "doc_id", "text")
         .withColumnRenamed("doc_id", "seen_id")
         .write.mode("overwrite")
@@ -472,7 +379,7 @@ object SparkEntry {
   }
 
   /** Lazily-materialized Z-ordered lineitem fixture via
-    * [[contentKeyedFixture]]: built once per testdata identity and
+    * [[Fixture]]: built once per testdata identity and
     * REUSED — earlier revisions rebuilt the clustered copy into a
     * fresh never-deleted temp dir on EVERY query construction (each
     * bench warmup/run, each Verify, each PlanGuard plan), leaking a
@@ -480,8 +387,8 @@ object SparkEntry {
     * measures the read-side skipping, which is the operator's claim —
     * the one-time write cost is the build, exercised by ZOrderSpec. */
   private[graft] def zorderFixture(s: SparkSession, d: String): String =
-    contentKeyedFixture(new java.io.File(d, "lineitem.parquet"),
-      "graft_zorder")(committedData) { tmp =>
+    Fixture(new java.io.File(d, "lineitem.parquet"),
+      "graft_zorder") { tmp =>
       val li = s.read.parquet(pq(d, "lineitem"))
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
       graft.sources.ZOrder.writeZOrdered(li, tmp.toString,
@@ -492,11 +399,8 @@ object SparkEntry {
     * its [[graft.sources.StatsIndex]] manifest, built once per source
     * content — the bench then measures the index-consulted read. */
   private[graft] def statsIndexFixture(s: SparkSession, d: String): java.io.File =
-    contentKeyedFixture(new java.io.File(d, "lineitem.parquet"),
-      "graft_stats_index_v3") { r =>
-      new java.io.File(r, "data/_SUCCESS").isFile &&
-        new java.io.File(r, "index/_SUCCESS").isFile
-    } { tmp =>
+    Fixture(new java.io.File(d, "lineitem.parquet"),
+      "graft_stats_index_v3") { tmp =>
       val li = s.read.parquet(pq(d, "lineitem"))
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
       val data = new java.io.File(tmp, "data").toString

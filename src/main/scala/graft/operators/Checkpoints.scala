@@ -70,13 +70,23 @@ object Checkpoints {
   def pinAsync(df: DataFrame)
       : java.util.concurrent.CompletableFuture[DataFrame] =
     java.util.concurrent.CompletableFuture.supplyAsync(() => pin(df))
-}
 
-/** TEMPORARY probe switch for interleaved same-session A/B measurement
-  * (optimization round 20): `-Dgraft.ab=old` selects the
-  * pre-optimization code path at DataFrame-construction time so the two
-  * variants can alternate inside one JVM (the r19 measurement
-  * discipline). Stripped once the round's A/Bs are decided. */
-private[graft] object AbFlag {
-  def old: Boolean = sys.props.get("graft.ab").contains("old")
+  /** Join a [[pinAsync]]-style future, rethrowing the task's own
+    * failure instead of the `CompletionException` that wraps it. */
+  def await[T](f: java.util.concurrent.CompletableFuture[T]): T =
+    try f.join()
+    catch {
+      case e: java.util.concurrent.CompletionException
+          if e.getCause != null => throw e.getCause
+    }
+
+  /** Release a [[pin]]'s blocks. `Dataset.unpersist` alone leaves a
+    * local pin's checkpointed RDD persisted, so unpersist that too. */
+  def unpin(df: DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
+  }
 }

@@ -1195,11 +1195,19 @@ object Dedup {
       minhashBands(seen, idCol, textCol, numHashes, bands, shingleWords)
         .withColumnRenamed(idCol, "seen_id")
     val bandsF = Checkpoints.pinAsync(bandsDf)
-    val sketch = buildSeenSketch(seen, textCol, expectedItems, numBits,
-      keyOf)
-    ingestAdmissionAgainstState(newDocs, seen, sketch, bandsF.join(),
-      idCol, textCol, numHashes, bands, shingleWords, minJaccard,
-      maxBucket, keyOf)
+    val sketch =
+      try buildSeenSketch(seen, textCol, expectedItems, numBits, keyOf)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          // the bands pin is already running: release it, then surface
+          // the sketch's own failure
+          try Checkpoints.unpin(Checkpoints.await(bandsF))
+          catch { case scala.util.control.NonFatal(s) => e.addSuppressed(s) }
+          throw e
+      }
+    ingestAdmissionAgainstState(newDocs, seen, sketch,
+      Checkpoints.await(bandsF), idCol, textCol, numHashes, bands,
+      shingleWords, minJaccard, maxBucket, keyOf)
   }
 
   /**

@@ -16,18 +16,14 @@ class CsvSpec extends SparkSpec {
   private val schema = new StructType()
     .add("id", LongType).add("text", StringType)
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft_csv_$name").toFile
-    d.deleteOnExit()
-    new java.io.File(d, "data").toString
-  }
+  private def tmp(): String =
+    new java.io.File(tmpDir(), "data").toString
 
   test("round-trips commas, doubled quotes, embedded CRLF/newlines") {
     val rows = Seq((1L, "a,b,c"), (2L, "say \"hi\" and \"\"bye\"\""),
       (3L, "line1\nline2\r\nline3"), (4L, "emoji 😀 中文"),
       (5L, "trailing space "), (6L, ",\",\n\"mix"))
-    val path = tmp("rt")
+    val path = tmp()
     Csv.write(rows.toDF("id", "text"), path)
     val back = Csv.readClean(spark, path, schema)
       .as[(Long, String)].collect().toSet
@@ -36,7 +32,7 @@ class CsvSpec extends SparkSpec {
 
   test("null and empty string BOTH survive the trip, distinctly") {
     val rows = Seq((1L, null), (2L, ""), (3L, "x"))
-    val path = tmp("ne")
+    val path = tmp()
     Csv.write(rows.toDF("id", "text"), path)
     val back = Csv.readClean(spark, path, schema)
       .as[(Long, String)].collect().toMap
@@ -46,7 +42,7 @@ class CsvSpec extends SparkSpec {
   }
 
   test("the \\N convention's documented corner: a literal \\N string reads back null") {
-    val path = tmp("corner")
+    val path = tmp()
     Csv.write(Seq((1L, "\\N")).toDF("id", "text"), path)
     val back = Csv.readClean(spark, path, schema)
       .as[(Long, String)].collect().toMap
@@ -54,7 +50,7 @@ class CsvSpec extends SparkSpec {
   }
 
   test("type mismatches AND token-count drift quarantine under the full schema") {
-    val path = tmp("q")
+    val path = tmp()
     Csv.write(Seq((1L, "good")).toDF("id", "text"), path)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(path, "hostile.csv"),
@@ -88,7 +84,7 @@ class CsvSpec extends SparkSpec {
       Gen.choose(0xE000.toChar, 0xFFFD.toChar))).map(_.mkString)
     val prop = Prop.forAll(Gen.listOfN(5, utf8Text)) { texts =>
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val path = tmp("prop")
+      val path = tmp()
       Csv.write(rows.toDF("id", "text"), path)
       val back = Csv.readClean(spark, path, schema)
         .as[(Long, String)].collect().toMap
@@ -108,9 +104,7 @@ class CsvSpec extends SparkSpec {
   }
 
   test("readStream ingests CSV drops with the same quarantine contract") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_csv_stream").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tmpDir())
     val data = new java.io.File(dir, "in"); data.mkdirs()
     val ckpt = new java.io.File(dir, "ckpt").toString
     def drop(name: String, content: String): Unit =
@@ -136,7 +130,7 @@ class CsvSpec extends SparkSpec {
   }
 
   test("quarantine is relative to REFERENCED columns (selective conversion, pinned)") {
-    val path = tmp("sel")
+    val path = tmp()
     Csv.write(Seq((1L, "good")).toDF("id", "text"), path)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(path, "hostile.csv"),

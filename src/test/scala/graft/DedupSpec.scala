@@ -230,6 +230,23 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("ingestAdmission: an over-cap sketch fails with its own error " +
+      "and releases the background bands pin") {
+    val seen = Seq((1L, "alpha beta gamma delta epsilon"))
+      .toDF("doc_id", "text")
+    val batch = Seq((2L, "zeta eta theta iota kappa")).toDF("doc_id", "text")
+    // compared by id, not count: the context cleaner may free an
+    // earlier test's RDD meanwhile
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val e = intercept[IllegalArgumentException] {
+      Dedup.ingestAdmission(batch, seen, "doc_id", "text",
+        numBits = 1L << 40)
+    }
+    assert(e.getMessage.contains("exceeds BloomFilterAggregate's clamp"))
+    assert(persisted.diff(before).isEmpty)
+  }
+
   test("ingestAdmission: empty history admits batch minus in-batch dups; " +
       "near-dups of history are rejected") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")

@@ -1,12 +1,35 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
+
 import graft.operators.Graph
 
 /** PageRank invariants on hand-checkable graphs: symmetry, dangling
   * redistribution, mass conservation, and layout-independence of the
   * integer-grid iteration. */
-class GraphSpec extends SparkSpec {
+class GraphSpec extends SparkSpec with TimeLimits {
   import spark.implicits._
+
+  // interrupt, not just report, an operator stuck on Observation.get
+  implicit val signaler: Signaler = ThreadSignaler
+
+  private val noEdges: Seq[(String, () => DataFrame)] = Seq(
+    "empty" -> (() => Seq.empty[(Long, Long)].toDF("s", "t")),
+    "all-null" -> (() => Seq[(Option[Long], Option[Long])](
+      (None, None), (None, None)).toDF("s", "t")))
+  private val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "pageRank" -> (e => Graph.pageRank(e, "s", "t")),
+    "hits" -> (e => Graph.hits(e, "s", "t")))
+
+  for ((op, run) <- ops; (kind, edges) <- noEdges)
+    test(s"$op on $kind edges fails fast with its require message") {
+      val e = failAfter(60.seconds) {
+        intercept[IllegalArgumentException](run(edges()))
+      }
+      assert(e.getMessage.contains(s"$op needs a non-empty edge list"))
+    }
 
   test("a 2-cycle is symmetric at exactly half the mass each") {
     val e = Seq((1L, 2L), (2L, 1L)).toDF("s", "t")

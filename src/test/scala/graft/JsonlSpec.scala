@@ -14,18 +14,14 @@ class JsonlSpec extends SparkSpec {
   private val schema = new StructType()
     .add("id", LongType).add("text", StringType)
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft_jsonl_$name").toFile
-    d.deleteOnExit()
-    new java.io.File(d, "data").toString
-  }
+  private def tmp(): String =
+    new java.io.File(tmpDir(), "data").toString
 
   test("round-trips text with newlines, quotes, unicode, and tabs") {
     val rows = Seq((1L, "line1\nline2"), (2L, "he said \"hi\""),
       (3L, "emoji 😀 中文 Ġ"), (4L, "tab\tand\\backslash"),
       (5L, ""))
-    val path = tmp("rt")
+    val path = tmp()
     Jsonl.write(rows.toDF("id", "text"), path)
     val back = Jsonl.readClean(spark, path, schema)
       .as[(Long, String)].collect().toSet
@@ -33,7 +29,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("corrupt lines are quarantined with their raw text, not dropped") {
-    val path = tmp("q")
+    val path = tmp()
     Jsonl.write(Seq((1L, "good")).toDF("id", "text"), path)
     // hostile vendor shard: broken JSON + a type-mismatched field;
     // whitespace-ONLY padding lines (tab/space) must be skipped like
@@ -55,9 +51,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("readStream ingests JSONL drops with the same quarantine contract") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_jsonl_stream").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tmpDir())
     val data = new java.io.File(dir, "in"); data.mkdirs()
     val ckpt = new java.io.File(dir, "ckpt").toString
     def drop(name: String, content: String): Unit =
@@ -91,7 +85,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("maxRecordsPerFile bounds shard size") {
-    val path = tmp("shards")
+    val path = tmp()
     Jsonl.write((1L to 10L).toDF("id")
       .withColumn("text", lit("x")), path, maxRecordsPerFile = 3)
     val parts = new java.io.File(path).listFiles

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session). */
@@ -18,8 +19,20 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
-  def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-test").toString
+
+  private val tmpDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp dir, deleted recursively after the suite. */
+  def tmpDir(): String = {
+    val d = java.nio.file.Files.createTempDirectory("graft-test").toFile
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
 }
