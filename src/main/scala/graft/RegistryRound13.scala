@@ -45,9 +45,8 @@ private[graft] object RegistryRound13 {
     // avg / 0.4 min leave noise margin while a broken cell assignment
     // or probe (the dense half collapses toward chance) reds the gate.
     Q("q_hybrid_search_ivf",
-      (s, d) => {
+      (s, d) => graft.operators.Checkpoints.scoped { scope =>
         import graft.functions.TextSearch
-        import graft.operators.Checkpoints.PinOps
         val (corpus0, queries0) = hybridFixture(s, d)
         // Optimization round 19 (guide §2.4/§3.3, §8): the exact and
         // IVF configurations previously inlined the WHOLE fixture join
@@ -60,8 +59,8 @@ private[graft] object RegistryRound13 {
         // rows per query), and the two fusions consume the same ranks.
         // Ranks/fusion arithmetic byte-identical; the gate's verdict
         // semantics (IVF-vs-exact fused recall floor) unchanged.
-        val corpus = corpus0.pinned()
-        val queries = queries0.pinned()
+        val corpus = scope.pin(corpus0)
+        val queries = scope.pin(queries0)
         // The BM25 pin and the IVF centroid build are INDEPENDENT jobs
         // over the two pinned frames; submitted sequentially the driver
         // idles through each in turn. The lex pin runs on a background
@@ -71,16 +70,15 @@ private[graft] object RegistryRound13 {
         // earlier's idle cores). Interleaved A/B: 2.75 → 2.13 s, gate
         // output verified identical. Both branches consume the same
         // pinned inputs, so ranks/fusion arithmetic is unchanged.
-        val lexF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-          TextSearch.bm25Search(
+        val lexF = scope.async(scope.pin(TextSearch.bm25Search(
             corpus.select(col("doc_id"), col("text")), "doc_id", "text",
             queries.select(col("query_id"), col("qtext")),
-            "query_id", "qtext", k = 20).pinned())
+            "query_id", "qtext", k = 20)))
         // built FIRST so its eager Lloyd jobs overlap the lex pin
         val ivfRanks = TextSearch.ivfDenseRanks(corpus, "doc_id",
           "embedding", queries, "query_id", "qv", candidates = 20,
           nlist = 16, nprobe = 8)
-        val lex = lexF.join()
+        val lex = lexF()
         val exact = TextSearch.rrfFuse(lex,
           TextSearch.exactDenseRanks(corpus, "doc_id", "embedding",
             queries, "query_id", "qv", candidates = 20),

@@ -475,14 +475,18 @@ object SparkEntry {
     "und" -> "zzz qqq xw vjq kkk")
 
 
+  /** Every operator query runs in its own pin scope: pins its operators
+    * keep for results the query consumes eagerly are released when it
+    * returns (the parity queries pin nothing). */
   private[graft] val registry: Seq[Q] =
-    RegistryParity.entries ++ RegistryExtensions.entries ++
+    RegistryParity.entries ++ (RegistryExtensions.entries ++
       RegistryPipelines.entries ++ RegistryRound3.entries ++
       RegistryRound6.entries ++ RegistryRound11.entries ++
       RegistryRound13.entries ++ RegistryRound14.entries ++
       RegistryRound15.entries ++ RegistryRound16.entries ++
       RegistryRound17.entries ++ RegistryRound18.entries ++
-      RegistryRound19.entries
+      RegistryRound19.entries).map(q => q.copy(run = (s, d) =>
+        graft.operators.Checkpoints.scoped(_ => q.run(s, d))))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpoints
+
 /**
  * Pluggable video frame decoder — the binding point for inter-frame
  * codecs (H.264/VP9/AV1) that need an external library the default
@@ -1302,10 +1304,9 @@ object Multimodal {
                                    maxBucket: Int = 1000,
                                    frameSize: Int = 512, hop: Int = 256,
                                    fanout: Int = 5): DataFrame =
-    offsetVotedProbe(
-      audioConstellationHashes(batch, frameSize, hop, fanout)
-        .localCheckpoint(true), // three consumers; decode batch once
-      index, minVotes, maxBucket)
+    Checkpoints.scoped(s => offsetVotedProbe( // three consumers; decode once
+      s.pinLocal(audioConstellationHashes(batch, frameSize, hop, fanout)),
+      index, minVotes, maxBucket))
 
   /** [[videoSequenceMatches]] in incremental form: a new video batch
     * probes a PERSISTED per-frame pHash index
@@ -1316,8 +1317,8 @@ object Multimodal {
                               index: DataFrame,
                               minVotes: Int = 5,
                               maxBucket: Int = 1000): DataFrame =
-    offsetVotedProbe(videoFrameHashes(batch).localCheckpoint(true),
-      index, minVotes, maxBucket)
+    Checkpoints.scoped(s => offsetVotedProbe(
+      s.pinLocal(videoFrameHashes(batch)), index, minVotes, maxBucket))
 
   /** Shared batch-vs-index offset voting behind the audio and video
     * incremental probes: `bh` is the batch's `(media_id, t, lh)` hash
@@ -1402,9 +1403,8 @@ object Multimodal {
   def audioConstellationMatches(media: Dataset[MediaRow],
                                 minVotes: Int = 32,
                                 maxBucket: Int = 1000): DataFrame =
-    offsetVotedPairs(
-      audioConstellationHashes(media).localCheckpoint(true),
-      minVotes, maxBucket)
+    Checkpoints.scoped(s => offsetVotedPairs(
+      s.pinLocal(audioConstellationHashes(media)), minVotes, maxBucket))
 
   /** Rate-invariant landmark table `(media_id, t, lh)` from
     * [[Codec.audioConstellationRatio]] — same narrow-map shape and
@@ -1457,11 +1457,11 @@ object Multimodal {
   def audioConstellationRatioMatches(media: Dataset[MediaRow],
                                      minVotes: Int = 12,
                                      maxBucket: Int = 1000,
-                                     minMatchFrac: Double = 0.8): DataFrame = {
+                                     minMatchFrac: Double = 0.8)
+      : DataFrame = Checkpoints.scoped { s =>
     import media.sparkSession.implicits._
-    val cand = offsetVotedPairs(
-      audioConstellationRatioHashes(media).localCheckpoint(true),
-      minVotes, maxBucket).localCheckpoint(true)
+    val cand = s.pinLocal(offsetVotedPairs(
+      s.pinLocal(audioConstellationRatioHashes(media)), minVotes, maxBucket))
     val ids = cand.select(col("id_a").as("media_id"))
       .unionAll(cand.select(col("id_b").as("media_id"))).distinct()
     val bins = media.join(broadcast(ids), Seq("media_id"), "left_semi")
@@ -1518,8 +1518,8 @@ object Multimodal {
   def videoSequenceMatches(media: Dataset[MediaRow],
                            minVotes: Int = 5,
                            maxBucket: Int = 1000): DataFrame =
-    offsetVotedPairs(videoFrameHashes(media).localCheckpoint(true),
-      minVotes, maxBucket)
+    Checkpoints.scoped(s => offsetVotedPairs(
+      s.pinLocal(videoFrameHashes(media)), minVotes, maxBucket))
 
   /** [[offsetVotedPairs]] over an ALREADY-COMPUTED `(media_id, t,
     * lh)` hash table — for callers (the streaming ingest) that hash

@@ -120,7 +120,8 @@ object Analytics {
    * driver-side.
    */
   def distributionDrift(before: DataFrame, after: DataFrame,
-                        valueCol: String, width: Double): DataFrame = {
+                        valueCol: String, width: Double)
+      : DataFrame = Checkpoints.scoped { s =>
     val hb = histogram(before, valueCol, width)
       .select(col("bin_lo"), col("n").as("__nb"))
     val ha = histogram(after, valueCol, width)
@@ -129,11 +130,10 @@ object Analytics {
     // probabilities, the totals AND the TV aggregate — without the
     // checkpoint the two input histograms would appear four times in
     // one plan and re-execute wherever exchange reuse misses
-    val joined = hb.join(ha, Seq("bin_lo"), "full_outer")
+    val joined = s.pinLocal(hb.join(ha, Seq("bin_lo"), "full_outer")
       .select(col("bin_lo"),
         coalesce(col("__nb"), lit(0L)).as("__nb"),
-        coalesce(col("__na"), lit(0L)).as("__na"))
-      .localCheckpoint(true)
+        coalesce(col("__na"), lit(0L)).as("__na")))
     val totals = joined.agg(sum(col("__nb")).as("__tb"),
       sum(col("__na")).as("__ta"))
     // an EMPTY side would make its total 0 and Spark's x/0 null — the

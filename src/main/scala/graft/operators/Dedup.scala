@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Checkpoints.PinOps
 
 import graft.functions.{Shingles, TextAnalysis}
 
@@ -102,13 +101,6 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
   }
 
-  /** Monotone suffix for `observe` metric names: names must be unique
-    * within a query plan, and one query may bucket twice (e.g. a minhash
-    * + embedding union). The metrics themselves are read per-action via
-    * `QueryExecution.observedMetrics` / a `QueryExecutionListener`. */
-  private[operators] val obsId =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
   /** observe() metrics attached to every bucketed pair expansion:
     * bucket count, over-cap (dropped) bucket count, and the largest
     * bucket — so cap-induced recall loss is VISIBLE after any action
@@ -118,10 +110,12 @@ object Dedup {
     * the executed subtree (CollectMetrics included) with an empty leaf
     * and the metric is unreachable — metrics are reliable whenever any
     * pair survives, which is every case where the drop count changes an
-    * actual result. */
+    * actual result. Names get a UUID suffix: they must be unique within
+    * a query plan, and one query may bucket twice (e.g. a minhash +
+    * embedding union). */
   private def observeBuckets(grouped: DataFrame, sizeCol: Column,
                              maxBucket: Int, prefix: String): DataFrame =
-    grouped.observe(s"${prefix}_${obsId.incrementAndGet()}",
+    grouped.observe(s"${prefix}_${java.util.UUID.randomUUID()}",
       count(lit(1)).as("n_buckets"),
       sum(when(sizeCol > maxBucket, 1L).otherwise(0L))
         .as("n_dropped_buckets"),
@@ -231,7 +225,8 @@ object Dedup {
                         idCol: String, textCol: String,
                         shingleWords: Int = 3,
                         minJaccard: Double = 0.8,
-                        useNative: Boolean = true): DataFrame = {
+                        useNative: Boolean = true)
+      : DataFrame = Checkpoints.scoped { s =>
     val shExpr =
       if (useNative) {
         graft.plans.NativeFunctions.register(df.sparkSession)
@@ -247,10 +242,9 @@ object Dedup {
     // worked-example "emit fingerprints once" shape; ~8 B per shingle
     // hash + the shingle strings); values per row are identical, so
     // every downstream pair and jaccard is unchanged.
-    val shAll = df.select(col(idCol), shExpr.as("sh"))
+    val shAll = s.pin(df.select(col(idCol), shExpr.as("sh"))
       .withColumn("shh",
-        array_sort(array_distinct(transform(col("sh"), s => xxhash64(s)))))
-      .pinned()
+        array_sort(array_distinct(transform(col("sh"), h => xxhash64(h))))))
     val sh = shAll.select(col(idCol), col("sh"))
     // sorted+distinct once per DOCUMENT; each array is then probed by
     // ~candidates-per-doc pairs through the fused primitive merge
@@ -514,7 +508,7 @@ object Dedup {
    * produce. All distributed, nothing driver-side but the convergence
    * flag; a no-change round implies the propagation step itself is at
    * fixpoint, which is exactly component-min labeling. Lineage is
-   * truncated per round with [[Checkpoints.pin]] so plans don't grow
+   * truncated per round with [[Checkpoints.Scope.pin]] so plans don't grow
    * with iterations — reliable checkpointing when the session has a
    * checkpoint dir (the cluster hardening: rounds survive executor
    * loss), localCheckpoint otherwise.
@@ -526,7 +520,8 @@ object Dedup {
    */
   def duplicateClusters(pairs: DataFrame, idA: String = "id_a",
                         idB: String = "id_b",
-                        maxIters: Int = 20): DataFrame = {
+                        maxIters: Int = 20)
+      : DataFrame = Checkpoints.scoped { s =>
     // NO dedup of the symmetrized edge list (optimization round 20):
     // every consumer is duplicate-insensitive — round 0's groupBy and
     // each round's neighborMin take min() over edge targets, and the
@@ -538,15 +533,13 @@ object Dedup {
     // edge pin (guide §2.4 "remove shuffles outright": a distinct on
     // data that is already unique). A duplicate-HEAVY caller can
     // pre-distinct its pairs; labels are identical either way.
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .pinned()
-    // empty graph: return before the loop — besides being pointless, an
-    // empty frame would let AQE's empty-relation propagation collapse
-    // the observe() below and its metric would never arrive
+    val edges = s.pin(pairs.select(col(idA).as("src"), col(idB).as("dst"))
+      .union(pairs.select(col(idB).as("src"), col(idA).as("dst"))))
+    // empty graph: nothing to label
     if (edges.isEmpty)
       return edges.select(col("src").as("id"), col("src").as("cluster"))
     var labels: DataFrame = null
+    var prev: DataFrame = null // the pin behind `labels`
     var it = 0
     var converged = false
     while (!converged && it < maxIters) {
@@ -593,24 +586,25 @@ object Dedup {
       // Convergence rides the checkpoint materialization as an
       // observe() metric — a separate isEmpty would re-scan the whole
       // label frame once per round just to count changes.
-      val obs = new org.apache.spark.sql.Observation(
-        s"graft_cc_${obsId.incrementAndGet()}")
-      def withChangeCount(df: DataFrame): DataFrame =
-        df.observe(obs,
+      def withChangeCount(df: DataFrame): (DataFrame, Row) =
+        s.observed(df,
           sum(when(col("__p") =!= col("__old"), 1L).otherwise(0L))
             .as("changed"))
-          .pinned()
-      val updated =
+      val (updated, obs) =
         if (it < 2) withChangeCount(propagated)
         else {
-          val p = propagated.pinned()
-          withChangeCount(
+          val p = s.pin(propagated)
+          val jumped = withChangeCount(
             p.join(p.select(col("id").as("__p"), col("__p").as("__pp")),
                 Seq("__p"), "left")
               .select(col("id"), col("__old"),
                 coalesce(col("__pp"), col("__p")).as("__p")))
+          s.release(p)
+          jumped
         }
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      converged = obs.getAs[Long]("changed") == 0L
+      if (prev != null) s.release(prev)
+      prev = updated
       labels = updated.select(col("id"), col("__p").as("cluster"))
       it += 1
     }
@@ -705,29 +699,28 @@ object Dedup {
    * the vector (identical embeddings ALWAYS co-assign — planted-copy
    * oracles hold verbatim, see `q_dedup_semantic_twolevel`); boundary
    * vectors may land in a different cell than the flat scan, the
-   * standard IVF coarse-quantizer trade.
+   * standard IVF coarse-quantizer trade. The input must be
+   * deterministic, as for [[Similarity.ivfTopK]].
    */
   def semanticDuplicates(df: DataFrame, idCol: String, vecCol: String,
                          nlist: Int = 16, iters: Int = 2,
                          minCosine: Double = 0.95,
                          maxBucket: Int = 1000,
                          useNative: Boolean = true,
-                         twoLevel: Boolean = false): DataFrame = {
+                         twoLevel: Boolean = false)
+      : DataFrame = Checkpoints.scoped { s =>
     val cos = Similarity.cosineFn(df, useNative)
     val nearest =
       if (twoLevel) Similarity.nearestCellFnTwoLevel(df)
       else Similarity.nearestCellFn(df, useNative, cos)
     val vecsRaw = df.select(col(idCol),
       col(vecCol).cast("array<double>").as("v"))
-    // seed collect overlapped with the pin (guide §2.6,
-    // Similarity.seedsAsync — content-deterministic)
-    val seedF = Similarity.seedsAsync(vecsRaw, idCol, "v", nlist)
     // pinned once: the Lloyd loop (iters + 1 jobs), the cell keying and
     // the two pair-verification joins below all read this frame —
     // unpinned, each re-runs the source scan + cast
-    val vecs = vecsRaw.pinned()
-    val centroids = Similarity.buildCentroids(vecs, idCol, "v", nlist,
-      iters, nearest, Similarity.joinSeeds(seedF))
+    val (vecs, seeds) = Similarity.pinWithSeeds(s, vecsRaw, idCol, "v", nlist)
+    val centroids = Similarity.buildCentroids(vecs, idCol, "v", iters,
+      nearest, seeds)
     if (centroids.isEmpty)
       // empty corpus: empty pair frame with the contract schema
       return vecs.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
@@ -764,7 +757,8 @@ object Dedup {
                     maxBucket: Int = 1000,
                     useNative: Boolean = true,
                     keepPolicy: String = "min_id",
-                    twoLevel: Boolean = false): DataFrame = {
+                    twoLevel: Boolean = false)
+      : DataFrame = Checkpoints.scoped { _ =>
     require(keepPolicy == "min_id" || keepPolicy == "farthest",
       s"keepPolicy must be min_id or farthest, got $keepPolicy")
     val labels = duplicateClusters(semanticDuplicates(df, idCol, vecCol,
@@ -800,24 +794,24 @@ object Dedup {
    * Production ingestion persists the frame PARTITIONED BY `cell`
    * (plus the centroid table) beside the corpus and re-clusters only
    * on drift — the public builder, like [[minhashBands]] is for the
-   * banded index.
+   * banded index. The input must be deterministic, as for
+   * [[Similarity.ivfTopK]]; the index frame reads a pin (release it
+   * with [[Checkpoints.unpin]]).
    */
   def semanticIndex(vecs: DataFrame, idCol: String, vecCol: String,
                     nlist: Int = 16, iters: Int = 2,
                     useNative: Boolean = true)
-      : (Array[Seq[Double]], DataFrame) = {
+      : (Array[Seq[Double]], DataFrame) = Checkpoints.scoped { s =>
     val cos = Similarity.cosineFn(vecs, useNative)
     val nearest = Similarity.nearestCellFn(vecs, useNative, cos)
     val vRaw = vecs.select(col(idCol).as("seen_id"),
       col(vecCol).cast("array<double>").as("seen_vec"))
-    // seed collect overlapped with the pin (guide §2.6,
-    // Similarity.seedsAsync)
-    val seedF = Similarity.seedsAsync(vRaw, "seen_id", "seen_vec", nlist)
     // pinned for the same reason as `semanticDuplicates`: the Lloyd
     // jobs and the final cell assignment all read it
-    val v = vRaw.pinned()
+    val (v, seeds) =
+      Similarity.pinWithSeeds(s, vRaw, "seen_id", "seen_vec", nlist)
     val centroids = Similarity.buildCentroids(v, "seen_id", "seen_vec",
-      nlist, iters, nearest, Similarity.joinSeeds(seedF))
+      iters, nearest, seeds)
     if (centroids.isEmpty)
       (centroids, v.withColumn("cell", lit(0)).limit(0))
     else (centroids, v.withColumn("cell", nearest(centroids,
@@ -982,17 +976,17 @@ object Dedup {
                                      shingleWords: Int = 3,
                                      minJaccard: Double = 0.8,
                                      maxBucket: Int = 1000,
-                                     useNative: Boolean = true): DataFrame = {
+                                     useNative: Boolean = true)
+      : DataFrame = Checkpoints.scoped { s =>
     // pinned (optimization round 19): the batch's band rows feed THREE
     // consumers below (the index semi-join probe, the hot-key anti-join
     // input, and the candidate join) — without the pin each consumer
     // re-runs the batch's minhash signatures; batch-sized by contract
     // (docs × bands fixed-width rows), the same class as the pins in
     // ingestAdmissionAgainstState
-    val nb = minhashBands(newDocs, idCol, textCol, numHashes, bands,
+    val nb = s.pin(minhashBands(newDocs, idCol, textCol, numHashes, bands,
       shingleWords, useNative)
-      .withColumnRenamed(idCol, "new_id")
-      .pinned()
+      .withColumnRenamed(idCol, "new_id"))
     // only index rows whose key the batch touches participate — the
     // hot-key count and the candidate join are both per-key, so
     // restricting to the batch's (band, band_hash) keys is
@@ -1015,11 +1009,10 @@ object Dedup {
     // tokenize-only-colliding-docs semi-join probes and the final
     // verification join) would each re-run the banded candidate join
     // lineage above; candidates are output-sized (band-colliding pairs)
-    val cand = nb.join(hotKeys, Seq("band", "band_hash"), "left_anti")
+    val cand = s.pin(nb.join(hotKeys, Seq("band", "band_hash"), "left_anti")
       .join(sb, Seq("band", "band_hash"))
       .select(col("new_id"), col("seen_id"))
-      .distinct()
-      .pinned()
+      .distinct())
     val shingles = shingleFn(newDocs, shingleWords, useNative)
     // tokenize only colliding docs on each side
     val newSh = newDocs
@@ -1181,7 +1174,8 @@ object Dedup {
                       shingleWords: Int = 3,
                       minJaccard: Double = 0.8,
                       maxBucket: Int = 1000,
-                      keyOf: Column => Column = identity): DataFrame = {
+                      keyOf: Column => Column = identity)
+      : DataFrame = Checkpoints.scoped { s =>
     // The history band index and the history membership sketch are
     // INDEPENDENT computations over `seen`; built sequentially, the
     // band lineage used to evaluate inside the candidate-pin job three
@@ -1194,20 +1188,11 @@ object Dedup {
     val bandsDf =
       minhashBands(seen, idCol, textCol, numHashes, bands, shingleWords)
         .withColumnRenamed(idCol, "seen_id")
-    val bandsF = Checkpoints.pinAsync(bandsDf)
-    val sketch =
-      try buildSeenSketch(seen, textCol, expectedItems, numBits, keyOf)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // the bands pin is already running: release it, then surface
-          // the sketch's own failure
-          try Checkpoints.unpin(Checkpoints.await(bandsF))
-          catch { case scala.util.control.NonFatal(s) => e.addSuppressed(s) }
-          throw e
-      }
-    ingestAdmissionAgainstState(newDocs, seen, sketch,
-      Checkpoints.await(bandsF), idCol, textCol, numHashes, bands,
-      shingleWords, minJaccard, maxBucket, keyOf)
+    val bandsPin = s.async(s.pin(bandsDf))
+    val sketch = buildSeenSketch(seen, textCol, expectedItems, numBits, keyOf)
+    ingestAdmissionAgainstState(newDocs, seen, sketch, bandsPin(),
+      idCol, textCol, numHashes, bands, shingleWords, minJaccard, maxBucket,
+      keyOf)
   }
 
   /**
@@ -1256,7 +1241,7 @@ object Dedup {
                                   minJaccard: Double = 0.8,
                                   maxBucket: Int = 1000,
                                   keyOf: Column => Column = identity)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val batch = exact(
       newDocs.select(col(idCol), col(textCol),
         md5(keyOf(col(textCol)).cast("binary")).as("__h")),
@@ -1274,7 +1259,7 @@ object Dedup {
     // gate is the literal's own size — scale-adaptive by construction.
     val flagged0 = bloomFlagsFromSketch(batch, idCol, textCol, sketch, keyOf)
     val flagged =
-      if (sketch.exists(_.length >= (1 << 20))) flagged0.localCheckpoint(true)
+      if (sketch.exists(_.length >= (1 << 20))) s.pinLocal(flagged0)
       else flagged0
     val clean = flagged.where(!col("maybe_seen")).drop("maybe_seen")
     val suspects = flagged.where(col("maybe_seen")).drop("maybe_seen")
@@ -1283,7 +1268,7 @@ object Dedup {
     // checkpointed: four consumers (band projection, both candidate-id
     // semi-joins, the final anti-join) would each re-execute the
     // window + anti-join lineage above — again batch-sized
-    val candidates = clean.unionByName(exactNovel).localCheckpoint(true)
+    val candidates = s.pinLocal(clean.unionByName(exactNovel))
     val nearMatches = incrementalMinhashAgainstIndex(candidates, seenBands,
       seenTexts, idCol, textCol, numHashes, bands, shingleWords,
       minJaccard, maxBucket)
@@ -1818,9 +1803,10 @@ object Dedup {
                           minSize: Int = 32, avgSize: Int = 64,
                           maxSize: Int = 128,
                           minSharedChunks: Int = 1,
-                          maxBucket: Int = 1000): DataFrame = {
-    val chunks = cdcChunkHashes(df, idCol, textCol, minSize, avgSize,
-      maxSize).localCheckpoint(true)
+                          maxBucket: Int = 1000)
+      : DataFrame = Checkpoints.scoped { s =>
+    val chunks = s.pinLocal(cdcChunkHashes(df, idCol, textCol, minSize,
+      avgSize, maxSize))
     val hot = chunks.groupBy(col("chunk_hash"))
       .agg(count_distinct(col(idCol)).as("__n"))
       .where(col("__n") > maxBucket).select(col("chunk_hash"))
@@ -1893,9 +1879,10 @@ object Dedup {
   def cdcNoveltyAgainstIndex(df: DataFrame, idCol: String,
                              textCol: String, indexDir: String,
                              minSize: Int = 32, avgSize: Int = 64,
-                             maxSize: Int = 128): DataFrame = {
-    val chunks = cdcChunkHashes(df, idCol, textCol, minSize, avgSize,
-      maxSize).localCheckpoint(true) // two consumers: totals + novelty
+                             maxSize: Int = 128)
+      : DataFrame = Checkpoints.scoped { s =>
+    val chunks = s.pinLocal(cdcChunkHashes(df, idCol, textCol, minSize,
+      avgSize, maxSize)) // two consumers: totals + novelty
     val novel = novelAgainstIndex(chunks, df.sparkSession, indexDir)
       .groupBy(col(idCol))
       .agg(sum(col("chunk_len")).as("novel_bytes"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Checkpoints.PinOps
 
 /**
  * Web-graph analytics over an edge list — the ranking half of a crawl
@@ -43,7 +42,7 @@ object Graph {
    * Scale shape: per round ONE hash join (ranks ⋈ edges on src) + ONE
    * groupBy(dst) with map-side Long partials + a one-row dangling
    * aggregate; the rank frame is pinned per round via
-   * [[Checkpoints.pin]] — reliable checkpoint when the session has a
+   * [[Checkpoints.Scope.pin]] — reliable checkpoint when the session has a
    * checkpoint dir, localCheckpoint otherwise; the `duplicateClusters`
    * lineage discipline: plan growth O(1) per round, each round
    * computed once. Driver holds one Long per
@@ -52,7 +51,7 @@ object Graph {
    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, dampingNum: Long = 17L,
-               dampingDen: Long = 20L): DataFrame = {
+               dampingDen: Long = 20L): DataFrame = Checkpoints.scoped { s =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampingNum > 0 && dampingNum < dampingDen,
       s"damping must be a rational in (0,1), got $dampingNum/$dampingDen")
@@ -62,26 +61,22 @@ object Graph {
     require(dampingDen <= 1000L,
       s"dampingDen must be <= 1000 (Long overflow headroom), " +
         s"got $dampingDen")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = s.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .pinned()
+      .distinct())
     // node count rides the node pin as an observe metric (optimization
     // round 20, the duplicateClusters convergence pattern): a separate
     // count() job re-scanned the just-materialized frame once per call
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-    val obsN = new org.apache.spark.sql.Observation(
-      s"graft_pr_n_${graft.operators.Dedup.obsId.incrementAndGet()}")
-    val nodes = nodes0.observe(obsN, count(lit(1)).as("n")).pinned()
-    val n = obsN.get("n").asInstanceOf[Long]
+    val (nodes, obsN) = s.observed(nodes0, count(lit(1)).as("n"))
+    val n = obsN.getAs[Long]("n")
     require(n > 0, "pageRank needs a non-empty edge list")
     val (p, q) = (dampingNum, dampingDen)
     // base share (1-d)/N on the grid, half-away-from-zero
     val base = (2L * Scale * (q - p) + q * n) / (2L * q * n)
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-      .pinned()
+    val outdeg = s.pin(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")))
     // the uniform start needs no pin of its own: it is one narrow
     // literal column over the pinned node set (optimization round 20 —
     // the pin here cost a job per call and saved nothing)
@@ -95,15 +90,11 @@ object Graph {
       // rides the pin as an observe metric — a separate aggregate job
       // re-scanned the materialization once per round (optimization
       // round 20, guide §1.2: fewer sequential driver-blocking jobs)
-      val obs = new org.apache.spark.sql.Observation(
-        s"graft_pr_d_${graft.operators.Dedup.obsId.incrementAndGet()}")
-      val withDeg = ranks.join(outdeg,
-          ranks("node") === outdeg("src"), "left")
-        .observe(obs,
-          coalesce(sum(when(col("__deg").isNull, col("r"))), lit(0L))
-            .as("dm"))
-        .pinned()
-      val dangling = obs.get("dm").asInstanceOf[Long]
+      val (withDeg, obs) = s.observed(
+        ranks.join(outdeg, ranks("node") === outdeg("src"), "left"),
+        coalesce(sum(when(col("__deg").isNull, col("r"))), lit(0L))
+          .as("dm"))
+      val dangling = obs.getAs[Long]("dm")
       val dshare = (2L * p * dangling + q * n) / (2L * q * n)
       val contribs = withDeg.where(col("__deg").isNotNull)
         .select(col("node"),
@@ -113,24 +104,17 @@ object Graph {
         .groupBy(col("__ed").as("node"))
         .agg(sum(col("__c")).as("__in"))
       val prev = ranks
-      ranks = nodes.join(contribs, Seq("node"), "left")
+      ranks = s.pin(nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(base + dshare) +
             expr(s"(2 * $p * coalesce(__in, 0L) + $q) div (2 * $q)"))
-            .as("r"))
-        .pinned()
+            .as("r")))
       // exactly one live rank snapshot: the new round is materialized
-      // (eager checkpoint above), so the previous round's blocks — and
-      // the per-round join pin — can go
-      prev.unpersist()
-      withDeg.unpersist()
+      // (eager pin above), so the previous round's blocks — and the
+      // per-round join pin — can go
+      s.release(prev)
+      s.release(withDeg)
     }
-    // the final ranks checkpoint alone backs the result — release the
-    // loop-invariant pins (edges, node set, outdegrees) so they don't
-    // occupy the block manager for the rest of the session
-    e.unpersist()
-    nodes.unpersist()
-    outdeg.unpersist()
     ranks.select(col("node"),
       (col("r").cast("double") / Scale).as("rank"))
   }
@@ -159,26 +143,23 @@ object Graph {
    *
    * Scale shape per round: two key joins (scores ⋈ edges) + two
    * map-side-combined groupBys + two one-row sums; score frames are
-   * pinned per round ([[Checkpoints.pin]] — plan growth O(1) per
+   * pinned per round ([[Checkpoints.Scope.pin]] — plan growth O(1) per
    * round). Nodes without outlinks keep hub 0; without inlinks,
    * authority 0 — they stay in the output.
    */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int = 2): DataFrame = {
+           iters: Int = 2): DataFrame = Checkpoints.scoped { s =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = s.pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .pinned()
+      .distinct())
     // node count rides the node pin as an observe metric (optimization
     // round 20 — the pageRank rationale)
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-    val obsN = new org.apache.spark.sql.Observation(
-      s"graft_hits_n_${graft.operators.Dedup.obsId.incrementAndGet()}")
-    val nodes = nodes0.observe(obsN, count(lit(1)).as("n")).pinned()
-    val n = obsN.get("n").asInstanceOf[Long]
+    val (nodes, obsN) = s.observed(nodes0, count(lit(1)).as("n"))
+    val n = obsN.getAs[Long]("n")
     require(n > 0, "hits needs a non-empty edge list")
 
     // SUM-normalize a long score column back onto the Scale grid:
@@ -189,18 +170,14 @@ object Graph {
     // sum and the normalize pass read the same materialization (the
     // pageRank dangling-aggregate discipline).
     def normalized(raw: DataFrame, c: String): DataFrame = {
-      val obs = new org.apache.spark.sql.Observation(
-        s"graft_hits_s_${graft.operators.Dedup.obsId.incrementAndGet()}")
-      val pre = raw.observe(obs,
-        coalesce(sum(col(c)), lit(0L)).as("s")).pinned()
-      val s = obs.get("s").asInstanceOf[Long]
-      require(s > 0, "score mass vanished — empty edge list half")
-      val out = pre.select(col("node"),
+      val (pre, obs) = s.observed(raw, coalesce(sum(col(c)), lit(0L)).as("s"))
+      val m = obs.getAs[Long]("s")
+      require(m > 0, "score mass vanished — empty edge list half")
+      val out = s.pin(pre.select(col("node"),
         expr(s"(2 * cast($Scale as decimal(38,0)) * cast($c as " +
-          s"decimal(38,0)) + $s) div (2 * cast($s as decimal(38,0)))")
-          .as(c))
-        .pinned()
-      pre.unpersist()
+          s"decimal(38,0)) + $m) div (2 * cast($m as decimal(38,0)))")
+          .as(c)))
+      s.release(pre)
       out
     }
 
@@ -219,7 +196,7 @@ object Graph {
           .join(nodes, col("__node") === col("node"), "right")
           .select(col("node"), coalesce(col("a"), lit(0L)).as("a")),
         "a")
-      if (prevA != null) prevA.unpersist()
+      if (prevA != null) s.release(prevA)
       // hubs from authorities: h'_i = Σ_{i→j} a_j
       val prevH = hubs
       hubs = normalized(
@@ -229,14 +206,11 @@ object Graph {
           .join(nodes, col("__node") === col("node"), "right")
           .select(col("node"), coalesce(col("h"), lit(0L)).as("h")),
         "h")
-      prevH.unpersist()
+      s.release(prevH)
     }
-    val out = hubs.join(auths, Seq("node"))
+    hubs.join(auths, Seq("node"))
       .select(col("node"),
         (col("h").cast("double") / Scale).as("hub"),
         (col("a").cast("double") / Scale).as("authority"))
-    e.unpersist()
-    nodes.unpersist()
-    out
   }
 }

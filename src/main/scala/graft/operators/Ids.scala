@@ -33,11 +33,13 @@ object Ids {
    */
   def stableOrdinals(df: DataFrame, orderCol: String,
                      ordCol: String = "ordinal",
-                     numPartitions: Int = 0): DataFrame = {
+                     numPartitions: Int = 0)
+      : DataFrame = Checkpoints.scoped { s =>
     val parts = if (numPartitions > 0) numPartitions
       else df.sparkSession.sparkContext.defaultParallelism
-    val ranged = df.repartitionByRange(parts, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
+    // pinned for one partitioning across both branches (Pack.prefixSum)
+    val ranged = s.pinLocal(df.repartitionByRange(parts, col(orderCol))
+      .withColumn("__pid", spark_partition_id()))
     // partition sizes: numPartitions rows — driver-safe by construction
     val offsets = ranged.groupBy(col("__pid")).count()
       .select(col("__pid"),

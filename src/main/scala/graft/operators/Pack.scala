@@ -27,11 +27,14 @@ object Pack {
    */
   def prefixSum(df: DataFrame, orderCol: String, valueCol: String,
                 outCol: String = "cumsum",
-                numPartitions: Int = 0): DataFrame = {
+                numPartitions: Int = 0): DataFrame = Checkpoints.scoped { s =>
     val parts = if (numPartitions > 0) numPartitions
       else df.sparkSession.sparkContext.defaultParallelism
-    val ranged = df.repartitionByRange(parts, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
+    // pinned: the offsets and the windows must see ONE partitioning —
+    // evaluated twice, the range bounds come from two reservoir samples
+    // (seeded by RDD id) and a row's __pid can differ between branches
+    val ranged = s.pinLocal(df.repartitionByRange(parts, col(orderCol))
+      .withColumn("__pid", spark_partition_id()))
     val offsets = ranged.groupBy(col("__pid"))
       .agg(sum(col(valueCol)).as("__psum"))
       .select(col("__pid"),

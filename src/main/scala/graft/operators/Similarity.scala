@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Checkpoints.PinOps
 
 import graft.plans.NativeFunctions
 
@@ -287,12 +286,18 @@ object Similarity {
    * it. At 100 TB: the assignment pass is a narrow map, the cell join is
    * a hash join on cellId, and nothing driver-side grows with corpus
    * size.
+   *
+   * The corpus lineage is read twice at once (seed sample and pin), so
+   * it must be deterministic — the same rows on every read. One that
+   * yields no seeds is re-seeded from the pin; one that yields other
+   * rows seeds the centroids from rows the index never sees.
    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               corpusId: String, corpusVec: String,
               queryId: String, queryVec: String,
               k: Int, nlist: Int = 16, nprobe: Int = 4,
-              iters: Int = 2, useNative: Boolean = true): DataFrame = {
+              iters: Int = 2, useNative: Boolean = true)
+      : DataFrame = Checkpoints.scoped { s =>
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
     val cos = cosineFn(corpus, useNative)
     val nearest = nearestCellFn(corpus, useNative, cos)
@@ -303,13 +308,10 @@ object Similarity {
     // one-materialization-many-iterations shape as `ivfpqIndex`.
     val cRaw = corpus.select(col(corpusId),
       col(corpusVec).cast("array<double>").as("cv"))
-    // seed collect overlapped with the pin (guide §2.6 — both scan the
-    // same frame; the seed is content-deterministic, see seedsAsync)
-    val seedF = seedsAsync(cRaw, corpusId, "cv", nlist)
-    val c = cRaw.pinned()
+    val (c, seeds) = pinWithSeeds(s, cRaw, corpusId, "cv", nlist)
 
-    val centroids = buildCentroids(c, corpusId, "cv", nlist, iters,
-      nearest, joinSeeds(seedF))
+    val centroids = buildCentroids(c, corpusId, "cv", iters, nearest,
+      seeds)
 
     if (centroids.isEmpty) {
       // empty corpus: nothing to index; empty result, search schema
@@ -348,13 +350,10 @@ object Similarity {
    * avg, and the regrouped buffer is just dim structs.
    */
   private[operators] def buildCentroids(
-      c: DataFrame, corpusId: String, vecCol: String, nlist: Int,
-      iters: Int,
+      c: DataFrame, corpusId: String, vecCol: String, iters: Int,
       nearest: (Array[Seq[Double]], Column) => Column,
-      seeds: Option[Array[Seq[Double]]] = None)
-      : Array[Seq[Double]] = {
-    var centroids: Array[Seq[Double]] = seeds.getOrElse(
-      collectSeeds(c, corpusId, vecCol, nlist))
+      seeds: Array[Seq[Double]]): Array[Seq[Double]] = {
+    var centroids = seeds
     if (centroids.isEmpty) return centroids
     val dim = centroids(0).length
     (1 to iters).foreach { _ =>
@@ -389,23 +388,21 @@ object Similarity {
     .orderBy(col("__h")).limit(k)
     .select(col(vecCol)).collect().map(_.getSeq[Double](0))
 
-  /** [[collectSeeds]] launched from a background thread over the
-    * UNPINNED lineage, so the seed job overlaps the pin that follows it
-    * (guide §2.6): pin and seed both scan the same small frame, and
-    * submitted sequentially the driver idles through two job latencies
-    * where one suffices. Content-deterministic, so the overlapped seed
-    * is byte-identical to the sequential one. */
-  private[operators] def seedsAsync(raw: DataFrame, idCol: String,
-      vecCol: String, k: Int)
-      : java.util.concurrent.CompletableFuture[Array[Seq[Double]]] =
-    java.util.concurrent.CompletableFuture.supplyAsync(() =>
-      collectSeeds(raw, idCol, vecCol, k))
-
-  /** Unwrap an [[seedsAsync]] future into [[buildCentroids]]' `seeds`
-    * parameter. */
-  private[operators] def joinSeeds(
-      f: java.util.concurrent.CompletableFuture[Array[Seq[Double]]])
-      : Option[Array[Seq[Double]]] = Option(f.join())
+  /** Pin `raw` while [[collectSeeds]] runs over its UNPINNED lineage as
+    * an async job, so the seed job overlaps the pin (guide §2.6): both
+    * scan the same small frame, and submitted sequentially the driver
+    * idles through two job latencies where one suffices. The seed is a
+    * function of content, so over a deterministic lineage it equals the
+    * pin's; a lineage that yields NO seeds is re-seeded from the pin. */
+  private[operators] def pinWithSeeds(s: Checkpoints.Scope, raw: DataFrame,
+      idCol: String, vecCol: String, k: Int)
+      : (DataFrame, Array[Seq[Double]]) = {
+    val seeds = s.async(collectSeeds(raw, idCol, vecCol, k))
+    val pinned = s.pin(raw)
+    val got = seeds()
+    (pinned,
+      if (got.nonEmpty) got else collectSeeds(pinned, idCol, vecCol, k))
+  }
 
   /** Per-group mean vector — (keyCol, `__mean` array<double>) — via the
     * per-(group, dim) posexplode shape: a group holds ~corpus/k
@@ -687,10 +684,7 @@ object Similarity {
       assigned: DataFrame, residCol: String, m: Int, dsub: Int,
       ksub: Int, iters: Int,
       enc: (Column, Seq[Seq[Seq[Double]]]) => Column,
-      seeds0: Option[Array[Seq[Double]]] = None)
-      : Array[Array[Seq[Double]]] = {
-    val seeds = seeds0.getOrElse(
-      collectSeeds(assigned, "__id", residCol, ksub))
+      seeds: Array[Seq[Double]]): Array[Array[Seq[Double]]] = {
     var books: Array[Array[Seq[Double]]] = Array.tabulate(m) { mi =>
       seeds.map(v => v.slice(mi * dsub, (mi + 1) * dsub))
     }
@@ -738,17 +732,24 @@ object Similarity {
    * driver-side literals (nlist×dim + m×ksub×dsub doubles, KBs — the
    * documented bounded-collect class).
    *
-   * The assigned+residual frame is pinned ([[Checkpoints.pin]]) before codebook
-   * training: the joint [[trainCodebooks]] loop runs iters+1 jobs over
-   * it (one per Lloyd pass regardless of `m` — see its scaladoc), and
-   * without truncation each would recompute the
+   * The assigned+residual frame is pinned ([[Checkpoints.Scope.pin]])
+   * before codebook training: the joint [[trainCodebooks]] loop runs
+   * iters+1 jobs over it (one per Lloyd pass regardless of `m` — see
+   * its scaladoc), and without truncation each would recompute the
    * normalize+assign+residual lineage (use reliable checkpointing on a
-   * cluster).
+   * cluster). The index frame reads that pin; release it with
+   * [[Checkpoints.unpin]] when the index is dropped.
+   *
+   * The corpus lineage is read twice at once (seed sample and pin), so
+   * it must be deterministic — the same rows on every read. One that
+   * yields no seeds is re-seeded from the pin; one that yields other
+   * rows seeds the centroids from rows the index never sees.
    */
   def ivfpqIndex(corpus: DataFrame, corpusId: String, corpusVec: String,
                  nlist: Int = 16, m: Int = 8, ksub: Int = 16,
                  iters: Int = 2, useNative: Boolean = true)
-      : (Array[Seq[Double]], Array[Array[Seq[Double]]], DataFrame) = {
+      : (Array[Seq[Double]], Array[Array[Seq[Double]]], DataFrame) =
+      Checkpoints.scoped { s =>
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
     require(m >= 1 && ksub >= 1, s"need m >= 1 and ksub >= 1, got $m/$ksub")
     val cos = cosineFn(corpus, useNative)
@@ -760,15 +761,12 @@ object Similarity {
         corpus.select(col(corpusId).as("__id"), col(corpusVec).as("__cv")),
         "__cv", "__cvn")
       .select(col("__id"), col("__cvn"))
-    // seed collect overlapped with the pin (guide §2.6, seedsAsync)
-    val seedF = seedsAsync(cRaw, "__id", "__cvn", nlist)
     // one materialization for the whole build: the coarse Lloyd loop,
     // the residual computation and the PQ training each launch jobs
     // over this frame — unpinned, every one re-scans the source and
     // re-normalizes (O(iters) redundant passes)
-    val c = cRaw.pinned()
-    val coarse = buildCentroids(c, "__id", "__cvn", nlist, iters,
-      nearest, joinSeeds(seedF))
+    val (c, seeds) = pinWithSeeds(s, cRaw, "__id", "__cvn", nlist)
+    val coarse = buildCentroids(c, "__id", "__cvn", iters, nearest, seeds)
     if (coarse.isEmpty)
       return (coarse, Array.empty,
         c.select(col("__id"), lit(0).as("cell"),
@@ -783,12 +781,12 @@ object Similarity {
         element_at(coarseLit, col("cell") + 1), (x, y) => x - y))
     // codebook seed collect overlapped with the residual pin — the raw
     // lineage reads the already-pinned `c`, so the duplicated work is
-    // one narrow assign+residual map (guide §2.6, seedsAsync)
-    val seedF2 = seedsAsync(assignedRaw, "__id", "__resid", ksub)
-    val assigned = assignedRaw.pinned()
+    // one narrow assign+residual map
+    val (assigned, seeds2) =
+      pinWithSeeds(s, assignedRaw, "__id", "__resid", ksub)
     val enc = pqEncodeFn(corpus, useNative)
     val codebooks = trainCodebooks(assigned, "__resid", m, dsub, ksub,
-      iters, enc, joinSeeds(seedF2))
+      iters, enc, seeds2)
     val index = assigned.select(col("__id"), col("cell"),
       enc(col("__resid"), codebooks.toSeq.map(_.toSeq.map(_.toSeq)))
         .as("codes"))

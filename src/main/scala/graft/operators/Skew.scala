@@ -163,7 +163,7 @@ object Skew {
    * type, so an int-vs-long key pair would probe with different
    * hashes and silently gate out every true match (rejected loudly
    * here; cast explicitly at the call site); (2) the small side is
-   * pinned via `localCheckpoint` so the sketch and the join read ONE
+   * pinned (local pin) so the sketch and the join read ONE
    * materialization — without it, a source that changes between the
    * eager sketch build and the join action (an appended-to directory,
    * a nondeterministic view) would contain join keys the frozen
@@ -176,7 +176,8 @@ object Skew {
                      keyCols: Seq[String],
                      expectedItems: Long = 1000000L,
                      numBits: Long = 1L << 23,
-                     joinType: String = "inner"): DataFrame = {
+                     joinType: String = "inner")
+      : DataFrame = Checkpoints.scoped { s =>
     import graft.plans.NativeFunctions
     require(keyCols.nonEmpty, "bloomGatedJoin needs join keys")
     require(gateableJoins.contains(joinType.toLowerCase),
@@ -205,7 +206,7 @@ object Skew {
       xxhash64(keyCols.map(df.apply): _*)
     // one materialization feeds BOTH the sketch and the join — see the
     // scaladoc's guard (2)
-    val pinned = small.localCheckpoint(true)
+    val pinned = s.pinLocal(small)
     val sketch = Option(pinned
       .agg(NativeFunctions.bloomAggNative(keyHash(pinned),
         expectedItems, numBits).as("bf"))

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpoints
+
 /**
  * Persisted content-defined-chunk index — the steady-state state store
  * behind [[graft.operators.Dedup.cdcNoveltyAgainstIndex]], mirroring
@@ -61,12 +63,12 @@ object ChunkIndex {
     * .cdcChunkHashes]] output — only `chunk_hash` is read). */
   def create(chunks: DataFrame, dir: String, buckets: Int = 64,
              expectedItems: Long = 1000000L,
-             numBits: Long = 1L << 23): Unit = {
+             numBits: Long = 1L << 23): Unit = Checkpoints.scoped { s =>
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     new java.io.File(dir).mkdirs()
     writeMeta(dir, Meta(buckets, expectedItems, numBits))
-    val distinctHashes = chunks.select(col("chunk_hash")).distinct()
-      .localCheckpoint(true) // one computation feeds both state writes
+    // one computation feeds both state writes
+    val distinctHashes = s.pinLocal(chunks.select(col("chunk_hash")).distinct())
     // sketch FIRST (see the commit-order contract in the scaladoc)
     writeSketch(dir, graft.operators.Dedup.buildSeenSketch(
       distinctHashes, "chunk_hash", expectedItems, numBits))
@@ -113,13 +115,13 @@ object ChunkIndex {
    * it can never un-see history that was committed before it started.
    */
   def append(newChunks: DataFrame, dir: String): Unit =
-    withAppendLock(dir) {
+    withAppendLock(dir)(Checkpoints.scoped { s =>
       val m = readMeta(dir)
       val spark = newChunks.sparkSession
       val batch = newChunks.select(col("chunk_hash")).distinct()
-      val novel = graft.operators.Dedup
-        .novelAgainstIndex(batch, spark, dir)
-        .localCheckpoint(true) // pin the decision before state writes
+      // pin the decision before state writes
+      val novel = s.pinLocal(
+        graft.operators.Dedup.novelAgainstIndex(batch, spark, dir))
       // sketch FIRST (see the commit-order contract in the scaladoc):
       // a crash between the writes must leave resolvable false
       // POSITIVES, never contract-breaking false negatives
@@ -132,7 +134,7 @@ object ChunkIndex {
           pmod(col("chunk_hash"), lit(m.buckets.toLong)))
         .write.mode("append").partitionBy("bucket")
         .parquet(chunksDir(dir))
-    }
+    })
 
   /** Per-index append mutex — the shared [[PathLock]] discipline
     * (same-JVM monitor wrapping an advisory cross-process file
@@ -162,7 +164,7 @@ object ChunkIndex {
    * and advisory-locked cross-process.
    */
   def compact(spark: SparkSession, dir: String): Unit =
-    withAppendLock(dir) {
+    withAppendLock(dir)(Checkpoints.scoped { s =>
       val m = readMeta(dir)
       val cur = chunksDir(dir)
       val curName = new java.io.File(cur).getName
@@ -174,8 +176,8 @@ object ChunkIndex {
         .map(_.toSeq.filter(_.isDirectory).map(f => verOf(f.getName)))
         .getOrElse(Seq.empty).maxOption.getOrElse(-1)
       val newName = s"chunks-v${math.max(verOf(curName), maxVer) + 1}"
-      val all = hashes(spark, dir).distinct()
-        .localCheckpoint(true) // pin the set before any state write
+      // pin the set before any state write
+      val all = s.pinLocal(hashes(spark, dir).distinct())
       // sketch first (the commit-order contract): the rebuilt sketch
       // describes the SAME hash set as old and new chunk versions
       writeSketch(dir, graft.operators.Dedup.buildSeenSketch(
@@ -203,7 +205,7 @@ object ChunkIndex {
         val isChunkDir = f.isDirectory && (n == "chunks" || verOf(n) >= 0)
         if (isChunkDir && n != newName && n != curName) rm(f)
       })
-    }
+    })
 
   /** The indexed hash column `(chunk_hash)` — empty (not a failed
     * schema inference) when nothing has been indexed yet: an index

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-import graft.operators.Dedup
+import graft.operators.{Checkpoints, Dedup}
 
 /**
  * Continuous corpus ingestion with exact dedup against everything already
@@ -178,16 +178,16 @@ object IngestPipeline {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) => Checkpoints.scoped { s =>
         val spark = batch.sparkSession
         val corpus = readCorpus(spark, corpusDir, idCol, textCol)
         val sketch = readSketch(spark, sketchPath).orElse {
           if (corpus.isEmpty) None
           else { // bootstrap from the source of truth, then persist
-            val s = Dedup.buildSeenSketch(corpus, textCol, expectedItems,
-              numBits)
-            writeSketch(spark, sketchPath, s)
-            s
+            val built = Dedup.buildSeenSketch(corpus, textCol,
+              expectedItems, numBits)
+            writeSketch(spark, sketchPath, built)
+            built
           }
         }
         val index =
@@ -208,10 +208,9 @@ object IngestPipeline {
         val indexSansSelf = index.join(
           batch.select(col(idCol).as("seen_id")).distinct(),
           Seq("seen_id"), "left_anti")
-        val admitted = Dedup.ingestAdmissionAgainstState(batch, corpus,
-            sketch, indexSansSelf, idCol, textCol, numHashes, bands,
-            shingleWords, minJaccard, maxBucket)
-          .localCheckpoint(true) // pin the decision before state writes
+        val admitted = s.pinLocal(Dedup.ingestAdmissionAgainstState(batch,
+            corpus, sketch, indexSansSelf, idCol, textCol, numHashes, bands,
+            shingleWords, minJaccard, maxBucket)) // pin before state writes
         if (!admitted.isEmpty) {
           val minId = admitted.agg(min(col(idCol))).first().get(0)
           Dedup.minhashBands(admitted, idCol, textCol, numHashes, bands,
@@ -236,7 +235,7 @@ object IngestPipeline {
           writeSketch(spark, sketchPath, merged)
           admitted.write.mode("append").parquet(corpusDir)
         }
-      }
+      }}
       .start()
 
   /**
@@ -289,7 +288,7 @@ object IngestPipeline {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) => Checkpoints.scoped { s =>
         val spark = batch.sparkSession
         import graft.sources.ChunkIndex
         // bootstrap: index the pre-existing corpus once (empty is fine)
@@ -306,12 +305,11 @@ object IngestPipeline {
         val once = batch.select(col(idCol), col(textCol))
           .withColumn("__rn", row_number().over(w))
           .where(col("__rn") === 1).drop("__rn")
-        val admitted = once
+        val admitted = s.pinLocal(once
           .join(Dedup.cdcNoveltyAgainstIndex(once, idCol, textCol,
               indexDir, minSize, avgSize, maxSize)
             .where(col("novelty") >= minNovelty).select(col(idCol)),
-            Seq(idCol))
-          .localCheckpoint(true) // pin the decision before state writes
+            Seq(idCol))) // pin the decision before state writes
         if (!admitted.isEmpty) {
           // corpus FIRST (see the crash-ordering contract above)
           val corpusIds = readCorpus(spark, corpusDir, idCol, textCol)
@@ -322,7 +320,7 @@ object IngestPipeline {
             Dedup.cdcChunkHashes(admitted, idCol, textCol, minSize,
               avgSize, maxSize), indexDir)
         }
-      }
+      }}
       .start()
 
   /**
@@ -360,10 +358,11 @@ object IngestPipeline {
       .trigger(trigger)
       .foreachBatch {
         (batch: Dataset[graft.multimodal.MediaRow], _: Long) =>
+        Checkpoints.scoped { s =>
         import graft.multimodal.{MediaRow, Multimodal}
         val spark = batch.sparkSession
         val mediaEnc = org.apache.spark.sql.Encoders.product[MediaRow]
-        val bh = hashesOf(batch).localCheckpoint(true)
+        val bh = s.pinLocal(hashesOf(batch))
         val index =
           if (hasCommittedParquet(spark, indexDir))
             spark.read.parquet(indexDir)
@@ -373,8 +372,7 @@ object IngestPipeline {
             // would decode + FFT the whole corpus TWICE (once for the
             // index write, again for the probe below)
             val built =
-              hashesOf(spark.read.parquet(corpusDir).as(mediaEnc))
-                .localCheckpoint(true)
+              s.pinLocal(hashesOf(spark.read.parquet(corpusDir).as(mediaEnc)))
             built.write.mode("overwrite")
               .parquet(s"$indexDir/batch_min_id=-1")
             built
@@ -392,8 +390,8 @@ object IngestPipeline {
             bh, minVotes, maxBucket)
           .select(col("id_b").as("media_id"))
         val rejected = vsHistory.unionByName(withinBatch).distinct()
-        val admitted = batch.join(rejected, Seq("media_id"), "left_anti")
-          .as(mediaEnc).localCheckpoint(true)
+        val admitted = s.pinLocal(
+          batch.join(rejected, Seq("media_id"), "left_anti").as(mediaEnc))
         if (!admitted.isEmpty) {
           val minId =
             admitted.agg(min(col("media_id"))).first().getLong(0)
@@ -402,6 +400,7 @@ object IngestPipeline {
             .write.mode("overwrite")
             .parquet(s"$indexDir/batch_min_id=$minId")
           admitted.write.mode("append").parquet(corpusDir)
+        }
         }
       }
       .start()

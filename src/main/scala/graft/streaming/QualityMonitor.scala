@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.LanguageModel
+import graft.operators.Checkpoints
 import graft.functions.LanguageModel.BigramLm
 
 /**
@@ -18,7 +19,7 @@ import graft.functions.LanguageModel.BigramLm
  *
  * Per-batch state discipline (the [[DriftMonitor]] /
  * [[FrequencyMonitor]] lessons applied):
- *  - the model is pinned with `localCheckpoint` ONCE at start — the
+ *  - the model is pinned (local pin) ONCE at start — the
  *    unigram/bigram counting aggregations over the target corpus run
  *    once, not once per micro-batch (the Lloyd-loop pinning rule);
  *  - per-batch cost is O(batch tokens) against the materialized model
@@ -62,10 +63,11 @@ object QualityMonitor {
         "(rename or drop the existing column first)")
     val ckKey = BatchKeys.lineageKey(checkpointDir)
     // one-time materialization: per-batch scoring must not re-run the
-    // target-corpus counting aggregations
-    val pinned = BigramLm(model.unigrams.localCheckpoint(true),
-      model.bigrams.localCheckpoint(true),
-      model.stats.localCheckpoint(true))
+    // target-corpus counting aggregations; the pins live with the stream
+    val pinned = Checkpoints.scoped { s =>
+      BigramLm(s.pinLocal(model.unigrams), s.pinLocal(model.bigrams),
+        s.pinLocal(model.stats))
+    }
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

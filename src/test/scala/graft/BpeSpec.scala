@@ -137,8 +137,7 @@ class BpeSpec extends SparkSpec {
       .map { case (w, i) => (i.toLong, w) }.toDF("id", "text")
     val trained = Bpe.trainBpe(docs, "text", numMerges = 6,
       minPairCount = 1L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bpe").toString + "/m"
+    val dir = tmpDir("graft-bpe") + "/m"
     Bpe.saveMerges(spark, trained, dir)
     val loaded = Bpe.loadMerges(spark, dir)
     assert(loaded == trained.map(m => (m._1, m._2)))
@@ -271,8 +270,8 @@ class BpeSpec extends SparkSpec {
   }
 
   test("merges.txt round-trips and reads the standard interchange form") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_merges").resolve("merges.txt").toString
+    val path =
+      java.nio.file.Paths.get(tmpDir("graft_merges"), "merges.txt").toString
     val merges = Seq("h" -> "e", "t" -> "he", "Ġ" -> "the")
     Bpe.saveMergesTxt(merges, path)
     assert(Bpe.loadMergesTxt(path) == merges)
@@ -311,8 +310,8 @@ class BpeSpec extends SparkSpec {
     assert(vocab("he") == 256 && vocab("the") == 257 &&
       vocab("Ġthe") == 258)
     // vocab.json round-trips through a JSON parser (escaping holds)
-    val p = java.nio.file.Files
-      .createTempDirectory("graft_vocab").resolve("vocab.json").toString
+    val p =
+      java.nio.file.Paths.get(tmpDir("graft_vocab"), "vocab.json").toString
     Bpe.saveVocabJson(Seq("\"" -> "\\"), p)
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(p)), "UTF-8")

@@ -15,8 +15,7 @@ class BucketedSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixture(): (String, String) = {
-    val base = java.nio.file.Files
-      .createTempDirectory("bucketed-spec").toString
+    val base = tmpDir("bucketed-spec")
     val facts = (1L to 4000L).map(k => (k, (k % 7).toInt, s"g${k % 3}"))
       .toDF("k", "v", "grp")
     val dims = (1L to 4000L).filter(_ % 2 == 0)
@@ -294,8 +293,7 @@ class BucketedSpec extends SparkSpec {
 
   test("quote-bearing paths survive the DDL round-trip (escaped " +
       "LOCATION literal, not string splicing)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("bucketed-q'uote").toString
+    val base = tmpDir("bucketed-q'uote")
     assert(base.contains("'"), s"fixture dir lost its quote: $base")
     val df = (1L to 100L).map(k => (k, k * 2)).toDF("k", "v")
     Bucketed.writeBucketed(df, "bspec_quoted", s"$base/t", "k", 2)

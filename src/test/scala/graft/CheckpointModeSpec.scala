@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Checkpoints, Dedup, Graph}
 
 /**
- * [[Checkpoints.pin]] mode equivalence: the iterative operators
+ * [[Checkpoints.Scope.pin]] mode equivalence: the iterative operators
  * (connected components, PageRank, Lloyd-built IVF) must produce
  * IDENTICAL results whether rounds pin via `localCheckpoint` (no
  * checkpoint dir — the test/default mode) or via reliable
@@ -38,7 +38,7 @@ class CheckpointModeSpec extends SparkSpec {
   test("pin() selects reliable checkpoint iff the dir is configured") {
     import spark.implicits._
     val df = Seq(1, 2, 3).toDF("x")
-    Checkpoints.pin(df)
+    Checkpoints.scoped(_.pin(df))
     withCheckpointDir {
       val dir = new java.io.File(
         new java.net.URI(spark.sparkContext.getCheckpointDir.get))
@@ -47,7 +47,7 @@ class CheckpointModeSpec extends SparkSpec {
       def rddDirs() = Option(dir.listFiles()).toSeq.flatten
         .count(_.getName.startsWith("rdd-"))
       val before = rddDirs()
-      val reliable = Checkpoints.pin(df)
+      val reliable = Checkpoints.scoped(_.pin(df))
       assert(reliable.count() == 3)
       // the eager reliable checkpoint MATERIALIZED into the dir; the
       // local pin above wrote nothing there

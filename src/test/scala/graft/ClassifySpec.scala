@@ -91,7 +91,7 @@ class ClassifySpec extends SparkSpec {
   test("model round-trips through parquet: frames ARE the serialization") {
     val docs = corpus
     val m = Classify.trainNaiveBayes(docs, "id", "text", "label")
-    val dir = java.nio.file.Files.createTempDirectory("nbmodel").toString
+    val dir = tmpDir("nbmodel")
     m.classStats.write.mode("overwrite").parquet(s"$dir/cls")
     m.termCond.write.mode("overwrite").parquet(s"$dir/tc")
     m.stats.write.mode("overwrite").parquet(s"$dir/st")

@@ -474,8 +474,7 @@ class DedupSpec extends SparkSpec {
 
   test("contaminationSketchLog + contaminationFromLog: the persisted " +
       "per-shard log answers exactly what the batch form computes") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("theta-log").toString
+    val dir = tmpDir("theta-log")
     val all = docs.withColumn("src",
         when(col("doc_id") <= 2, "bench").otherwise(
           concat(lit("s"), col("doc_id") % 2)))

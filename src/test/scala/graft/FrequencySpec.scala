@@ -155,8 +155,7 @@ class FrequencySpec extends SparkSpec {
     assert(per == Map("g0" -> 100L, "g1" -> 100L, "g2" -> 100L))
     // persisted log: write the sketch rows, read back, union — the
     // binary survives parquet and the union dedups the 50-overlaps
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hll").toString + "/log"
+    val dir = tmpDir("graft_hll") + "/log"
     sk.write.parquet(dir)
     val est = Frequency.hllUnionEstimate(spark.read.parquet(dir))
       .as[Long].head()
@@ -320,7 +319,7 @@ class FrequencySpec extends SparkSpec {
   }
 
   test("theta: sketches persist to parquet and set-op after re-read (the log shape)") {
-    val dir = java.nio.file.Files.createTempDirectory("theta-log").toString
+    val dir = tmpDir("theta-log")
     val df = (1 to 800).map(k => (k.toLong, if (k <= 500) "day1" else "day2"))
       .toDF("k", "day")
     Frequency.thetaSketches(df, "k", "day", 12)

@@ -84,8 +84,7 @@ class LangIdAccuracySpec extends SparkSpec {
       "table and the loaded table classifies every plant identically " +
       "through HOF and native") {
     graft.plans.NativeFunctions.register(spark)
-    val dir = java.nio.file.Files
-      .createTempDirectory("langid_profiles").toString + "/profiles"
+    val dir = tmpDir("langid_profiles") + "/profiles"
     TextAnalysis.writeNgramProfiles(spark,
       TextAnalysis.charNgramProfiles, dir)
     val loaded = TextAnalysis.loadNgramProfiles(spark, dir)
@@ -110,8 +109,7 @@ class LangIdAccuracySpec extends SparkSpec {
     val xxText = "zxqa qzxo zxqe vzxq ozxq zxqi"
     val widened = TextAnalysis.charNgramProfiles +
       ("xx" -> Seq("zxq", "qzx", "xqa", "zxo"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("langid_profiles_xx").toString + "/profiles"
+    val dir = tmpDir("langid_profiles_xx") + "/profiles"
     TextAnalysis.writeNgramProfiles(spark, widened, dir)
     val loaded = TextAnalysis.loadNgramProfiles(spark, dir)
     assert(loaded.size == 51)
@@ -136,8 +134,7 @@ class LangIdAccuracySpec extends SparkSpec {
 
   test("loadNgramProfiles rejects duplicate lang rows and empty tables") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files
-      .createTempDirectory("langid_profiles_bad").toString
+    val dir = tmpDir("langid_profiles_bad")
     Seq(("en", Seq("the")), ("en", Seq("and")))
       .toDF("lang", "grams").write.parquet(dir + "/dup")
     assertThrows[IllegalArgumentException] {

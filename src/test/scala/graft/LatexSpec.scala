@@ -118,8 +118,7 @@ class LatexSpec extends SparkSpec {
   test("Spark surface: tar shards of .tex members extract with " +
       "per-member quarantine, non-tex members filtered") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-latex").toString
+    val dir = tmpDir("graft-latex")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "arxiv0.tar"),
       Tar.buildShard(Seq(

@@ -14,7 +14,7 @@ class ManifestSpec extends SparkSpec {
 
   private def freshExport(): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("manifest").toString
+    val dir = tmpDir("manifest")
     (1L to 1000L).map(i => (i, s"row $i payload")).toDF("id", "payload")
       .repartition(4).write.mode("overwrite").parquet(dir)
     dir
@@ -84,7 +84,7 @@ class ManifestSpec extends SparkSpec {
   test("row drift with same byte size is caught per-file as " +
       "rows_mismatch on text shards") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("manifest-t").toString
+    val dir = tmpDir("manifest-t")
     // two fixed-name text shards, hand-written (deterministic names)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "shard-0.txt"),

@@ -110,12 +110,9 @@ class MimeSpec extends SparkSpec {
 
   test("streaming mbox ingestion dedups re-synced messages across " +
       "archive drops and COUNTS corrupt archives out") {
-    val mboxDir = java.nio.file.Files
-      .createTempDirectory("graft-mbox-stream").toString
-    val corpus = java.nio.file.Files
-      .createTempDirectory("graft-mbox-corpus").toString + "/c"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-mbox-ckpt").toString
+    val mboxDir = tmpDir("graft-mbox-stream")
+    val corpus = tmpDir("graft-mbox-corpus") + "/c"
+    val ckpt = tmpDir("graft-mbox-ckpt")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(mboxDir, "sync1.mbox"),
       Mime.buildMbox(Seq(

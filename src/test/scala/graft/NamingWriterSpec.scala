@@ -93,8 +93,7 @@ class NamingWriterSpec extends SparkSpec {
   }
 
   test("bloomFilterCols writes real per-row-group parquet bloom filters") {
-    val p = java.nio.file.Files
-      .createTempDirectory("graft_bloomw").toString + "/t"
+    val p = tmpDir("graft_bloomw") + "/t"
     Writer.dfToParquet((1L to 1000L).toDF("k")
       .withColumn("v", org.apache.spark.sql.functions.col("k") * 2),
       p, bloomFilterCols = Seq("k"), bloomFilterNdv = Map("k" -> 1000L))

@@ -265,6 +265,30 @@ class ContaminationLineDedupSpec extends SparkSpec {
     }
   }
 
+  test("prefixSum and stableOrdinals: one partitioning for both branches " +
+      "when the range bounds come from a reservoir sample") {
+    import graft.operators.{Ids, Pack}
+    // one input partition far above the per-partition sample size, and
+    // a column only the windows read: the offset branch and the window
+    // branch plan separate range exchanges, each with its own sample
+    val df = spark.range(0, 20000, 1, 1)
+      .selectExpr("md5(CAST(id AS STRING)) AS k", "id % 13 + 1 AS v",
+        "id AS payload")
+    // (payload stays in the output: pruned, both exchanges would match
+    // and Spark would reuse one)
+    val sums = Pack.prefixSum(df, "k", "v", "cum", numPartitions = 8)
+      .select("k", "v", "cum", "payload").as[(String, Long, Long, Long)]
+      .collect().sortBy(_._1)
+    val running = sums.map(_._2).scanLeft(0L)(_ + _).tail
+    val badSums = sums.indices.count(i => sums(i)._3 != running(i))
+    assert(badSums == 0, s"$badSums of ${sums.length} running sums wrong")
+    val ords = Ids.stableOrdinals(df, "k", "ordinal", numPartitions = 8)
+      .select("k", "ordinal", "payload").as[(String, Long, Long)]
+      .collect().sortBy(_._1)
+    val badOrds = ords.indices.count(i => ords(i)._2 != i)
+    assert(badOrds == 0, s"$badOrds of ${ords.length} ordinals wrong")
+  }
+
   test("packSequences: offsets stay under budget, ids monotone in order") {
     import graft.operators.Pack
     val df = spark.range(0, 100).selectExpr("id AS k", "30 AS tok")

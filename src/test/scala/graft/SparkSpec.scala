@@ -26,8 +26,8 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
 
   /** A fresh temp dir, deleted recursively after the suite. */
-  def tmpDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-test").toFile
+  def tmpDir(prefix: String = "graft-test"): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
     tmpDirs.add(d)
     d.toString
   }

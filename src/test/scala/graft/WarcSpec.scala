@@ -17,7 +17,7 @@ class WarcSpec extends SparkSpec {
 
   private def wetFile(records: Seq[(String, String)],
                       version: String = "WARC/1.0"): String = {
-    val f = java.nio.file.Files.createTempFile("graft-wet", ".wet")
+    val f = java.nio.file.Paths.get(tmpDir("graft-wet"), "in.wet")
     java.nio.file.Files.writeString(f,
       records.map { case (u, t) => record(u, t, version) }.mkString)
     f.toString
@@ -62,7 +62,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("corrupt records yield null fields, not a failed scan") {
-    val f = java.nio.file.Files.createTempFile("graft-wet", ".wet")
+    val f = java.nio.file.Paths.get(tmpDir("graft-wet"), "in.wet")
     java.nio.file.Files.writeString(f,
       "WARC/1.0\r\ngarbage without headers or blank line")
     val got = Warc.wetDocuments(spark, f.toString).collect()
@@ -71,7 +71,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("hostile header values cannot shadow other headers") {
-    val f = java.nio.file.Files.createTempFile("graft-wet", ".wet")
+    val f = java.nio.file.Paths.get(tmpDir("graft-wet"), "in.wet")
     java.nio.file.Files.writeString(f,
       "WARC/1.0\r\n" +
         "WARC-Target-URI: http://evil/?x=Content-Length: 0\r\n" +
@@ -98,12 +98,9 @@ class WarcSpec extends SparkSpec {
   }
 
   test("streaming WET ingestion dedups across archive drops") {
-    val wetDir = java.nio.file.Files
-      .createTempDirectory("graft-wet-stream").toString
-    val corpus = java.nio.file.Files
-      .createTempDirectory("graft-wet-corpus").toString + "/c"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-wet-ckpt").toString
+    val wetDir = tmpDir("graft-wet-stream")
+    val corpus = tmpDir("graft-wet-corpus") + "/c"
+    val ckpt = tmpDir("graft-wet-ckpt")
     def drop(name: String, records: Seq[(String, String)]): Unit =
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(wetDir, name),
@@ -141,12 +138,9 @@ class WarcSpec extends SparkSpec {
 
   test("streaming full-WARC ingestion dedups re-crawls across shard " +
       "drops and skims past a corrupt shard") {
-    val warcDir = java.nio.file.Files
-      .createTempDirectory("graft-warc-stream").toString
-    val corpus = java.nio.file.Files
-      .createTempDirectory("graft-warc-corpus").toString + "/c"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-warc-ckpt").toString
+    val warcDir = tmpDir("graft-warc-stream")
+    val corpus = tmpDir("graft-warc-corpus") + "/c"
+    val ckpt = tmpDir("graft-warc-ckpt")
     def page(u: String, body: String) =
       (u, "text/html; charset=windows-1252",
         s"<html><body><p>$body</p></body></html>"

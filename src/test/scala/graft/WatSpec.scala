@@ -56,8 +56,7 @@ class WatSpec extends SparkSpec {
 
   test("Spark surface: shards explode to edges, a corrupt shard " +
       "quarantines per-file at the record layer") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-wat").toString
+    val dir = tmpDir("graft-wat")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "s0.wat.gz"),
       Wat.buildWat(pages, gzipped = true))

@@ -7,12 +7,9 @@ class WikiIngestSpec extends SparkSpec {
   test("streaming wiki ingestion dedups re-synced articles across " +
       "dump drops, filters redirects/namespaces, and COUNTS " +
       "malformed pages out") {
-    val dumpDir = java.nio.file.Files
-      .createTempDirectory("graft-wiki-stream").toString
-    val corpus = java.nio.file.Files
-      .createTempDirectory("graft-wiki-corpus").toString + "/c"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-wiki-ckpt").toString
+    val dumpDir = tmpDir("graft-wiki-stream")
+    val corpus = tmpDir("graft-wiki-corpus") + "/c"
+    val ckpt = tmpDir("graft-wiki-ckpt")
     def dump(name: String, pages: Seq[String]): Unit =
       java.nio.file.Files.write(
         java.nio.file.Paths.get(dumpDir, name),

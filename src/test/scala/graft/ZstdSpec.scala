@@ -20,7 +20,7 @@ class ZstdSpec extends SparkSpec {
       "read back exactly, quarantine intact") {
     import spark.implicits._
     val df = (1L to 500L).map(i => (i, s"doc $i body")).toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("zstd").toString
+    val dir = tmpDir("zstd")
     Zstd.writeJsonlZst(df, s"$dir/data")
     val files = new java.io.File(s"$dir/data").listFiles
       .filter(f => f.isFile && !f.getName.startsWith("_") &&
@@ -69,7 +69,7 @@ class ZstdSpec extends SparkSpec {
     assert(codec.getClass.getName == Zstd.CodecClass,
       s"native-dependent codec won the extension: ${codec.getClass}")
     // raw text read through the extension map
-    val dir = java.nio.file.Files.createTempDirectory("zstdtxt").toString
+    val dir = tmpDir("zstdtxt")
     val out = new java.io.ByteArrayOutputStream()
     val z = new io.airlift.compress.zstd.ZstdOutputStream(out)
     z.write("alpha\nbeta\ngamma\n".getBytes("UTF-8"))
