@@ -1,6 +1,7 @@
 package graft
 
 import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -127,20 +128,29 @@ object AggregateEngine {
       else (groupbyCols ++ measures.map(_.input)).distinct.sorted
 
     // ---- M1: missing file(s) ---------------------------------------------
-    val present = fileNames.filter(pathExists(spark, _))
-    if (present.size < fileNames.size && !handleMissingFile)
-      throw new java.io.FileNotFoundException(
-        fileNames.filterNot(pathExists(spark, _)).mkString(", "))
+    // one listing per shard; the error names the shards that listing missed
+    val (present, missing) = fileNames.partition(pathExists(spark, _))
+    if (missing.nonEmpty && !handleMissingFile)
+      throw new java.io.FileNotFoundException(missing.mkString(", "))
     if (present.isEmpty)
       return defaultEmpty(spark, groupbyCols, measures, aggregate, resultCols)
 
     // ---- footer schema probe (parquery/tool.py:123-142) ------------------
     // One read builds both the probe schema and the scan below. mergeSchema
     // unions every shard's footer (see scaladoc on cross-shard drift).
-    // Unreadable schema → "no columns exist" → empty.
+    // Unreadable schema → "no columns exist" → empty. Footers giving one
+    // column conflicting types are an error, as in the reference's
+    // per-file loop (which fails at `pa.concat_tables`).
     val loaded: Option[DataFrame] =
-      Try(spark.read.option("mergeSchema", value = true)
-        .parquet(present: _*)).toOption
+      try Some(spark.read.option("mergeSchema", value = true)
+        .parquet(present: _*))
+      catch {
+        case e: Exception if isSchemaConflict(e) =>
+          throw new IllegalArgumentException(
+            s"shards with conflicting column types: ${present.mkString(", ")}",
+            e)
+        case NonFatal(_) => None
+      }
     val fileSchema: StructType =
       loaded.map(_.schema).getOrElse(new StructType())
     val existing = fileSchema.fieldNames.toSet
@@ -205,6 +215,15 @@ object AggregateEngine {
       measureCols = columns.map(c => Seq(c, "sum", c)),
       dataFilter = dataFilter, aggregate = false,
       handleMissingFile = handleMissingFile)
+
+  /** Spark's mergeSchema failure: raised on the driver, or inside the
+    * merge job's tasks and then the cause of the job's failure. */
+  private def isSchemaConflict(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case s: org.apache.spark.SparkThrowable =>
+        s.getCondition == "CANNOT_MERGE_SCHEMAS"
+      case _ => false
+    }
 
   private def pathExists(spark: SparkSession, p: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(p)

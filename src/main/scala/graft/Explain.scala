@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Dev tool: dump formatted physical plans for selected queries, to audit
  * pushdown/pruning/codegen (PushedFilters, ReadSchema, WholeStageCodegen
@@ -14,13 +12,8 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_agg_sum", "q_filter_range", "q_join_star", "q_topk_agg",
         "q_dedup_minhash", "q_ann_brute", "q_window_rank")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the settings Bench and Verify run with, so the plans are theirs
+    val spark = GraftSession.local("graft-explain", 4)
     names.foreach { n =>
       println(s"\n########## $n ##########")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -17,9 +17,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        finally operators.Checkpoints.unpin(df)
+      } catch { case e: Throwable =>
         // a failed query must be LOUD in the downstream compare, not a
         // silently absent directory (round 6: 10 queries threw here and
         // vanished from the correctness artifact without a trace). The

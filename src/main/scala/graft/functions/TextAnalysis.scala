@@ -662,36 +662,18 @@ object TextAnalysis {
    * input plus a `fingerprints` column) — no join-back needed to keep
    * the rest of the row.
    *
-   * The default path is the fused native expression
-   * ([[graft.plans.WinnowingExpr]], one JVM loop per row);
-   * `useNative = false` keeps the portable HOF form, each stage
-   * materialized as its own projection so the interpreted lambdas
-   * capture bound attributes, not expressions (a lambda capturing the
-   * tokenization would re-tokenize once per window). Both paths are
-   * BIT-EXACT equal (asserted in NativeExprSpec).
+   * Computed by the fused native expression
+   * ([[graft.plans.WinnowingExpr]], one JVM loop per row), bit-exact
+   * with the staged HOF reference NativeExprSpec compares it against.
    */
   def winnowingFingerprints(df: org.apache.spark.sql.DataFrame,
                             textCol: String,
-                            k: Int = 3, window: Int = 4,
-                            useNative: Boolean = true)
+                            k: Int = 3, window: Int = 4)
       : org.apache.spark.sql.DataFrame = {
     require(k >= 1 && window >= 1, "k and window must be >= 1")
-    val orig = df.columns.map(col).toSeq
-    if (useNative) {
-      graft.plans.NativeFunctions.register(df.sparkSession)
-      df.select(orig :+ graft.plans.NativeFunctions
-        .winnowNative(col(textCol), k, window).as("fingerprints"): _*)
-    } else {
-      df.select(orig :+ tokens(col(textCol)).as("__wf_t"): _*)
-        .select(orig :+ transform(
-            sequence(lit(0), greatest(size(col("__wf_t")) - k, lit(0))),
-            i => xxhash64(concat_ws(" ", slice(col("__wf_t"), i + lit(1), lit(k)))))
-          .as("__wf_h"): _*)
-        .select(orig :+ array_distinct(transform(
-            sequence(lit(0), greatest(size(col("__wf_h")) - window, lit(0))),
-            j => array_min(slice(col("__wf_h"), j + lit(1), lit(window)))))
-          .as("fingerprints"): _*)
-    }
+    graft.plans.NativeFunctions.register(df.sparkSession)
+    df.select(df.columns.map(col).toSeq :+ graft.plans.NativeFunctions
+      .winnowNative(col(textCol), k, window).as("fingerprints"): _*)
   }
 
   // --- Gopher/MassiveText rule set -----------------------------------------
@@ -717,95 +699,43 @@ object TextAnalysis {
    * One narrow map stage — the 100 TB decision pass reads each
    * document once and shuffles nothing.
    *
-   * `useNative = true` (default) computes all nine outputs through
-   * [[graft.plans.GopherSignalsExpr]] — one fused static call per row
-   * instead of a projection of interpreted HOF lambdas that
-   * re-tokenizes per signal (0.52 s → ~0.1 s for q_gopher_signals at
-   * sf0.1). `false` keeps the HOF reference form below;
-   * TextAnalysisSpec property-tests the two forms equal on arbitrary
+   * All nine outputs come from [[graft.plans.GopherSignalsExpr]] — one
+   * fused static call per row instead of a projection of interpreted
+   * HOF lambdas that re-tokenizes per signal (0.52 s → ~0.1 s for
+   * q_gopher_signals at sf0.1). TextAnalysisSpec property-tests it
+   * against that HOF form, kept there as the reference, on arbitrary
    * strings.
    */
   def gopherSignals(docs: DataFrame, idCol: String, textCol: String,
                     minWords: Int = 50, maxWords: Int = 100000,
-                    useNative: Boolean = true,
                     functionWords: Seq[String] = gopherStopwords)
       : DataFrame = {
-    if (useNative) {
-      graft.plans.NativeFunctions.register(docs.sparkSession)
-      // REFERENCE equality, deliberately: only the default argument
-      // (the gopherStopwords object itself) takes the compiled-in
-      // fast path — a caller-supplied list rides the reference-object
-      // form even when its CONTENT equals the default, so the
-      // data-driven twin (q_gopher_signals_table) genuinely exercises
-      // that code path under its identical oracle instead of silently
-      // collapsing onto the compiled-in one
-      val g =
-        if (functionWords eq gopherStopwords)
-          graft.plans.NativeFunctions.gopherSignalsNative(
-            col(textCol), minWords, maxWords)
-        else graft.plans.NativeFunctions.gopherSignalsNative(
-          col(textCol), minWords, maxWords, functionWords)
-      return docs.select(col(idCol), g.as("__g"))
-        .select(col(idCol),
-          col("__g.n_words").as("n_words"),
-          round(col("__g.mean_word_len"), 4).as("mean_word_len"),
-          round(col("__g.hash_ratio"), 4).as("hash_ratio"),
-          round(col("__g.ellipsis_ratio"), 4).as("ellipsis_ratio"),
-          round(col("__g.alpha_word_frac"), 4).as("alpha_word_frac"),
-          round(col("__g.bullet_line_frac"), 4).as("bullet_line_frac"),
-          round(col("__g.ellipsis_line_frac"), 4)
-            .as("ellipsis_line_frac"),
-          col("__g.stop_hits").as("stop_hits"),
-          col("__g.keep").as("keep"))
-    }
-    val t = col(textCol)
-    val toks = tokens(t)
-    val nWords = size(toks)
-    val mwl = when(nWords === 0, lit(0.0)).otherwise(
-      aggregate(toks, lit(0), (a, x) => a + length(x)).cast("double") /
-        nWords)
-    // non-overlapping counts, same semantics as DuckDB regexp_extract_all
-    val hashes = regexp_count(t, lit("#")).cast("double")
-    val ellipses = (regexp_count(t, lit("\\.\\.\\.")) +
-      regexp_count(t, lit("…"))).cast("double")
-    val hashRatio = when(nWords === 0, lit(0.0)).otherwise(hashes / nWords)
-    val ellipsisRatio =
-      when(nWords === 0, lit(0.0)).otherwise(ellipses / nWords)
-    val alphaWords = size(filter(toks, w => w.rlike("\\p{L}")))
-    val alphaFrac = when(nWords === 0, lit(0.0)).otherwise(
-      alphaWords.cast("double") / nWords)
-    // line tier: bullet-START and ellipsis-END fractions over \r?\n
-    // lines (CRLF-safe: a bare-\n split leaves '...\r' endings that the
-    // ellipsis anchor would miss)
-    val lines = filter(split(t, "\r?\n"), l => length(trim(l)) > 0)
-    val nLines = size(lines)
-    // common bullet glyphs plus bare '-'/'*' lines, per the Gopher rule
-    val bulletFrac = when(nLines === 0, lit(0.0)).otherwise(
-      size(filter(lines, l => trim(l).rlike("^([•‣◦·–]|[-*]( |$))")))
-        .cast("double") / nLines)
-    val ellEndFrac = when(nLines === 0, lit(0.0)).otherwise(
-      size(filter(lines, l => trim(l).rlike("(\\.\\.\\.|…)$")))
-        .cast("double") / nLines)
-    // strip edge punctuation/symbols before the function-word check so
-    // 'the,' / '(with' still count as stopword hits
-    val stopHits = size(array_intersect(
-      array_distinct(transform(tokens(lower(t)),
-        w => regexp_replace(w, "^[\\p{P}\\p{S}]+|[\\p{P}\\p{S}]+$", ""))),
-      typedlit(functionWords)))
-    docs.select(col(idCol),
-      nWords.cast("long").as("n_words"),
-      round(mwl, 4).as("mean_word_len"),
-      round(hashRatio, 4).as("hash_ratio"),
-      round(ellipsisRatio, 4).as("ellipsis_ratio"),
-      round(alphaFrac, 4).as("alpha_word_frac"),
-      round(bulletFrac, 4).as("bullet_line_frac"),
-      round(ellEndFrac, 4).as("ellipsis_line_frac"),
-      stopHits.cast("long").as("stop_hits"),
-      (nWords.between(minWords, maxWords) &&
-        mwl.between(3.0, 10.0) &&
-        hashRatio <= 0.1 && ellipsisRatio <= 0.1 &&
-        bulletFrac <= 0.9 && ellEndFrac <= 0.3 &&
-        alphaFrac >= 0.8 && stopHits >= 2).cast("int").as("keep"))
+    graft.plans.NativeFunctions.register(docs.sparkSession)
+    // REFERENCE equality, deliberately: only the default argument
+    // (the gopherStopwords object itself) takes the compiled-in
+    // fast path — a caller-supplied list rides the reference-object
+    // form even when its CONTENT equals the default, so the
+    // data-driven twin (q_gopher_signals_table) genuinely exercises
+    // that code path under its identical oracle instead of silently
+    // collapsing onto the compiled-in one
+    val g =
+      if (functionWords eq gopherStopwords)
+        graft.plans.NativeFunctions.gopherSignalsNative(
+          col(textCol), minWords, maxWords)
+      else graft.plans.NativeFunctions.gopherSignalsNative(
+        col(textCol), minWords, maxWords, functionWords)
+    docs.select(col(idCol), g.as("__g"))
+      .select(col(idCol),
+        col("__g.n_words").as("n_words"),
+        round(col("__g.mean_word_len"), 4).as("mean_word_len"),
+        round(col("__g.hash_ratio"), 4).as("hash_ratio"),
+        round(col("__g.ellipsis_ratio"), 4).as("ellipsis_ratio"),
+        round(col("__g.alpha_word_frac"), 4).as("alpha_word_frac"),
+        round(col("__g.bullet_line_frac"), 4).as("bullet_line_frac"),
+        round(col("__g.ellipsis_line_frac"), 4)
+          .as("ellipsis_line_frac"),
+        col("__g.stop_hits").as("stop_hits"),
+        col("__g.keep").as("keep"))
   }
 
   // --- char-ngram language ID ----------------------------------------------

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.NativeFunctions
+
 /**
  * BM25 full-text retrieval over an inverted index — the lookup side of
  * a training-data pipeline: "which documents in this 100 TB corpus
@@ -175,7 +177,7 @@ object TextSearch {
                       queries: DataFrame, queryIdCol: String,
                       queryVecCol: String, candidates: Int): DataFrame = {
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
-    val cos = graft.operators.Similarity.cosineFn(docs, useNative = true)
+    NativeFunctions.register(docs.sparkSession)
     val qv = queries.select(col(queryIdCol),
       col(queryVecCol).cast("array<double>").as("__qv"))
     val wd = Window.partitionBy(col(queryIdCol))
@@ -184,7 +186,8 @@ object TextSearch {
       .select(col(idCol).as("doc_id"),
         col(vecCol).cast("array<double>").as("__dv"))
       .crossJoin(broadcast(qv))
-      .withColumn("__cos", cos(col("__dv"), col("__qv")))
+      .withColumn("__cos",
+        NativeFunctions.cosineNative(col("__dv"), col("__qv")))
       .withColumn("rank", row_number().over(wd))
       .where(col("rank") <= candidates)
       .select(col(queryIdCol), col("doc_id"), col("rank"))

@@ -7,6 +7,7 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.runtime.NonLocalReturnControl
 
+import org.apache.spark.rdd.GraftPinRelease
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -106,7 +107,7 @@ object Checkpoints {
     * RDD behind each `LogicalRDD` in its plan. */
   def unpin(ds: Dataset[_]): Unit = {
     ds.unpersist()
-    rdds(ds).foreach(_.unpersist())
+    rdds(ds).foreach(GraftPinRelease.unpersist)
   }
 
   private def rdds(ds: Dataset[_]) = ds.queryExecution.logical

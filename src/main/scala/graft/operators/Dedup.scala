@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Shingles, TextAnalysis}
+import graft.functions.TextAnalysis
+import graft.plans.NativeFunctions
+import graft.plans.NativeFunctions.{cosineNative, shinglesNative}
 
 /**
  * Deduplication operators for large-scale training-data pipelines: exact,
@@ -14,7 +16,8 @@ import graft.functions.{Shingles, TextAnalysis}
  *
  * Scale design (the point of every choice here):
  *  - signatures/fingerprints are computed in one narrow projection per
- *    document (higher-order functions, no explode of shingles, no UDFs);
+ *    document (fused Catalyst kernels of [[graft.plans.NativeFunctions]],
+ *    no explode of shingles, no UDFs);
  *  - candidate generation shuffles only (bucketKey, docId) pairs — never
  *    document text — so the shuffle volume is O(docs × bands), not O(text);
  *  - pair verification joins back to signatures by id, and only for
@@ -53,29 +56,6 @@ object Dedup {
   // ---- MinHash + LSH ------------------------------------------------------
 
   /**
-   * MinHash signature column: for each of `numHashes` seeded hash
-   * functions, the min over the document's `shingleWords`-word shingles.
-   * `xxhash64(shingle, seed)` is the seeded family.
-   *
-   * Structured as a single fold over the shingle array — `aggregate`
-   * evaluates its input ONCE per row, then updates all `numHashes` mins
-   * per shingle via `zip_with(least)`. The naive nesting
-   * (`transform(seeds, s -> array_min(transform(shingles, ...)))`) re-
-   * evaluates the whole shingle-construction expression once per seed
-   * (HOF lambdas are interpreted and not common-subexpression-eliminated)
-   * — measured 64× slower on the sf0.1 corpus.
-   */
-  def minhashSignature(text: Column, numHashes: Int = 64,
-                       shingleWords: Int = 3): Column = {
-    val seeds = sequence(lit(0), lit(numHashes - 1))
-    aggregate(
-      Shingles.wordShingles(text, shingleWords),
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, s) => zip_with(acc,
-        transform(seeds, seed => xxhash64(s, seed)), least(_, _)))
-  }
-
-  /**
    * LSH banding: split the signature into `bands` equal bands and emit
    * (bandIndex, bandHash) rows per doc. Docs sharing any band land in the
    * same bucket. Probability theory (Broder '97 / LSH banding): with
@@ -84,17 +64,12 @@ object Dedup {
    */
   def minhashBands(df: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 64, bands: Int = 16,
-                   shingleWords: Int = 3,
-                   useNative: Boolean = true): DataFrame = {
+                   shingleWords: Int = 3): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    val sig =
-      if (useNative) {
-        graft.plans.NativeFunctions.register(df.sparkSession)
-        graft.plans.NativeFunctions.minhashNative(col(textCol), numHashes,
-          shingleWords)
-      } else minhashSignature(col(textCol), numHashes, shingleWords)
-    df.select(col(idCol), sig.as("sig"))
+    NativeFunctions.register(df.sparkSession)
+    df.select(col(idCol), NativeFunctions.minhashNative(col(textCol),
+        numHashes, shingleWords).as("sig"))
       .select(col(idCol), posexplode(transform(
         sequence(lit(0), lit(bands - 1)),
         b => xxhash64(slice(col("sig"), b * rows + lit(1), lit(rows))))))
@@ -183,11 +158,9 @@ object Dedup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, bands: Int = 16,
                         shingleWords: Int = 3,
-                        maxBucket: Int = 1000,
-                        useNative: Boolean = true): DataFrame =
+                        maxBucket: Int = 1000): DataFrame =
     pairsWithinBuckets(
-      minhashBands(df, idCol, textCol, numHashes, bands, shingleWords,
-        useNative),
+      minhashBands(df, idCol, textCol, numHashes, bands, shingleWords),
       Seq("band", "band_hash"), idCol, maxBucket)
 
   /** Slack under `minJaccard` for the hashed prefilter stage of
@@ -224,14 +197,9 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, candidates: DataFrame,
                         idCol: String, textCol: String,
                         shingleWords: Int = 3,
-                        minJaccard: Double = 0.8,
-                        useNative: Boolean = true)
+                        minJaccard: Double = 0.8)
       : DataFrame = Checkpoints.scoped { s =>
-    val shExpr =
-      if (useNative) {
-        graft.plans.NativeFunctions.register(df.sparkSession)
-        graft.plans.NativeFunctions.shinglesNative(col(textCol), shingleWords)
-      } else Shingles.wordShingles(col(textCol), shingleWords)
+    NativeFunctions.register(df.sparkSession)
     // shingled ONCE and pinned (optimization round 19, guide §8 step 1
     // / §3.3): this frame is consumed four times below — both id sides
     // of the hashed prefilter join and both id sides of the exact
@@ -242,7 +210,8 @@ object Dedup {
     // worked-example "emit fingerprints once" shape; ~8 B per shingle
     // hash + the shingle strings); values per row are identical, so
     // every downstream pair and jaccard is unchanged.
-    val shAll = s.pin(df.select(col(idCol), shExpr.as("sh"))
+    val shAll = s.pin(df.select(col(idCol),
+        shinglesNative(col(textCol), shingleWords).as("sh"))
       .withColumn("shh",
         array_sort(array_distinct(transform(col("sh"), h => xxhash64(h))))))
     val sh = shAll.select(col(idCol), col("sh"))
@@ -250,18 +219,13 @@ object Dedup {
     // ~candidates-per-doc pairs through the fused primitive merge
     // (SortedJaccardExpr) — no boxed hash sets in the per-pair loop
     val shHashed = shAll.select(col(idCol), col("shh"))
-    val jhExpr =
-      if (useNative)
-        graft.plans.NativeFunctions.sortedJaccardNative(col("ha"), col("hb"))
-      else
-        size(array_intersect(col("ha"), col("hb"))).cast("double") /
-          size(array_union(col("ha"), col("hb")))
     val survivors = candidates
       .join(shHashed.select(col(idCol).as("id_a"), col("shh").as("ha")),
         "id_a")
       .join(shHashed.select(col(idCol).as("id_b"), col("shh").as("hb")),
         "id_b")
-      .withColumn("jh", jhExpr)
+      .withColumn("jh",
+        NativeFunctions.sortedJaccardNative(col("ha"), col("hb")))
       .where(col("jh") >= minJaccard - JaccardPrefilterSlack)
       .select(col("id_a"), col("id_b"))
     survivors
@@ -278,12 +242,10 @@ object Dedup {
   def minhashDuplicates(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, bands: Int = 16,
                         shingleWords: Int = 3,
-                        minJaccard: Double = 0.8,
-                        useNative: Boolean = true): DataFrame =
+                        minJaccard: Double = 0.8): DataFrame =
     ngramJaccardPairs(df,
-      minhashCandidates(df, idCol, textCol, numHashes, bands, shingleWords,
-        useNative = useNative),
-      idCol, textCol, shingleWords, minJaccard, useNative)
+      minhashCandidates(df, idCol, textCol, numHashes, bands, shingleWords),
+      idCol, textCol, shingleWords, minJaccard)
 
   // ---- SimHash ------------------------------------------------------------
 
@@ -342,15 +304,11 @@ object Dedup {
   def simhashDuplicates(df: DataFrame, idCol: String, textCol: String,
                         maxHamming: Int = 3,
                         maxBucket: Int = 1000,
-                        chunks: Int = 0,
-                        useNative: Boolean = true): DataFrame = {
-    val simExpr =
-      if (useNative) {
-        graft.plans.NativeFunctions.register(df.sparkSession)
-        graft.plans.NativeFunctions.simhashNative(col(textCol))
-      } else simhash(col(textCol))
+                        chunks: Int = 0): DataFrame = {
+    NativeFunctions.register(df.sparkSession)
     simhashPairsFromFingerprints(
-      df.select(col(idCol).as("id"), simExpr.as("simhash")),
+      df.select(col(idCol).as("id"),
+        NativeFunctions.simhashNative(col(textCol)).as("simhash")),
       "id", "simhash", maxHamming, maxBucket, chunks)
   }
 
@@ -645,19 +603,18 @@ object Dedup {
   def embeddingDuplicates(df: DataFrame, idCol: String, vecCol: String,
                           planes: Int = 12,
                           minCosine: Double = 0.95,
-                          maxBucket: Int = 1000,
-                          useNative: Boolean = true): DataFrame = {
-    val cos = Similarity.cosineFn(df, useNative)
-    val bucket = Similarity.bucketFn(df, useNative)
+                          maxBucket: Int = 1000): DataFrame = {
+    NativeFunctions.register(df.sparkSession)
     val vecs = df.select(col(idCol),
       col(vecCol).cast("array<double>").as("v"))
     val keyed = vecs
-      .withColumn("bucket", bucket(col("v"), planes))
+      .withColumn("bucket",
+        NativeFunctions.hyperplaneBucketNative(col("v"), planes))
       .select(col("bucket"), col(idCol))
     pairsWithinBuckets(keyed, Seq("bucket"), idCol, maxBucket)
       .join(vecs.select(col(idCol).as("id_a"), col("v").as("v_a")), "id_a")
       .join(vecs.select(col(idCol).as("id_b"), col("v").as("v_b")), "id_b")
-      .withColumn("cosine", cos(col("v_a"), col("v_b")))
+      .withColumn("cosine", cosineNative(col("v_a"), col("v_b")))
       .where(col("cosine") >= minCosine)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
@@ -672,7 +629,7 @@ object Dedup {
    * same cell, so the quadratic comparison is confined to cells.
    *
    * Composition of existing scale shapes: IVF cell assignment
-   * ([[Similarity.buildCentroids]] / [[Similarity.nearestCell]] — KB of
+   * ([[Similarity.buildCentroids]] / [[Similarity.nearestCellFn]] — KB of
    * driver-side centroids, the documented bounded-collect class) →
    * [[pairsWithinBuckets]] keyed on the cell (shuffles (cell, id) longs
    * only, `maxBucket`-capped with observe-metric drop accounting) →
@@ -706,13 +663,12 @@ object Dedup {
                          nlist: Int = 16, iters: Int = 2,
                          minCosine: Double = 0.95,
                          maxBucket: Int = 1000,
-                         useNative: Boolean = true,
                          twoLevel: Boolean = false)
       : DataFrame = Checkpoints.scoped { s =>
-    val cos = Similarity.cosineFn(df, useNative)
+    NativeFunctions.register(df.sparkSession)
     val nearest =
       if (twoLevel) Similarity.nearestCellFnTwoLevel(df)
-      else Similarity.nearestCellFn(df, useNative, cos)
+      else Similarity.nearestCellFn
     val vecsRaw = df.select(col(idCol),
       col(vecCol).cast("array<double>").as("v"))
     // pinned once: the Lloyd loop (iters + 1 jobs), the cell keying and
@@ -731,7 +687,7 @@ object Dedup {
     pairsWithinBuckets(keyed, Seq("__cell"), idCol, maxBucket)
       .join(vecs.select(col(idCol).as("id_a"), col("v").as("v_a")), "id_a")
       .join(vecs.select(col(idCol).as("id_b"), col("v").as("v_b")), "id_b")
-      .withColumn("cosine", cos(col("v_a"), col("v_b")))
+      .withColumn("cosine", cosineNative(col("v_a"), col("v_b")))
       .where(col("cosine") >= minCosine)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
@@ -755,17 +711,15 @@ object Dedup {
                     nlist: Int = 16, iters: Int = 2,
                     minCosine: Double = 0.95,
                     maxBucket: Int = 1000,
-                    useNative: Boolean = true,
                     keepPolicy: String = "min_id",
                     twoLevel: Boolean = false)
       : DataFrame = Checkpoints.scoped { _ =>
     require(keepPolicy == "min_id" || keepPolicy == "farthest",
       s"keepPolicy must be min_id or farthest, got $keepPolicy")
     val labels = duplicateClusters(semanticDuplicates(df, idCol, vecCol,
-      nlist, iters, minCosine, maxBucket, useNative, twoLevel))
+      nlist, iters, minCosine, maxBucket, twoLevel))
     if (keepPolicy == "min_id") selectSurvivors(df, labels, idCol)
     else {
-      val cos = Similarity.cosineFn(df, useNative)
       // members of dup groups only — membership-sized, tiny next to
       // the corpus; group means via the same per-(group, dim)
       // posexplode shape as the Lloyd step (no whole-vector buffers)
@@ -776,7 +730,7 @@ object Dedup {
       val w = Window.partitionBy(col("cluster"))
         .orderBy(col("__sim").asc, col(idCol).asc)
       val keep = members.join(means, "cluster")
-        .withColumn("__sim", cos(col("__v"), col("__mean")))
+        .withColumn("__sim", cosineNative(col("__v"), col("__mean")))
         .withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1)
         .select(col(idCol))
@@ -799,11 +753,9 @@ object Dedup {
    * with [[Checkpoints.unpin]]).
    */
   def semanticIndex(vecs: DataFrame, idCol: String, vecCol: String,
-                    nlist: Int = 16, iters: Int = 2,
-                    useNative: Boolean = true)
+                    nlist: Int = 16, iters: Int = 2)
       : (Array[Seq[Double]], DataFrame) = Checkpoints.scoped { s =>
-    val cos = Similarity.cosineFn(vecs, useNative)
-    val nearest = Similarity.nearestCellFn(vecs, useNative, cos)
+    NativeFunctions.register(vecs.sparkSession)
     val vRaw = vecs.select(col(idCol).as("seen_id"),
       col(vecCol).cast("array<double>").as("seen_vec"))
     // pinned for the same reason as `semanticDuplicates`: the Lloyd
@@ -811,11 +763,11 @@ object Dedup {
     val (v, seeds) =
       Similarity.pinWithSeeds(s, vRaw, "seen_id", "seen_vec", nlist)
     val centroids = Similarity.buildCentroids(v, "seen_id", "seen_vec",
-      iters, nearest, seeds)
+      iters, Similarity.nearestCellFn, seeds)
     if (centroids.isEmpty)
       (centroids, v.withColumn("cell", lit(0)).limit(0))
-    else (centroids, v.withColumn("cell", nearest(centroids,
-      col("seen_vec"))))
+    else (centroids, v.withColumn("cell",
+      Similarity.nearestCellFn(centroids, col("seen_vec"))))
   }
 
   /**
@@ -846,18 +798,16 @@ object Dedup {
                                       centroids: Array[Seq[Double]],
                                       idCol: String, vecCol: String,
                                       minCosine: Double = 0.95,
-                                      maxCell: Int = 100000,
-                                      useNative: Boolean = true)
+                                      maxCell: Int = 100000)
       : DataFrame = {
     require(centroids.nonEmpty,
       "empty centroids: an empty corpus has nothing to match against " +
         "— incrementalSemantic handles that case")
-    val cos = Similarity.cosineFn(newVecs, useNative)
-    val nearest = Similarity.nearestCellFn(newVecs, useNative, cos)
+    NativeFunctions.register(newVecs.sparkSession)
     val batch = newVecs
       .select(col(idCol).as("new_id"),
         col(vecCol).cast("array<double>").as("__nv"))
-      .withColumn("cell", nearest(centroids, col("__nv")))
+      .withColumn("cell", Similarity.nearestCellFn(centroids, col("__nv")))
     val probed = batch.select(col("cell")).distinct()
     val sizes = seenIndex
       .join(broadcast(probed), Seq("cell"), "left_semi")
@@ -868,7 +818,7 @@ object Dedup {
     seenIndex
       .join(broadcast(okCells), Seq("cell"), "left_semi")
       .join(broadcast(batch), Seq("cell"))
-      .withColumn("cosine", cos(col("__nv"), col("seen_vec")))
+      .withColumn("cosine", cosineNative(col("__nv"), col("seen_vec")))
       .where(col("cosine") >= minCosine)
       .select(col("new_id"), col("seen_id"),
         round(col("cosine"), 4).as("cosine"))
@@ -880,15 +830,14 @@ object Dedup {
                           idCol: String, vecCol: String,
                           nlist: Int = 16, iters: Int = 2,
                           minCosine: Double = 0.95,
-                          maxCell: Int = 100000,
-                          useNative: Boolean = true): DataFrame = {
+                          maxCell: Int = 100000): DataFrame = {
     val (centroids, index) = semanticIndex(seenVecs, idCol, vecCol,
-      nlist, iters, useNative)
+      nlist, iters)
     if (centroids.isEmpty)
       return newVecs.select(col(idCol).as("new_id"),
         col(idCol).as("seen_id"), lit(0.0).as("cosine")).limit(0)
     incrementalSemanticAgainstIndex(newVecs, index, centroids, idCol,
-      vecCol, minCosine, maxCell, useNative)
+      vecCol, minCosine, maxCell)
   }
 
   // ---- incremental dedup --------------------------------------------------
@@ -949,13 +898,12 @@ object Dedup {
                          numHashes: Int = 64, bands: Int = 16,
                          shingleWords: Int = 3,
                          minJaccard: Double = 0.8,
-                         maxBucket: Int = 1000,
-                         useNative: Boolean = true): DataFrame =
+                         maxBucket: Int = 1000): DataFrame =
     incrementalMinhashAgainstIndex(newDocs,
       minhashBands(seen, idCol, textCol, numHashes, bands,
-        shingleWords, useNative).withColumnRenamed(idCol, "seen_id"),
+        shingleWords).withColumnRenamed(idCol, "seen_id"),
       seen, idCol, textCol, numHashes, bands, shingleWords,
-      minJaccard, maxBucket, useNative)
+      minJaccard, maxBucket)
 
   /**
    * [[incrementalMinhash]] against a PREBUILT band index — the actual
@@ -965,8 +913,8 @@ object Dedup {
    * the few candidate ids that band-collide (semi-join first). The
    * convenience form above inlines the index build for callers without
    * a persisted index; plans are identical. The index MUST have been
-   * built with the same (numHashes, bands, shingleWords, useNative)
-   * parameters or band hashes cannot collide with the batch's.
+   * built with the same (numHashes, bands, shingleWords) parameters or
+   * band hashes cannot collide with the batch's.
    */
   def incrementalMinhashAgainstIndex(newDocs: DataFrame,
                                      seenBands: DataFrame,
@@ -975,8 +923,7 @@ object Dedup {
                                      numHashes: Int = 64, bands: Int = 16,
                                      shingleWords: Int = 3,
                                      minJaccard: Double = 0.8,
-                                     maxBucket: Int = 1000,
-                                     useNative: Boolean = true)
+                                     maxBucket: Int = 1000)
       : DataFrame = Checkpoints.scoped { s =>
     // pinned (optimization round 19): the batch's band rows feed THREE
     // consumers below (the index semi-join probe, the hot-key anti-join
@@ -985,7 +932,7 @@ object Dedup {
     // (docs × bands fixed-width rows), the same class as the pins in
     // ingestAdmissionAgainstState
     val nb = s.pin(minhashBands(newDocs, idCol, textCol, numHashes, bands,
-      shingleWords, useNative)
+      shingleWords)
       .withColumnRenamed(idCol, "new_id"))
     // only index rows whose key the batch touches participate — the
     // hot-key count and the candidate join are both per-key, so
@@ -1013,14 +960,16 @@ object Dedup {
       .join(sb, Seq("band", "band_hash"))
       .select(col("new_id"), col("seen_id"))
       .distinct())
-    val shingles = shingleFn(newDocs, shingleWords, useNative)
-    // tokenize only colliding docs on each side
+    // tokenize only colliding docs on each side (minhashBands above has
+    // registered the kernels)
     val newSh = newDocs
       .join(cand.select(col("new_id").as(idCol)).distinct(), idCol)
-      .select(col(idCol).as("new_id"), shingles(col(textCol)).as("__sh_n"))
+      .select(col(idCol).as("new_id"),
+        shinglesNative(col(textCol), shingleWords).as("__sh_n"))
     val seenSh = seenTexts
       .join(cand.select(col("seen_id").as(idCol)).distinct(), idCol)
-      .select(col(idCol).as("seen_id"), shingles(col(textCol)).as("__sh_s"))
+      .select(col(idCol).as("seen_id"),
+        shinglesNative(col(textCol), shingleWords).as("__sh_s"))
     cand.join(newSh, "new_id").join(seenSh, "seen_id")
       .withColumn("jaccard",
         size(array_intersect(col("__sh_n"), col("__sh_s"))).cast("double") /
@@ -1073,7 +1022,6 @@ object Dedup {
                       numBits: Long = 1L << 23,
                       keyOf: Column => Column = identity)
       : Option[Array[Byte]] = {
-    import graft.plans.NativeFunctions
     val conf = seen.sparkSession.conf
     def cap(key: String, dflt: Long): Long =
       conf.getOption(key).map(_.toLong).getOrElse(dflt)
@@ -1129,7 +1077,6 @@ object Dedup {
                            sketch: Option[Array[Byte]],
                            keyOf: Column => Column = identity)
       : DataFrame = {
-    import graft.plans.NativeFunctions
     NativeFunctions.register(newDocs.sparkSession)
     val flag = sketch match {
       case Some(bytes) =>
@@ -1287,19 +1234,6 @@ object Dedup {
     * 10^12 keys the 64-bit birthday bound expects ~0.03 collisions;
     * a 10^13-shingle corpus (~5 expected) flips `hashBits = 128`
     * (expected ~1e-14) WITHOUT changing operator semantics. */
-  /** Native-or-HOF shingle dispatch — single-sourced so the
-    * tokenize/shingle discipline cannot diverge between contamination
-    * scoring and the near-dup verify stage. The native fused expression
-    * is measured ~4x the HOF form (which re-tokenizes per shingle:
-    * interpreted lambdas, no CSE); the HOF stays as the portable
-    * reference path, bit-exact by NativeExprSpec. */
-  private def shingleFn(df: DataFrame, shingleWords: Int,
-                        useNative: Boolean): Column => Column =
-    if (useNative) {
-      graft.plans.NativeFunctions.register(df.sparkSession)
-      t => graft.plans.NativeFunctions.shinglesNative(t, shingleWords)
-    } else t => Shingles.wordShingles(t, shingleWords)
-
   private def membershipKey(x: Column, hashBits: Int): Column = {
     require(hashBits == 64 || hashBits == 128,
       s"hashBits must be 64 or 128, got $hashBits")
@@ -1346,7 +1280,7 @@ object Dedup {
    */
   def contaminationSketch(docs: DataFrame, benchmark: DataFrame,
                           textCol: String, shingleWords: Int = 5,
-                          lgK: Int = 12, useNative: Boolean = true,
+                          lgK: Int = 12,
                           hashBits: Int = 64): DataFrame = {
     // 128-bit keys are a two-long STRUCT, which ThetaSketchAgg's input
     // type check rejects (bigint/int/string) — and a theta sketch adds
@@ -1356,11 +1290,10 @@ object Dedup {
     // (contaminationScore / duplicateSpans), which accept it.
     require(hashBits == 64,
       s"contaminationSketch supports hashBits=64 only, got $hashBits")
-    import graft.plans.NativeFunctions
     NativeFunctions.register(docs.sparkSession)
-    val shingles = shingleFn(docs, shingleWords, useNative)
     def sketchOf(df: DataFrame, name: String): DataFrame = df
-      .select(explode(shingles(col(textCol))).as("__shs"))
+      .select(explode(shinglesNative(col(textCol), shingleWords))
+        .as("__shs"))
       .select(membershipKey(col("__shs"), hashBits).as("__sh"))
       .agg(NativeFunctions.thetaAggNative(col("__sh"), lgK).as(name))
     contaminationOutput(sketchOf(docs, "tc"), sketchOf(benchmark, "tb"))
@@ -1372,7 +1305,6 @@ object Dedup {
     * log-probing ([[contaminationFromLog]]) forms cannot diverge. */
   private def contaminationOutput(corpus: DataFrame,
                                   bench: DataFrame): DataFrame = {
-    import graft.plans.NativeFunctions
     corpus.crossJoin(broadcast(bench))
       .select(col("tc"), col("tb"),
         NativeFunctions.thetaEstimateNative(
@@ -1423,10 +1355,9 @@ object Dedup {
    */
   def contaminationSketchLog(docs: DataFrame, textCol: String,
                              shardCol: String, dir: String,
-                             shingleWords: Int = 5, lgK: Int = 12,
-                             useNative: Boolean = true): Unit = {
-    shardSketches(docs, textCol, shardCol, shingleWords, lgK,
-        useNative)
+                             shingleWords: Int = 5,
+                             lgK: Int = 12): Unit = {
+    shardSketches(docs, textCol, shardCol, shingleWords, lgK)
       .write.mode("overwrite").partitionBy("shard").parquet(dir)
   }
 
@@ -1434,13 +1365,11 @@ object Dedup {
     * [[contaminationSketchLog]] and [[contaminationSketchLogUpsert]]. */
   private def shardSketches(docs: DataFrame, textCol: String,
                             shardCol: String, shingleWords: Int,
-                            lgK: Int, useNative: Boolean): DataFrame = {
-    import graft.plans.NativeFunctions
+                            lgK: Int): DataFrame = {
     NativeFunctions.register(docs.sparkSession)
-    val shingles = shingleFn(docs, shingleWords, useNative)
     docs
       .select(col(shardCol).cast("string").as("shard"),
-        explode(shingles(col(textCol))).as("__shs"))
+        explode(shinglesNative(col(textCol), shingleWords)).as("__shs"))
       .select(col("shard"), membershipKey(col("__shs"), 64).as("__sh"))
       .groupBy(col("shard"))
       .agg(NativeFunctions.thetaAggNative(col("__sh"), lgK).as("theta"),
@@ -1454,10 +1383,9 @@ object Dedup {
     * one primitive; untouched shards' files are never rewritten. */
   def contaminationSketchLogUpsert(docs: DataFrame, textCol: String,
                                    shardCol: String, dir: String,
-                                   shingleWords: Int = 5, lgK: Int = 12,
-                                   useNative: Boolean = true): Unit = {
-    shardSketches(docs, textCol, shardCol, shingleWords, lgK,
-        useNative)
+                                   shingleWords: Int = 5,
+                                   lgK: Int = 12): Unit = {
+    shardSketches(docs, textCol, shardCol, shingleWords, lgK)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard").parquet(dir)
@@ -1488,14 +1416,13 @@ object Dedup {
   def contaminationScore(docs: DataFrame, benchmark: DataFrame,
                          idCol: String, textCol: String,
                          shingleWords: Int = 5,
-                         useNative: Boolean = true,
                          hashBits: Int = 64): DataFrame = {
-    val shingles = shingleFn(docs, shingleWords, useNative)
-    val docSh = docs.select(col(idCol),
-        explode(shingles(col(textCol))).as("__shs"))
+    NativeFunctions.register(docs.sparkSession)
+    val shingles = shinglesNative(col(textCol), shingleWords)
+    val docSh = docs.select(col(idCol), explode(shingles).as("__shs"))
       .select(col(idCol), membershipKey(col("__shs"), hashBits).as("__sh"))
     val benchSh = benchmark
-      .select(explode(shingles(col(textCol))).as("__shs"))
+      .select(explode(shingles).as("__shs"))
       .select(membershipKey(col("__shs"), hashBits).as("__sh"))
       .distinct()
       .withColumn("__hit", lit(1))
@@ -1533,14 +1460,13 @@ object Dedup {
                               idCol: String, textCol: String,
                               benchCol: String,
                               shingleWords: Int = 5,
-                              useNative: Boolean = true,
                               hashBits: Int = 64): DataFrame = {
-    val shingles = shingleFn(docs, shingleWords, useNative)
-    val docSh = docs.select(col(idCol),
-        explode(shingles(col(textCol))).as("__shs"))
+    NativeFunctions.register(docs.sparkSession)
+    val shingles = shinglesNative(col(textCol), shingleWords)
+    val docSh = docs.select(col(idCol), explode(shingles).as("__shs"))
       .select(col(idCol), membershipKey(col("__shs"), hashBits).as("__sh"))
     val benchSh = benchmarks
-      .select(col(benchCol), explode(shingles(col(textCol))).as("__shs"))
+      .select(col(benchCol), explode(shingles).as("__shs"))
       .select(col(benchCol), membershipKey(col("__shs"), hashBits).as("__sh"))
       .distinct()
     val totals = docSh.groupBy(col(idCol))
@@ -1841,7 +1767,6 @@ object Dedup {
   def novelAgainstIndex(hashFrame: DataFrame,
                         spark: org.apache.spark.sql.SparkSession,
                         indexDir: String): DataFrame = {
-    import graft.plans.NativeFunctions
     import graft.sources.ChunkIndex
     NativeFunctions.register(spark)
     ChunkIndex.sketch(indexDir) match {

@@ -5,14 +5,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.NativeFunctions
+import graft.plans.NativeFunctions.{cosineNative, hyperplaneBucketNative,
+  pqAdcNative, pqEncodeNative}
 
 /**
  * Approximate-nearest-neighbor search over an embedding column
  * (`Array[Float]`). Extension beyond the reference surface.
  *
  * Two paths, as a scale ladder:
- *  - [[bruteForceTopK]] — exact cosine top-k: one narrow map (dot product
- *    via `zip_with`/`aggregate`, codegen'd) + a top-k sort. O(corpus) per
+ *  - [[bruteForceTopK]] — exact cosine top-k: one narrow map (the fused
+ *    cosine kernel, codegen'd) + a top-k sort. O(corpus) per
  *    query; correct baseline, and the right choice when the query set is
  *    small.
  *  - [[lshTopK]] — random-hyperplane LSH: corpus and queries are bucketed
@@ -22,8 +24,11 @@ import graft.plans.NativeFunctions
  *    variant would k-means the corpus; hyperplane LSH gets the same
  *    bucketing effect with zero training state.)
  *
- * All math is double-precision `Column` expressions — no UDF, no BLAS
- * dependency, fully whole-stage-codegen'd.
+ * Every operator runs the fused Catalyst kernels of
+ * [[graft.plans.NativeFunctions]] — double precision, no UDF, no BLAS
+ * dependency, whole-stage-codegen'd. The HOF `Column` forms kept here
+ * (`cosine`, `hyperplaneBucket`, `pqEncode`, `pqAdc`) are the
+ * references the kernels are tested against.
  */
 object Similarity {
 
@@ -40,24 +45,14 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v)
 
-  /** Cosine similarity (0 when either vector has zero norm). */
+  /** Cosine similarity (0 when either vector has zero norm) — the HOF
+    * reference the operators' fused kernel
+    * ([[graft.plans.CosineSimilarityExpr]]) matches bit-for-bit: both
+    * walk the vectors left-to-right. */
   def cosine(a: Column, b: Column): Column = {
     val denom = norm(a) * norm(b)
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
-
-  /**
-   * Cosine picker: the fused native Catalyst expression
-   * ([[graft.plans.CosineSimilarityExpr]], one loop, zero allocation)
-   * when `useNative`, else the HOF composition. Both walk the vectors
-   * left-to-right, so they produce bit-identical doubles.
-   */
-  private[graft] def cosineFn(df: DataFrame,
-                              useNative: Boolean): (Column, Column) => Column =
-    if (useNative) {
-      NativeFunctions.register(df.sparkSession)
-      NativeFunctions.cosineNative
-    } else cosine
 
   /**
    * Deterministic pseudo-random hyperplane component for (plane, dim):
@@ -68,16 +63,9 @@ object Similarity {
     (pmod(xxhash64(plane, dim), lit(2000001L)).cast("double") /
       lit(1000000.0)) - lit(1.0)
 
-  /** Bucket picker: native fused loop when `useNative` (bit-exact with
-    * the HOF form — see [[graft.plans.HyperplaneBucketExpr]]). */
-  private[graft] def bucketFn(df: DataFrame,
-                              useNative: Boolean): (Column, Int) => Column =
-    if (useNative) {
-      NativeFunctions.register(df.sparkSession)
-      NativeFunctions.hyperplaneBucketNative
-    } else hyperplaneBucket
-
-  /** Sign-bit bucket of `v` under `planes` random hyperplanes. */
+  /** Sign-bit bucket of `v` under `planes` random hyperplanes — the HOF
+    * reference the operators' fused kernel
+    * ([[graft.plans.HyperplaneBucketExpr]]) matches bit-for-bit. */
   def hyperplaneBucket(v: Column, planes: Int): Column =
     aggregate(
       transform(sequence(lit(0), lit(planes - 1)), p =>
@@ -94,11 +82,10 @@ object Similarity {
    * sort materialization).
    */
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-                     query: Seq[Float], k: Int,
-                     useNative: Boolean = true): DataFrame = {
-    val cos = cosineFn(corpus, useNative)
+                     query: Seq[Float], k: Int): DataFrame = {
+    NativeFunctions.register(corpus.sparkSession)
     corpus.select(col(idCol),
-        round(cos(col(vecCol).cast("array<double>"),
+        round(cosineNative(col(vecCol).cast("array<double>"),
           typedlit(query.map(_.toDouble))), 4).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
@@ -111,14 +98,13 @@ object Similarity {
    */
   def topKPerQuery(corpus: DataFrame, queries: DataFrame,
                    corpusId: String, corpusVec: String,
-                   queryId: String, queryVec: String, k: Int,
-                   useNative: Boolean = true): DataFrame = {
-    val cos = cosineFn(corpus, useNative)
+                   queryId: String, queryVec: String, k: Int): DataFrame = {
+    NativeFunctions.register(corpus.sparkSession)
     val joined = corpus.select(col(corpusId),
         col(corpusVec).cast("array<double>").as("cv"))
       .crossJoin(broadcast(queries.select(col(queryId),
         col(queryVec).cast("array<double>").as("qv"))))
-      .withColumn("cosine", round(cos(col("cv"), col("qv")), 4))
+      .withColumn("cosine", round(cosineNative(col("cv"), col("qv")), 4))
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("cosine").desc, col(corpusId))
     joined.withColumn("rank", row_number().over(w))
@@ -147,15 +133,15 @@ object Similarity {
                     corpusLabel: String,
                     anchorId: String, anchorVec: String,
                     anchorLabel: String,
-                    k: Int, useNative: Boolean = true): DataFrame = {
-    val cos = cosineFn(corpus, useNative)
+                    k: Int): DataFrame = {
+    NativeFunctions.register(corpus.sparkSession)
     val joined = corpus.select(col(corpusId), col(corpusLabel),
         col(corpusVec).cast("array<double>").as("__cv"))
       .crossJoin(broadcast(anchors.select(col(anchorId),
         col(anchorLabel).as("__albl"),
         col(anchorVec).cast("array<double>").as("__qv"))))
       .where(col(corpusLabel) =!= col("__albl"))
-      .withColumn("cosine", round(cos(col("__cv"), col("__qv")), 4))
+      .withColumn("cosine", round(cosineNative(col("__cv"), col("__qv")), 4))
     val w = Window.partitionBy(col(anchorId))
       .orderBy(col("cosine").desc, col(corpusId))
     joined.withColumn("rank", row_number().over(w))
@@ -194,15 +180,14 @@ object Similarity {
   def knnLabel(unlabeled: DataFrame, labeled: DataFrame,
                unlabeledId: String, unlabeledVec: String,
                labeledId: String, labeledVec: String,
-               labelCol: String, k: Int,
-               useNative: Boolean = true): DataFrame = {
-    val cos = cosineFn(unlabeled, useNative)
+               labelCol: String, k: Int): DataFrame = {
+    NativeFunctions.register(unlabeled.sparkSession)
     val joined = unlabeled.select(col(unlabeledId),
         col(unlabeledVec).cast("array<double>").as("__uv"))
       .crossJoin(broadcast(labeled.select(col(labeledId),
         col(labelCol).as("__lbl"),
         col(labeledVec).cast("array<double>").as("__lv"))))
-      .withColumn("__cos", round(cos(col("__uv"), col("__lv")), 4))
+      .withColumn("__cos", round(cosineNative(col("__uv"), col("__lv")), 4))
     val nn = Window.partitionBy(col(unlabeledId))
       .orderBy(col("__cos").desc, col(labeledId))
     val votes = joined.withColumn("__rk", row_number().over(nn))
@@ -235,23 +220,22 @@ object Similarity {
   def knnLabelBucketed(unlabeled: DataFrame, labeled: DataFrame,
                        unlabeledId: String, unlabeledVec: String,
                        labeledId: String, labeledVec: String,
-                       labelCol: String, k: Int, planes: Int = 8,
-                       useNative: Boolean = true): DataFrame = {
-    val cos = cosineFn(unlabeled, useNative)
-    val bucket = bucketFn(unlabeled, useNative)
+                       labelCol: String, k: Int,
+                       planes: Int = 8): DataFrame = {
+    NativeFunctions.register(unlabeled.sparkSession)
     val u = unlabeled.select(col(unlabeledId),
         col(unlabeledVec).cast("array<double>").as("__uv"))
-      .withColumn("__bkt", bucket(col("__uv"), planes))
+      .withColumn("__bkt", hyperplaneBucketNative(col("__uv"), planes))
     val l = labeled.select(col(labeledId), col(labelCol).as("__lbl"),
         col(labeledVec).cast("array<double>").as("__lv"))
-      .withColumn("__bkt", bucket(col("__lv"), planes))
+      .withColumn("__bkt", hyperplaneBucketNative(col("__lv"), planes))
     // shuffle_hash hint: without it Catalyst (or AQE at runtime) would
     // happily broadcast a small-at-test-scale labeled side — the exact
     // plan this variant exists to avoid. SHJ on the bucket key is also
     // the right physical join at corpus scale: both sides hash on
     // __bkt, no sort, no driver-side relation.
     val joined = u.join(l.hint("shuffle_hash"), Seq("__bkt"))
-      .withColumn("__cos", round(cos(col("__uv"), col("__lv")), 4))
+      .withColumn("__cos", round(cosineNative(col("__uv"), col("__lv")), 4))
     val nn = Window.partitionBy(col(unlabeledId))
       .orderBy(col("__cos").desc, col(labeledId))
     val votes = joined.withColumn("__rk", row_number().over(nn))
@@ -296,11 +280,9 @@ object Similarity {
               corpusId: String, corpusVec: String,
               queryId: String, queryVec: String,
               k: Int, nlist: Int = 16, nprobe: Int = 4,
-              iters: Int = 2, useNative: Boolean = true)
-      : DataFrame = Checkpoints.scoped { s =>
+              iters: Int = 2): DataFrame = Checkpoints.scoped { s =>
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
-    val cos = cosineFn(corpus, useNative)
-    val nearest = nearestCellFn(corpus, useNative, cos)
+    NativeFunctions.register(corpus.sparkSession)
     // pin the projected corpus before the Lloyd loop: every iteration
     // is its own job, and without the checkpoint each one re-runs the
     // source scan + cast (iters + 2 parquet scans for one build). On a
@@ -310,8 +292,8 @@ object Similarity {
       col(corpusVec).cast("array<double>").as("cv"))
     val (c, seeds) = pinWithSeeds(s, cRaw, corpusId, "cv", nlist)
 
-    val centroids = buildCentroids(c, corpusId, "cv", iters, nearest,
-      seeds)
+    val centroids = buildCentroids(c, corpusId, "cv", iters,
+      nearestCellFn, seeds)
 
     if (centroids.isEmpty) {
       // empty corpus: nothing to index; empty result, search schema
@@ -321,13 +303,13 @@ object Similarity {
         .limit(0)
     }
 
-    val assigned = c.withColumn("cell", nearest(centroids, col("cv")))
+    val assigned = c.withColumn("cell", nearestCellFn(centroids, col("cv")))
     val q = queries.select(col(queryId),
         col(queryVec).cast("array<double>").as("qv"))
-      .withColumn("cell", explode(nearestCells(cos, centroids, nprobe)))
+      .withColumn("cell", explode(nearestCells(centroids, nprobe)))
 
     val joined = assigned.join(broadcast(q), Seq("cell"))
-      .withColumn("cosine", round(cos(col("cv"), col("qv")), 4))
+      .withColumn("cosine", round(cosineNative(col("cv"), col("qv")), 4))
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("cosine").desc, col(corpusId))
     joined.withColumn("rank", row_number().over(w))
@@ -422,42 +404,20 @@ object Similarity {
         .as("pm"))
       .select(col(keyCol), expr("transform(pm, s -> s.m)").as("__mean"))
 
-  /** Nearest-centroid cell id for vector `v` — argmin over centroids of
-    * (1 - cosine) via a greatest-of-structs trick: pack
-    * (similarity, cellId), take the max. `greatest` requires >= 2 args,
-    * so a single-cell index short-circuits. Deterministic: identical
-    * vectors always land in the same cell. The portable reference form;
-    * [[nearestCellFn]] swaps in the fused native expression. */
-  private[operators] def nearestCell(cos: (Column, Column) => Column,
-                                     centroids: Array[Seq[Double]],
-                                     v: Column): Column =
-    if (centroids.length == 1) lit(0)
-    else {
-      val scored = centroids.toSeq.zipWithIndex.map { case (ct, i) =>
-        struct(cos(v, typedlit(ct)).as("sim"), lit(i).as("cell"))
-      }
-      greatest(scored: _*).getField("cell")
-    }
-
-  /** Assignment picker, mirroring [[cosineFn]]: the fused
-    * [[graft.plans.NearestCentroidExpr]] when `useNative` (bit-exact
-    * with the struct form, incl. larger-cell-wins ties), else the
-    * greatest-of-structs composition. Beyond per-row speed, the native
-    * form keeps its generated source IDENTICAL across Lloyd iterations
-    * (the matrix is a codegen reference object, not nlist inlined
-    * literal expressions), so whole-stage codegen compiles once per
-    * query instead of once per iteration — and it is the only form
-    * that scales to SemDeDup-sized nlist (~50k cells). */
-  private[operators] def nearestCellFn(df: DataFrame, useNative: Boolean,
-      cos: (Column, Column) => Column)
-      : (Array[Seq[Double]], Column) => Column =
-    if (useNative) {
-      NativeFunctions.register(df.sparkSession)
-      (cents, v) =>
-        if (cents.length == 1) lit(0)
-        else NativeFunctions.nearestCentroidNative(v,
-          cents.toSeq.map(_.toSeq))
-    } else (cents, v) => nearestCell(cos, cents, v)
+  /** Nearest-centroid cell id for vector `v` — argmax over centroids of
+    * cosine through the fused [[graft.plans.NearestCentroidExpr]]
+    * (greatest-of-structs semantics: a tie goes to the larger cell);
+    * a single-cell index short-circuits to cell 0. Deterministic:
+    * identical vectors always land in the same cell. The centroid
+    * matrix is a codegen reference object, not nlist inlined literal
+    * expressions, so the generated source is IDENTICAL across Lloyd
+    * iterations (whole-stage codegen compiles once per query, not once
+    * per iteration) and the expression scales to SemDeDup-sized nlist
+    * (~50k cells). [[NativeFunctions.register]] must have run. */
+  private[operators] val nearestCellFn: (Array[Seq[Double]], Column) => Column =
+    (cents, v) =>
+      if (cents.length == 1) lit(0)
+      else NativeFunctions.nearestCentroidNative(v, cents.toSeq.map(_.toSeq))
 
   /** Driver-side cosine between two centroid vectors — same
     * accumulation order as the assignment expressions' fused loop, so
@@ -551,8 +511,7 @@ object Similarity {
     * (so Lloyd iterations each get a grouping consistent with their
     * centroids) and assigns via the fused
     * [[graft.plans.NearestCentroidTwoLevelExpr]] at O(√nlist · dim)
-    * per row. Native-only: the HOF composition would re-introduce the
-    * O(nlist) expression-size wall this exists to remove. */
+    * per row. */
   private[graft] def nearestCellFnTwoLevel(df: DataFrame)
       : (Array[Seq[Double]], Column) => Column = {
     NativeFunctions.register(df.sparkSession)
@@ -568,11 +527,11 @@ object Similarity {
   }
 
   /** The query's `nprobe` nearest cells as an array column. */
-  private def nearestCells(cos: (Column, Column) => Column,
-                           centroids: Array[Seq[Double]],
+  private def nearestCells(centroids: Array[Seq[Double]],
                            nprobe: Int): Column = {
     val scored = array(centroids.toSeq.zipWithIndex.map { case (ct, i) =>
-      struct(cos(col("qv"), typedlit(ct)).as("sim"), lit(i).as("cell"))
+      struct(cosineNative(col("qv"), typedlit(ct)).as("sim"),
+        lit(i).as("cell"))
     }: _*)
     slice(transform(array_sort(scored,
       (a, b) => when(a.getField("sim") > b.getField("sim"), -1)
@@ -644,25 +603,12 @@ object Similarity {
     terms.reduce(_ + _)
   }
 
-  private[operators] def pqEncodeFn(df: DataFrame, useNative: Boolean)
-      : (Column, Seq[Seq[Seq[Double]]]) => Column =
-    if (useNative) {
-      NativeFunctions.register(df.sparkSession)
-      (v, cb) => NativeFunctions.pqEncodeNative(v, cb)
-    } else pqEncode
-
-  private[operators] def pqAdcFn(df: DataFrame, useNative: Boolean)
-      : (Column, Column, Seq[Seq[Seq[Double]]]) => Column =
-    if (useNative) {
-      NativeFunctions.register(df.sparkSession)
-      (q, c, cb) => NativeFunctions.pqAdcNative(q, c, cb)
-    } else pqAdc
-
   /**
    * Joint sub-quantizer training: ONE Lloyd loop refines all `m`
    * subspace codebooks together instead of running m sequential
    * [[buildCentroids]] loops. Each iteration is a single job over the
-   * checkpointed residual frame — the PQ encoder ([[pqEncodeFn]])
+   * checkpointed residual frame — the PQ encoder
+   * ([[graft.plans.PqEncodeExpr]])
    * assigns every subspace's code in one fused pass over the residual
    * row, then a per-(subspace, code, dim) average rebuilds all
    * codebooks at once; m × ksub × dsub doubles come back to the driver
@@ -683,7 +629,6 @@ object Similarity {
   private[operators] def trainCodebooks(
       assigned: DataFrame, residCol: String, m: Int, dsub: Int,
       ksub: Int, iters: Int,
-      enc: (Column, Seq[Seq[Seq[Double]]]) => Column,
       seeds: Array[Seq[Double]]): Array[Array[Seq[Double]]] = {
     var books: Array[Array[Seq[Double]]] = Array.tabulate(m) { mi =>
       seeds.map(v => v.slice(mi * dsub, (mi + 1) * dsub))
@@ -692,7 +637,7 @@ object Similarity {
     (1 to iters).foreach { _ =>
       val cb = books.toSeq.map(_.toSeq.map(_.toSeq))
       val updated = assigned
-        .withColumn("__codes", enc(col(residCol), cb))
+        .withColumn("__codes", pqEncodeNative(col(residCol), cb))
         .select(col("__codes"), posexplode(col(residCol)))
         .withColumn("mi", (col("pos") / lit(dsub)).cast("int"))
         .select(col("mi"),
@@ -747,13 +692,12 @@ object Similarity {
    */
   def ivfpqIndex(corpus: DataFrame, corpusId: String, corpusVec: String,
                  nlist: Int = 16, m: Int = 8, ksub: Int = 16,
-                 iters: Int = 2, useNative: Boolean = true)
+                 iters: Int = 2)
       : (Array[Seq[Double]], Array[Array[Seq[Double]]], DataFrame) =
       Checkpoints.scoped { s =>
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
     require(m >= 1 && ksub >= 1, s"need m >= 1 and ksub >= 1, got $m/$ksub")
-    val cos = cosineFn(corpus, useNative)
-    val nearest = nearestCellFn(corpus, useNative, cos)
+    NativeFunctions.register(corpus.sparkSession)
     // Embeddings.l2Normalize materializes the norm as an attribute
     // before the transform lambda — a lambda capturing the norm
     // EXPRESSION would re-evaluate the O(dim) fold per element
@@ -766,7 +710,8 @@ object Similarity {
     // over this frame — unpinned, every one re-scans the source and
     // re-normalizes (O(iters) redundant passes)
     val (c, seeds) = pinWithSeeds(s, cRaw, "__id", "__cvn", nlist)
-    val coarse = buildCentroids(c, "__id", "__cvn", iters, nearest, seeds)
+    val coarse = buildCentroids(c, "__id", "__cvn", iters, nearestCellFn,
+      seeds)
     if (coarse.isEmpty)
       return (coarse, Array.empty,
         c.select(col("__id"), lit(0).as("cell"),
@@ -776,7 +721,8 @@ object Similarity {
       s"embedding dim $dim is not divisible by m=$m subspaces")
     val dsub = dim / m
     val coarseLit = typedlit(coarse.toSeq.map(_.toSeq))
-    val assignedRaw = c.withColumn("cell", nearest(coarse, col("__cvn")))
+    val assignedRaw = c.withColumn("cell",
+        nearestCellFn(coarse, col("__cvn")))
       .withColumn("__resid", zip_with(col("__cvn"),
         element_at(coarseLit, col("cell") + 1), (x, y) => x - y))
     // codebook seed collect overlapped with the residual pin — the raw
@@ -784,12 +730,11 @@ object Similarity {
     // one narrow assign+residual map
     val (assigned, seeds2) =
       pinWithSeeds(s, assignedRaw, "__id", "__resid", ksub)
-    val enc = pqEncodeFn(corpus, useNative)
     val codebooks = trainCodebooks(assigned, "__resid", m, dsub, ksub,
-      iters, enc, seeds2)
+      iters, seeds2)
     val index = assigned.select(col("__id"), col("cell"),
-      enc(col("__resid"), codebooks.toSeq.map(_.toSeq.map(_.toSeq)))
-        .as("codes"))
+      pqEncodeNative(col("__resid"),
+        codebooks.toSeq.map(_.toSeq.map(_.toSeq))).as("codes"))
     (coarse, codebooks, index)
   }
 
@@ -815,25 +760,24 @@ object Similarity {
                   corpus: DataFrame, queries: DataFrame,
                   corpusId: String, corpusVec: String,
                   queryId: String, queryVec: String,
-                  k: Int, nprobe: Int = 4, shortlist: Int = 64,
-                  useNative: Boolean = true): DataFrame = {
+                  k: Int, nprobe: Int = 4,
+                  shortlist: Int = 64): DataFrame = {
     require(coarse.nonEmpty,
       "empty coarse centroids: an empty corpus has nothing to search " +
         "— ivfpqTopK handles that case")
-    val cos = cosineFn(corpus, useNative)
+    NativeFunctions.register(corpus.sparkSession)
     val cbSeq = codebooks.toSeq.map(_.toSeq.map(_.toSeq))
-    val adc = pqAdcFn(corpus, useNative)
     val coarseLit = typedlit(coarse.toSeq.map(_.toSeq))
     val q = Embeddings.l2Normalize(
         queries.select(col(queryId), col(queryVec).as("__qv")),
         "__qv", "qv")
       .select(col(queryId), col("qv"))
-      .withColumn("cell", explode(nearestCells(cos, coarse, nprobe)))
+      .withColumn("cell", explode(nearestCells(coarse, nprobe)))
       .withColumn("__cdot", dot(col("qv"), element_at(coarseLit,
         col("cell") + 1)))
     val cand = index.join(broadcast(q), Seq("cell"))
       .withColumn("__adc",
-        col("__cdot") + adc(col("qv"), col("codes"), cbSeq))
+        col("__cdot") + pqAdcNative(col("qv"), col("codes"), cbSeq))
     val ws = Window.partitionBy(col(queryId))
       .orderBy(col("__adc").desc, col("__id"))
     val short = cand.withColumn("__r", row_number().over(ws))
@@ -842,7 +786,7 @@ object Similarity {
     val cv = corpus.select(col(corpusId).as("__id"),
       col(corpusVec).cast("array<double>").as("cv"))
     val rer = cv.join(broadcast(short), Seq("__id"))
-      .withColumn("cosine", round(cos(col("cv"), col("qv")), 4))
+      .withColumn("cosine", round(cosineNative(col("cv"), col("qv")), 4))
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("cosine").desc, col("__id"))
     rer.withColumn("rank", row_number().over(w))
@@ -859,10 +803,9 @@ object Similarity {
                 queryId: String, queryVec: String,
                 k: Int, nlist: Int = 16, nprobe: Int = 4,
                 m: Int = 8, ksub: Int = 16, iters: Int = 2,
-                shortlist: Int = 64, useNative: Boolean = true)
-      : DataFrame = {
+                shortlist: Int = 64): DataFrame = {
     val (coarse, codebooks, index) = ivfpqIndex(corpus, corpusId,
-      corpusVec, nlist, m, ksub, iters, useNative)
+      corpusVec, nlist, m, ksub, iters)
     if (coarse.isEmpty) {
       val c = corpus.select(col(corpusId),
         col(corpusVec).cast("array<double>").as("cv"))
@@ -872,25 +815,22 @@ object Similarity {
         .limit(0)
     }
     ivfpqSearch(index, coarse, codebooks, corpus, queries,
-      corpusId, corpusVec, queryId, queryVec, k, nprobe, shortlist,
-      useNative)
+      corpusId, corpusVec, queryId, queryVec, k, nprobe, shortlist)
   }
 
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               corpusId: String, corpusVec: String,
               queryId: String, queryVec: String,
-              k: Int, planes: Int = 8,
-              useNative: Boolean = true): DataFrame = {
-    val cos = cosineFn(corpus, useNative)
-    val bucket = bucketFn(corpus, useNative)
+              k: Int, planes: Int = 8): DataFrame = {
+    NativeFunctions.register(corpus.sparkSession)
     val c = corpus.select(col(corpusId),
         col(corpusVec).cast("array<double>").as("cv"))
-      .withColumn("bucket", bucket(col("cv"), planes))
+      .withColumn("bucket", hyperplaneBucketNative(col("cv"), planes))
     val q = queries.select(col(queryId),
         col(queryVec).cast("array<double>").as("qv"))
-      .withColumn("bucket", bucket(col("qv"), planes))
+      .withColumn("bucket", hyperplaneBucketNative(col("qv"), planes))
     val joined = c.join(broadcast(q), Seq("bucket"))
-      .withColumn("cosine", round(cos(col("cv"), col("qv")), 4))
+      .withColumn("cosine", round(cosineNative(col("cv"), col("qv")), 4))
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("cosine").desc, col(corpusId))
     joined.withColumn("rank", row_number().over(w))
@@ -904,10 +844,9 @@ object Similarity {
     * retriever for small corpora). Queries are small by contract. */
   def exactTopK(corpus: DataFrame, queries: DataFrame,
                 corpusId: String, corpusVec: String,
-                queryId: String, queryVec: String, k: Int,
-                useNative: Boolean = true): DataFrame = {
+                queryId: String, queryVec: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val cos = cosineFn(corpus, useNative)
+    NativeFunctions.register(corpus.sparkSession)
     val qv = queries.select(col(queryId),
       col(queryVec).cast("array<double>").as("__qv"))
     val w = Window.partitionBy(col(queryId))
@@ -915,7 +854,7 @@ object Similarity {
     corpus.select(col(corpusId),
         col(corpusVec).cast("array<double>").as("__cv"))
       .crossJoin(broadcast(qv))
-      .withColumn("__cos", cos(col("__cv"), col("__qv")))
+      .withColumn("__cos", cosineNative(col("__cv"), col("__qv")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col(queryId), col(corpusId),

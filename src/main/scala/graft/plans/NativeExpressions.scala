@@ -240,7 +240,7 @@ case class SortedJaccardExpr(left: Expression, right: Expression)
  * `Dedup.semanticDuplicates`).
  *
  * Why not `greatest(struct(cosine, cell), ...)` over one struct per
- * centroid (kept as the portable HOF reference path)? Two reasons,
+ * centroid (kept in NativeExprSpec as the reference)? Two reasons,
  * both structural:
  *  - the greatest-of-structs plan embeds one expression PER CENTROID —
  *    its generated source changes with every centroid VALUE set, so
@@ -1300,17 +1300,16 @@ case class CmsEstimateExpr(left: Expression, right: Expression)
  * Native MinHash signature: whitespace-tokenize, `shingleWords`-word
  * shingles, `numHashes` minima — all in ONE JVM pass per row.
  *
- * The `Column`-composition version ([[graft.operators.Dedup
- * .minhashSignature]], kept as the portable reference) evaluates
- * interpreted higher-order lambdas: per shingle it allocates a 64-long
- * hash array plus a zip_with result (~30M short-lived arrays on a 5k-doc
- * corpus — measured ~20s at sf0.1). Here each row is one tight loop with
- * two xxhash64 evaluations per shingle, the per-seed family derived as
+ * A `Column` composition of higher-order lambdas (the form this
+ * replaced) allocates a 64-long hash array plus a zip_with result per
+ * shingle (~30M short-lived arrays on a 5k-doc corpus — measured ~20s
+ * at sf0.1). Here each row is one tight loop with two xxhash64
+ * evaluations per shingle, the per-seed family derived as
  * `g_j = h1 + j*h2` (Kirsch-Mitzenmacher '06, public result) — standard
  * MinHash practice and statistically equivalent to independent hashes.
- *
- * Hash VALUES differ from the HOF version (different family); LSH
- * behavior (collision probabilities, band S-curve) is the same.
+ * Every MinHash operator (`Dedup.minhashBands` and what builds on it)
+ * hashes with this one family, so a persisted band index and a later
+ * batch's bands always collide where they should.
  * `CodegenFallback` is fine: cost is the per-row loop itself, not
  * expression-tree dispatch.
  */
@@ -1450,14 +1449,13 @@ case class WordShinglesExpr(child: Expression, shingleWords: Int)
  * Native winnowing fingerprint set (Schleimer–Wilkerson–Aiken,
  * SIGMOD'03): positional `shingleWords`-word shingle hashes, min of
  * each sliding window of `window` hashes, distinct in first-occurrence
- * order — one JVM pass per row. BIT-EXACT with the staged HOF form in
- * [[graft.functions.TextAnalysis.winnowingFingerprints]]: tokenization
- * matches `tokens()` (trim + whitespace split, empty → no tokens), the
- * shingle string is the space-joined window exactly as
- * `concat_ws(" ", slice(...))` builds it, and the hash is Spark's own
- * `xxhash64` (seed 42) over the string's UTF-8 bytes — asserted in
- * NativeExprSpec. The HOF form re-evaluates interpreted lambdas per
- * window; this loop is the corpus-scale path.
+ * order — one JVM pass per row. BIT-EXACT with the staged HOF reference
+ * in NativeExprSpec: tokenization matches `tokens()` (trim + whitespace
+ * split, empty → no tokens), the shingle string is the space-joined
+ * window exactly as `concat_ws(" ", slice(...))` builds it, and the hash
+ * is Spark's own `xxhash64` (seed 42) over the string's UTF-8 bytes. The
+ * HOF form re-evaluates interpreted lambdas per window; this loop is the
+ * corpus-scale path.
  */
 case class WinnowingExpr(child: Expression, shingleWords: Int, window: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression

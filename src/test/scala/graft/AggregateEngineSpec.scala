@@ -136,6 +136,17 @@ class AggregateEngineSpec extends SparkSpec {
     }
   }
 
+  test("M1: handleMissingFile=false names every missing shard") {
+    val dir = tmpDir()
+    data.toDF().write.parquet(s"$dir/here.parquet")
+    val gone = Seq(s"$dir/gone1.parquet", s"$dir/gone2.parquet")
+    val e = intercept[java.io.FileNotFoundException] {
+      AggregateEngine.aggregatePqShards(spark, s"$dir/here.parquet" +: gone,
+        Seq("f0"), Seq(Seq("f5")), handleMissingFile = false)
+    }
+    assert(e.getMessage == gone.mkString(", "))
+  }
+
   test("M2: all requested columns missing → empty result") {
     val got = run(Seq("ghost1"), Seq(Seq("ghost2")))
     assert(got.count() == 0)
@@ -231,6 +242,19 @@ class AggregateEngineSpec extends SparkSpec {
     // "a": nulls skipped (10+20, count 2); "b": only null cells →
     // SQL null sum, zero count
     assert(got == Map("a" -> (Some(30L), 2L), "b" -> (None, 0L)))
+  }
+
+  test("shards giving one column conflicting types: an error naming " +
+      "the shards, not an empty result") {
+    val dir = tmpDir()
+    val shards = Seq(s"$dir/a.parquet", s"$dir/b.parquet")
+    Seq((1L, 1)).toDF("g", "m").write.parquet(shards(0))
+    Seq((1L, "x")).toDF("g", "m").write.parquet(shards(1))
+    val e = intercept[IllegalArgumentException] {
+      AggregateEngine.aggregatePqShards(spark, shards, Seq("g"),
+        Seq(Seq("m", "sum", "s"))).collect()
+    }
+    shards.foreach(s => assert(e.getMessage.contains(s), e.getMessage))
   }
 
   test("glob path aggregates all matching shards") {

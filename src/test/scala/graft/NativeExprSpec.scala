@@ -1,12 +1,44 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextAnalysis
 import graft.operators.Similarity
 import graft.plans.NativeFunctions
 
 class NativeExprSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Staged HOF winnowing — the reference `winnowingFingerprints`'s
+    * kernel ([[graft.plans.WinnowingExpr]]) must match bit-for-bit. Each
+    * stage is its own projection so the interpreted lambdas capture
+    * bound attributes, not expressions (a lambda capturing the
+    * tokenization would re-tokenize once per window). */
+  private def winnowingReference(df: DataFrame, textCol: String,
+                                 k: Int = 3, window: Int = 4): DataFrame = {
+    val orig = df.columns.map(col).toSeq
+    df.select(orig :+ TextAnalysis.tokens(col(textCol)).as("__wf_t"): _*)
+      .select(orig :+ transform(
+          sequence(lit(0), greatest(size(col("__wf_t")) - k, lit(0))),
+          i => xxhash64(concat_ws(" ", slice(col("__wf_t"), i + lit(1), lit(k)))))
+        .as("__wf_h"): _*)
+      .select(orig :+ array_distinct(transform(
+          sequence(lit(0), greatest(size(col("__wf_h")) - window, lit(0))),
+          j => array_min(slice(col("__wf_h"), j + lit(1), lit(window)))))
+        .as("fingerprints"): _*)
+  }
+
+  /** Greatest-of-structs nearest centroid — the reference
+    * [[graft.plans.NearestCentroidExpr]] must match, ties to the larger
+    * cell included: pack (cosine, cellId) per centroid, take the max. */
+  private def nearestCellReference(centroids: Seq[Seq[Double]],
+                                   v: Column): Column =
+    if (centroids.length == 1) lit(0)
+    else greatest(centroids.zipWithIndex.map { case (ct, i) =>
+      struct(Similarity.cosine(v, typedlit(ct)).as("sim"),
+        lit(i).as("cell"))
+    }: _*).getField("cell")
 
   private lazy val vecs = (0 until 200).map { i =>
     (i.toLong, Seq.tabulate(32)(j => math.sin(i * 32 + j)))
@@ -144,27 +176,25 @@ class NativeExprSpec extends SparkSpec {
       "x", "  padded   text  ", "a b c d e f g h i j k l m n o p",
       "hello world\n", "\tleading tab", "mixed \t inner\nnewline\t")
       .toDF("text")
-    val nat = graft.functions.TextAnalysis
-      .winnowingFingerprints(docs, "text", useNative = true)
+    val nat = TextAnalysis.winnowingFingerprints(docs, "text")
       .select("fingerprints").collect().map(_.getSeq[Long](0))
-    val hof = graft.functions.TextAnalysis
-      .winnowingFingerprints(docs, "text", useNative = false)
+    val hof = winnowingReference(docs, "text")
       .select("fingerprints").collect().map(_.getSeq[Long](0))
     nat.zip(hof).foreach { case (n, h) => assert(n == h) } // order too
     assert(nat.forall(_.nonEmpty))
   }
 
-  test("bruteForceTopK native and HOF paths agree") {
+  test("bruteForceTopK: k rows by descending cosine, the query's own " +
+      "vector first") {
     val emb = (0 until 100).map(i =>
       (i.toLong, Seq.tabulate(16)(j => math.cos(i * 16 + j).toFloat)))
       .toDF("vec_id", "embedding")
     val q = Seq.tabulate(16)(j => math.cos(7 * 16 + j).toFloat)
-    val nat = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 5,
-      useNative = true).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val hof = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 5,
-      useNative = false).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(nat.toSeq == hof.toSeq)
-    assert(nat(0)._1 == 7L)
+    val nat = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 5)
+      .collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(nat.length == 5)
+    assert(nat(0) == (7L, 1.0))
+    assert(nat.map(_._2).toSeq == nat.map(_._2).sorted.reverse.toSeq)
   }
 
   test("nearest centroid: fused native assignment, cosine-tie goes to " +
@@ -375,20 +405,28 @@ class NativeExprSpec extends SparkSpec {
     assert(!got.isNullAt(9) && got.getDouble(9) == 0.0)
   }
 
-  test("semanticDuplicates native and HOF assignment paths agree") {
+  test("semanticDuplicates finds planted copies; nearest centroid ≡ " +
+      "HOF form") {
+    NativeFunctions.register(spark)
     val emb = (0 until 60).map(i =>
       (i.toLong, Seq.tabulate(8)(j => math.cos(i * 8 + j)))) ++
       (0 until 10).map(i => (100L + i,
         Seq.tabulate(8)(j => math.cos(i * 8 + j)))) // planted copies
     val df = emb.toDF("vec_id", "embedding")
-    def run(native: Boolean) =
-      graft.operators.Dedup.semanticDuplicates(df, "vec_id", "embedding",
-        nlist = 4, minCosine = 0.999, useNative = native)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val nat = run(true)
-    val hof = run(false)
-    assert(nat == hof)
-    assert((0 until 10).forall(i => nat.contains((i.toLong, 100L + i))))
+    // centroids drawn from the data, one duplicated so ties occur
+    val cents = Seq(0, 13, 13, 29, 47).map(i => emb(i)._2)
+    Seq(1, 2, 5).foreach { n =>
+      val both = df.select(
+        NativeFunctions.nearestCentroidNative(col("embedding"), cents.take(n))
+          .as("nat"),
+        nearestCellReference(cents.take(n), col("embedding")).as("ref"))
+        .collect()
+      both.foreach(r => assert(r.getInt(0) == r.getInt(1), s"nlist $n"))
+    }
+    val pairs = graft.operators.Dedup.semanticDuplicates(df, "vec_id",
+        "embedding", nlist = 4, minCosine = 0.999)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert((0 until 10).forall(i => pairs.contains((i.toLong, 100L + i))))
   }
 
   test("GraftExtensions injects every native function at session build") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -7,6 +8,65 @@ import graft.operators.Similarity
 
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The Gopher rule set as interpreted HOF lambdas — the reference
+    * `gopherSignals`'s kernel ([[graft.plans.GopherSignalsExpr]]) must
+    * match on every output column (`maxWords` at the operator's
+    * default, 100000). */
+  private def gopherReference(docs: DataFrame, idCol: String,
+      textCol: String, minWords: Int,
+      functionWords: Seq[String] = TextAnalysis.gopherStopwords)
+      : DataFrame = {
+    import TextAnalysis.tokens
+    val t = col(textCol)
+    val toks = tokens(t)
+    val nWords = size(toks)
+    val mwl = when(nWords === 0, lit(0.0)).otherwise(
+      aggregate(toks, lit(0), (a, x) => a + length(x)).cast("double") /
+        nWords)
+    // non-overlapping counts, same semantics as DuckDB regexp_extract_all
+    val hashes = regexp_count(t, lit("#")).cast("double")
+    val ellipses = (regexp_count(t, lit("\\.\\.\\.")) +
+      regexp_count(t, lit("…"))).cast("double")
+    val hashRatio = when(nWords === 0, lit(0.0)).otherwise(hashes / nWords)
+    val ellipsisRatio =
+      when(nWords === 0, lit(0.0)).otherwise(ellipses / nWords)
+    val alphaWords = size(filter(toks, w => w.rlike("\\p{L}")))
+    val alphaFrac = when(nWords === 0, lit(0.0)).otherwise(
+      alphaWords.cast("double") / nWords)
+    // line tier: bullet-START and ellipsis-END fractions over \r?\n
+    // lines (CRLF-safe: a bare-\n split leaves '...\r' endings that the
+    // ellipsis anchor would miss)
+    val lines = filter(split(t, "\r?\n"), l => length(trim(l)) > 0)
+    val nLines = size(lines)
+    // common bullet glyphs plus bare '-'/'*' lines, per the Gopher rule
+    val bulletFrac = when(nLines === 0, lit(0.0)).otherwise(
+      size(filter(lines, l => trim(l).rlike("^([•‣◦·–]|[-*]( |$))")))
+        .cast("double") / nLines)
+    val ellEndFrac = when(nLines === 0, lit(0.0)).otherwise(
+      size(filter(lines, l => trim(l).rlike("(\\.\\.\\.|…)$")))
+        .cast("double") / nLines)
+    // strip edge punctuation/symbols before the function-word check so
+    // 'the,' / '(with' still count as stopword hits
+    val stopHits = size(array_intersect(
+      array_distinct(transform(tokens(lower(t)),
+        w => regexp_replace(w, "^[\\p{P}\\p{S}]+|[\\p{P}\\p{S}]+$", ""))),
+      typedlit(functionWords)))
+    docs.select(col(idCol),
+      nWords.cast("long").as("n_words"),
+      round(mwl, 4).as("mean_word_len"),
+      round(hashRatio, 4).as("hash_ratio"),
+      round(ellipsisRatio, 4).as("ellipsis_ratio"),
+      round(alphaFrac, 4).as("alpha_word_frac"),
+      round(bulletFrac, 4).as("bullet_line_frac"),
+      round(ellEndFrac, 4).as("ellipsis_line_frac"),
+      stopHits.cast("long").as("stop_hits"),
+      (nWords.between(minWords, 100000) &&
+        mwl.between(3.0, 10.0) &&
+        hashRatio <= 0.1 && ellipsisRatio <= 0.1 &&
+        bulletFrac <= 0.9 && ellEndFrac <= 0.3 &&
+        alphaFrac >= 0.8 && stopHits >= 2).cast("int").as("keep"))
+  }
 
   test("tokenCount: whitespace runs, trims, empty text") {
     val got = Seq("a b  c", "  x ", "", "one").toDF("t")
@@ -309,8 +369,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("id", "t")
     val nat = TextAnalysis.gopherSignals(df, "id", "t", minWords = 2)
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-    val hof = TextAnalysis.gopherSignals(df, "id", "t", minWords = 2,
-      useNative = false)
+    val hof = gopherReference(df, "id", "t", minWords = 2)
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
     assert(nat.keySet == hof.keySet)
     nat.keySet.foreach { id =>
@@ -430,17 +489,19 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val german = Seq("der", "die", "und", "von", "mit", "auch",
       "nicht", "im")
-    def hits(useNative: Boolean, words: Seq[String]): Map[Long, Long] =
-      TextAnalysis.gopherSignals(docs, "doc_id", "text", minWords = 5,
-          useNative = useNative, functionWords = words)
-        .select(col("doc_id"), col("stop_hits"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def hits(signals: DataFrame): Map[Long, Long] = signals
+      .select(col("doc_id"), col("stop_hits"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def native(words: Seq[String]): Map[Long, Long] =
+      hits(TextAnalysis.gopherSignals(docs, "doc_id", "text", minWords = 5,
+        functionWords = words))
     // default list: the English doc hits, the German one starves
-    val defN = hits(useNative = true, TextAnalysis.gopherStopwords)
+    val defN = native(TextAnalysis.gopherStopwords)
     assert(defN(1L) >= 6 && defN(2L) <= 1, defN.toString)
     // swapped list: the German doc hits — no recompile, same operator
-    val deN = hits(useNative = true, german)
-    val deH = hits(useNative = false, german)
+    val deN = native(german)
+    val deH = hits(gopherReference(docs, "doc_id", "text", minWords = 5,
+      functionWords = german))
     assert(deN == deH, s"native $deN vs HOF $deH with a custom list")
     assert(deN(2L) == 8 && deN(1L) <= 1, deN.toString)
   }
