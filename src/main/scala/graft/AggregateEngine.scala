@@ -3,7 +3,10 @@ package graft
 import scala.util.Try
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,7 +28,12 @@ import org.apache.spark.sql.types._
  *    `HashAggregateExec(final)`, planned automatically for *all* ops
  *    (vs the reference's `SAFE_PREAGGREGATE` subset, `parquery/tool.py:37`);
  *  - the shuffle between partial and final is the distributed
- *    generalization of `pa.concat_tables` (`aggregate_pyarrow.py:260`).
+ *    generalization of `pa.concat_tables` (`aggregate_pyarrow.py:260`);
+ *  - a small input — listed leaf bytes at most Spark's file-open cost
+ *    estimate, `spark.sql.files.openCostInBytes` (4 MB) — is aggregated
+ *    in one task instead: `coalesce(1)` before the aggregation gives a
+ *    single-partition child, so partial and final run in that task with
+ *    no shuffle, and the call runs as one Spark job.
  *
  * The schema-drift front-end (M1–M6, SURVEY.md §2.9) is deliberately
  * app-level DataFrame code *above* the planner, not a Catalyst rule: it
@@ -46,6 +54,9 @@ import org.apache.spark.sql.types._
  */
 object AggregateEngine {
 
+  /** Valid values for the API-parity `engine` parameter (§2.11/E1). */
+  private val validEngines = Set("auto", "duckdb", "pyarrow", "spark")
+
   /**
    * @param fileName   parquet file / directory / glob
    * @param groupbyCols dimension columns (empty → global aggregate)
@@ -59,9 +70,6 @@ object AggregateEngine {
    * @param handleMissingFile true (default) → missing path yields an empty
    *                    result; false → throw (`parquery/aggregate.py:154-159`)
    */
-  /** Valid values for the API-parity `engine` parameter (§2.11/E1). */
-  private val validEngines = Set("auto", "duckdb", "pyarrow", "spark")
-
   def aggregatePq(
       spark: SparkSession,
       fileName: String,
@@ -83,11 +91,14 @@ object AggregateEngine {
    * the transport layer (`README.md:4,10`, SURVEY.md §3.3). Here the
    * shard list becomes ONE distributed scan — each file split is a task,
    * partial aggregation happens per split, and the single shuffle
-   * replaces all the per-shard result plumbing. Missing shards are
-   * skipped (the M1 rule per shard) when `handleMissingFile`.
+   * replaces all the per-shard result plumbing; a shard list of at most
+   * `spark.sql.files.openCostInBytes` is aggregated in one task with no
+   * shuffle. Missing shards are skipped (the M1 rule per shard) when
+   * `handleMissingFile`.
    *
    * Cross-shard schema drift (shards written under different schema
-   * versions): the scan merges all shard footers (`mergeSchema`), so a
+   * versions): the footers of all listed shard files are read and
+   * merged on the driver, as `mergeSchema` merges them, so a
    * requested column present in ANY shard is seen — the probe never
    * depends on which file Spark happens to read first. Cells for a
    * column absent from a PARTICULAR shard are null there, with SQL
@@ -128,22 +139,29 @@ object AggregateEngine {
       else (groupbyCols ++ measures.map(_.input)).distinct.sorted
 
     // ---- M1: missing file(s) ---------------------------------------------
-    // one listing per shard; the error names the shards that listing missed
-    val (present, missing) = fileNames.partition(pathExists(spark, _))
+    // one listing: the present/missing split, the footer read and the
+    // input byte total all come from it; the error names the shards it
+    // missed
+    val conf = spark.sessionState.newHadoopConf()
+    val listed = fileNames.map(p => p -> leafFiles(conf, p))
+    val present = listed.collect { case (p, Some(_)) => p }
+    val missing = listed.collect { case (p, None) => p }
     if (missing.nonEmpty && !handleMissingFile)
       throw new java.io.FileNotFoundException(missing.mkString(", "))
     if (present.isEmpty)
       return defaultEmpty(spark, groupbyCols, measures, aggregate, resultCols)
+    val leaves = listed.flatMap(_._2).flatten.distinctBy(_.getPath)
 
     // ---- footer schema probe (parquery/tool.py:123-142) ------------------
-    // One read builds both the probe schema and the scan below. mergeSchema
-    // unions every shard's footer (see scaladoc on cross-shard drift).
-    // Unreadable schema → "no columns exist" → empty. Footers giving one
-    // column conflicting types are an error, as in the reference's
-    // per-file loop (which fails at `pa.concat_tables`).
+    // One read builds both the probe schema and the scan below: the union
+    // of every shard's footer (see scaladoc on cross-shard drift), read
+    // and merged on the driver with no Spark job. Unreadable schema → "no
+    // columns exist" → empty. Footers giving one column conflicting types
+    // are an error, as in the reference's per-file loop (which fails at
+    // `pa.concat_tables`).
     val loaded: Option[DataFrame] =
-      try Some(spark.read.option("mergeSchema", value = true)
-        .parquet(present: _*))
+      try GraftFooterSchema.merged(spark, conf, leaves)
+        .map(spark.read.schema(_).parquet(present: _*))
       catch {
         case e: Exception if isSchemaConflict(e) =>
           throw new IllegalArgumentException(
@@ -178,6 +196,16 @@ object AggregateEngine {
       if (filterColMissing) base.where(lit(false))
       else Filters.compileAll(dataFilter).map(base.where).getOrElse(base)
 
+    // An input Spark opens in less time than it scans (its own file-open
+    // cost estimate) is aggregated in one task: a single-partition child
+    // satisfies the final aggregate, so the plan has no Exchange and runs
+    // as one job.
+    val grouped =
+      if (leaves.map(_.getLen).sum <=
+          spark.sessionState.conf.filesOpenCostInBytes)
+        filtered.coalesce(1)
+      else filtered
+
     val core: DataFrame =
       if (!aggregate) {
         val keep = (existingDims ++ existingMeasures.map(_.input))
@@ -186,13 +214,13 @@ object AggregateEngine {
       } else if (existingMeasures.nonEmpty) {
         val aggExprs = Aggs.compileAll(existingMeasures, countNaDuckdbCompat)
         if (existingDims.nonEmpty)
-          filtered.groupBy(existingDims.map(col): _*)
+          grouped.groupBy(existingDims.map(col): _*)
             .agg(aggExprs.head, aggExprs.tail: _*)
-        else filtered.agg(aggExprs.head, aggExprs.tail: _*)
+        else grouped.agg(aggExprs.head, aggExprs.tail: _*)
       } else {
         // dims exist but no measure column does: the elided query is
         // SELECT dims GROUP BY dims ≡ distinct dims
-        filtered.select(existingDims.map(col): _*).distinct()
+        grouped.select(existingDims.map(col): _*).distinct()
       }
 
     // ---- M3: patch elided columns with defaults (tool.py:240-301) --------
@@ -216,22 +244,34 @@ object AggregateEngine {
       dataFilter = dataFilter, aggregate = false,
       handleMissingFile = handleMissingFile)
 
-  /** Spark's mergeSchema failure: raised on the driver, or inside the
-    * merge job's tasks and then the cause of the job's failure. */
+  /** A type conflict between footers (`StructType.merge`, in
+    * `GraftFooterSchema.merged`), anywhere in the cause chain. */
   private def isSchemaConflict(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
       case s: org.apache.spark.SparkThrowable =>
-        s.getCondition == "CANNOT_MERGE_SCHEMAS"
+        s.getCondition == "CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE"
       case _ => false
     }
 
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Try(fs.globStatus(path) match {
-      case null => false
-      case arr  => arr.nonEmpty
-    }).getOrElse(false)
+  /** The leaf files of the path's glob matches, walked as Spark's file
+    * index walks them: a matched directory is listed whatever its name,
+    * every other `_`/`.` name is skipped. None when the path matches
+    * nothing or cannot be globbed; a walk that fails gives no leaves
+    * (the read below then fails, as it would have). */
+  private[graft] def leafFiles(conf: Configuration,
+                               p: String): Option[Seq[FileStatus]] = {
+    val path = new Path(p)
+    def visible(st: FileStatus) = !GraftFooterSchema.hidden(st.getPath.getName)
+    Try {
+      val fs = path.getFileSystem(conf)
+      def walk(st: FileStatus): Seq[FileStatus] =
+        if (st.isDirectory)
+          fs.listStatus(st.getPath).toSeq.filter(visible).flatMap(walk)
+        else Seq(st)
+      Option(fs.globStatus(path)).filter(_.nonEmpty).map(matches =>
+        Try(matches.toSeq.filter(m => m.isDirectory || visible(m))
+          .flatMap(walk)).getOrElse(Nil))
+    }.toOption.flatten
   }
 
   /**

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -2945,11 +2946,16 @@ object NativeFunctions {
     thetaEstimateName -> ((exprs: Seq[Expression]) =>
       ThetaEstimateExpr(exprs.head, intLit(exprs(1)))))
 
-  /** Idempotently register graft native functions on this session. */
+  /** Idempotently register graft native functions on this session: a
+    * name already bound to its builder (an earlier call, or the
+    * session's [[GraftExtensions]]) is left as it is, so repeated calls
+    * neither rebind nor log the registry's replacement WARN. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(name))
+          .contains(builder))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 

@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.Row
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.{GraftJobProbe, SparkThrowable}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Top-level so Spark can derive an Encoder (inner classes cannot). */
 case class EngineRow(f0: String, f2: Long, f4: Option[Double], f5: Long)
@@ -246,15 +252,23 @@ class AggregateEngineSpec extends SparkSpec {
 
   test("shards giving one column conflicting types: an error naming " +
       "the shards, not an empty result") {
-    val dir = tmpDir()
-    val shards = Seq(s"$dir/a.parquet", s"$dir/b.parquet")
-    Seq((1L, 1)).toDF("g", "m").write.parquet(shards(0))
-    Seq((1L, "x")).toDF("g", "m").write.parquet(shards(1))
-    val e = intercept[IllegalArgumentException] {
-      AggregateEngine.aggregatePqShards(spark, shards, Seq("g"),
-        Seq(Seq("m", "sum", "s"))).collect()
+    // one file per shard, and 20 per shard (40 leaves, more than Spark's
+    // 32-path cutoff for listing on the driver): the driver merge names
+    // the shards either way
+    for (files <- Seq(1, 20)) {
+      val dir = tmpDir()
+      val shards = Seq(s"$dir/a.parquet", s"$dir/b.parquet")
+      def write(df: DataFrame, p: String): Unit =
+        df.coalesce(1).write.option("maxRecordsPerFile", 1L).parquet(p)
+      write((1L to files).map(g => (g, 1)).toDF("g", "m"), shards(0))
+      write((1L to files).map(g => (g, "x")).toDF("g", "m"), shards(1))
+      assert(shards.map(leafCount).sum == 2 * files)
+      val e = intercept[IllegalArgumentException] {
+        AggregateEngine.aggregatePqShards(spark, shards, Seq("g"),
+          Seq(Seq("m", "sum", "s"))).collect()
+      }
+      shards.foreach(s => assert(e.getMessage.contains(s), e.getMessage))
     }
-    shards.foreach(s => assert(e.getMessage.contains(s), e.getMessage))
   }
 
   test("glob path aggregates all matching shards") {
@@ -300,5 +314,129 @@ class AggregateEngineSpec extends SparkSpec {
     val exp = data.groupBy(_.f0).view
       .mapValues(_.count(_.f4.isDefined).toLong).toMap // non-null! (the bug)
     assert(got == exp)
+  }
+
+  // ---- small calls: footer schema on the driver, no Exchange -------------
+
+  private def leaves(p: String) =
+    AggregateEngine.leafFiles(spark.sessionState.newHadoopConf(), p).get
+
+  private def leafCount(p: String): Int = leaves(p).size
+
+  /** Shuffle exchanges of the physical plan as planned (AQE's initial
+    * plan, before any stage runs). */
+  private def shuffles(df: DataFrame): Int = {
+    val qe = spark.sessionState.executePlan(df.queryExecution.logical)
+    qe.assertAnalyzed()
+    val plan = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    plan.collect { case e: ShuffleExchangeExec => e }.size
+  }
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("input at or below spark.sql.files.openCostInBytes: no Exchange, " +
+      "no job to plan, one to run; above it: an Exchange, as before") {
+    val bytes = leaves(path).map(_.getLen).sum
+    def call() = AggregateEngine.aggregatePq(spark, path, Seq("f0"),
+      Seq(Seq("f5", "sum", "s"), Seq("f2", "count_distinct", "d")))
+    val exp = data.groupBy(_.f0).view.mapValues(rs =>
+      (rs.map(_.f5).sum, rs.map(_.f2).distinct.size.toLong)).toMap
+    def rows(df: DataFrame) =
+      df.collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+        .toMap
+    val key = "spark.sql.files.openCostInBytes"
+    withConf(key, bytes.toString) {
+      val (df, planJobs) = GraftJobProbe.jobs(spark.sparkContext)(call())
+      assert(planJobs == 0)
+      assert(shuffles(df) == 0, df.queryExecution.executedPlan.toString)
+      val (got, execJobs) = GraftJobProbe.jobs(spark.sparkContext)(rows(df))
+      assert(execJobs == 1)
+      assert(got == exp)
+    }
+    withConf(key, (bytes - 1).toString) {
+      val df = call()
+      assert(shuffles(df) > 0)
+      assert(rows(df) == exp)
+    }
+  }
+
+  test("driver footer schema ≡ mergeSchema read: every sf0.01 table under " +
+      "both nanos settings, and a Hive shard=k directory") {
+    val conf = spark.sessionState.newHadoopConf()
+    def viaDriver(p: String) = Try(GraftFooterSchema.merged(spark, conf,
+      AggregateEngine.leafFiles(conf, p).get).map(spark.read.schema(_)
+        .parquet(p).schema))
+    def viaJob(p: String) =
+      Try(Some(spark.read.option("mergeSchema", value = true).parquet(p)
+        .schema))
+    def condition(e: Throwable) = e match {
+      case s: SparkThrowable => s.getCondition
+      case other => other.getClass.getName
+    }
+    def check(p: String): Unit = (viaDriver(p), viaJob(p)) match {
+      case (Success(a), Success(b)) => assert(a == b, p)
+      case (Failure(a), Failure(b)) =>
+        assert(condition(a) == condition(b), s"$p: $a vs $b")
+      case (a, b) => fail(s"$p: driver $a, mergeSchema job $b")
+    }
+    val tables = new java.io.File("/root/testdata/sf0.01").listFiles()
+      .map(_.toString).filter(_.endsWith(".parquet")).sorted
+    assert(tables.exists(_.endsWith("events.parquet")))
+    for (nanos <- Seq("true", "false"))
+      withConf("spark.sql.legacy.parquet.nanosAsLong", nanos) {
+        tables.foreach(check)
+      }
+
+    // column names that differ only in case merge as the session's
+    // spark.sql.caseSensitive says
+    val cased = tmpDir()
+    Seq((1L, 2L)).toDF("g", "F5").coalesce(1).write.mode("append")
+      .parquet(cased)
+    Seq((1L, 3L)).toDF("g", "f5").coalesce(1).write.mode("append")
+      .parquet(cased)
+    check(cased)
+
+    val dir = tmpDir()
+    Seq(("a", 1L)).toDF("f0", "f2").write.parquet(s"$dir/shard=0")
+    Seq(("b", 2L, 3.5)).toDF("f0", "f2", "f4").write.parquet(s"$dir/shard=1")
+    check(dir)
+    assert(viaDriver(dir).get.get.fieldNames.toSeq ==
+      Seq("f0", "f2", "f4", "shard"))
+    val got = AggregateEngine.aggregatePq(spark, dir, Seq("shard"),
+      Seq(Seq("f2", "sum", "s"))).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(got == Map(0 -> 1L, 1 -> 2L))
+  }
+
+  test("edge inputs give the mergeSchema probe's outcome: an empty " +
+      "directory, and a non-Parquet file among the shards") {
+    val dir = tmpDir()
+    val empty = s"$dir/empty"
+    new java.io.File(empty).mkdirs()
+    val notes = s"$dir/notes.txt"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(notes),
+      "not parquet\n")
+    def call(shards: String*) = AggregateEngine.aggregatePqShards(spark,
+      shards, Seq("f0"), Seq(Seq("f5", "sum", "s")))
+    val exp = data.groupBy(_.f0).view.mapValues(_.map(_.f5).sum).toMap
+    // alone: no schema → the typed empty result
+    for (only <- Seq(empty, notes)) {
+      val df = call(only)
+      assert(df.collect().isEmpty, only)
+      assert(df.columns.toSeq == Seq("f0", "s"))
+    }
+    // beside a real shard: the empty directory adds nothing, an
+    // unreadable footer fails the whole probe → empty
+    assert(call(path, empty).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap == exp)
+    assert(call(path, notes).collect().isEmpty)
   }
 }

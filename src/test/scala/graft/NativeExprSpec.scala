@@ -444,6 +444,55 @@ class NativeExprSpec extends SparkSpec {
     }
   }
 
+  test("register is idempotent: a second call leaves the registry as it " +
+      "was and logs no replacement WARN") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-register-probe", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(classOf[SimpleFunctionRegistry]
+      .getName).asInstanceOf[Logger]
+    val reg = spark.sessionState.functionRegistry
+    def snapshot() = reg.listFunction().map(id => id -> reg.lookupFunction(id))
+    val cosine = FunctionIdentifier(NativeFunctions.cosineName)
+    logger.addAppender(appender)
+    try {
+      NativeFunctions.register(spark)
+      // a name bound to another builder is rebound (and the registry says
+      // so, which shows the probe hears its WARNs) …
+      reg.createOrReplaceTempFunction(NativeFunctions.cosineName,
+        (_: Seq[Expression]) => Literal(0.0), "scala_udf")
+      val stranger = reg.lookupFunctionBuilder(cosine)
+      NativeFunctions.register(spark)
+      assert(reg.lookupFunctionBuilder(cosine) != stranger)
+      assert(warned.size == 2, warned)
+      // … and a name already bound to its builder is left as it is
+      val before = snapshot()
+      NativeFunctions.register(spark)
+      val after = snapshot()
+      assert(before.map(_._1) == after.map(_._1))
+      before.zip(after).foreach { case ((id, a), (_, b)) =>
+        assert(a.get eq b.get, s"$id was rebound")
+      }
+      assert(warned.size == 2, warned)
+      assert(spark.range(1).select(NativeFunctions.cosineNative(
+        array(lit(1.0)), array(lit(1.0)))).head().getDouble(0) == 1.0)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   test("PublicSuffixes.registrable: rules, wildcards, exceptions, defaults") {
     import graft.plans.PublicSuffixes.registrable
     // multi-label registry rules
