@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.util.concurrent.{ConcurrentLinkedQueue, TimeoutException}
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -10,6 +11,8 @@ import scala.runtime.NonLocalReturnControl
 import org.apache.spark.rdd.GraftPinRelease
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /**
  * The one owner of operator intermediates held in memory: pins,
@@ -59,7 +62,9 @@ import org.apache.spark.sql.execution.LogicalRDD
  *  - A kept pin belongs to the enclosing scope of the caller (nested
  *    operators: `semanticDedup` → `duplicateClusters`), and is released
  *    when THAT scope's result no longer reads it. With no enclosing
- *    scope it lives with the result: release it with [[unpin]].
+ *    scope it lives with the result: release it with [[unpin]], or,
+ *    for pins a streaming query's batches read, with
+ *    [[unpinOnTermination]].
  *  - [[Scope.release]] frees a pin mid-iteration (the previous round).
  *
  * Only [[unpin]] frees a local pin: `Dataset.unpersist` alone leaves the
@@ -108,6 +113,26 @@ object Checkpoints {
   def unpin(ds: Dataset[_]): Unit = {
     ds.unpersist()
     rdds(ds).foreach(GraftPinRelease.unpersist)
+  }
+
+  /** [[unpin]] each of `pins` once `query` has terminated (stopped,
+    * finished or failed) — the lifetime of pins its batches read. */
+  def unpinOnTermination(query: StreamingQuery, pins: Dataset[_]*): Unit = {
+    val streams = query.sparkSession.streams
+    val released = new AtomicBoolean
+    lazy val listener: StreamingQueryListener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.runId == query.runId) release()
+    }
+    def release(): Unit = if (released.compareAndSet(false, true)) {
+      streams.removeListener(listener)
+      pins.foreach(unpin)
+    }
+    streams.addListener(listener)
+    // a query that ended before the listener was added posts no more events
+    if (!query.isActive) release()
   }
 
   private def rdds(ds: Dataset[_]) = ds.queryExecution.logical

@@ -1,18 +1,9 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.util.Base64
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.ListVector
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
-import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit => ArrowTimeUnit}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.arrow.GraftArrowStream
 
 /**
  * Arrow IPC transport — the reference's result-shipping layer
@@ -26,57 +17,28 @@ import org.apache.spark.sql.types._
  * result to an external consumer. It is driver-side by design — do not use
  * it to move bulk data (that is what shuffle/parquet are for).
  *
+ * The codec is Spark's own (`ArrowConverters`, `ArrowBatchStreamWriter`,
+ * `ArrowUtils`, through [[GraftArrowStream]]): serializing collects the
+ * plan's internal rows (no `Row` conversion) and writes them as one
+ * record batch; deserializing reads every batch of the stream into a
+ * local relation. Every type that codec carries ships — scalars,
+ * decimals, dates, `timestamp` (stamped "UTC", the session zone
+ * `GraftSession` sets) and `timestamp_ntz` (a zone-less Arrow
+ * timestamp, as pyarrow writes naive datetimes), arrays, maps and
+ * structs.
+ *
  * Base64 adds ~33% size overhead vs binary (`parquery/transport.py:52`).
  */
 object Transport {
 
   /** DataFrame → Arrow IPC stream bytes (`serialize_pa_table_bytes`). */
-  def serializeArrowBytes(df: DataFrame): Array[Byte] = {
-    val schema = df.schema
-    val rows = df.collect()
-    val arrowSchema = toArrowSchema(schema)
-    val allocator = new RootAllocator()
-    try {
-      val root = VectorSchemaRoot.create(arrowSchema, allocator)
-      try {
-        root.allocateNew()
-        schema.fields.zipWithIndex.foreach { case (f, i) =>
-          fillVector(root.getVector(i), f.dataType, rows, i)
-        }
-        root.setRowCount(rows.length)
-        val out = new ByteArrayOutputStream()
-        val writer = new ArrowStreamWriter(root, null, out)
-        writer.start(); writer.writeBatch(); writer.end(); writer.close()
-        out.toByteArray
-      } finally root.close()
-    } finally allocator.close()
-  }
+  def serializeArrowBytes(df: DataFrame): Array[Byte] =
+    GraftArrowStream.write(df)
 
   /** Arrow IPC stream bytes → DataFrame (`deserialize_pa_table_bytes`). */
   def deserializeArrowBytes(spark: SparkSession,
-                            bytes: Array[Byte]): DataFrame = {
-    val allocator = new RootAllocator()
-    try {
-      val reader = new ArrowStreamReader(
-        new ByteArrayInputStream(bytes), allocator)
-      try {
-        val root = reader.getVectorSchemaRoot
-        val sparkSchema = fromArrowSchema(root.getSchema)
-        val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-        while (reader.loadNextBatch()) {
-          val n = root.getRowCount
-          var r = 0
-          while (r < n) {
-            rows += Row.fromSeq(sparkSchema.fields.indices.map { i =>
-              readValue(root.getVector(i), sparkSchema.fields(i).dataType, r)
-            })
-            r += 1
-          }
-        }
-        spark.createDataFrame(rows.asJava, sparkSchema)
-      } finally reader.close()
-    } finally allocator.close()
-  }
+                            bytes: Array[Byte]): DataFrame =
+    GraftArrowStream.read(spark, bytes)
 
   /** Base64 variants (`serialize_pa_table_base64` / `..._deserialize`). */
   def serializeArrowBase64(df: DataFrame): String =
@@ -84,167 +46,4 @@ object Transport {
 
   def deserializeArrowBase64(spark: SparkSession, s: String): DataFrame =
     deserializeArrowBytes(spark, Base64.getDecoder.decode(s))
-
-  // ---------------------------------------------------------------------
-
-  private def toArrowType(dt: DataType): ArrowType = dt match {
-    case LongType    => new ArrowType.Int(64, true)
-    case IntegerType => new ArrowType.Int(32, true)
-    case ShortType   => new ArrowType.Int(16, true)
-    case ByteType    => new ArrowType.Int(8, true)
-    case DoubleType  => new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)
-    case FloatType   => new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE)
-    case StringType  => ArrowType.Utf8.INSTANCE
-    case BooleanType => ArrowType.Bool.INSTANCE
-    case BinaryType  => ArrowType.Binary.INSTANCE
-    case DateType    => new ArrowType.Date(org.apache.arrow.vector.types.DateUnit.DAY)
-    case TimestampType => new ArrowType.Timestamp(ArrowTimeUnit.MICROSECOND, "UTC")
-    case d: DecimalType => new ArrowType.Decimal(d.precision, d.scale, 128)
-    case other => throw new UnsupportedOperationException(
-      s"Transport: unsupported type $other")
-  }
-
-  /** A list field carries its element as a child field named "item" —
-    * the reference's transport is table-generic (`transport.py:12-39`),
-    * so embeddings (`array<float>`) and other nested results must ship. */
-  private def toArrowField(name: String, dt: DataType,
-                           nullable: Boolean): Field = dt match {
-    case ArrayType(et, containsNull) =>
-      new Field(name, new FieldType(nullable, ArrowType.List.INSTANCE, null),
-        java.util.Collections.singletonList(
-          toArrowField("item", et, containsNull)))
-    case other =>
-      new Field(name, new FieldType(nullable, toArrowType(other), null),
-        java.util.Collections.emptyList[Field]())
-  }
-
-  private def toArrowSchema(s: StructType): ArrowSchema =
-    new ArrowSchema(s.fields.map(f =>
-      toArrowField(f.name, f.dataType, f.nullable)).toList.asJava)
-
-  private def fromArrowType(t: ArrowType): DataType = t match {
-    case i: ArrowType.Int if i.getBitWidth == 64 => LongType
-    case i: ArrowType.Int if i.getBitWidth == 32 => IntegerType
-    case i: ArrowType.Int if i.getBitWidth == 16 => ShortType
-    case i: ArrowType.Int if i.getBitWidth == 8  => ByteType
-    case f: ArrowType.FloatingPoint
-      if f.getPrecision == FloatingPointPrecision.DOUBLE => DoubleType
-    case f: ArrowType.FloatingPoint
-      if f.getPrecision == FloatingPointPrecision.SINGLE => FloatType
-    case _: ArrowType.Utf8   => StringType
-    case _: ArrowType.Bool   => BooleanType
-    case _: ArrowType.Binary => BinaryType
-    case _: ArrowType.Date   => DateType
-    case _: ArrowType.Timestamp => TimestampType
-    case d: ArrowType.Decimal => DecimalType(d.getPrecision, d.getScale)
-    case other => throw new UnsupportedOperationException(
-      s"Transport: unsupported arrow type $other")
-  }
-
-  private def fromArrowField(f: Field): DataType = f.getType match {
-    case _: ArrowType.List =>
-      val child = f.getChildren.get(0)
-      ArrayType(fromArrowField(child), child.isNullable)
-    case t => fromArrowType(t)
-  }
-
-  private def fromArrowSchema(s: ArrowSchema): StructType =
-    StructType(s.getFields.asScala.map { f =>
-      StructField(f.getName, fromArrowField(f), f.isNullable)
-    }.toArray)
-
-  /** List columns go through the union-list writer (rows never started
-    * stay null). Element coverage matches what results actually carry:
-    * numeric vectors (embeddings) — extend the match for more. */
-  private def fillListVector(x: ListVector, et: DataType,
-                             rows: Array[Row], colIdx: Int): Unit = {
-    val w = x.getWriter
-    var i = 0
-    while (i < rows.length) {
-      if (!rows(i).isNullAt(colIdx)) {
-        w.setPosition(i)
-        w.startList()
-        rows(i).getSeq[Any](colIdx).foreach { e =>
-          et match {
-            case DoubleType  => w.float8().writeFloat8(e.asInstanceOf[Double])
-            case FloatType   => w.float4().writeFloat4(e.asInstanceOf[Float])
-            case LongType    => w.bigInt().writeBigInt(e.asInstanceOf[Long])
-            case IntegerType => w.integer().writeInt(e.asInstanceOf[Int])
-            case other => throw new UnsupportedOperationException(
-              s"Transport: unsupported list element type $other")
-          }
-        }
-        w.endList()
-      }
-      i += 1
-    }
-    x.setValueCount(rows.length)
-  }
-
-  private def fillVector(v: FieldVector, dt: DataType,
-                         rows: Array[Row], colIdx: Int): Unit = {
-    dt match {
-      case ArrayType(et, _) =>
-        return fillListVector(v.asInstanceOf[ListVector], et, rows, colIdx)
-      case _ => ()
-    }
-    var i = 0
-    while (i < rows.length) {
-      val row = rows(i)
-      if (row.isNullAt(colIdx)) v.asInstanceOf[BaseValueVector] match {
-        case _ => v.setNull(i)
-      } else (v, dt) match {
-        case (x: BigIntVector, _)  => x.setSafe(i, row.getLong(colIdx))
-        case (x: IntVector, _)     => x.setSafe(i, row.getInt(colIdx))
-        case (x: SmallIntVector, _) => x.setSafe(i, row.getShort(colIdx))
-        case (x: TinyIntVector, _) => x.setSafe(i, row.getByte(colIdx))
-        case (x: Float8Vector, _)  => x.setSafe(i, row.getDouble(colIdx))
-        case (x: Float4Vector, _)  => x.setSafe(i, row.getFloat(colIdx))
-        case (x: VarCharVector, _) =>
-          x.setSafe(i, row.getString(colIdx).getBytes("UTF-8"))
-        case (x: BitVector, _)     =>
-          x.setSafe(i, if (row.getBoolean(colIdx)) 1 else 0)
-        case (x: VarBinaryVector, _) =>
-          x.setSafe(i, row.getAs[Array[Byte]](colIdx))
-        case (x: DateDayVector, _) =>
-          x.setSafe(i, row.getAs[java.sql.Date](colIdx).toLocalDate
-            .toEpochDay.toInt)
-        case (x: TimeStampMicroTZVector, _) =>
-          val ts = row.getAs[java.sql.Timestamp](colIdx)
-          x.setSafe(i, ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000L)
-        case (x: DecimalVector, d: DecimalType) =>
-          x.setSafe(i, row.getDecimal(colIdx).setScale(d.scale))
-        case (other, t) => throw new UnsupportedOperationException(
-          s"Transport: cannot fill ${other.getClass} for $t")
-      }
-      i += 1
-    }
-    v.setValueCount(rows.length)
-  }
-
-  private def readValue(v: FieldVector, dt: DataType, i: Int): Any = {
-    if (v.isNull(i)) null
-    else v match {
-      case x: BigIntVector   => x.get(i)
-      case x: IntVector      => x.get(i)
-      case x: SmallIntVector => x.get(i)
-      case x: TinyIntVector  => x.get(i)
-      case x: Float8Vector   => x.get(i)
-      case x: Float4Vector   => x.get(i)
-      case x: VarCharVector  => new String(x.get(i), "UTF-8")
-      case x: BitVector      => x.get(i) == 1
-      case x: VarBinaryVector => x.get(i)
-      case x: DateDayVector  =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(x.get(i).toLong))
-      case x: TimeStampMicroTZVector =>
-        val micros = x.get(i)
-        val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-        ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-        ts
-      case x: DecimalVector => x.getObject(i)
-      case x: ListVector    => x.getObject(i).asScala.toSeq
-      case other => throw new UnsupportedOperationException(
-        s"Transport: cannot read ${other.getClass}")
-    }
-  }
 }

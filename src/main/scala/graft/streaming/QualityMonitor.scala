@@ -21,7 +21,8 @@ import graft.functions.LanguageModel.BigramLm
  * [[FrequencyMonitor]] lessons applied):
  *  - the model is pinned (local pin) ONCE at start — the
  *    unigram/bigram counting aggregations over the target corpus run
- *    once, not once per micro-batch (the Lloyd-loop pinning rule);
+ *    once, not once per micro-batch (the Lloyd-loop pinning rule) —
+ *    and released when the query terminates;
  *  - per-batch cost is O(batch tokens) against the materialized model
  *    tables — no running state on the write path, nothing to corrupt
  *    mid-crash;
@@ -68,7 +69,8 @@ object QualityMonitor {
       BigramLm(s.pinLocal(model.unigrams), s.pinLocal(model.bigrams),
         s.pinLocal(model.stats))
     }
-    stream.writeStream
+    val pins = Seq(pinned.unigrams, pinned.bigrams, pinned.stats)
+    val query = try stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -108,5 +110,8 @@ object QualityMonitor {
         } finally b.unpersist()
       }
       .start()
+    catch { case e: Throwable => pins.foreach(Checkpoints.unpin); throw e }
+    Checkpoints.unpinOnTermination(query, pins: _*)
+    query
   }
 }

@@ -796,6 +796,38 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(stDir).count() == 2L)
   }
 
+  test("qualityGate releases its model pins when the query terminates") {
+    import org.apache.spark.sql.streaming.Trigger
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.streaming.QualityMonitor
+    import graft.functions.LanguageModel
+    val inDir = tmpDir()
+    val model = LanguageModel.trainBigramLm(
+      Seq("the cat sat on the mat").toDF("text"), "text")
+    Seq((1L, "the cat sat on the mat")).toDF("id", "text")
+      .coalesce(1).write.mode("append").parquet(inDir)
+    val sc = spark.sparkContext
+    def gate(trigger: Trigger) = QualityMonitor.qualityGate(
+      spark.readStream.schema("id LONG, text STRING").parquet(inDir),
+      "id", "text", model, maxPpl = 4.0, tmpDir() + "/adm",
+      tmpDir() + "/st", tmpDir(), trigger)
+    def released(before: Set[Int]): Unit =
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+      }
+    // stopped: the three model pins live while the query runs
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val running = gate(Trigger.ProcessingTime("1 second"))
+    assert((sc.getPersistentRDDs.keySet -- before).size >= 3)
+    running.processAllAvailable()
+    running.stop()
+    released(before)
+    // finished: an AvailableNow gate that ends by itself
+    gate(Trigger.AvailableNow()).awaitTermination()
+    released(before)
+  }
+
   // ---- streaming CDC compaction ------------------------------------------
 
   test("CdcPipeline: change stream compacts to the latest snapshot") {
