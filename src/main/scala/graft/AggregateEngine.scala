@@ -33,7 +33,9 @@ import org.apache.spark.sql.types._
  *    estimate, `spark.sql.files.openCostInBytes` (4 MB) — is aggregated
  *    in one task instead: `coalesce(1)` before the aggregation gives a
  *    single-partition child, so partial and final run in that task with
- *    no shuffle, and the call runs as one Spark job.
+ *    no shuffle, and the call runs as one Spark job; a second after it
+ *    keeps the caller's column order out of the aggregate's generated
+ *    class.
  *
  * The schema-drift front-end (M1–M6, SURVEY.md §2.9) is deliberately
  * app-level DataFrame code *above* the planner, not a Catalyst rule: it
@@ -112,6 +114,15 @@ object AggregateEngine {
    * combine), and null-skipping is the semantic a SQL engine user
    * expects of ragged shards. Columns missing from EVERY shard still
    * get the reference's M3 defaults via the patch below.
+   *
+   * Publish contract: the returned DataFrame reads the shard files as
+   * they were listed when it was built. A shard rewritten in place (same
+   * file name) between this call and the DataFrame's execution is read
+   * at its planned length — Spark's split covers [0, listed length) and
+   * skips row groups whose midpoint lies past it — so a file that grew
+   * loses the rows past that length, with no error. Publish a new
+   * version under a new file name, as [[graft.sources.Writer]] does, or
+   * call again after the publish.
    */
   def aggregatePqShards(
       spark: SparkSession,
@@ -188,7 +199,14 @@ object AggregateEngine {
     // the result is empty but every column keeps its true file-derived type.
     val filterColMissing = dataFilter.exists(f => !existing.contains(f.column))
 
-    val needed = (existingDims ++ existingMeasures.map(_.input) ++
+    // dims are read and grouped in one canonical order (by data type,
+    // then name), so calls that list the same dims in another order share
+    // every generated class below the one that writes the result row; the
+    // final select restores the caller's order
+    val keyDims = existingDims.sortBy(d =>
+      (fileSchema(d).dataType.catalogString, d))
+
+    val needed = (keyDims ++ existingMeasures.map(_.input) ++
       (if (filterColMissing) Nil else dataFilter.map(_.column))).distinct
 
     val base = loaded.get.select(needed.map(col): _*)
@@ -200,11 +218,9 @@ object AggregateEngine {
     // cost estimate) is aggregated in one task: a single-partition child
     // satisfies the final aggregate, so the plan has no Exchange and runs
     // as one job.
-    val grouped =
-      if (leaves.map(_.getLen).sum <=
-          spark.sessionState.conf.filesOpenCostInBytes)
-        filtered.coalesce(1)
-      else filtered
+    val oneTask = leaves.map(_.getLen).sum <=
+      spark.sessionState.conf.filesOpenCostInBytes
+    val grouped = if (oneTask) filtered.coalesce(1) else filtered
 
     val core: DataFrame =
       if (!aggregate) {
@@ -213,18 +229,25 @@ object AggregateEngine {
         filtered.select(keep.map(col): _*)
       } else if (existingMeasures.nonEmpty) {
         val aggExprs = Aggs.compileAll(existingMeasures, countNaDuckdbCompat)
-        if (existingDims.nonEmpty)
-          grouped.groupBy(existingDims.map(col): _*)
+        if (keyDims.nonEmpty)
+          grouped.groupBy(keyDims.map(col): _*)
             .agg(aggExprs.head, aggExprs.tail: _*)
         else grouped.agg(aggExprs.head, aggExprs.tail: _*)
       } else {
         // dims exist but no measure column does: the elided query is
         // SELECT dims GROUP BY dims ≡ distinct dims
-        grouped.select(existingDims.map(col): _*).distinct()
+        grouped.select(keyDims.map(col): _*).distinct()
       }
 
+    // In one task, a second coalesce(1) after the aggregate moves no data
+    // but ends the aggregate's generated class: the select into the
+    // caller's order below then compiles as a small class of its own,
+    // shared by every call whose result columns have the same types in
+    // the same order, and the aggregate's class is shared by every order
+    val shaped = if (oneTask && aggregate) core.coalesce(1) else core
+
     // ---- M3: patch elided columns with defaults (tool.py:240-301) --------
-    val withDims = missingDims.foldLeft(core)(
+    val withDims = missingDims.foldLeft(shaped)(
       (df, d) => df.withColumn(d, lit(standardMissingId)))
     val patched = missingMeasures.foldLeft(withDims)((df, m) =>
       df.withColumn(if (aggregate) m.output else m.input, lit(0.0)))

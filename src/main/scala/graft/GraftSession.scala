@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.GraftExtensions
+
 /**
  * Session factory embodying the engine's scale configuration. One place
  * for every knob, so local harnesses and cluster deployments share the
@@ -24,8 +26,35 @@ import org.apache.spark.sql.SparkSession
  *    executor locale (and the DuckDB verify oracle runs UTC).
  *  - parquet filter pushdown + vectorized reader are Spark defaults the
  *    engine RELIES on (SURVEY.md §4 O1/O2); pinned against env drift.
+ *  - `codegen.cache.maxEntries` [[codegenCacheEntries]] (a static conf
+ *    Spark marks internal): Spark's compiled-class cache
+ *    (`CodeGenerator.compile`) holds 100 entries by default, fewer than
+ *    graft's working set, so a repeated report shape was compiled again
+ *    (Janino, ~15–25 ms a class) once other shapes had evicted it. In
+ *    Spark 4.1 the cache key is (thread context class loader, source):
+ *    the driver thread and the local executor's task threads carry
+ *    different loaders, so a source that is compiled on both sides takes
+ *    two entries. The size is read once per JVM, at its first compile,
+ *    from the session active then — so it holds when the JVM's first
+ *    session is built here.
+ *  - [[GraftExtensions]] installed (`withExtensions`, the same object a
+ *    `spark.sql.extensions` deployment names): the native functions, and
+ *    the rule that keeps filter values out of generated code, so a
+ *    shape's classes are reused across filter values.
  */
 object GraftSession {
+
+  /** Entries in Spark's compiled-class cache: the measured working set,
+    * distinct generated sources × 2 class loaders, with headroom. With
+    * the filter-value rule on, on 4 cores: one `graft.Verify` run at
+    * sf0.01 (all 259 queries) generated 1,596 distinct sources and held
+    * 2,691 entries (not every source is compiled on both sides);
+    * graftbench's `shard_report` 110 sources / 183 entries and
+    * `shard_publish` 110 / 184 (seed 1, `--seconds 15`).
+    * 2 × 1,596 = 3,192, rounded up to 4,096. The cache grows only to the
+    * classes actually compiled, so a small working set holds no more
+    * memory for it. */
+  val codegenCacheEntries: Int = 4096
 
   def builder(appName: String = "graft",
               master: Option[String] = None,
@@ -42,6 +71,9 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", "134217728")
       .config("spark.sql.shuffle.partitions",
         shufflePartitions.getOrElse(cores).toString)
+      .config("spark.sql.codegen.cache.maxEntries",
+        codegenCacheEntries.toString)
+      .withExtensions(new GraftExtensions)
     master.fold(b)(b.master)
   }
 
