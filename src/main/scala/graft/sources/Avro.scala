@@ -119,18 +119,10 @@ object Avro {
    */
   def recordsJson(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        try {
-          val (schema, recs) = recordsOf(bytes)
-          recs.map(r => (path, schema, r, null: String))
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            Seq((path, null: String, null: String,
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
-        }
-      }
+    Payload.perFile(spark, pathGlob) { (path, bytes) =>
+      val (schema, recs) = recordsOf(bytes)
+      recs.map(r => (path, schema, r, null: String))
+    } { (path, error) => (path, null: String, null: String, error) }
       .toDF("path", "schema_json", "record_json", "avro_error")
   }
 

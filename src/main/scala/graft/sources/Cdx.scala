@@ -154,8 +154,6 @@ object Cdx {
       .as[(String, Seq[Long], Seq[Long])]
       .flatMap { case (fn, offs, lens) =>
         val ranges = offs.zip(lens)
-        def named(e: Throwable) =
-          Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
         val path = new org.apache.hadoop.fs.Path(base, fn)
         try {
           val fs = path.getFileSystem(
@@ -180,14 +178,14 @@ object Cdx {
               } catch {
                 case scala.util.control.NonFatal(e) =>
                   (fn, off, null: String, null: String,
-                    null: Array[Byte], named(e))
+                    null: Array[Byte], Payload.named(e))
               }
             }
           } finally in.close()
         } catch {
           case scala.util.control.NonFatal(e) =>
             Seq((fn, -1L, null: String, null: String,
-              null: Array[Byte], s"shard: ${named(e)}"))
+              null: Array[Byte], s"shard: ${Payload.named(e)}"))
         }
       }
       .toDF("filename", "offset", "warc_type", "target_uri",

@@ -355,18 +355,8 @@ object Doc {
     * `sources.Csv` pattern) — a corrupt document keeps its row with
     * `text` null and the NAMED error in `doc_error`. Deterministic
     * per-row byte walk; nothing crosses rows. */
-  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { case (id, bytes) =>
-      try (id, extractText(bytes), null: String)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          (id, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-      }
-    }.toDF("id", "text", "doc_error")
-  }
+  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame =
+    Payload.extractTexts(ds, "doc_error")(extractText)
 
   // ---------------------------------------------------------------
   // fixture writer (independent spec-valid .doc builder)

@@ -22,7 +22,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
  * Honest boundaries (NAMED errors): a payload that is not a ZIP
  * (legacy .doc and ENCRYPTED OOXML are OLE compound files — the
  * 0xD0CF11E0 signature is detected and named), a ZIP without
- * `word/document.xml`, and malformed XML. The Spark surface
+ * `word/document.xml`, a repeated entry name before it, and
+ * malformed XML ([[Payload]]'s ZIP walk and StAX reader). The walk
+ * reads only `word/document.xml` and ends there. The Spark surface
  * quarantines failures per-row like [[Pdf.extractTexts]].
  *
  * The reference engine (parquery) has no document surface — this is
@@ -34,65 +36,11 @@ object Docx {
   private def err(msg: String): Nothing =
     throw new IllegalArgumentException(s"DOCX: $msg")
 
-  /** Read one entry from the zip payload, or null. */
-  private def zipEntry(bytes: Array[Byte], name: String): Array[Byte] = {
-    if (bytes.length < 4) err("truncated payload")
-    if ((bytes(0) & 0xFF) == 0xD0 && (bytes(1) & 0xFF) == 0xCF &&
-        (bytes(2) & 0xFF) == 0x11 && (bytes(3) & 0xFF) == 0xE0)
-      err("OLE compound file (legacy .doc or ENCRYPTED OOXML) — " +
-        "named boundary, no decryption/legacy support")
-    if (!(bytes(0) == 'P' && bytes(1) == 'K')) err("not a ZIP container")
-    val zin = new java.util.zip.ZipInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (e.getName == name) {
-          // bounded read: a ZIP bomb entry (KB of Deflate → multi-GB)
-          // would OOM the executor — an Error the per-row quarantine
-          // cannot catch — so cap like Pdf.inflate and NAME it.
-          val out = new java.io.ByteArrayOutputStream(
-            math.min(math.max(64, e.getSize.toInt), 1 << 20))
-          val chunk = new Array[Byte](8192)
-          var n = zin.read(chunk)
-          while (n >= 0) {
-            if (out.size().toLong + n > Pdf.MaxDecodedBytes)
-              err(s"$name exceeds ${Pdf.MaxDecodedBytes} bytes " +
-                "(decompression bomb?)")
-            out.write(chunk, 0, n)
-            n = zin.read(chunk)
-          }
-          return out.toByteArray
-        }
-        e = zin.getNextEntry
-      }
-      null
-    } catch {
-      case ex: java.util.zip.ZipException => err(s"bad ZIP: ${ex.getMessage}")
-    } finally zin.close()
-  }
-
-  /** StAX factory per thread: `newInstance()` walks the classpath's
-    * provider files on EVERY call (measured ~90 µs/row in the
-    * ScaleCurve family — more than the parse itself), and factory
-    * instances are not specified thread-safe, so cache one per
-    * executor thread. DTD and external entities stay OFF (XXE). */
-  private val staxFactory =
-    new ThreadLocal[javax.xml.stream.XMLInputFactory] {
-      override def initialValue(): javax.xml.stream.XMLInputFactory = {
-        val f = javax.xml.stream.XMLInputFactory.newInstance()
-        f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-        f.setProperty(
-          javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
-          false)
-        f
-      }
-    }
-
   def extractText(bytes: Array[Byte]): String = {
-    val doc = zipEntry(bytes, "word/document.xml")
-    if (doc == null) err("no word/document.xml entry (not a DOCX?)")
-    val factory = staxFactory.get()
+    // the walk ends at word/document.xml: nothing after it is inflated
+    val doc = Payload.zipEntries(bytes, "DOCX", Pdf.MaxDecodedBytes,
+      Some(Set("word/document.xml"))).getOrElse("word/document.xml",
+      err("no word/document.xml entry (not a DOCX?)"))
     val sb = new StringBuilder
     def newline(): Unit =
       if (sb.nonEmpty && sb.charAt(sb.length - 1) != '\n') sb.append('\n')
@@ -104,9 +52,8 @@ object Docx {
     // row's tab/newline state
     var rowCells = List.empty[Int]
     var cellDepth = 0
+    val r = Payload.reader(doc, "DOCX")
     try {
-      val r = factory.createXMLStreamReader(
-        new java.io.ByteArrayInputStream(doc))
       while (r.hasNext) {
         r.next() match {
           case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
@@ -148,43 +95,20 @@ object Docx {
           case _ => ()
         }
       }
-      r.close()
-    } catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        err(s"malformed document.xml: ${e.getMessage}")
-    }
+    } finally r.close()
     while (sb.nonEmpty && sb.charAt(sb.length - 1) == '\n')
       sb.deleteCharAt(sb.length - 1)
     sb.toString
   }
 
   /** `(id, docxBytes)` → `(id, text, docx_error)` with per-row
-    * quarantine — [[Pdf.extractTexts]]'s shape for the other
-    * document format. */
-  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { case (id, bytes) =>
-      try (id, extractText(bytes), null: String)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          (id, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-      }
-    }.toDF("id", "text", "docx_error")
-  }
+    * quarantine ([[Payload.extractTexts]]). */
+  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame =
+    Payload.extractTexts(ds, "docx_error")(extractText)
 
   // ---------------------------------------------------------------
   // fixture writer (independent spec-valid OOXML builder)
   // ---------------------------------------------------------------
-
-  private def xmlEscape(s: String): String =
-    s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case c => c.toString
-    }
 
   /**
    * Minimal valid DOCX: `[Content_Types].xml`, `_rels/.rels` and a
@@ -201,13 +125,13 @@ object Docx {
         body.split(" ", -1).zipWithIndex.map { case (tok, i) =>
           val sp = if (i == 0) "" else
             "<w:r><w:t xml:space=\"preserve\"> </w:t></w:r>"
-          s"$sp<w:r><w:t xml:space=\"preserve\">${xmlEscape(tok)}</w:t></w:r>"
+          s"$sp<w:r><w:t xml:space=\"preserve\">${Payload.xmlEscape(tok)}</w:t></w:r>"
         }.mkString
-      else s"<w:r><w:t xml:space=\"preserve\">${xmlEscape(body)}</w:t></w:r>"
+      else s"<w:r><w:t xml:space=\"preserve\">${Payload.xmlEscape(body)}</w:t></w:r>"
     val documentXml =
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <w:document $ns><w:body>
-<w:p><w:r><w:t xml:space="preserve">${xmlEscape(title)}</w:t></w:r></w:p>
+<w:p><w:r><w:t xml:space="preserve">${Payload.xmlEscape(title)}</w:t></w:r></w:p>
 <w:p>$bodyRuns</w:p>
 </w:body></w:document>"""
     val contentTypes =
@@ -222,16 +146,9 @@ object Docx {
 <Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
 <Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="word/document.xml"/>
 </Relationships>"""
-    val out = new java.io.ByteArrayOutputStream()
-    val z = new java.util.zip.ZipOutputStream(out)
-    Seq("[Content_Types].xml" -> contentTypes, "_rels/.rels" -> rels,
-      "word/document.xml" -> documentXml).foreach { case (name, content) =>
-      z.putNextEntry(new java.util.zip.ZipEntry(name))
-      z.write(content.getBytes("UTF-8"))
-      z.closeEntry()
-    }
-    z.close()
-    out.toByteArray
+    Payload.buildZip(Seq("[Content_Types].xml" -> contentTypes,
+      "_rels/.rels" -> rels, "word/document.xml" -> documentXml)
+      .map { case (name, xml) => name -> xml.getBytes("UTF-8") })
   }
 
   /** A document.xml fragment with tabs, breaks and a 2x2 table, for
@@ -250,12 +167,7 @@ object Docx {
 <w:tc><w:p><w:r><w:t>r2c2</w:t></w:r></w:p></w:tc></w:tr></w:tbl>
 <w:p><w:r><w:rPr><w:b/></w:rPr><w:t>after &amp; entities &lt;ok&gt;</w:t></w:r></w:p>
 </w:body></w:document>"""
-    val out = new java.io.ByteArrayOutputStream()
-    val z = new java.util.zip.ZipOutputStream(out)
-    z.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
-    z.write(documentXml.getBytes("UTF-8"))
-    z.closeEntry()
-    z.close()
-    out.toByteArray
+    Payload.buildZip(
+      Seq("word/document.xml" -> documentXml.getBytes("UTF-8")))
   }
 }

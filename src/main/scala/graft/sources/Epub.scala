@@ -30,8 +30,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
  * Honest boundaries (NAMED): not a ZIP / OLE payloads, missing
  * container.xml/OPF/spine, chapters missing from the archive, DRM'd
  * books (encryption.xml present → named, no decryption), malformed
- * XHTML. Per-entry reads are bomb-capped like [[Docx]]. The Spark
- * surface quarantines per-row like [[Pdf.extractTexts]].
+ * XHTML, a repeated entry name. The ZIP walk, its bomb caps and the
+ * XXE-off StAX reader are [[Payload]]'s. The Spark surface
+ * quarantines per-row like [[Pdf.extractTexts]].
  *
  * The reference engine (parquery) has no document surface — this is
  * a training-data-pipeline extension (SURVEY §8), verified against
@@ -42,56 +43,6 @@ object Epub {
 
   private def err(msg: String): Nothing =
     throw new IllegalArgumentException(s"EPUB: $msg")
-
-  /** All entries of the ZIP payload (bomb-capped per entry). */
-  private def zipEntries(bytes: Array[Byte]): Map[String, Array[Byte]] = {
-    if (bytes.length < 4) err("truncated payload")
-    if ((bytes(0) & 0xFF) == 0xD0 && (bytes(1) & 0xFF) == 0xCF)
-      err("OLE compound file — not an EPUB")
-    if (!(bytes(0) == 'P' && bytes(1) == 'K')) err("not a ZIP container")
-    val zin = new java.util.zip.ZipInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val out = Map.newBuilder[String, Array[Byte]]
-    var total = 0L // per-entry caps alone still allow N*cap in sum
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) {
-          val bos = new java.io.ByteArrayOutputStream(
-            math.min(math.max(64, e.getSize.toInt), 1 << 20))
-          val chunk = new Array[Byte](8192)
-          var n = zin.read(chunk)
-          while (n >= 0) {
-            total += n
-            if (bos.size().toLong + n > Pdf.MaxDecodedBytes ||
-                total > Pdf.MaxDecodedBytes)
-              err(s"${e.getName} pushes the archive past " +
-                s"${Pdf.MaxDecodedBytes} decoded bytes " +
-                "(decompression bomb?)")
-            bos.write(chunk, 0, n)
-            n = zin.read(chunk)
-          }
-          out += e.getName -> bos.toByteArray
-        }
-        e = zin.getNextEntry
-      }
-    } catch {
-      case ex: java.util.zip.ZipException => err(s"bad ZIP: ${ex.getMessage}")
-    } finally zin.close()
-    out.result()
-  }
-
-  private val staxFactory =
-    new ThreadLocal[javax.xml.stream.XMLInputFactory] {
-      override def initialValue(): javax.xml.stream.XMLInputFactory = {
-        val f = javax.xml.stream.XMLInputFactory.newInstance()
-        f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-        f.setProperty(
-          javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
-          false)
-        f
-      }
-    }
 
   /** XHTML named entities → numeric refs the DTD-less parser resolves.
     * The common publishing set; anything else stays and errs NAMED at
@@ -130,9 +81,8 @@ object Epub {
       if (sb.nonEmpty && sb.charAt(sb.length - 1) != '\n') sb.append('\n')
     var dropDepth = 0 // script/style subtrees
     var inBody = false
+    val r = Payload.reader(xml, "EPUB")
     try {
-      val r = staxFactory.get().createXMLStreamReader(
-        new java.io.StringReader(xml))
       while (r.hasNext) {
         r.next() match {
           case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
@@ -151,11 +101,7 @@ object Epub {
           case _ => ()
         }
       }
-      r.close()
-    } catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        err(s"malformed XHTML: ${e.getMessage}")
-    }
+    } finally r.close()
     // collapse whitespace runs the markup layout left behind, keep
     // the block-derived line structure
     sb.toString.split("\n").iterator
@@ -170,7 +116,7 @@ object Epub {
   }
 
   def extractText(bytes: Array[Byte]): String = {
-    val entries = zipEntries(bytes)
+    val entries = Payload.zipEntries(bytes, "EPUB", Pdf.MaxDecodedBytes)
     if (entries.contains("META-INF/encryption.xml"))
       err("DRM-protected EPUB (encryption.xml) — named boundary")
     val container = entries.getOrElse("META-INF/container.xml",
@@ -207,27 +153,14 @@ object Epub {
     chapters.map(xhtmlText).filter(_.nonEmpty).mkString("\n")
   }
 
-  /** Spark surface: per-row quarantine accounting (the
-    * [[Pdf.extractTexts]] pattern). */
-  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { case (id, bytes) =>
-      try (id, extractText(bytes), null: String)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          (id, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-      }
-    }.toDF("id", "text", "epub_error")
-  }
+  /** Spark surface: per-row quarantine accounting
+    * ([[Payload.extractTexts]]). */
+  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame =
+    Payload.extractTexts(ds, "epub_error")(extractText)
 
   // ---------------------------------------------------------------
   // fixture writer
   // ---------------------------------------------------------------
-
-  private def xmlEscape(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
   /**
    * Build a spec-valid two-chapter EPUB: mimetype first (stored, the
@@ -264,8 +197,9 @@ object Epub {
       ("""<?xml version="1.0" encoding="UTF-8"?>""" +
         """<html xmlns="http://www.w3.org/1999/xhtml"><head>""" +
         """<title>front matter must not leak</title>""" + extras +
-        s"""</head><body><h1>${xmlEscape(heading)}</h1>""" +
-        s"""<p>${xmlEscape(text)}</p></body></html>""").getBytes("UTF-8")
+        s"""</head><body><h1>${Payload.xmlEscape(heading)}</h1>""" +
+        s"""<p>${Payload.xmlEscape(text)}</p></body></html>""")
+        .getBytes("UTF-8")
     // ZIP order is REVERSE of spine order on purpose
     put("OEBPS/ch2.xhtml", chapter("Chapter Two", body,
       "<style>p { color: red }</style>"))
@@ -273,7 +207,7 @@ object Epub {
       ("""<?xml version="1.0" encoding="UTF-8"?>""" +
         """<html xmlns="http://www.w3.org/1999/xhtml"><head></head>""" +
         """<body><script>var x = 1;</script>""" +
-        s"""<h1>${xmlEscape(title)}</h1>""" +
+        s"""<h1>${Payload.xmlEscape(title)}</h1>""" +
         """<p>one&nbsp;space and a dash&mdash;here</p>""" +
         """</body></html>""").getBytes("UTF-8"))
     put("OEBPS/style.css", "p { margin: 0 }".getBytes("UTF-8"))

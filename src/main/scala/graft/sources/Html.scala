@@ -112,8 +112,7 @@ object Html {
       try (id, decodeHtmlBytes(bytes, ct), null: String)
       catch {
         case scala.util.control.NonFatal(e) =>
-          (id, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
+          (id, null: String, Payload.named(e))
       }
     }.toDF("id", "html", "html_error")
   }

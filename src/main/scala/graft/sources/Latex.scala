@@ -559,8 +559,7 @@ object Latex {
         try (path, member, extractLatexText(tex), null: String)
         catch {
           case scala.util.control.NonFatal(e) =>
-            (path, member, null: String,
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
+            (path, member, null: String, Payload.named(e))
         }
       }
       .toDF("path", "member", "text", "latex_error")

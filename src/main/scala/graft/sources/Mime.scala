@@ -301,15 +301,13 @@ object Mime {
           } catch {
             case scala.util.control.NonFatal(e) =>
               (id, i, null: String, null: String, null: String,
-                null: String, 0,
-                Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
+                null: String, 0, Payload.named(e))
           }
         }
       } catch {
         case scala.util.control.NonFatal(e) =>
           Seq((id, -1, null: String, null: String, null: String,
-            null: String, 0,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
+            null: String, 0, Payload.named(e)))
       }
     }.toDF("id", "msg_idx", "from", "subject", "text", "html",
       "attachments", "mime_error")
@@ -342,8 +340,6 @@ object Mime {
       .load(mboxDir)
       .select("path", "content").as[(String, Array[Byte])]
     val msgs = shards.flatMap { case (path, bytes) =>
-      def msg(e: Throwable) =
-        Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
       try {
         val mbox = new String(bytes,
           java.nio.charset.StandardCharsets.ISO_8859_1)
@@ -354,14 +350,14 @@ object Mime {
           } catch {
             case scala.util.control.NonFatal(e) =>
               (null: String, null: String, null: String,
-                s"message: ${msg(e)}")
+                s"message: ${Payload.named(e)}")
           }
         }
       } catch {
         case scala.util.control.NonFatal(e) =>
           Seq((null: String, null: String, null: String,
             s"archive ${path.substring(path.lastIndexOf('/') + 1)}: " +
-              msg(e)))
+              Payload.named(e)))
       }
     }.toDF("from", "subject", "text", "mime_error")
       .observe("mbox_ingest",

@@ -31,15 +31,7 @@ object Odp {
   private val MaxSpaceRun = 65536
 
   def extractText(bytes: Array[Byte]): String = {
-    val entries = Ooxml.zipEntries(bytes, "ODP")
-    entries.get("META-INF/manifest.xml").foreach { m =>
-      if (new String(m, java.nio.charset.StandardCharsets.UTF_8)
-          .contains("encryption-data"))
-        err("encrypted ODF package — named boundary, no decryption")
-    }
-    val content = entries.getOrElse("content.xml",
-      err("no content.xml entry (not an ODF package?)"))
-    val r = Ooxml.reader(content, "ODP")
+    val r = Payload.reader(Odt.content(bytes, "ODP"), "ODP")
     val out = new StringBuilder
     val para = new StringBuilder
     var paraDepth = 0
@@ -90,9 +82,6 @@ object Odp {
           case _ => ()
         }
       }
-    } catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        err(s"malformed content.xml: ${e.getMessage}")
     } finally r.close()
     out.toString
   }
@@ -106,7 +95,7 @@ object Odp {
     * frame/text-box; the first slide carries speaker notes and an
     * annotation that must DROP. */
   def buildOdp(slides: Seq[Seq[String]]): Array[Byte] = {
-    val e = Ooxml.xmlEscape _
+    val e = Payload.xmlEscape _
     val body = slides.zipWithIndex.map { case (paras, i) =>
       val frames = paras.map { p =>
         "<draw:frame><draw:text-box>" +
@@ -133,15 +122,6 @@ object Odp {
         "xmlns:text=\"urn:oasis:names:tc:opendocument:xmlns:text:1.0\">" +
         "<office:body><office:presentation>" + body +
         "</office:presentation></office:body></office:document-content>"
-    Ooxml.buildZip(Seq(
-      ("mimetype",
-        "application/vnd.oasis.opendocument.presentation"
-          .getBytes("UTF-8")),
-      ("META-INF/manifest.xml",
-        ("<manifest:manifest xmlns:manifest=\"urn:oasis:names:tc:" +
-          "opendocument:xmlns:manifest:1.0\"><manifest:file-entry " +
-          "manifest:full-path=\"content.xml\"/></manifest:manifest>")
-          .getBytes("UTF-8")),
-      ("content.xml", content.getBytes("UTF-8"))))
+    Odt.buildPackage("presentation", content)
   }
 }

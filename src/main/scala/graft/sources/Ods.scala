@@ -47,15 +47,7 @@ object Ods {
   private[graft] val MaxRepeat = 65536
 
   def extractText(bytes: Array[Byte]): String = {
-    val entries = Ooxml.zipEntries(bytes, "ODS")
-    entries.get("META-INF/manifest.xml").foreach { m =>
-      if (new String(m, java.nio.charset.StandardCharsets.UTF_8)
-          .contains("encryption-data"))
-        err("encrypted ODF package — named boundary, no decryption")
-    }
-    val content = entries.getOrElse("content.xml",
-      err("no content.xml entry (not an ODF package?)"))
-    val r = Ooxml.reader(content, "ODS")
+    val r = Payload.reader(Odt.content(bytes, "ODS"), "ODS")
     val out = new StringBuilder
 
     // per-sheet state
@@ -186,9 +178,6 @@ object Ods {
           case _ => ()
         }
       }
-    } catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        err(s"malformed content.xml: ${e.getMessage}")
     } finally r.close()
     out.toString
   }
@@ -208,7 +197,7 @@ object Ods {
     * cell, and every sheet with a `number-rows-repeated="1048576"`
     * empty row — both of which extraction must TRIM, not allocate. */
   def buildOds(sheets: Seq[(String, Seq[Seq[Cell]])]): Array[Byte] = {
-    val e = Ooxml.xmlEscape _
+    val e = Payload.xmlEscape _
     def cellXml(c: Cell): String = c.kind match {
       case 's' =>
         s"""<table:table-cell office:value-type="string">""" +
@@ -253,15 +242,6 @@ object Ods {
         "xmlns:text=\"urn:oasis:names:tc:opendocument:xmlns:text:1.0\">" +
         "<office:body><office:spreadsheet>" + body +
         "</office:spreadsheet></office:body></office:document-content>"
-    Ooxml.buildZip(Seq(
-      ("mimetype",
-        "application/vnd.oasis.opendocument.spreadsheet"
-          .getBytes("UTF-8")),
-      ("META-INF/manifest.xml",
-        ("<manifest:manifest xmlns:manifest=\"urn:oasis:names:tc:" +
-          "opendocument:xmlns:manifest:1.0\"><manifest:file-entry " +
-          "manifest:full-path=\"content.xml\"/></manifest:manifest>")
-          .getBytes("UTF-8")),
-      ("content.xml", content.getBytes("UTF-8"))))
+    Odt.buildPackage("spreadsheet", content)
   }
 }

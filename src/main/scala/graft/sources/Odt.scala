@@ -18,7 +18,7 @@ package graft.sources
  *    [[Latex]] footnote posture: neither is running display text;
  *  - table cells carry their own `<text:p>` and emit as lines.
  *
- * Hardening is [[Ooxml]]'s: ZIP decode caps (per entry AND per
+ * Hardening is [[Payload]]'s: ZIP decode caps (per entry AND per
  * archive), XXE-off StAX, OLE named; additionally an ODF package
  * whose manifest declares `encryption-data` errs NAMED (ODF encrypts
  * per-entry — the ZIP opens fine and `content.xml` is ciphertext, so
@@ -40,16 +40,25 @@ object Odt {
     * consecutive literal spaces collapse). */
   private val MaxSpaceRun = 65536
 
-  def extractText(bytes: Array[Byte]): String = {
-    val entries = Ooxml.zipEntries(bytes, "ODT")
+  /** An ODF package's `content.xml` (the [[Ods]]/[[Odp]] entry too):
+    * a manifest that declares `encryption-data` errs NAMED, as does a
+    * package without `content.xml`. */
+  private[graft] def content(bytes: Array[Byte], tag: String)
+      : Array[Byte] = {
+    def err(msg: String): Nothing =
+      throw new IllegalArgumentException(s"$tag: $msg")
+    val entries = Payload.zipEntries(bytes, tag, Payload.OfficeEntryBytes)
     entries.get("META-INF/manifest.xml").foreach { m =>
       if (new String(m, java.nio.charset.StandardCharsets.UTF_8)
           .contains("encryption-data"))
         err("encrypted ODF package — named boundary, no decryption")
     }
-    val content = entries.getOrElse("content.xml",
+    entries.getOrElse("content.xml",
       err("no content.xml entry (not an ODF package?)"))
-    val r = Ooxml.reader(content, "ODT")
+  }
+
+  def extractText(bytes: Array[Byte]): String = {
+    val r = Payload.reader(content(bytes, "ODT"), "ODT")
     val out = new StringBuilder
     val para = new StringBuilder
     var paraDepth = 0 // nested text:p inside cells/lists still emit once
@@ -100,9 +109,6 @@ object Odt {
           case _ => ()
         }
       }
-    } catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        err(s"malformed content.xml: ${e.getMessage}")
     } finally r.close()
     out.toString
   }
@@ -110,6 +116,21 @@ object Odt {
   // ---------------------------------------------------------------
   // fixture writer
   // ---------------------------------------------------------------
+
+  /** An ODF package of one `content.xml`: `mimetype` first (per ODF
+    * packaging, `application/vnd.oasis.opendocument.<kind>`), then a
+    * manifest naming the content. */
+  private[graft] def buildPackage(kind: String, content: String)
+      : Array[Byte] =
+    Payload.buildZip(Seq(
+      ("mimetype",
+        s"application/vnd.oasis.opendocument.$kind".getBytes("UTF-8")),
+      ("META-INF/manifest.xml",
+        ("<manifest:manifest xmlns:manifest=\"urn:oasis:names:tc:" +
+          "opendocument:xmlns:manifest:1.0\"><manifest:file-entry " +
+          "manifest:full-path=\"content.xml\"/></manifest:manifest>")
+          .getBytes("UTF-8")),
+      ("content.xml", content.getBytes("UTF-8"))))
 
   /**
    * A spec-shaped ODF text package around a heading and body
@@ -122,7 +143,7 @@ object Odt {
    * plain text, so extraction must actually reassemble it.
    */
   def buildOdt(heading: String, paragraphs: Seq[String]): Array[Byte] = {
-    val e = Ooxml.xmlEscape _
+    val e = Payload.xmlEscape _
     val body = paragraphs.map { p =>
       val words = p.split(" ").zipWithIndex.map { case (w, i) =>
         if (i % 3 == 2) s"<text:span>${e(w)}</text:span>" else e(w)
@@ -148,14 +169,6 @@ object Odt {
         "</text:p></office:annotation> end</text:p>" +
         "<text:p>col1<text:tab/>col2</text:p>" +
         "</office:text></office:body></office:document-content>"
-    Ooxml.buildZip(Seq(
-      ("mimetype",
-        "application/vnd.oasis.opendocument.text".getBytes("UTF-8")),
-      ("META-INF/manifest.xml",
-        ("<manifest:manifest xmlns:manifest=\"urn:oasis:names:tc:" +
-          "opendocument:xmlns:manifest:1.0\"><manifest:file-entry " +
-          "manifest:full-path=\"content.xml\"/></manifest:manifest>")
-          .getBytes("UTF-8")),
-      ("content.xml", content.getBytes("UTF-8"))))
+    buildPackage("text", content)
   }
 }

@@ -1379,18 +1379,8 @@ object Pdf {
    * as the multimodal decoders; nothing crosses rows, so it scales
    * linearly and never shuffles.
    */
-  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { case (id, bytes) =>
-      try (id, extractText(bytes), null: String)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          (id, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-      }
-    }.toDF("id", "text", "pdf_error")
-  }
+  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame =
+    Payload.extractTexts(ds, "pdf_error")(extractText)
 
   // ---------------------------------------------------------------
   // fixture writer (independent spec-valid PDF builder)

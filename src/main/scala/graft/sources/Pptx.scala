@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 
 /**
  * OOXML presentation (PPTX) text extraction — the slide-deck half of
- * the office family, sharing [[Ooxml]]'s container plumbing with
+ * the office family, sharing [[Payload]]'s container plumbing with
  * [[Xlsx]]. Written from the public PresentationML structure
  * (ECMA-376):
  *
@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
  *    lines, `<a:br/>` is a line break.
  *
  * Output shape: slides in deck order, one line per paragraph,
- * slides joined with newlines. Hardening is [[Ooxml]]'s: ZIP decode
+ * slides joined with newlines. Hardening is [[Payload]]'s: ZIP decode
  * caps, XXE-off StAX, OLE/CFB NAMED, per-row Spark quarantine.
  *
  * The reference engine (parquery) has no document surface — this is
@@ -30,18 +30,18 @@ object Pptx {
     throw new IllegalArgumentException(s"PPTX: $msg")
 
   def extractText(bytes: Array[Byte]): String = {
-    val entries = Ooxml.zipEntries(bytes, "PPTX")
+    val entries = Payload.zipEntries(bytes, "PPTX", Payload.OfficeEntryBytes)
     val pres = entries.getOrElse("ppt/presentation.xml",
       err("no ppt/presentation.xml entry (not a PPTX?)"))
     val rels = entries.get("ppt/_rels/presentation.xml.rels")
-      .map(Ooxml.parseRels(_, "PPTX"))
+      .map(Payload.parseRels(_, "PPTX"))
       .getOrElse(err("no ppt/_rels/presentation.xml.rels entry"))
     val slideRids = parseSlideList(pres)
     val out = new StringBuilder
     slideRids.foreach { rid =>
       val target = rels.getOrElse(rid,
         err(s"slide references unknown relationship $rid"))
-      val part = Ooxml.resolvePart("ppt", target)
+      val part = Payload.resolvePart("ppt", target)
       val slide = entries.getOrElse(part,
         err(s"slide part $part missing from the archive"))
       slideText(slide).foreach { line =>
@@ -54,7 +54,7 @@ object Pptx {
 
   /** Slide `r:id`s from `<p:sldIdLst>`, deck order. */
   private def parseSlideList(xml: Array[Byte]): Seq[String] = {
-    val r = Ooxml.reader(xml, "PPTX")
+    val r = Payload.reader(xml, "PPTX")
     val rids = scala.collection.mutable.ArrayBuffer[String]()
     var inList = false
     try {
@@ -87,7 +87,7 @@ object Pptx {
   /** Paragraph lines of one slide: `<a:t>` runs concatenate inside
     * `<a:p>`, `<a:br/>` breaks the line. Empty paragraphs drop. */
   private def slideText(xml: Array[Byte]): Seq[String] = {
-    val r = Ooxml.reader(xml, "PPTX")
+    val r = Payload.reader(xml, "PPTX")
     val lines = scala.collection.mutable.ArrayBuffer[String]()
     val cur = new StringBuilder
     var inT = false
@@ -122,20 +122,9 @@ object Pptx {
     lines.toSeq
   }
 
-  /** Spark surface: per-row quarantine, the [[Epub.extractTexts]]
-    * contract. */
-  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { case (id, bytes) =>
-      try (id, extractText(bytes), null: String)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          (id, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-      }
-    }.toDF("id", "text", "pptx_error")
-  }
+  /** Spark surface: per-row quarantine ([[Payload.extractTexts]]). */
+  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame =
+    Payload.extractTexts(ds, "pptx_error")(extractText)
 
   // ---------------------------------------------------------------
   // fixture writer
@@ -148,7 +137,7 @@ object Pptx {
   def buildPptx(slides: Seq[Seq[String]]): Array[Byte] = {
     val slideParts = slides.zipWithIndex.map { case (paras, i) =>
       val body = paras.map { p =>
-        s"<a:p><a:r><a:t>${Ooxml.xmlEscape(p)}</a:t></a:r></a:p>"
+        s"<a:p><a:r><a:t>${Payload.xmlEscape(p)}</a:t></a:r></a:p>"
       }.mkString
       (s"ppt/slides/slide${i + 1}.xml",
         ("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
@@ -176,7 +165,7 @@ object Pptx {
             """openxmlformats.org/officeDocument/2006/relationships/""" +
             s"""slide" Target="slides/slide${i + 1}.xml"/>"""
         }.mkString + "</Relationships>").getBytes("UTF-8")
-    Ooxml.buildZip(
+    Payload.buildZip(
       Seq("ppt/presentation.xml" -> pres,
         "ppt/_rels/presentation.xml.rels" -> rels) ++ slideParts.reverse)
   }

@@ -189,18 +189,8 @@ object Rtf {
 
   /** Spark surface: per-row quarantine accounting (the
     * [[Pdf.extractTexts]] pattern). */
-  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { case (id, bytes) =>
-      try (id, extractText(bytes), null: String)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          (id, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-      }
-    }.toDF("id", "text", "rtf_error")
-  }
+  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame =
+    Payload.extractTexts(ds, "rtf_error")(extractText)
 
   // ---------------------------------------------------------------
   // fixture writer

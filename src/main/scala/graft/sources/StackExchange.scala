@@ -54,27 +54,12 @@ object StackExchange {
   private def err(msg: String): Nothing =
     throw new IllegalArgumentException(s"STACKEXCHANGE: $msg")
 
-  /** Shared StAX factory, DTD/XXE off (the [[Wiki]] instance is
-    * private to it; same settings). */
-  private val staxFactory =
-    new ThreadLocal[javax.xml.stream.XMLInputFactory] {
-      override def initialValue(): javax.xml.stream.XMLInputFactory = {
-        val f = javax.xml.stream.XMLInputFactory.newInstance()
-        f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-        f.setProperty(
-          javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
-          false)
-        f
-      }
-    }
-
   /** Parse one `<row …/>` line's attributes (StAX decodes the XML
     * escaping; cap + malformed-XML err NAMED). */
   private[graft] def parseRow(line: String): Map[String, String] = {
     if (line.length > Pdf.MaxDecodedBytes)
       err(s"row exceeds the ${Pdf.MaxDecodedBytes} byte cap")
-    val r = staxFactory.get()
-      .createXMLStreamReader(new java.io.StringReader(line.trim))
+    val r = Payload.reader(line.trim, "STACKEXCHANGE")
     try {
       var attrs: Map[String, String] = null
       while (attrs == null && r.hasNext) {
@@ -88,9 +73,6 @@ object StackExchange {
       }
       if (attrs == null) err("no <row> element in line")
       attrs
-    } catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        err(s"malformed row XML: ${e.getMessage}")
     } finally r.close()
   }
 
@@ -131,8 +113,7 @@ object StackExchange {
         } catch {
           case scala.util.control.NonFatal(e) =>
             PostRow(null, null, null, null, null, null, null, Seq.empty,
-              null, null,
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
+              null, null, Payload.named(e))
         }
       }
       .toDF("id", "post_type_id", "parent_id", "accepted_answer_id",
@@ -182,20 +163,6 @@ object StackExchange {
   // fixture writer
   // ---------------------------------------------------------------
 
-  private[graft] def xmlEscape(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 16)
-    s.foreach {
-      case '&' => sb.append("&amp;")
-      case '<' => sb.append("&lt;")
-      case '>' => sb.append("&gt;")
-      case '"' => sb.append("&quot;")
-      case '\n' => sb.append("&#xA;")
-      case '\r' => sb.append("&#xD;")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
   /** A dump-shaped `Posts.xml`: XML declaration + `<posts>` wrapper
     * + one `<row …/>` per line, every attribute XML-escaped (so HTML
     * bodies arrive double-encoded exactly as in real dumps). */
@@ -207,7 +174,7 @@ object StackExchange {
       sb.append("  <row")
       r.toSeq.sortBy(_._1).foreach { case (k, v) =>
         sb.append(' ').append(k).append("=\"")
-          .append(xmlEscape(v)).append('"')
+          .append(Payload.xmlEscape(v)).append('"')
       }
       sb.append(" />\n")
     }

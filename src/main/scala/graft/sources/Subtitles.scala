@@ -127,7 +127,7 @@ object Subtitles {
       catch {
         case scala.util.control.NonFatal(e) =>
           Seq((id, -1, -1L, -1L, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
+            Payload.named(e)))
       }
     }.toDF("id", "cue_idx", "start_ms", "end_ms", "text", "sub_error")
   }

@@ -230,25 +230,23 @@ object Tar {
    * as `(path, member, text, skipped_members, tar_error)` — one task
    * per shard, corrupt shards quarantined per-FILE.
    */
-  def textShards(spark: SparkSession, pathGlob: String): DataFrame = {
+  def textShards(spark: SparkSession, pathGlob: String): DataFrame =
+    memberShards(spark, pathGlob, "tar_error")(textMembers)
+
+  /** The TAR/ZIP shard surface over a `(members, skipped)` reader: a
+    * row per text member, a member-less row for a shard with none, an
+    * error row for a shard that fails ([[Payload.perFile]]). */
+  private[graft] def memberShards(spark: SparkSession, pathGlob: String,
+      errorColumn: String)(
+      members: Array[Byte] => (Seq[(String, String)], Int)): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        try {
-          val (members, skipped) = textMembers(bytes)
-          if (members.isEmpty)
-            Seq((path, null: String, null: String, skipped, null: String))
-          else members.map { case (m, t) =>
-            (path, m, t, skipped, null: String)
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            Seq((path, null: String, null: String, 0,
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
-        }
-      }
-      .toDF("path", "member", "text", "skipped_members", "tar_error")
+    Payload.perFile(spark, pathGlob) { (path, bytes) =>
+      val (texts, skipped) = members(bytes)
+      if (texts.isEmpty)
+        Seq((path, null: String, null: String, skipped, null: String))
+      else texts.map { case (m, t) => (path, m, t, skipped, null: String) }
+    } { (path, error) => (path, null: String, null: String, 0, error) }
+      .toDF("path", "member", "text", "skipped_members", errorColumn)
   }
 
   // ---------------------------------------------------------------

@@ -330,23 +330,16 @@ object Warc {
    */
   def responses(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        try {
-          records(new java.io.ByteArrayInputStream(bytes))
-            .filter(_.warcType == "response")
-            .map(r => (path, r.targetUri, r.httpContentType, r.payload,
-              null: String))
-            .toSeq
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            Seq((path, null: String, null: String, null: Array[Byte],
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
-        }
-      }
-      .toDF("path", "target_uri", "http_content_type", "payload",
-        "warc_error")
+    Payload.perFile(spark, pathGlob) { (path, bytes) =>
+      records(new java.io.ByteArrayInputStream(bytes))
+        .filter(_.warcType == "response")
+        .map(r => (path, r.targetUri, r.httpContentType, r.payload,
+          null: String))
+        .toSeq
+    } { (path, error) =>
+      (path, null: String, null: String, null: Array[Byte], error)
+    }.toDF("path", "target_uri", "http_content_type", "payload",
+      "warc_error")
   }
 
   // ---------------------------------------------------------------
@@ -434,8 +427,6 @@ object Warc {
       .load(warcDir)
       .select("path", "content").as[(String, Array[Byte])]
     val docs = shards.flatMap { case (path, bytes) =>
-      def msg(e: Throwable) =
-        Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
       try records(new java.io.ByteArrayInputStream(bytes))
         .filter(_.warcType == "response")
         .map { r =>
@@ -443,11 +434,11 @@ object Warc {
             Html.decodeHtmlBytes(r.payload, r.httpContentType),
             null: String)
           catch { case scala.util.control.NonFatal(e) =>
-            (r.targetUri, null: String, s"record: ${msg(e)}") }
+            (r.targetUri, null: String, s"record: ${Payload.named(e)}") }
         }.toSeq
       catch {
         case scala.util.control.NonFatal(e) =>
-          Seq((path, null: String, s"shard: ${msg(e)}"))
+          Seq((path, null: String, s"shard: ${Payload.named(e)}"))
       }
     }.toDF("url", "html", "warc_error")
       // named-error accounting: corrupt rows are counted into every

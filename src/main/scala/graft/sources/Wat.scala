@@ -66,24 +66,15 @@ object Wat {
    */
   def metadataJson(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        try {
-          Warc.records(new java.io.ByteArrayInputStream(bytes))
-            .filter(r => r.warcType == "metadata" &&
-              r.contentType.toLowerCase.startsWith("application/json"))
-            .map(r => (path, r.targetUri,
-              new String(r.payload,
-                java.nio.charset.StandardCharsets.UTF_8),
-              null: String))
-            .toSeq
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            Seq((path, null: String, null: String,
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
-        }
-      }
+    Payload.perFile(spark, pathGlob) { (path, bytes) =>
+      Warc.records(new java.io.ByteArrayInputStream(bytes))
+        .filter(r => r.warcType == "metadata" &&
+          r.contentType.toLowerCase.startsWith("application/json"))
+        .map(r => (path, r.targetUri,
+          new String(r.payload, java.nio.charset.StandardCharsets.UTF_8),
+          null: String))
+        .toSeq
+    } { (path, error) => (path, null: String, null: String, error) }
       .toDF("path", "target_uri", "json", "wat_error")
   }
 

@@ -60,29 +60,13 @@ object Wiki {
   // page XML parse (StAX, XXE off)
   // ---------------------------------------------------------------
 
-  /** StAX factory per thread — the [[Docx]] discipline: newInstance
-    * walks provider files per call, instances are not thread-safe,
-    * DTD + external entities stay OFF (XXE). */
-  private val staxFactory =
-    new ThreadLocal[javax.xml.stream.XMLInputFactory] {
-      override def initialValue(): javax.xml.stream.XMLInputFactory = {
-        val f = javax.xml.stream.XMLInputFactory.newInstance()
-        f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-        f.setProperty(
-          javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
-          false)
-        f
-      }
-    }
-
   /** Parse one `<page>…</page>` fragment. Missing title errs NAMED;
     * a page with no revision text yields empty text (deleted-text
     * stubs exist in real dumps). */
   def parsePage(xml: String): Page = {
     if (xml.length > Pdf.MaxDecodedBytes)
       err(s"page fragment exceeds the ${Pdf.MaxDecodedBytes} byte cap")
-    val r = staxFactory.get()
-      .createXMLStreamReader(new java.io.StringReader(xml))
+    val r = Payload.reader(xml, "WIKI")
     var title: String = null
     var ns = 0
     var sawNs = false
@@ -120,9 +104,6 @@ object Wiki {
           case _ => ()
         }
       }
-    } catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        err(s"malformed page XML: ${e.getMessage}")
     } finally r.close()
     if (title == null) err("page without <title>")
     if (!sawNs) err(s"page '$title' without <ns>")
@@ -407,8 +388,7 @@ object Wiki {
           } catch {
             case scala.util.control.NonFatal(e) =>
               Some((null: String, -1, null: String, null: String,
-                Option(e.getMessage).getOrElse(
-                  e.getClass.getSimpleName)))
+                Payload.named(e)))
           }
         }
       }
@@ -469,8 +449,7 @@ object Wiki {
           else None
         } catch {
           case scala.util.control.NonFatal(e) =>
-            Some((null: String, null: String,
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
+            Some((null: String, null: String, Payload.named(e)))
         }
       }
     }.toDF("title", "text", "wiki_error")
@@ -486,24 +465,15 @@ object Wiki {
   // fixture writer
   // ---------------------------------------------------------------
 
-  private[graft] def xmlEscape(s: String): String =
-    s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case '"' => "&quot;"
-      case c => c.toString
-    }
-
   /** One export-format `<page>` element. NO stripMargin anywhere
     * near the interpolation: wikitext tables put `|` at line starts,
     * and stripMargin over an interpolated result eats them. */
   def buildPage(title: String, ns: Int, wikitext: String,
                 redirect: Option[String] = None): String = {
     val r = redirect.map(t =>
-      "    <redirect title=\"" + xmlEscape(t) + "\" />\n").getOrElse("")
+      "    <redirect title=\"" + Payload.xmlEscape(t) + "\" />\n").getOrElse("")
     "  <page>\n" +
-      "    <title>" + xmlEscape(title) + "</title>\n" +
+      "    <title>" + Payload.xmlEscape(title) + "</title>\n" +
       "    <ns>" + ns + "</ns>\n" +
       "    <id>1</id>\n" +
       r +
@@ -511,7 +481,7 @@ object Wiki {
       "      <id>2</id>\n" +
       "      <timestamp>2026-01-05T00:00:00Z</timestamp>\n" +
       "      <text bytes=\"" + wikitext.length +
-      "\" xml:space=\"preserve\">" + xmlEscape(wikitext) + "</text>\n" +
+      "\" xml:space=\"preserve\">" + Payload.xmlEscape(wikitext) + "</text>\n" +
       "    </revision>\n" +
       "  </page>\n"
   }

@@ -22,10 +22,11 @@ import org.apache.spark.sql.{DataFrame, Dataset}
  *
  * Output shape: per sheet, its NAME line, then one line per row with
  * cells tab-joined (the [[Docx]] table rule); sheets join with
- * newlines. Same hardening as every container extractor: ZIP walk
- * with per-entry AND per-archive decode caps (bomb-named), StAX with
- * DTD/external entities OFF (XXE), encrypted/legacy OLE compound
- * files (CFB magic) NAMED, per-row quarantine on the Spark surface.
+ * newlines. Hardening is [[Payload]]'s, as for every container
+ * extractor: ZIP walk with per-entry AND per-archive decode caps
+ * (bomb-named), StAX with DTD/external entities OFF (XXE),
+ * encrypted/legacy OLE compound files (CFB magic) NAMED, per-row
+ * quarantine on the Spark surface.
  *
  * The reference engine (parquery) has no document surface — this is
  * a training-data-pipeline extension (SURVEY §8), verified against
@@ -43,11 +44,11 @@ object Xlsx {
   final case class Cell(value: String, kind: Char)
 
   def extractText(bytes: Array[Byte]): String = {
-    val entries = Ooxml.zipEntries(bytes, "XLSX")
+    val entries = Payload.zipEntries(bytes, "XLSX", Payload.OfficeEntryBytes)
     val workbook = entries.getOrElse("xl/workbook.xml",
       err("no xl/workbook.xml entry (not an XLSX?)"))
     val rels = entries.get("xl/_rels/workbook.xml.rels")
-      .map(Ooxml.parseRels(_, "XLSX"))
+      .map(Payload.parseRels(_, "XLSX"))
       .getOrElse(err("no xl/_rels/workbook.xml.rels entry"))
     val shared = entries.get("xl/sharedStrings.xml")
       .map(parseSharedStrings).getOrElse(Vector.empty)
@@ -58,7 +59,7 @@ object Xlsx {
     sheets.foreach { case (name, rid) =>
       val target = rels.getOrElse(rid,
         err(s"sheet '$name' references unknown relationship $rid"))
-      val part = Ooxml.resolvePart("xl", target)
+      val part = Payload.resolvePart("xl", target)
       val ws = entries.getOrElse(part,
         err(s"worksheet part $part missing from the archive"))
       if (out.nonEmpty) out.append('\n')
@@ -73,7 +74,7 @@ object Xlsx {
   /** `(name, r:id)` per `<sheet>`, in document order. */
   private def parseWorkbookSheets(xml: Array[Byte])
       : Seq[(String, String)] = {
-    val r = Ooxml.reader(xml, "XLSX")
+    val r = Payload.reader(xml, "XLSX")
     val sheets = scala.collection.mutable.ArrayBuffer[(String, String)]()
     try {
       while (r.hasNext) {
@@ -103,7 +104,7 @@ object Xlsx {
   /** sharedStrings `<si>` items: `<t>` and rich-run `<r><t>` text
     * concatenates; `<rPh>`/`<phoneticPr>` subtrees skip. */
   private def parseSharedStrings(xml: Array[Byte]): Vector[String] = {
-    val r = Ooxml.reader(xml, "XLSX")
+    val r = Payload.reader(xml, "XLSX")
     val items = Vector.newBuilder[String]
     val cur = new StringBuilder
     var inSi = false
@@ -139,7 +140,7 @@ object Xlsx {
   /** Rows of resolved cell texts, document order. */
   private def sheetRows(xml: Array[Byte], shared: Vector[String])
       : Seq[Seq[String]] = {
-    val r = Ooxml.reader(xml, "XLSX")
+    val r = Payload.reader(xml, "XLSX")
     val rows = scala.collection.mutable.ArrayBuffer[Seq[String]]()
     var row: scala.collection.mutable.ArrayBuffer[String] = null
     var cellType = ""
@@ -205,20 +206,9 @@ object Xlsx {
     case other => err(s"unknown cell type '$other'")
   }
 
-  /** Spark surface: per-row quarantine, the [[Epub.extractTexts]]
-    * contract. */
-  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { case (id, bytes) =>
-      try (id, extractText(bytes), null: String)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          (id, null: String,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-      }
-    }.toDF("id", "text", "xlsx_error")
-  }
+  /** Spark surface: per-row quarantine ([[Payload.extractTexts]]). */
+  def extractTexts(ds: Dataset[(Long, Array[Byte])]): DataFrame =
+    Payload.extractTexts(ds, "xlsx_error")(extractText)
 
   // ---------------------------------------------------------------
   // fixture writer
@@ -243,14 +233,14 @@ object Xlsx {
               s"""<c t="s"><v>${sharedIdx(c.value)}</v></c>"""
             case 'i' =>
               s"""<c t="inlineStr"><is><t>${
-                Ooxml.xmlEscape(c.value)}</t></is></c>"""
+                Payload.xmlEscape(c.value)}</t></is></c>"""
             case 'n' => s"""<c><v>${c.value}</v></c>"""
             case 'b' =>
               s"""<c t="b"><v>${
                 if (c.value == "TRUE") "1" else "0"}</v></c>"""
             case 'f' =>
               s"""<c t="str"><f>FIXTURE()</f><v>${
-                Ooxml.xmlEscape(c.value)}</v></c>"""
+                Payload.xmlEscape(c.value)}</v></c>"""
             case k => err(s"fixture: unknown cell kind '$k'")
           }
         }.mkString
@@ -269,7 +259,7 @@ object Xlsx {
         """openxmlformats.org/officeDocument/2006/relationships">""" +
         "<sheets>" +
         sheets.zipWithIndex.map { case ((name, _), i) =>
-          s"""<sheet name="${Ooxml.xmlEscape(name)}" sheetId="${
+          s"""<sheet name="${Payload.xmlEscape(name)}" sheetId="${
             i + 1}" r:id="rId${i + 1}"/>"""
         }.mkString + "</sheets></workbook>").getBytes("UTF-8")
     val rels =
@@ -291,145 +281,17 @@ object Xlsx {
           if (i % 2 == 1 && s.length > 1) {
             val mid = s.length / 2
             s"<si><r><t xml:space=\"preserve\">${
-              Ooxml.xmlEscape(s.substring(0, mid))}</t></r><r>" +
+              Payload.xmlEscape(s.substring(0, mid))}</t></r><r>" +
               s"<t xml:space=\"preserve\">${
-                Ooxml.xmlEscape(s.substring(mid))}</t></r></si>"
+                Payload.xmlEscape(s.substring(mid))}</t></r></si>"
           } else
             s"<si><t xml:space=\"preserve\">${
-              Ooxml.xmlEscape(s)}</t></si>"
+              Payload.xmlEscape(s)}</t></si>"
         }.mkString + "</sst>").getBytes("UTF-8")
-    Ooxml.buildZip(
+    Payload.buildZip(
       Seq("xl/workbook.xml" -> workbook,
         "xl/_rels/workbook.xml.rels" -> rels,
         "xl/sharedStrings.xml" -> sst) ++ sheetXml.reverse)
   }
 }
 
-/**
- * Shared OOXML container plumbing for [[Xlsx]] and [[Pptx]]: the ZIP
- * walk with bomb caps + OLE/CFB naming (the [[Docx]]/[[Epub]]
- * rules), the XXE-off StAX factory, `.rels` parsing, and part-path
- * resolution.
- */
-private[graft] object Ooxml {
-
-  /** Decode caps: real office PARTS are KB-to-MB scale — 64 MiB per
-    * entry and 256 MiB per archive is orders of magnitude of
-    * headroom, and the whole entry map is buffered per row, so the
-    * archive cap is also the executor-memory bound. */
-  private[graft] val MaxEntryBytes: Int = 64 << 20
-  private[graft] val MaxArchiveBytes: Int = 256 << 20
-
-  /** Full entry map with per-entry AND per-archive decode caps; OLE
-    * compound files (encrypted OOXML / legacy binary) err NAMED. */
-  def zipEntries(bytes: Array[Byte], tag: String)
-      : Map[String, Array[Byte]] = {
-    def err(msg: String): Nothing =
-      throw new IllegalArgumentException(s"$tag: $msg")
-    if (bytes.length < 4) err("truncated payload")
-    if ((bytes(0) & 0xFF) == 0xD0 && (bytes(1) & 0xFF) == 0xCF &&
-        (bytes(2) & 0xFF) == 0x11 && (bytes(3) & 0xFF) == 0xE0)
-      err("OLE compound file (legacy binary or ENCRYPTED OOXML) — " +
-        "named boundary, no decryption/legacy support")
-    if (!(bytes(0) == 'P' && bytes(1) == 'K')) err("not a ZIP container")
-    val zin = new java.util.zip.ZipInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val out = Map.newBuilder[String, Array[Byte]]
-    var total = 0L
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) {
-          val buf = new java.io.ByteArrayOutputStream(
-            math.min(math.max(64, e.getSize.toInt), 1 << 20))
-          val chunk = new Array[Byte](8192)
-          var n = zin.read(chunk)
-          while (n >= 0) {
-            total += n
-            if (buf.size().toLong + n > MaxEntryBytes ||
-                total > MaxArchiveBytes)
-              err(s"${e.getName} pushes the archive past the decode " +
-                "cap (decompression bomb?)")
-            buf.write(chunk, 0, n)
-            n = zin.read(chunk)
-          }
-          out += e.getName -> buf.toByteArray
-        }
-        e = zin.getNextEntry
-      }
-    } catch {
-      case ex: java.util.zip.ZipException =>
-        err(s"bad ZIP: ${ex.getMessage}")
-    } finally zin.close()
-    out.result()
-  }
-
-  /** StAX factory per thread, DTD + external entities OFF (the
-    * [[Docx]] XXE discipline). */
-  private val staxFactory =
-    new ThreadLocal[javax.xml.stream.XMLInputFactory] {
-      override def initialValue(): javax.xml.stream.XMLInputFactory = {
-        val f = javax.xml.stream.XMLInputFactory.newInstance()
-        f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-        f.setProperty(
-          javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
-          false)
-        f
-      }
-    }
-
-  def reader(xml: Array[Byte], tag: String)
-      : javax.xml.stream.XMLStreamReader =
-    try staxFactory.get().createXMLStreamReader(
-      new java.io.ByteArrayInputStream(xml))
-    catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        throw new IllegalArgumentException(
-          s"$tag: malformed XML: ${e.getMessage}")
-    }
-
-  /** `.rels` part: Id → Target. */
-  def parseRels(xml: Array[Byte], tag: String): Map[String, String] = {
-    val r = reader(xml, tag)
-    val out = Map.newBuilder[String, String]
-    try {
-      while (r.hasNext) {
-        if (r.next() == javax.xml.stream.XMLStreamConstants.START_ELEMENT
-            && r.getLocalName == "Relationship") {
-          val id = r.getAttributeValue(null, "Id")
-          val target = r.getAttributeValue(null, "Target")
-          if (id != null && target != null) out += id -> target
-        }
-      }
-    } catch {
-      case e: javax.xml.stream.XMLStreamException =>
-        throw new IllegalArgumentException(
-          s"$tag: malformed .rels XML: ${e.getMessage}")
-    } finally r.close()
-    out.result()
-  }
-
-  /** Resolve a relationship target against its base part directory
-    * (`Target="worksheets/sheet1.xml"` under `xl/` →
-    * `xl/worksheets/sheet1.xml`; a leading `/` is package-absolute). */
-  def resolvePart(baseDir: String, target: String): String =
-    if (target.startsWith("/")) target.substring(1)
-    else s"$baseDir/$target"
-
-  def xmlEscape(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-      .replace("\"", "&quot;")
-
-  /** Deflated ZIP from named entries, in the given order. */
-  def buildZip(entries: Seq[(String, Array[Byte])]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val z = new java.util.zip.ZipOutputStream(out)
-    entries.foreach { case (name, data) =>
-      z.putNextEntry(new java.util.zip.ZipEntry(name))
-      z.write(data)
-      z.closeEntry()
-    }
-    z.close()
-    out.toByteArray
-  }
-}

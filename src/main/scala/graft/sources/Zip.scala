@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * Members explode to `(path, member, text)` rows decoded by
  * [[Html.decodeHtmlBytes]]'s BOM-aware sniff head (BOM wins, UTF-8
  * default — text members carry no meta/transport declarations).
- * Member reads are bomb-capped per entry AND per shard (the
- * [[Epub]] rule: per-entry caps alone allow N·cap in sum); a corrupt
+ * Member reads are bomb-capped per entry AND per shard by
+ * [[Payload.zipWalk]], which buffers text members only; a corrupt
  * shard quarantines per-FILE with the named error instead of failing
  * the job. Non-text members (by extension) are skipped with a
  * counted row, not silently: the ingest accounting must add up.
@@ -39,43 +39,18 @@ object Zip {
     }
 
   /** Explode one shard's text members: (member, text) plus a count of
-    * skipped non-text members. */
+    * skipped non-text members. Repeated member names each keep their
+    * row. */
   private[graft] def textMembers(bytes: Array[Byte])
       : (Seq[(String, String)], Int) = {
-    if (bytes.length < 4 || !(bytes(0) == 'P' && bytes(1) == 'K'))
-      err("not a ZIP shard")
-    val zin = new java.util.zip.ZipInputStream(
-      new java.io.ByteArrayInputStream(bytes))
     val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
     var skipped = 0
-    var total = 0L
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) {
-          if (TextExtensions.contains(extOf(e.getName))) {
-            val bos = new java.io.ByteArrayOutputStream(
-              math.min(math.max(64, e.getSize.toInt), 1 << 20))
-            val chunk = new Array[Byte](8192)
-            var n = zin.read(chunk)
-            while (n >= 0) {
-              total += n
-              if (bos.size().toLong + n > Pdf.MaxDecodedBytes ||
-                  total > Pdf.MaxDecodedBytes)
-                err(s"${e.getName} pushes the shard past " +
-                  s"${Pdf.MaxDecodedBytes} decoded bytes " +
-                  "(decompression bomb?)")
-              bos.write(chunk, 0, n)
-              n = zin.read(chunk)
-            }
-            out += e.getName -> Html.decodeHtmlBytes(bos.toByteArray)
-          } else skipped += 1
-        }
-        e = zin.getNextEntry
-      }
-    } catch {
-      case ex: java.util.zip.ZipException => err(s"bad ZIP: ${ex.getMessage}")
-    } finally zin.close()
+    Payload.zipWalk(bytes, "ZIP", Pdf.MaxDecodedBytes) { (name, data) =>
+      if (TextExtensions.contains(extOf(name)))
+        out += name -> Html.decodeHtmlBytes(data())
+      else skipped += 1
+      true
+    }
     // ZipInputStream returns NO entries (rather than throwing) on a
     // payload whose PK prefix is a lie — and an entry-less shard in a
     // corpus hand-off is anomalous either way: err named, don't
@@ -90,39 +65,14 @@ object Zip {
    * as `(path, member, text, skipped_members, zip_error)` — one task
    * per shard, corrupt shards quarantined per-FILE.
    */
-  def textShards(spark: SparkSession, pathGlob: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        try {
-          val (members, skipped) = textMembers(bytes)
-          if (members.isEmpty)
-            Seq((path, null: String, null: String, skipped, null: String))
-          else members.map { case (m, t) =>
-            (path, m, t, skipped, null: String)
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            Seq((path, null: String, null: String, 0,
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
-        }
-      }
-      .toDF("path", "member", "text", "skipped_members", "zip_error")
-  }
+  def textShards(spark: SparkSession, pathGlob: String): DataFrame =
+    Tar.memberShards(spark, pathGlob, "zip_error")(textMembers)
 
   /** Fixture shard: named text members (+ one binary member that must
     * be skip-counted, never decoded into the corpus). */
   def buildShard(members: Seq[(String, String)]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val z = new java.util.zip.ZipOutputStream(out)
-    members.foreach { case (name, text) =>
-      z.putNextEntry(new java.util.zip.ZipEntry(name))
-      z.write(text.getBytes("UTF-8")); z.closeEntry()
-    }
-    z.putNextEntry(new java.util.zip.ZipEntry("image.bin"))
-    z.write(Array[Byte](0, 1, 2, 3)); z.closeEntry()
-    z.close()
-    out.toByteArray
+    Payload.buildZip(members.map { case (name, text) =>
+      name -> text.getBytes("UTF-8")
+    } :+ ("image.bin" -> Array[Byte](0, 1, 2, 3)))
   }
 }

@@ -128,6 +128,19 @@ class DocxSpec extends SparkSpec {
     assert(e.getMessage.contains("bomb"), e.getMessage)
   }
 
+  test("bytes after word/document.xml are never read: a corrupt " +
+      "tail still extracts") {
+    val good = Docx.buildDocx("Title", "body text")
+    // buildDocx writes word/document.xml last: where the central
+    // directory was, put a local-header signature followed by garbage,
+    // which errs if the walk goes on to read it
+    val at = good.indexOfSlice(Array[Byte](0x50, 0x4B, 0x01, 0x02))
+    assert(at > 0)
+    val corrupt = good.take(at) ++ Array[Byte](0x50, 0x4B, 0x03, 0x04) ++
+      Array.fill[Byte](64)(0x5A)
+    assert(Docx.extractText(corrupt) == "Title\nbody text")
+  }
+
   test("Spark surface quarantines failed payloads per-row") {
     import spark.implicits._
     val rows: Seq[(Long, Array[Byte])] = Seq(

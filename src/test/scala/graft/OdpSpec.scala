@@ -26,17 +26,17 @@ class OdpSpec extends SparkSpec {
         "</draw:text-box></draw:frame>" +
         "</draw:page></office:presentation></office:body>" +
         "</office:document-content>"
-    val bomb = graft.sources.Ooxml.buildZip(Seq(
+    val bomb = graft.sources.Payload.buildZip(Seq(
       ("content.xml", bombXml.getBytes("UTF-8"))))
     val e1 = intercept[IllegalArgumentException](Odp.extractText(bomb))
     assert(e1.getMessage.contains("out of bounds"))
-    val enc = graft.sources.Ooxml.buildZip(Seq(
+    val enc = graft.sources.Payload.buildZip(Seq(
       ("META-INF/manifest.xml",
         "<m><encryption-data/></m>".getBytes("UTF-8")),
       ("content.xml", "<x/>".getBytes("UTF-8"))))
     val e2 = intercept[IllegalArgumentException](Odp.extractText(enc))
     assert(e2.getMessage.contains("encrypted"))
-    val none = graft.sources.Ooxml.buildZip(Seq(
+    val none = graft.sources.Payload.buildZip(Seq(
       ("other.xml", "<x/>".getBytes("UTF-8"))))
     val e3 = intercept[IllegalArgumentException](Odp.extractText(none))
     assert(e3.getMessage.contains("content.xml"))

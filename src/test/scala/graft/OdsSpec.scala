@@ -42,7 +42,7 @@ class OdsSpec extends SparkSpec {
         "</table:table-row>" +
         "</table:table></office:spreadsheet></office:body>" +
         "</office:document-content>"
-    val pkg = graft.sources.Ooxml.buildZip(Seq(
+    val pkg = graft.sources.Payload.buildZip(Seq(
       ("content.xml", xml.getBytes("UTF-8"))))
     assert(Ods.extractText(pkg) == "S\na\t\t\t\tb\n\nc")
   }
@@ -50,7 +50,7 @@ class OdsSpec extends SparkSpec {
   test("repeat bombs err NAMED: interior cell expansion and " +
       "non-empty row repeat past the cap; bad counts err NAMED") {
     def sheet(rowXml: String): Array[Byte] =
-      graft.sources.Ooxml.buildZip(Seq(("content.xml",
+      graft.sources.Payload.buildZip(Seq(("content.xml",
         ("""<?xml version="1.0"?><office:document-content """ +
           "xmlns:office=\"urn:oasis:names:tc:opendocument:xmlns:office:1.0\" " +
           "xmlns:table=\"urn:oasis:names:tc:opendocument:xmlns:table:1.0\" " +
@@ -92,19 +92,19 @@ class OdsSpec extends SparkSpec {
         "</office:annotation><text:p>kept</text:p></table:table-cell>" +
         "</table:table-row></table:table>" +
         "</office:spreadsheet></office:body></office:document-content>"
-    val pkg = graft.sources.Ooxml.buildZip(Seq(
+    val pkg = graft.sources.Payload.buildZip(Seq(
       ("content.xml", xml.getBytes("UTF-8"))))
     assert(Ods.extractText(pkg) == "S\nkept")
   }
 
   test("encrypted package and missing content.xml err NAMED") {
-    val enc = graft.sources.Ooxml.buildZip(Seq(
+    val enc = graft.sources.Payload.buildZip(Seq(
       ("META-INF/manifest.xml",
         "<m><encryption-data/></m>".getBytes("UTF-8")),
       ("content.xml", "<x/>".getBytes("UTF-8"))))
     val e1 = intercept[IllegalArgumentException](Ods.extractText(enc))
     assert(e1.getMessage.contains("encrypted"))
-    val none = graft.sources.Ooxml.buildZip(Seq(
+    val none = graft.sources.Payload.buildZip(Seq(
       ("other.xml", "<x/>".getBytes("UTF-8"))))
     val e2 = intercept[IllegalArgumentException](Ods.extractText(none))
     assert(e2.getMessage.contains("content.xml"))

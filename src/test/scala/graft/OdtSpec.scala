@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Odt, Ooxml}
+import graft.sources.{Odt, Payload}
 
 class OdtSpec extends SparkSpec {
 
@@ -17,7 +17,7 @@ class OdtSpec extends SparkSpec {
       """xmlns:office="urn:o" xmlns:text="urn:t"><office:body>""" +
       """<office:text><text:p>a<text:s text:c="3"/>b</text:p>""" +
       """</office:text></office:body></office:document-content>""")
-    def pkg(c: String) = Ooxml.buildZip(Seq(
+    def pkg(c: String) = Payload.buildZip(Seq(
       ("content.xml", c.getBytes("UTF-8"))))
     assert(Odt.extractText(pkg(content)) == "a   b")
     val e = intercept[IllegalArgumentException] {
@@ -27,7 +27,7 @@ class OdtSpec extends SparkSpec {
   }
 
   test("encrypted ODF packages err NAMED off the manifest") {
-    val pkg = Ooxml.buildZip(Seq(
+    val pkg = Payload.buildZip(Seq(
       ("META-INF/manifest.xml",
         ("<manifest:manifest><manifest:file-entry full-path=\"content.xml\">" +
           "<manifest:encryption-data/></manifest:file-entry>" +
@@ -42,7 +42,7 @@ class OdtSpec extends SparkSpec {
 
   test("non-ODF inputs err NAMED: missing content.xml, OLE, not ZIP") {
     val e1 = intercept[IllegalArgumentException] {
-      Odt.extractText(Ooxml.buildZip(Seq(
+      Odt.extractText(Payload.buildZip(Seq(
         ("other.xml", "<x/>".getBytes("UTF-8")))))
     }
     assert(e1.getMessage.contains("content.xml"))
@@ -59,7 +59,7 @@ class OdtSpec extends SparkSpec {
 
   test("malformed content.xml errs NAMED") {
     val e = intercept[IllegalArgumentException] {
-      Odt.extractText(Ooxml.buildZip(Seq(
+      Odt.extractText(Payload.buildZip(Seq(
         ("content.xml", "<office:text><text:p>unclosed"
           .getBytes("UTF-8")))))
     }

@@ -37,19 +37,20 @@ class OfficeSpec extends SparkSpec {
       Xlsx.extractText(ole)).getMessage.contains("OLE"))
     assert(intercept[IllegalArgumentException](
       Xlsx.extractText("nope".getBytes)).getMessage.contains("ZIP"))
-    val noWb = graft.sources.Ooxml.buildZip(
+    val noWb = graft.sources.Payload.buildZip(
       Seq("other.xml" -> "<x/>".getBytes))
     assert(intercept[IllegalArgumentException](
       Xlsx.extractText(noWb)).getMessage.contains("workbook"))
     // corrupt a valid workbook's sharedStrings reference: rebuild the
     // sheet with an out-of-range index
     val good = Xlsx.buildXlsx(Seq(("S", Seq(cells("x")))))
-    val entries = graft.sources.Ooxml.zipEntries(good, "T")
+    val entries = graft.sources.Payload.zipEntries(good, "T",
+      graft.sources.Payload.OfficeEntryBytes)
     val badSheet = new String(
       entries("xl/worksheets/sheet1.xml"), "UTF-8")
       .replace("t=\"inlineStr\"><is><t>x</t></is>",
         "t=\"s\"><v>99</v>")
-    val bad = graft.sources.Ooxml.buildZip(
+    val bad = graft.sources.Payload.buildZip(
       (entries + ("xl/worksheets/sheet1.xml" ->
         badSheet.getBytes("UTF-8"))).toSeq)
     assert(intercept[IllegalArgumentException](
@@ -57,7 +58,7 @@ class OfficeSpec extends SparkSpec {
     val badType = new String(
       entries("xl/worksheets/sheet1.xml"), "UTF-8")
       .replace("t=\"inlineStr\"", "t=\"wat\"")
-    val bad2 = graft.sources.Ooxml.buildZip(
+    val bad2 = graft.sources.Payload.buildZip(
       (entries + ("xl/worksheets/sheet1.xml" ->
         badType.getBytes("UTF-8"))).toSeq)
     assert(intercept[IllegalArgumentException](
@@ -80,7 +81,8 @@ class OfficeSpec extends SparkSpec {
     z.close()
     assert(out.size() < (2 << 20), "bomb must be small on disk")
     val e = intercept[IllegalArgumentException](
-      graft.sources.Ooxml.zipEntries(out.toByteArray, "T"))
+      graft.sources.Payload.zipEntries(out.toByteArray, "T",
+        graft.sources.Payload.OfficeEntryBytes))
     assert(e.getMessage.contains("bomb"), e.getMessage)
   }
 
@@ -90,16 +92,17 @@ class OfficeSpec extends SparkSpec {
       Seq("Title Slide"), Seq("para one", "para two"), Seq("end")))
     assert(Pptx.extractText(deck) ==
       "Title Slide\npara one\npara two\nend")
-    val noPres = graft.sources.Ooxml.buildZip(
+    val noPres = graft.sources.Payload.buildZip(
       Seq("other.xml" -> "<x/>".getBytes))
     assert(intercept[IllegalArgumentException](
       Pptx.extractText(noPres)).getMessage.contains("presentation"))
     // a deck whose rels lost a slide: unknown relationship NAMED
-    val entries = graft.sources.Ooxml.zipEntries(deck, "T")
+    val entries = graft.sources.Payload.zipEntries(deck, "T",
+      graft.sources.Payload.OfficeEntryBytes)
     val brokenRels = new String(
       entries("ppt/_rels/presentation.xml.rels"), "UTF-8")
       .replace("Id=\"rId2\"", "Id=\"rIdX\"")
-    val broken = graft.sources.Ooxml.buildZip(
+    val broken = graft.sources.Payload.buildZip(
       (entries + ("ppt/_rels/presentation.xml.rels" ->
         brokenRels.getBytes("UTF-8"))).toSeq)
     assert(intercept[IllegalArgumentException](
