@@ -5,7 +5,8 @@ package graft
  * plus per-run Spark JOB counts — the honest statistic for
  * driver-orchestration-bound queries whose final physical plan is just
  * a checkpoint scan. One warm-up run per query, then N rounds; prints
- * the minimum seconds and job count per query.
+ * per query the min, median and max seconds over the rounds and the min
+ * and max job count, so a difference can be read against the spread.
  *
  * Methodology (r19, reproduced from OPTIMIZATION_r19.md): hosts show
  * ambient co-tenancy drift up to 2x between sessions, so cross-session
@@ -82,10 +83,16 @@ object ProbeAB {
         counter.log.forEach(l => println(l))
       }
     }
-    println(f"${"query"}%-36s ${"min_s"}%8s ${"jobs"}%6s")
+    println(f"${"query"}%-36s ${"min_s"}%8s ${"median_s"}%8s ${"max_s"}%8s " +
+      f"${"jobs_min"}%8s ${"jobs_max"}%8s")
     names.foreach { n =>
-      val r = res(n)
-      println(f"$n%-36s ${r.map(_._1).min}%8.3f ${r.map(_._2).min}%6d")
+      val secs = res(n).map(_._1).sorted
+      val jobs = res(n).map(_._2)
+      val median =
+        if (secs.size % 2 == 1) secs(secs.size / 2)
+        else (secs(secs.size / 2 - 1) + secs(secs.size / 2)) / 2
+      println(f"$n%-36s ${secs.head}%8.3f $median%8.3f ${secs.last}%8.3f " +
+        f"${jobs.min}%8d ${jobs.max}%8d")
     }
     spark.stop()
   }

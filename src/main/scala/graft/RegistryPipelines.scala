@@ -589,7 +589,6 @@ private[graft] object RegistryPipelines {
     // oracle's nfc_normalize must produce the identical composed string
     Q("q_text_normalize",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         s.read.parquet(pq(d, "documents"))
           .select(col("doc_id"),
             graft.plans.NativeFunctions.unicodeNormalize(
@@ -726,7 +725,6 @@ private[graft] object RegistryPipelines {
           lit(".Example.COM:443/Path/"), col("doc_id").cast("string"),
           lit("?utm_source=news&id="), col("doc_id").cast("string"),
           lit("&fbclid=x#frag"))
-        graft.plans.NativeFunctions.register(s) // urlCanonicalize pct pass
         s.read.parquet(pq(d, "documents")).where(col("doc_id") < 200)
           .select(col("doc_id"),
             graft.functions.Urls.urlHost(u).as("host"),
@@ -792,7 +790,6 @@ private[graft] object RegistryPipelines {
         val u = concat(lit("https://"),
           element_at(hosts, (col("doc_id") % 10 + 1).cast("int")),
           lit("/p"))
-        graft.plans.NativeFunctions.register(s)
         s.read.parquet(pq(d, "documents")).where(col("doc_id") < 200)
           .select(col("doc_id"),
             graft.functions.Urls.urlHost(u).as("host"),
@@ -842,7 +839,6 @@ private[graft] object RegistryPipelines {
         val u = concat(lit("HTTPS://Example.COM/P%61th/"),
           col("doc_id").cast("string"),
           lit("?q=%2fv%41l%7e&x=%4d%zz#f"))
-        graft.plans.NativeFunctions.register(s)
         s.read.parquet(pq(d, "documents")).where(col("doc_id") < 200)
           .select(col("doc_id"),
             graft.functions.Urls.urlPctNormalize(u).as("normalized"),
@@ -883,7 +879,6 @@ private[graft] object RegistryPipelines {
         val u = concat(lit("https://"),
           element_at(hosts, (col("doc_id") % 8 + 1).cast("int")),
           lit("/p"))
-        graft.plans.NativeFunctions.register(s)
         s.read.parquet(pq(d, "documents")).where(col("doc_id") < 200)
           .select(col("doc_id"),
             graft.functions.Urls.urlHost(u).as("host"),
@@ -952,7 +947,6 @@ private[graft] object RegistryPipelines {
     // two sides cannot drift.
     Q("q_bpe_encode",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         s.read.parquet(pq(d, "documents"))
           .select(col("doc_id"),
             graft.functions.Bpe.encode(lower(trim(col("text"))),
@@ -972,7 +966,6 @@ private[graft] object RegistryPipelines {
     // run that stays unmerged)
     Q("q_bpe_encode_bytes",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         val t = concat(lit("hello world, it's rank "),
           col("doc_id").cast("string"))
         s.read.parquet(pq(d, "documents")).where(col("doc_id") < 200)
@@ -992,7 +985,6 @@ private[graft] object RegistryPipelines {
     // GPT-2's base-byte ids then rank-ordered merge products
     Q("q_bpe_token_ids",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         val t = concat(lit("hello world, it's rank "),
           col("doc_id").cast("string"))
         s.read.parquet(pq(d, "documents")).where(col("doc_id") < 200)
@@ -1011,7 +1003,6 @@ private[graft] object RegistryPipelines {
     // pre-tokenizer character drop or byte-map error breaks the hash.
     Q("q_bpe_roundtrip_bytes",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         val enc = graft.functions.Bpe.encodeBytes(col("text"),
           graft.functions.Bpe.demoByteMerges)
         s.read.parquet(pq(d, "documents"))
@@ -1033,7 +1024,6 @@ private[graft] object RegistryPipelines {
     Q("q_bpe_train_step",
       (s, d) => {
         val docs = s.read.parquet(pq(d, "documents"))
-        graft.plans.NativeFunctions.register(s)
         val best = graft.functions.Bpe.topPairs(docs, "text", 1)
           .collect()(0).getString(0).split(" ", 2)
         graft.functions.Bpe.pairCountsWithMerges(
@@ -1177,7 +1167,6 @@ private[graft] object RegistryPipelines {
     // planted suffix is the only decode site.
     Q("q_html_entities",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         s.read.parquet(pq(d, "documents")).where(col("doc_id") < 200)
           .select(col("doc_id"),
             graft.plans.NativeFunctions.htmlEntitiesNative(concat(
@@ -1998,7 +1987,6 @@ private[graft] object RegistryPipelines {
     // domains written analytically
     Q("q_crawl_pipeline",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         val docs = s.read.parquet(pq(d, "documents"))
         val hosts = array(
           lit("www.shop.example.co.uk"), lit("news.example.co.uk"),
@@ -2328,7 +2316,6 @@ private[graft] object RegistryPipelines {
             "<a href=\"https://b.com/q3\">y</a>"),
           lit("no links"))
         val html = element_at(pages, (col("doc_id") % 4 + 1).cast("int"))
-        graft.plans.NativeFunctions.register(s)
         val links = s.read.parquet(pq(d, "documents"))
           .where(col("doc_id") < 120)
           .select(explode(

@@ -230,7 +230,6 @@ private[graft] object RegistryRound11 {
     // literal — the q_fix_mojibake pattern
     Q("q_langid_ngram",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         val plants = array(langIdPlants.map(p => lit(p._2)): _*)
         s.read.parquet(pq(d, "documents"))
           .select(col("doc_id"),
@@ -748,7 +747,6 @@ private[graft] object RegistryRound11 {
     Q("q_dedup_accent_fold",
       (s, d) => {
         import graft.functions.TextAnalysis
-        graft.plans.NativeFunctions.register(s)
         val base = s.read.parquet(pq(d, "documents"))
           .where(col("doc_id") < 20)
           .select(col("doc_id"), substring(col("text"), 1, 30).as("p"))
@@ -812,7 +810,6 @@ private[graft] object RegistryRound11 {
     // fraction plan, and the deterministic sampler's md5 threshold
     Q("q_langid_mixture",
       (s, d) => {
-        graft.plans.NativeFunctions.register(s)
         val plants = array(langIdPlants.map(p => lit(p._2)): _*)
         val docs = s.read.parquet(pq(d, "documents"))
           .select(col("doc_id"),

@@ -184,7 +184,6 @@ private[graft] object RegistryRound13 {
     Q("q_langid_table",
       (s, d) => {
         import graft.functions.TextAnalysis
-        graft.plans.NativeFunctions.register(s)
         val root = Fixture(
           new java.io.File(d, "documents.parquet"),
           "graft_langid_profiles",

@@ -62,7 +62,6 @@ private[graft] object RegistryRound15 {
       bench: org.apache.spark.sql.DataFrame, lgKEst: Int)
       : org.apache.spark.sql.DataFrame = {
     import graft.plans.NativeFunctions
-    NativeFunctions.register(corpus.sparkSession)
     contaminationKeyFlags(corpus, bench)
       .agg(
         count(when(col("__c") === 1, 1)).as("n_corpus"),
@@ -229,7 +228,6 @@ private[graft] object RegistryRound15 {
     Q("q_contamination_theta",
       (s, d) => {
         import graft.operators.Dedup
-        graft.plans.NativeFunctions.register(s)
         val docs = s.read.parquet(pq(d, "documents"))
           .repartition(s.sparkContext.defaultParallelism)
         val corpus = docs.where(col("source") =!= "src0")

@@ -208,7 +208,6 @@ private[graft] object RegistryRound16 {
     Q("q_contamination_theta_state",
       (s, d) => {
         import graft.operators.Dedup
-        graft.plans.NativeFunctions.register(s)
         val root = Fixture(
           new java.io.File(d, "documents.parquet"),
           "graft_theta_log",

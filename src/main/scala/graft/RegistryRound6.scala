@@ -555,7 +555,6 @@ private[graft] object RegistryRound6 {
         val lab = emb.where(col("vec_id") % 5 =!= 0)
           .select(col("vec_id").as("nbr_id"),
             col("embedding").as("nv"), col("label"))
-        graft.plans.NativeFunctions.register(s)
         graft.operators.Similarity.knnLabel(unl, lab,
           "vec_id", "embedding", "nbr_id", "nv", "label", k = 5)
       },
@@ -597,7 +596,6 @@ private[graft] object RegistryRound6 {
           .select(col("vec_id").as("nbr_id"),
             col("embedding").as("nv"), col("label"))
           .unionByName(twins)
-        graft.plans.NativeFunctions.register(s)
         graft.operators.Similarity.knnLabelBucketed(unl, lab,
           "vec_id", "embedding", "nbr_id", "nv", "label",
           k = 1, planes = 6)
@@ -742,7 +740,6 @@ private[graft] object RegistryRound6 {
           lit("cafÃ©"), lit("naÃ¯ve donâ€™t"), lit("Â°C and Â£5"),
           lit("clean ascii text"), lit("já correct é"),
           lit("cafÃƒÂ©"), lit("ðŸ˜€ ok"))
-        graft.plans.NativeFunctions.register(s)
         s.read.parquet(pq(d, "documents")).where(col("doc_id") < 200)
           .select(col("doc_id"),
             graft.plans.NativeFunctions.fixMojibakeNative(

@@ -124,9 +124,6 @@ object ScaleCurve {
     import graft.functions.{TextAnalysis, TextSearch}
     import graft.operators.{Dedup, Pack, Profile, Similarity}
     import graft.multimodal.Multimodal
-    // the assign_* isolation families call the native assignment
-    // functions directly (no operator wrapper to register for them)
-    graft.plans.NativeFunctions.register(spark)
 
     // ---- corpora (idempotent: skip factors already materialized) ----
     factors.foreach { k =>

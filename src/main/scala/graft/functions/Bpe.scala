@@ -76,7 +76,6 @@ object Bpe {
     * check of what [[trainBpe]] computes on the capped type table. */
   def pairCountsWithMerges(docs: DataFrame, textCol: String,
                            merges: Seq[(String, String)]): DataFrame = {
-    NativeFunctions.register(docs.sparkSession)
     val syms = NativeFunctions.bpeEncodeNative(col("w"), merges)
     wordFrequencies(docs, textCol)
       .select(col("wf"), syms.as("s"))
@@ -165,7 +164,6 @@ object Bpe {
     * [[wordFrequencies]]: raw text (no lower/trim — case and leading
     * spaces are part of the pre-token), same one-corpus-pass shape. */
   def pretokenFrequencies(docs: DataFrame, textCol: String): DataFrame = {
-    NativeFunctions.register(docs.sparkSession)
     docs.select(explode(
         NativeFunctions.bpePretokenizeNative(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wf"))

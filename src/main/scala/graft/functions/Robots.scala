@@ -180,7 +180,6 @@ object Robots {
     // wildcard rules carry a pattern COLUMN: Spark's own regexp_like
     // would recompile it per (URL, rule) row. The native cached
     // matcher compiles once per distinct rule pattern per executor.
-    graft.plans.NativeFunctions.register(urls.sparkSession)
     val matches = when(col("wildcard"),
       graft.plans.NativeFunctions.rlikeCached(col("__p"), col("pattern")))
       .otherwise(col("__p").startsWith(col("prefix")))

@@ -671,7 +671,6 @@ object TextAnalysis {
                             k: Int = 3, window: Int = 4)
       : org.apache.spark.sql.DataFrame = {
     require(k >= 1 && window >= 1, "k and window must be >= 1")
-    graft.plans.NativeFunctions.register(df.sparkSession)
     df.select(df.columns.map(col).toSeq :+ graft.plans.NativeFunctions
       .winnowNative(col(textCol), k, window).as("fingerprints"): _*)
   }
@@ -710,7 +709,6 @@ object TextAnalysis {
                     minWords: Int = 50, maxWords: Int = 100000,
                     functionWords: Seq[String] = gopherStopwords)
       : DataFrame = {
-    graft.plans.NativeFunctions.register(docs.sparkSession)
     // REFERENCE equality, deliberately: only the default argument
     // (the gopherStopwords object itself) takes the compiled-in
     // fast path — a caller-supplied list rides the reference-object
@@ -926,9 +924,9 @@ object TextAnalysis {
 
   /**
    * [[normalizeForDedup]] with ACCENT FOLDING in front (the full CCNet
-   * recipe): NFD-decompose (native [[graft.plans.UnicodeNormalizeExpr]]
-   * — requires `NativeFunctions.register` on the session), strip the
-   * combining marks (`\p{M}`), then the digit/punct/whitespace chain.
+   * recipe): NFD-decompose (native [[graft.plans.UnicodeNormalizeExpr]]),
+   * strip the combining marks (`\p{M}`), then the digit/punct/whitespace
+   * chain.
    * "Café", "Cafe" + COMBINING ACUTE, and "CAFE" all collapse to one
    * key — reformatted-AND-deaccented copies are the rule in scraped
    * duplicates of non-English text. Kept separate from

@@ -177,7 +177,6 @@ object TextSearch {
                       queries: DataFrame, queryIdCol: String,
                       queryVecCol: String, candidates: Int): DataFrame = {
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
-    NativeFunctions.register(docs.sparkSession)
     val qv = queries.select(col(queryIdCol),
       col(queryVecCol).cast("array<double>").as("__qv"))
     val wd = Window.partitionBy(col(queryIdCol))

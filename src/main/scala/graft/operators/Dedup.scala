@@ -67,7 +67,6 @@ object Dedup {
                    shingleWords: Int = 3): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    NativeFunctions.register(df.sparkSession)
     df.select(col(idCol), NativeFunctions.minhashNative(col(textCol),
         numHashes, shingleWords).as("sig"))
       .select(col(idCol), posexplode(transform(
@@ -199,7 +198,6 @@ object Dedup {
                         shingleWords: Int = 3,
                         minJaccard: Double = 0.8)
       : DataFrame = Checkpoints.scoped { s =>
-    NativeFunctions.register(df.sparkSession)
     // shingled ONCE and pinned (optimization round 19, guide §8 step 1
     // / §3.3): this frame is consumed four times below — both id sides
     // of the hashed prefilter join and both id sides of the exact
@@ -305,7 +303,6 @@ object Dedup {
                         maxHamming: Int = 3,
                         maxBucket: Int = 1000,
                         chunks: Int = 0): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     simhashPairsFromFingerprints(
       df.select(col(idCol).as("id"),
         NativeFunctions.simhashNative(col(textCol)).as("simhash")),
@@ -604,7 +601,6 @@ object Dedup {
                           planes: Int = 12,
                           minCosine: Double = 0.95,
                           maxBucket: Int = 1000): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     val vecs = df.select(col(idCol),
       col(vecCol).cast("array<double>").as("v"))
     val keyed = vecs
@@ -665,9 +661,8 @@ object Dedup {
                          maxBucket: Int = 1000,
                          twoLevel: Boolean = false)
       : DataFrame = Checkpoints.scoped { s =>
-    NativeFunctions.register(df.sparkSession)
     val nearest =
-      if (twoLevel) Similarity.nearestCellFnTwoLevel(df)
+      if (twoLevel) Similarity.nearestCellFnTwoLevel
       else Similarity.nearestCellFn
     val vecsRaw = df.select(col(idCol),
       col(vecCol).cast("array<double>").as("v"))
@@ -755,7 +750,6 @@ object Dedup {
   def semanticIndex(vecs: DataFrame, idCol: String, vecCol: String,
                     nlist: Int = 16, iters: Int = 2)
       : (Array[Seq[Double]], DataFrame) = Checkpoints.scoped { s =>
-    NativeFunctions.register(vecs.sparkSession)
     val vRaw = vecs.select(col(idCol).as("seen_id"),
       col(vecCol).cast("array<double>").as("seen_vec"))
     // pinned for the same reason as `semanticDuplicates`: the Lloyd
@@ -803,7 +797,6 @@ object Dedup {
     require(centroids.nonEmpty,
       "empty centroids: an empty corpus has nothing to match against " +
         "— incrementalSemantic handles that case")
-    NativeFunctions.register(newVecs.sparkSession)
     val batch = newVecs
       .select(col(idCol).as("new_id"),
         col(vecCol).cast("array<double>").as("__nv"))
@@ -960,8 +953,7 @@ object Dedup {
       .join(sb, Seq("band", "band_hash"))
       .select(col("new_id"), col("seen_id"))
       .distinct())
-    // tokenize only colliding docs on each side (minhashBands above has
-    // registered the kernels)
+    // tokenize only colliding docs on each side
     val newSh = newDocs
       .join(cand.select(col("new_id").as(idCol)).distinct(), idCol)
       .select(col(idCol).as("new_id"),
@@ -1034,7 +1026,6 @@ object Dedup {
         s"BloomFilterAggregate's clamp ($maxItems / $maxBits) — raise " +
         "spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits " +
         "or the clamp silently inflates the false-positive rate")
-    NativeFunctions.register(seen.sparkSession)
     Option(seen
       .agg(NativeFunctions.bloomAggNative(xxhash64(keyOf(col(textCol))),
         expectedItems, numBits).as("bf"))
@@ -1077,7 +1068,6 @@ object Dedup {
                            sketch: Option[Array[Byte]],
                            keyOf: Column => Column = identity)
       : DataFrame = {
-    NativeFunctions.register(newDocs.sparkSession)
     val flag = sketch match {
       case Some(bytes) =>
         NativeFunctions.bloomMightContain(lit(bytes),
@@ -1290,7 +1280,6 @@ object Dedup {
     // (contaminationScore / duplicateSpans), which accept it.
     require(hashBits == 64,
       s"contaminationSketch supports hashBits=64 only, got $hashBits")
-    NativeFunctions.register(docs.sparkSession)
     def sketchOf(df: DataFrame, name: String): DataFrame = df
       .select(explode(shinglesNative(col(textCol), shingleWords))
         .as("__shs"))
@@ -1366,7 +1355,6 @@ object Dedup {
   private def shardSketches(docs: DataFrame, textCol: String,
                             shardCol: String, shingleWords: Int,
                             lgK: Int): DataFrame = {
-    NativeFunctions.register(docs.sparkSession)
     docs
       .select(col(shardCol).cast("string").as("shard"),
         explode(shinglesNative(col(textCol), shingleWords)).as("__shs"))
@@ -1417,7 +1405,6 @@ object Dedup {
                          idCol: String, textCol: String,
                          shingleWords: Int = 5,
                          hashBits: Int = 64): DataFrame = {
-    NativeFunctions.register(docs.sparkSession)
     val shingles = shinglesNative(col(textCol), shingleWords)
     val docSh = docs.select(col(idCol), explode(shingles).as("__shs"))
       .select(col(idCol), membershipKey(col("__shs"), hashBits).as("__sh"))
@@ -1461,7 +1448,6 @@ object Dedup {
                               benchCol: String,
                               shingleWords: Int = 5,
                               hashBits: Int = 64): DataFrame = {
-    NativeFunctions.register(docs.sparkSession)
     val shingles = shinglesNative(col(textCol), shingleWords)
     val docSh = docs.select(col(idCol), explode(shingles).as("__shs"))
       .select(col(idCol), membershipKey(col("__shs"), hashBits).as("__sh"))
@@ -1668,7 +1654,6 @@ object Dedup {
   def cdcChunkHashes(df: DataFrame, idCol: String, textCol: String,
                      minSize: Int = 32, avgSize: Int = 64,
                      maxSize: Int = 128): DataFrame = {
-    graft.plans.NativeFunctions.register(df.sparkSession)
     df.select(col(idCol),
         explode(graft.plans.NativeFunctions.cdcChunksNative(
           col(textCol), minSize, avgSize, maxSize)).as("__c"))
@@ -1768,7 +1753,6 @@ object Dedup {
                         spark: org.apache.spark.sql.SparkSession,
                         indexDir: String): DataFrame = {
     import graft.sources.ChunkIndex
-    NativeFunctions.register(spark)
     ChunkIndex.sketch(indexDir) match {
       case None =>
         // the index commits its sketch BEFORE its chunk parquet

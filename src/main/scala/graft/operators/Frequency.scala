@@ -37,7 +37,6 @@ object Frequency {
    */
   def mgSummary(df: DataFrame, itemCol: String, capacity: Int): DataFrame = {
     require(capacity >= 1, s"capacity must be >= 1, got $capacity")
-    NativeFunctions.register(df.sparkSession)
     df.select(col(itemCol).cast("string").as("__it"))
       .where(col("__it").isNotNull)
       .agg(NativeFunctions.mgSummaryNative(col("__it"), capacity)
@@ -178,7 +177,6 @@ object Frequency {
    */
   def kllSketches(df: DataFrame, valueCol: String, groupCol: String,
                   k: Int = 200): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     df.where(col(valueCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(NativeFunctions.kllAggNative(col(valueCol), k).as("kll"))
@@ -189,7 +187,6 @@ object Frequency {
     * Pass the k the logs were built with. */
   def kllUnionSketch(sketches: DataFrame, sketchCol: String = "kll",
                      k: Int = 200): DataFrame = {
-    NativeFunctions.register(sketches.sparkSession)
     sketches.agg(
       NativeFunctions.kllUnionNative(col(sketchCol), k).as("kll"))
   }
@@ -227,7 +224,6 @@ object Frequency {
    */
   def thetaSketches(df: DataFrame, keyCol: String, groupCol: String,
                     lgK: Int = 12): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     df.where(col(keyCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(NativeFunctions.thetaAggNative(col(keyCol), lgK).as("theta"))
@@ -238,7 +234,6 @@ object Frequency {
     * Pass the lgK the logs were built with. */
   def thetaUnionSketch(sketches: DataFrame, sketchCol: String = "theta",
                        lgK: Int = 12): DataFrame = {
-    NativeFunctions.register(sketches.sparkSession)
     sketches.agg(
       NativeFunctions.thetaUnionNative(col(sketchCol), lgK).as("theta"))
   }
@@ -276,7 +271,6 @@ object Frequency {
                    keys: DataFrame, keyCol: String,
                    eps: Double = 0.001, confidence: Double = 0.99,
                    seed: Int = 42): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     val bytes = cmsSketch(df, itemCol, eps, confidence, seed)
       .head().getAs[Array[Byte]]("cms")
     keys.withColumn("est",

@@ -83,7 +83,6 @@ object Similarity {
    */
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
                      query: Seq[Float], k: Int): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     corpus.select(col(idCol),
         round(cosineNative(col(vecCol).cast("array<double>"),
           typedlit(query.map(_.toDouble))), 4).as("cosine"))
@@ -99,7 +98,6 @@ object Similarity {
   def topKPerQuery(corpus: DataFrame, queries: DataFrame,
                    corpusId: String, corpusVec: String,
                    queryId: String, queryVec: String, k: Int): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val joined = corpus.select(col(corpusId),
         col(corpusVec).cast("array<double>").as("cv"))
       .crossJoin(broadcast(queries.select(col(queryId),
@@ -134,7 +132,6 @@ object Similarity {
                     anchorId: String, anchorVec: String,
                     anchorLabel: String,
                     k: Int): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val joined = corpus.select(col(corpusId), col(corpusLabel),
         col(corpusVec).cast("array<double>").as("__cv"))
       .crossJoin(broadcast(anchors.select(col(anchorId),
@@ -181,7 +178,6 @@ object Similarity {
                unlabeledId: String, unlabeledVec: String,
                labeledId: String, labeledVec: String,
                labelCol: String, k: Int): DataFrame = {
-    NativeFunctions.register(unlabeled.sparkSession)
     val joined = unlabeled.select(col(unlabeledId),
         col(unlabeledVec).cast("array<double>").as("__uv"))
       .crossJoin(broadcast(labeled.select(col(labeledId),
@@ -222,7 +218,6 @@ object Similarity {
                        labeledId: String, labeledVec: String,
                        labelCol: String, k: Int,
                        planes: Int = 8): DataFrame = {
-    NativeFunctions.register(unlabeled.sparkSession)
     val u = unlabeled.select(col(unlabeledId),
         col(unlabeledVec).cast("array<double>").as("__uv"))
       .withColumn("__bkt", hyperplaneBucketNative(col("__uv"), planes))
@@ -282,7 +277,6 @@ object Similarity {
               k: Int, nlist: Int = 16, nprobe: Int = 4,
               iters: Int = 2): DataFrame = Checkpoints.scoped { s =>
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
-    NativeFunctions.register(corpus.sparkSession)
     // pin the projected corpus before the Lloyd loop: every iteration
     // is its own job, and without the checkpoint each one re-runs the
     // source scan + cast (iters + 2 parquet scans for one build). On a
@@ -413,7 +407,7 @@ object Similarity {
     * expressions, so the generated source is IDENTICAL across Lloyd
     * iterations (whole-stage codegen compiles once per query, not once
     * per iteration) and the expression scales to SemDeDup-sized nlist
-    * (~50k cells). [[NativeFunctions.register]] must have run. */
+    * (~50k cells). */
   private[operators] val nearestCellFn: (Array[Seq[Double]], Column) => Column =
     (cents, v) =>
       if (cents.length == 1) lit(0)
@@ -512,9 +506,8 @@ object Similarity {
     * centroids) and assigns via the fused
     * [[graft.plans.NearestCentroidTwoLevelExpr]] at O(√nlist · dim)
     * per row. */
-  private[graft] def nearestCellFnTwoLevel(df: DataFrame)
-      : (Array[Seq[Double]], Column) => Column = {
-    NativeFunctions.register(df.sparkSession)
+  private[graft] val nearestCellFnTwoLevel
+      : (Array[Seq[Double]], Column) => Column =
     (cents, v) =>
       if (cents.length == 1) lit(0)
       else {
@@ -524,7 +517,6 @@ object Similarity {
           members.toSeq.map(_.toSeq),
           cents.toSeq.map(_.toSeq))
       }
-  }
 
   /** The query's `nprobe` nearest cells as an array column. */
   private def nearestCells(centroids: Array[Seq[Double]],
@@ -697,7 +689,6 @@ object Similarity {
       Checkpoints.scoped { s =>
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
     require(m >= 1 && ksub >= 1, s"need m >= 1 and ksub >= 1, got $m/$ksub")
-    NativeFunctions.register(corpus.sparkSession)
     // Embeddings.l2Normalize materializes the norm as an attribute
     // before the transform lambda — a lambda capturing the norm
     // EXPRESSION would re-evaluate the O(dim) fold per element
@@ -765,7 +756,6 @@ object Similarity {
     require(coarse.nonEmpty,
       "empty coarse centroids: an empty corpus has nothing to search " +
         "— ivfpqTopK handles that case")
-    NativeFunctions.register(corpus.sparkSession)
     val cbSeq = codebooks.toSeq.map(_.toSeq.map(_.toSeq))
     val coarseLit = typedlit(coarse.toSeq.map(_.toSeq))
     val q = Embeddings.l2Normalize(
@@ -822,7 +812,6 @@ object Similarity {
               corpusId: String, corpusVec: String,
               queryId: String, queryVec: String,
               k: Int, planes: Int = 8): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val c = corpus.select(col(corpusId),
         col(corpusVec).cast("array<double>").as("cv"))
       .withColumn("bucket", hyperplaneBucketNative(col("cv"), planes))
@@ -846,7 +835,6 @@ object Similarity {
                 corpusId: String, corpusVec: String,
                 queryId: String, queryVec: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    NativeFunctions.register(corpus.sparkSession)
     val qv = queries.select(col(queryId),
       col(queryVec).cast("array<double>").as("__qv"))
     val w = Window.partitionBy(col(queryId))

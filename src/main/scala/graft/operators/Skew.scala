@@ -201,7 +201,6 @@ object Skew {
     require(expectedItems <= maxItems && numBits <= maxBits,
       s"sketch size ($expectedItems items / $numBits bits) exceeds " +
         s"BloomFilterAggregate's clamp ($maxItems / $maxBits)")
-    NativeFunctions.register(big.sparkSession)
     def keyHash(df: DataFrame): Column =
       xxhash64(keyCols.map(df.apply): _*)
     // one materialization feeds BOTH the sketch and the join — see the

@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.DataType
  *
  * and every session of the application gets
  *  - every graft native function (`graft_cosine`, `graft_minhash`,
- *    `graft_simhash`, `graft_shingles`, `graft_hyperplane_bucket`, …) in
- *    SQL and `call_function` — no per-session [[NativeFunctions.register]]
- *    call;
+ *    `graft_simhash`, `graft_shingles`, `graft_hyperplane_bucket`, …) by
+ *    name in SQL text — the [[NativeFunctions]] Column helpers need no
+ *    names, they build their expressions directly;
  *  - the [[BindFilterValues]] physical rule, so a query that differs from
  *    an earlier one only in its filter values reuses the earlier one's
  *    compiled classes.
@@ -37,8 +37,8 @@ import org.apache.spark.sql.types.DataType
  * NOTE: `spark.sql.extensions` is a STATIC conf — it must be set before
  * the application's first SparkContext is created (spark-submit --conf /
  * spark-defaults); setting it on a later builder is silently ignored.
- * In-JVM callers that already hold a session use
- * [[NativeFunctions.register]] instead (the rule then stays off).
+ * A session built elsewhere that wants the names in SQL text takes
+ * [[NativeFunctions.register]] (the rule then stays off).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

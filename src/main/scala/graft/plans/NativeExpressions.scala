@@ -1,12 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /**
@@ -2723,9 +2724,12 @@ object CdcChunksExpr {
 }
 
 /**
- * Registration + Column-API access for the native expressions. Catalyst
- * `Column`s are built through the session function registry
- * (`call_function`), the public path for custom expressions in Spark 4.
+ * Column-API and SQL access for the native expressions. Each Column
+ * helper wraps its kernel's Catalyst expression directly, as Spark's own
+ * `functions` do, so it works on any session with nothing registered.
+ * The `graft_*` names matter only for SQL text: [[builders]] is what
+ * [[GraftExtensions]] injects and what [[register]] installs on a
+ * session built elsewhere.
  */
 object NativeFunctions {
 
@@ -2772,7 +2776,9 @@ object NativeFunctions {
   private def intLit(e: Expression): Int =
     e.eval(null) match {
       case i: Int => i
-      case l: Long => l.toInt
+      case l: Long if l.isValidInt => l.toInt
+      case l: Long => throw new IllegalArgumentException(
+        s"integer argument $l is out of int range")
       case other => throw new IllegalArgumentException(
         s"expected integer literal, got $other")
     }
@@ -2871,12 +2877,10 @@ object NativeFunctions {
     // join filters), surfaced through the registry — Spark ships them
     // unregistered. Long-hash in, compact binary sketch out.
     bloomAggName -> ((exprs: Seq[Expression]) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head, exprs(1), exprs(2))
+      new BloomFilterAggregate(exprs.head, exprs(1), exprs(2))
         .toAggregateExpression()),
     bloomContainsName -> ((exprs: Seq[Expression]) =>
-      new org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs.head, exprs(1))),
+      BloomFilterMightContain(exprs.head, exprs(1))),
     bloomProbeName -> ((exprs: Seq[Expression]) =>
       BloomProbeExpr(exprs.head, exprs(1))),
     nearestCentroidName -> ((exprs: Seq[Expression]) =>
@@ -2946,10 +2950,12 @@ object NativeFunctions {
     thetaEstimateName -> ((exprs: Seq[Expression]) =>
       ThetaEstimateExpr(exprs.head, intLit(exprs(1)))))
 
-  /** Idempotently register graft native functions on this session: a
-    * name already bound to its builder (an earlier call, or the
-    * session's [[GraftExtensions]]) is left as it is, so repeated calls
-    * neither rebind nor log the registry's replacement WARN. */
+  /** Idempotently register the `graft_*` names for SQL text on a
+    * session built without [[GraftExtensions]] (the Column helpers need
+    * no registration): a name already bound to its builder (an earlier
+    * call, or the session's [[GraftExtensions]]) is left as it is, so
+    * repeated calls neither rebind nor log the registry's replacement
+    * WARN. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
@@ -2959,59 +2965,54 @@ object NativeFunctions {
     }
   }
 
-  /** Native fused cosine; [[register]] must have run on the session.
-    * Inputs must be array<double> — cast array<float> explicitly. */
+  /** Native fused cosine. Inputs must be array<double> — cast
+    * array<float> explicitly. */
   def cosineNative(a: Column, b: Column): Column =
-    call_function(cosineName, a.cast("array<double>"), b.cast("array<double>"))
+    column(CosineSimilarityExpr(expression(a.cast("array<double>")),
+      expression(b.cast("array<double>"))))
 
   /** Native sorted-distinct-array<bigint> Jaccard (the hashed-shingle
-    * prefilter's per-candidate hot loop); [[register]] must have run. */
+    * prefilter's per-candidate hot loop). */
   def sortedJaccardNative(a: Column, b: Column): Column =
-    call_function(sortedJaccardName, a, b)
+    column(SortedJaccardExpr(expression(a), expression(b)))
 
   /** Native fused MinHash signature (array<bigint> of length numHashes). */
   def minhashNative(text: Column, numHashes: Int, shingleWords: Int): Column =
-    call_function(minhashName, text,
-      org.apache.spark.sql.functions.lit(numHashes),
-      org.apache.spark.sql.functions.lit(shingleWords))
+    column(MinHashSignatureExpr(expression(text), numHashes, shingleWords))
 
   /** Native fused 64-bit SimHash. */
-  def simhashNative(text: Column): Column = call_function(simhashName, text)
+  def simhashNative(text: Column): Column =
+    column(SimHashExpr(expression(text)))
 
   /** Native distinct word-shingles (array<string>). */
   def shinglesNative(text: Column, shingleWords: Int): Column =
-    call_function(shinglesName, text,
-      org.apache.spark.sql.functions.lit(shingleWords))
+    column(WordShinglesExpr(expression(text), shingleWords))
 
   /** Native hyperplane-LSH bucket (bit-exact with the HOF form). */
   def hyperplaneBucketNative(v: Column, planes: Int): Column =
-    call_function(hyperplaneName, v.cast("array<double>"),
-      org.apache.spark.sql.functions.lit(planes))
+    column(HyperplaneBucketExpr(expression(v.cast("array<double>")), planes))
 
   /** Native winnowing fingerprint set (bit-exact with the HOF form). */
   def winnowNative(text: Column, shingleWords: Int, window: Int): Column =
-    call_function(winnowName, text,
-      org.apache.spark.sql.functions.lit(shingleWords),
-      org.apache.spark.sql.functions.lit(window))
+    column(WinnowingExpr(expression(text), shingleWords, window))
 
   /** Unicode normalization; `form` one of NFC/NFD/NFKC/NFKD. */
   def unicodeNormalize(text: Column, form: String = "NFC"): Column =
-    call_function(unicodeNormalizeName, text,
-      org.apache.spark.sql.functions.lit(form))
+    column(UnicodeNormalizeExpr(expression(text), form))
 
   /** HTML character-reference decode (named + numeric, single-pass). */
   def htmlEntitiesNative(text: Column): Column =
-    call_function(htmlEntitiesName, text)
+    column(HtmlEntityDecodeExpr(expression(text)))
 
   /** Mojibake repair (UTF-8 mis-decoded as Latin-1/cp1252, ≤3 passes). */
   def fixMojibakeNative(text: Column): Column =
-    call_function(fixMojibakeName, text)
+    column(MojibakeRepairExpr(expression(text)))
 
   /** Char-ngram language ID (compiled-in 50-language profile table;
     * same scoring as TextAnalysis.langIdCharNgram, one call per
     * row). */
   def langIdNgramNative(text: Column): Column =
-    call_function(langIdNgramName, text)
+    column(LangIdNgramExpr(expression(text)))
 
   /** Char-ngram language ID against a CALLER-SUPPLIED profile table
     * (e.g. `TextAnalysis.loadNgramProfiles` output) — the table rides
@@ -3020,60 +3021,51 @@ object NativeFunctions {
     * Janino recompile of the query. */
   def langIdNgramNative(text: Column,
                         profiles: Map[String, Seq[String]]): Column =
-    call_function(langIdNgramName, text,
-      org.apache.spark.sql.functions.typedlit(profiles))
+    column(LangIdNgramExpr(expression(text), Some(new LangIdTable(profiles))))
 
   /** Gopher rule signals as one native struct (fields per
     * [[GopherSignalsExpr.schema]]); parity with the HOF form is
     * property-tested. */
   def gopherSignalsNative(text: Column, minWords: Int,
                           maxWords: Int): Column =
-    call_function(gopherSignalsName, text,
-      org.apache.spark.sql.functions.lit(minWords),
-      org.apache.spark.sql.functions.lit(maxWords))
+    column(GopherSignalsExpr(expression(text), minWords, maxWords))
 
   /** Gopher signals with a CALLER-SUPPLIED function-word list (the
     * data-driven form — the list rides as a codegen reference
     * object, so retuning it is a table swap, not a recompile). */
   def gopherSignalsNative(text: Column, minWords: Int, maxWords: Int,
                           functionWords: Seq[String]): Column =
-    call_function(gopherSignalsName, text,
-      org.apache.spark.sql.functions.lit(minWords),
-      org.apache.spark.sql.functions.lit(maxWords),
-      org.apache.spark.sql.functions.lit(functionWords.toArray))
+    column(GopherSignalsExpr(expression(text), minWords, maxWords,
+      Some(functionWords.toSet)))
 
   /** Content-defined chunks of a text column —
     * `array<struct<hash, start, len>>` (FastCDC gear construction;
     * byte offsets). */
   def cdcChunksNative(text: Column, minSize: Int, avgSize: Int,
                       maxSize: Int): Column =
-    call_function(cdcChunksName, text,
-      org.apache.spark.sql.functions.lit(minSize),
-      org.apache.spark.sql.functions.lit(avgSize),
-      org.apache.spark.sql.functions.lit(maxSize))
+    column(CdcChunksExpr(expression(text), minSize, avgSize, maxSize))
 
   /** Bloom-filter aggregate over a long-hash column → binary sketch. */
   def bloomAggNative(hash: Column, expectedItems: Long,
                      numBits: Long): Column =
-    call_function(bloomAggName, hash,
-      org.apache.spark.sql.functions.lit(expectedItems),
-      org.apache.spark.sql.functions.lit(numBits))
+    column(new BloomFilterAggregate(expression(hash), Literal(expectedItems),
+      Literal(numBits)).toAggregateExpression())
 
   /** Membership probe against a (constant) Bloom sketch. */
   def bloomMightContain(bloom: Column, hash: Column): Column =
-    call_function(bloomContainsName, bloom, hash)
+    column(BloomFilterMightContain(expression(bloom), expression(hash)))
 
   /** Per-row membership probe — the sketch is a COLUMN (manifest
     * rows); see [[BloomProbeExpr]] for when to prefer which. */
   def bloomProbe(bloom: Column, hash: Column): Column =
-    call_function(bloomProbeName, bloom, hash)
+    column(BloomProbeExpr(expression(bloom), expression(hash)))
 
   /** Fused nearest-centroid cell assignment (bit-exact with the
     * greatest-of-structs form, larger cell wins cosine ties). */
   def nearestCentroidNative(v: Column,
                             centroids: Seq[Seq[Double]]): Column =
-    call_function(nearestCentroidName, v.cast("array<double>"),
-      org.apache.spark.sql.functions.typedlit(centroids))
+    column(NearestCentroidExpr(expression(v.cast("array<double>")),
+      centroids.map(_.toArray).toArray))
 
   /** Fused TWO-LEVEL cell assignment: coarse argmax over ~√nlist
     * groups, fine argmax over only that group's member centroids —
@@ -3084,136 +3076,123 @@ object NativeFunctions {
   def nearestCentroidTwoLevelNative(v: Column, coarse: Seq[Seq[Double]],
                                     members: Seq[Seq[Int]],
                                     centroids: Seq[Seq[Double]]): Column =
-    call_function(nearestCentroid2lName, v.cast("array<double>"),
-      org.apache.spark.sql.functions.typedlit(coarse),
-      org.apache.spark.sql.functions.typedlit(members),
-      org.apache.spark.sql.functions.typedlit(centroids))
+    column(NearestCentroidTwoLevelExpr(expression(v.cast("array<double>")),
+      coarse.map(_.toArray).toArray, members.map(_.toArray).toArray,
+      centroids.map(_.toArray).toArray))
 
   /** Fused PQ encode: per-subspace L2-argmin codes (bit-exact with the
     * least-of-structs form, smaller code wins distance ties). */
   def pqEncodeNative(v: Column,
                      codebooks: Seq[Seq[Seq[Double]]]): Column =
-    call_function(pqEncodeName, v.cast("array<double>"),
-      org.apache.spark.sql.functions.typedlit(codebooks))
+    column(PqEncodeExpr(expression(v.cast("array<double>")),
+      codebooks.map(_.map(_.toArray).toArray).toArray))
 
   /** Fused ADC inner product of a query vector against PQ codes
     * (bit-exact with the HOF slice/element_at composition). */
   def pqAdcNative(q: Column, codes: Column,
                   codebooks: Seq[Seq[Seq[Double]]]): Column =
-    call_function(pqAdcName, q.cast("array<double>"), codes,
-      org.apache.spark.sql.functions.typedlit(codebooks))
+    column(PqAdcExpr(expression(q.cast("array<double>")), expression(codes),
+      codebooks.map(_.map(_.toArray).toArray).toArray))
 
   /** Misra–Gries frequent-items summary aggregate →
     * `array<struct<item, cnt>>` (cnt desc, item asc); at most
     * `capacity` entries regardless of input cardinality. */
   def mgSummaryNative(item: Column, capacity: Int): Column =
-    call_function(mgSummaryName, item,
-      org.apache.spark.sql.functions.lit(capacity))
+    column(MisraGriesAgg(expression(item), capacity).toAggregateExpression())
 
   /** Count-Min point estimate for `key` (bigint or string) against a
     * `count_min_sketch`-built binary sketch column. */
   def cmsEstimateNative(sketch: Column, key: Column): Column =
-    call_function(cmsEstimateName, sketch, key)
+    column(CmsEstimateExpr(expression(sketch), expression(key)))
 
   /** Mergeable KLL quantile sketch aggregate over a double column →
     * compact binary (persist one row per group; union later). */
   def kllAggNative(value: Column, k: Int = 200): Column =
-    call_function(kllAggName, value.cast("double"),
-      org.apache.spark.sql.functions.lit(k))
+    column(KllDoublesAgg(expression(value.cast("double")), k)
+      .toAggregateExpression())
 
   /** Union of persisted KLL sketch binaries → one merged binary;
     * pass the k the logs were built with. */
   def kllUnionNative(sketch: Column, k: Int = 200): Column =
-    call_function(kllUnionName, sketch,
-      org.apache.spark.sql.functions.lit(k))
+    column(KllUnionAgg(expression(sketch), k).toAggregateExpression())
 
   /** Quantile estimates (INCLUSIVE criterion) for a rank vector
     * against a KLL sketch binary; rank -1.0 probes exact N. */
   def kllQuantilesNative(sketch: Column, ranks: Seq[Double]): Column =
-    call_function(kllQuantilesName, sketch,
-      org.apache.spark.sql.functions.typedlit(ranks))
+    column(KllQuantilesExpr(expression(sketch), Literal.create(ranks)))
 
   /** Normalized-rank (CDF) estimates for a VALUE vector against a
     * KLL sketch binary — the inverse probe of [[kllQuantilesNative]]. */
   def kllRanksNative(sketch: Column, values: Seq[Double]): Column =
-    call_function(kllRanksName, sketch,
-      org.apache.spark.sql.functions.typedlit(values))
+    column(KllRanksExpr(expression(sketch), Literal.create(values)))
 
   /** Mergeable theta sketch aggregate over a bigint/string key
     * column → compact binary (persist one row per group; set-ops
     * later). */
   def thetaAggNative(key: Column, lgK: Int = 12): Column =
-    call_function(thetaAggName, key,
-      org.apache.spark.sql.functions.lit(lgK))
+    column(ThetaSketchAgg(expression(key), lgK).toAggregateExpression())
 
   /** Union of persisted theta sketch binaries → one merged binary;
     * pass the lgK the logs were built with. */
   def thetaUnionNative(sketch: Column, lgK: Int = 12): Column =
-    call_function(thetaUnionName, sketch,
-      org.apache.spark.sql.functions.lit(lgK))
+    column(ThetaUnionAgg(expression(sketch), lgK).toAggregateExpression())
 
   /** Set operation over two theta sketch binaries → result sketch
     * binary; op ∈ intersect/anotb/union. */
   def thetaSetOpNative(a: Column, b: Column, op: String): Column =
-    call_function(thetaSetOpName, a, b,
-      org.apache.spark.sql.functions.lit(op))
+    column(ThetaSetOpExpr(expression(a), expression(b), op))
 
   /** Probe a theta sketch binary → array(lower, estimate, upper) at
     * numStdDev std-devs (exact mode: all three == true count). */
   def thetaEstimateNative(sketch: Column, numStdDev: Int = 3): Column =
-    call_function(thetaEstimateName, sketch,
-      org.apache.spark.sql.functions.lit(numStdDev))
+    column(ThetaEstimateExpr(expression(sketch), numStdDev))
 
   /** Rank bucket id = number of sorted `boundaries` ≤ value (binary
     * search; boundaries ride as a codegen reference object). */
   def bucketizeNative(v: Column, boundaries: Seq[Double]): Column =
-    call_function(bucketizeName, v.cast("double"),
-      org.apache.spark.sql.functions.typedlit(boundaries))
+    column(BucketizeExpr(expression(v.cast("double")), boundaries.toArray))
 
   /** PSL registrable domain of a bare host (lowercased; identity for
     * bare public suffixes and malformed hosts). */
   def registrableDomainNative(host: Column): Column =
-    call_function(registrableDomainName, host)
+    column(RegistrableDomainExpr(expression(host)))
 
   /** Greedy BPE encode (array<string> of subwords); `merges` applied
     * in rank order. Caller lowers/trims the input to taste. */
   def bpeEncodeNative(text: Column, merges: Seq[(String, String)])
       : Column =
-    call_function(bpeEncodeName, text,
-      org.apache.spark.sql.functions.lit(merges.map(_._1).toArray),
-      org.apache.spark.sql.functions.lit(merges.map(_._2).toArray))
+    column(BpeEncodeExpr(expression(text), merges.map(_._1).toArray,
+      merges.map(_._2).toArray))
 
   /** Byte-level (GPT-2-style) BPE encode of RAW text — do not lower
     * or trim; case and whitespace are carried in the symbols. */
   def bpeEncodeBytesNative(text: Column, merges: Seq[(String, String)])
       : Column =
-    call_function(bpeEncodeBytesName, text,
-      org.apache.spark.sql.functions.lit(merges.map(_._1).toArray),
-      org.apache.spark.sql.functions.lit(merges.map(_._2).toArray))
+    column(BpeEncodeBytesExpr(expression(text), merges.map(_._1).toArray,
+      merges.map(_._2).toArray))
 
   /** GPT-2 regex pre-tokens of raw text (array<string>). */
   def bpePretokenizeNative(text: Column): Column =
-    call_function(bpePretokenizeName, text)
+    column(BpePretokenizeExpr(expression(text)))
 
   /** Byte-level BPE decode: subword array → original text (exact
     * inverse of [[bpeEncodeBytesNative]] for any merge list). */
   def bpeDecodeBytesNative(tokens: Column): Column =
-    call_function(bpeDecodeBytesName, tokens)
+    column(BpeDecodeBytesExpr(expression(tokens)))
 
   /** IDN host normalization: ACE→Unicode (`toAscii = false`) or
     * Unicode→ACE (`toAscii = true`), lowercased; bad hosts pass
     * through lowercased-verbatim. */
   def idnHostNative(host: Column, toAscii: Boolean): Column =
-    call_function(idnHostName, host,
-      org.apache.spark.sql.functions.lit(toAscii))
+    column(IdnHostExpr(expression(host), toAscii))
 
   /** RFC 3986 percent-encoding normalization (decode unreserved,
     * uppercase remaining hex; malformed escapes verbatim). */
   def pctNormalizeNative(text: Column): Column =
-    call_function(pctNormalizeName, text)
+    column(PctNormalizeExpr(expression(text)))
 
   /** `regexp_like` over a pattern COLUMN with a shared compiled-pattern
     * cache — per-pattern compile instead of per-row (see [[RegexCache]]). */
   def rlikeCached(s: Column, pattern: Column): Column =
-    call_function(rlikeCachedName, s, pattern)
+    column(CachedRegexMatchExpr(expression(s), expression(pattern)))
 }

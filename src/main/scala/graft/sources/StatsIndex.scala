@@ -132,7 +132,6 @@ object StatsIndex {
                                  files: Seq[String], cols: Seq[String],
                                  bloomCols: Seq[String],
                                  bloomBits: Long): DataFrame = {
-    graft.plans.NativeFunctions.register(spark)
     val df = spark.read.parquet(files: _*)
     // the indexed type rides in the manifest so a point probe with a
     // wrongly-typed literal fails loudly (xxhash64 hashes by type — a
@@ -175,7 +174,6 @@ object StatsIndex {
                   points: Seq[Point] = Nil): Seq[String] = {
     require(preds.nonEmpty || points.nonEmpty,
       "prunedFiles needs at least one predicate")
-    graft.plans.NativeFunctions.register(index.sparkSession)
     if (points.nonEmpty) {
       // loud type guard: the manifest records each bloom column's
       // indexed type; a literal of another type hashes differently and

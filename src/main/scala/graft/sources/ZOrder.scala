@@ -106,7 +106,6 @@ object ZOrder {
             .cast("long")))
       }
     } else {
-      graft.plans.NativeFunctions.register(df.sparkSession)
       val projected = df.select(cols.zipWithIndex.map { case (c, i) =>
         col(c).cast("double").as(s"__q_$i")
       }: _*)

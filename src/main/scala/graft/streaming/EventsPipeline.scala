@@ -100,7 +100,6 @@ object EventsPipeline {
                              watermarkDelay: String = "1 hour",
                              numHashes: Int = 64,
                              shingleWords: Int = 3): DataFrame = {
-    graft.plans.NativeFunctions.register(docs.sparkSession)
     docs
       .withColumn("__sig_hash", xxhash64(
         graft.plans.NativeFunctions.minhashNative(col(textCol), numHashes,
@@ -143,7 +142,6 @@ object EventsPipeline {
                                    windowSize: String = "5 minutes")
       : DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.plans.NativeFunctions.register(docs.sparkSession)
     val rows = numHashes / bands
     val payload = docs.columns.toSeq.map(col)
     docs

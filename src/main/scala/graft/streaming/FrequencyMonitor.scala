@@ -63,7 +63,6 @@ object FrequencyMonitor {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val spark = batch.sparkSession
-        NativeFunctions.register(spark)
         val row = batch
           .select(col(itemCol).cast("string").as("__it"))
           .where(col("__it").isNotNull)

@@ -54,7 +54,6 @@ object OverlapMonitor {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val spark = batch.sparkSession
-        NativeFunctions.register(spark)
         val row = batch
           .select(col(keyCol).as("__k"))
           .where(col("__k").isNotNull)

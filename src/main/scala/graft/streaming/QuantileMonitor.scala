@@ -54,7 +54,6 @@ object QuantileMonitor {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val spark = batch.sparkSession
-        NativeFunctions.register(spark)
         val row = batch
           .select(col(valueCol).cast("double").as("__v"))
           .where(col("__v").isNotNull)

@@ -45,7 +45,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("native encode expr ≡ reference over random words") {
-    NativeFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val alphabet = "abtheing "
     val texts = (0 until 300).map(i => (i.toLong,
@@ -131,7 +130,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("merges round-trip through save/load; encode is unchanged") {
-    NativeFunctions.register(spark)
     val docs = (Seq.fill(5)("low") ++ Seq.fill(6)("newest") ++
       Seq.fill(3)("widest")).zipWithIndex
       .map { case (w, i) => (i.toLong, w) }.toDF("id", "text")
@@ -177,7 +175,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("encode on whitespace-only and empty text yields empty array") {
-    NativeFunctions.register(spark)
     val got = Seq((1L, ""), (2L, "   "), (3L, "\t\n"))
       .toDF("id", "text")
       .select(Bpe.encode(lower(trim(col("text"))), Bpe.demoMerges)
@@ -216,7 +213,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("encodeBytes applies byte-level merges over raw text") {
-    NativeFunctions.register(spark)
     val got = Seq((1L, "hello world, it's rank 42")).toDF("id", "text")
       .select(Bpe.encodeBytes(col("text"), Bpe.demoByteMerges).as("sub"))
       .as[Seq[String]].collect().head
@@ -241,7 +237,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("decodeBytes column inverts encodeBytes over a DataFrame") {
-    NativeFunctions.register(spark)
     val texts = Seq((1L, "It's GPT-2 style: Case, 42 & \n newlines."),
       (2L, "unicode: Ġ literal stays itself? no — it round-trips"))
       .toDF("id", "text")
@@ -319,7 +314,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("encodeBytesToIds maps symbols through the vocabBytes layout") {
-    NativeFunctions.register(spark)
     val vocab = Bpe.vocabBytes(Bpe.demoByteMerges).toMap
     val got = Seq((1L, "hello it's 42")).toDF("id", "text")
       .select(Bpe.encodeBytesToIds(col("text"), Bpe.demoByteMerges)

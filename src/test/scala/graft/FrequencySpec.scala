@@ -72,7 +72,6 @@ class FrequencySpec extends SparkSpec {
   }
 
   test("grouped usage: per-group summaries via the raw aggregate") {
-    NativeFunctions.register(spark)
     val df = Seq(("g1", "x"), ("g1", "x"), ("g1", "y"),
       ("g2", "z")).toDF("g", "v")
     val out = df.groupBy("g")

@@ -24,7 +24,6 @@ class LangIdAccuracySpec extends SparkSpec {
   import spark.implicits._
 
   private def classifyAll(texts: Seq[String]): Seq[(String, String)] = {
-    graft.plans.NativeFunctions.register(spark)
     texts.toDF("t")
       .select(col("t"),
         TextAnalysis.langIdCharNgram(col("t")).as("hof"),
@@ -83,7 +82,6 @@ class LangIdAccuracySpec extends SparkSpec {
   test("data-driven profiles: write/load round-trips the compiled-in " +
       "table and the loaded table classifies every plant identically " +
       "through HOF and native") {
-    graft.plans.NativeFunctions.register(spark)
     val dir = tmpDir("langid_profiles") + "/profiles"
     TextAnalysis.writeNgramProfiles(spark,
       TextAnalysis.charNgramProfiles, dir)
@@ -104,7 +102,6 @@ class LangIdAccuracySpec extends SparkSpec {
 
   test("a 51st language is a TABLE swap, not a recompile: widened " +
       "table classifies it, compiled-in table does not") {
-    graft.plans.NativeFunctions.register(spark)
     // a synthetic orthography whose grams collide with no real profile
     val xxText = "zxqa qzxo zxqe vzxq ozxq zxqi"
     val widened = TextAnalysis.charNgramProfiles +

@@ -149,7 +149,6 @@ class MergeChunkSpec extends SparkSpec {
 
   test("Urls: host/domain/path extraction and canonicalization edges") {
     import graft.functions.Urls
-    graft.plans.NativeFunctions.register(spark) // canonicalize pct pass
     def one(u: String): (String, String, String, String) = {
       val r = Seq(u).toDF("u").select(
         Urls.urlHost(col("u")), Urls.urlDomain(col("u")),
@@ -200,7 +199,6 @@ class MergeChunkSpec extends SparkSpec {
     assert(decode("no refs at all") == "no refs at all")
     assert(decode("&&amp;&") == "&&&")
     // expression path (interpreted + codegen) agrees with the raw decoder
-    graft.plans.NativeFunctions.register(spark)
     val got = Seq("x &#65; &amp;lt; y").toDF("t")
       .select(graft.plans.NativeFunctions.htmlEntitiesNative(col("t")))
       .head.getString(0)

@@ -45,7 +45,6 @@ class NativeExprSpec extends SparkSpec {
   }.toDF("id", "v")
 
   test("native cosine ≡ HOF cosine bit-for-bit (same fold order)") {
-    NativeFunctions.register(spark)
     val both = vecs.crossJoin(vecs.select(col("id").as("id2"),
         col("v").as("v2")).limit(5))
       .select(
@@ -57,7 +56,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native cosine: null in → null out; zero vector → 0.0") {
-    NativeFunctions.register(spark)
     val df = Seq(
       (Some(Seq(1.0, 2.0)), Some(Seq(1.0, 2.0))),
       (None, Some(Seq(1.0, 2.0))),
@@ -71,7 +69,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native cosine participates in whole-stage codegen") {
-    NativeFunctions.register(spark)
     // spark.range (not a LocalRelation, which is folded at plan time)
     val df = spark.range(100)
       .withColumn("v", transform(sequence(lit(0), lit(15)),
@@ -109,6 +106,14 @@ class NativeExprSpec extends SparkSpec {
     assert(twice == composed)
   }
 
+  test("an integer SQL argument outside int range fails naming its value") {
+    val e = intercept[Exception](spark.sql(
+      "SELECT graft_minhash('a b c d', 4294967360, 2) AS s").collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("4294967360")), messages)
+  }
+
   test("float arrays work via explicit cast (SQL registry path)") {
     NativeFunctions.register(spark)
     val got = Seq((Seq(1.0f, 0.0f), Seq(1.0f, 0.0f))).toDF("a", "b")
@@ -118,7 +123,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native hyperplane bucket ≡ HOF bucket bit-for-bit") {
-    NativeFunctions.register(spark)
     val diffs = vecs.select(
         NativeFunctions.hyperplaneBucketNative(col("v"), 12).as("nat"),
         Similarity.hyperplaneBucket(col("v").cast("array<double>"), 12)
@@ -128,7 +132,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native minhash/simhash/shingles produce sane shapes") {
-    NativeFunctions.register(spark)
     val df = Seq("the quick brown fox jumps over the lazy dog", "", "one two")
       .toDF("t")
       .select(
@@ -143,7 +146,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native shingles match HOF shingles value-for-value") {
-    NativeFunctions.register(spark)
     val docs = Seq("alpha beta gamma delta epsilon", "x", "  padded   text  ",
       "trailing newline\n", "\ttab lead")
       .toDF("t")
@@ -155,7 +157,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native simhash ≡ HOF simhash bit-for-bit") {
-    NativeFunctions.register(spark)
     val docs = Seq("The Quick Brown Fox", "x", "  padded   text  ",
       "trailing newline\n", "\ttab lead", "")
       .toDF("t")
@@ -166,7 +167,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native winnowing ≡ HOF winnowing bit-for-bit") {
-    NativeFunctions.register(spark)
     // includes the whitespace edge cases where naive Java
     // trim/split/filter diverges from Spark semantics: trailing
     // newline (Spark keeps a trailing empty token), leading tab
@@ -199,7 +199,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("nearest centroid: fused native assignment, cosine-tie goes to " +
       "the larger cell (greatest-of-structs semantics)") {
-    NativeFunctions.register(spark)
     val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 0.0))
     val got = Seq(
       (1L, Seq(2.0, 0.0)),  // ties cells 0 and 2 at cosine 1 → 2 wins
@@ -218,7 +217,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("two-level nearest centroid: one group holding every centroid " +
       "is bit-exact with the flat form, incl. tie/NaN/zero rows") {
-    NativeFunctions.register(spark)
     val cents: Seq[Seq[Double]] =
       (0 until 8).map(c => Seq.tabulate(32)(j => math.cos(c * 32 + j)))
     val oneGroup = Seq(Seq.tabulate(32)(_ => 0.0))
@@ -246,7 +244,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("two-level nearest centroid: coarse routing confines the fine " +
       "argmax to the routed group's members") {
-    NativeFunctions.register(spark)
     // centroid 2 (the diagonal, grouped under the y coarse cell) is the
     // GLOBAL argmax for v = (0.9, 0.8), but the vector routes to the x
     // coarse cell (cos 0.747 vs 0.664) and must pick among that cell's
@@ -272,7 +269,6 @@ class NativeExprSpec extends SparkSpec {
   test("coarseCentroidGroups: exact partition of centroid ids, " +
       "ascending members, no empty groups; degenerate small nlist is " +
       "identity; two-level assignment agrees with flat on the bulk") {
-    NativeFunctions.register(spark)
     val cents: Array[Seq[Double]] = Array.tabulate(64)(c =>
       Seq.tabulate(16)(j => math.sin(c * 16 + j)))
     val (coarse, members) = Similarity.coarseCentroidGroups(cents)
@@ -302,7 +298,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("native PQ encode/ADC ≡ HOF forms bit-for-bit; ties to smaller " +
       "code") {
-    NativeFunctions.register(spark)
     // 4 subspaces × 3 codes over dim 32 (dsub 8), deterministic values
     val books: Seq[Seq[Seq[Double]]] = (0 until 4).map(m =>
       (0 until 3).map(j =>
@@ -332,7 +327,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("PQ ADC degraded-input parity: null, out-of-range, and short " +
       "codes skip their subspace on BOTH paths") {
-    NativeFunctions.register(spark)
     val books: Seq[Seq[Seq[Double]]] = (0 until 4).map(m =>
       (0 until 3).map(j =>
         Seq.tabulate(2)(i => math.cos(m * 100 + j * 10 + i))))
@@ -360,7 +354,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("PQ null-input parity: null/short VECTORS encode to code 0; a " +
       "NULL codes array scores 0.0; a null query scores null — both paths") {
-    NativeFunctions.register(spark)
     val books: Seq[Seq[Seq[Double]]] = (0 until 2).map(m =>
       (0 until 3).map(j =>
         Seq.tabulate(2)(i => math.cos(m * 100 + j * 10 + i))))
@@ -407,7 +400,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("semanticDuplicates finds planted copies; nearest centroid ≡ " +
       "HOF form") {
-    NativeFunctions.register(spark)
     val emb = (0 until 60).map(i =>
       (i.toLong, Seq.tabulate(8)(j => math.cos(i * 8 + j)))) ++
       (0 until 10).map(i => (100L + i,
@@ -521,7 +513,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("cached rlike matches Spark rlike semantics over a pattern col") {
     import graft.plans.NativeFunctions
-    NativeFunctions.register(spark)
     val rows = Seq(("/tmp/a", "^/tmp.*"), ("/x", "^/x$"), ("/xy", "^/x$"),
       ("/dl/a.zip", "^/dl/.*\\.zip"), ("abc", "b"), (null, "^a"),
       ("a", null)).toDF("s", "p")
@@ -563,7 +554,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("registrable-domain and pct native exprs run under codegen") {
-    NativeFunctions.register(spark)
     val rows = Seq("www.shop.example.co.uk", "x.y.foo.bd").toDF("h")
       .select(NativeFunctions.registrableDomainNative(col("h")).as("d"),
         NativeFunctions.pctNormalizeNative(lit("p%61th%2f")).as("p"))
@@ -612,7 +602,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("IDN native expr runs under codegen") {
-    NativeFunctions.register(spark)
     val df = spark.range(3)
       .withColumn("h",
         when(col("id") >= 0, lit("XN--MNCHEN-3YA.de")).otherwise("x"))
@@ -626,7 +615,6 @@ class NativeExprSpec extends SparkSpec {
   test("sorted-jaccard native expr equals the portable " +
       "array_intersect/array_union form on random sorted-distinct " +
       "arrays, and runs under codegen") {
-    NativeFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(41)
     val rows = (0 until 300).map { i =>

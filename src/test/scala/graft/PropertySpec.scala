@@ -178,7 +178,6 @@ class PropertySpec extends SparkSpec {
       val t = s.replaceAll("^\\s+|\\s+$", "")
       if (t.isEmpty) Seq.empty else t.split("\\s+").toSeq
     }
-    graft.plans.NativeFunctions.register(spark)
     val rows = strings.toDF("t").select(
       col("t"),
       TextAnalysis.tokens(col("t")).as("toks"),

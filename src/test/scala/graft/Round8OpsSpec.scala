@@ -40,7 +40,6 @@ class Round8OpsSpec extends SparkSpec {
   }
 
   test("mojibake expression runs under whole-stage codegen") {
-    NativeFunctions.register(spark)
     val out = Seq("cafÃ©", "plain", null)
       .toDF("t")
       .select(NativeFunctions.fixMojibakeNative(col("t")).as("f"))

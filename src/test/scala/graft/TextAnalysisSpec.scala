@@ -328,7 +328,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("normalizeForDedupFolded collapses composed/decomposed/" +
       "accentless; plain normalizeForDedup keeps accentless apart") {
-    graft.plans.NativeFunctions.register(spark)
     val rows = Seq(
       "Café piñata Résumé No. 3", // composed
       "Cafe\u0301 pin\u0303ata Re\u0301sume\u0301 no 7", // decomposed
@@ -389,7 +388,6 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("langIdNgramNative ≡ HOF form on planted sentences and edges") {
-    graft.plans.NativeFunctions.register(spark)
     val texts = SparkEntry.langIdPlants.map(_._2) ++
       Seq("", " ", "MiXeD Case THE AND ing", "12345 67")
     val both = texts.toDF("t").select(
