@@ -37,6 +37,12 @@ import graft.plans.GraftExtensions
  *    two entries. The size is read once per JVM, at its first compile,
  *    from the session active then — so it holds when the JVM's first
  *    session is built here.
+ *  - `parquet.nanosAsLong` on (a legacy conf): Spark reads a Parquet
+ *    nanosecond timestamp only as a long, under this conf, and fails on
+ *    it otherwise. Set here, it is fixed for the session's life, so a
+ *    nanosecond file reads the same whatever ran before it (an events
+ *    table may store `ts` as nanoseconds; `SparkEntry.events` converts
+ *    the long back to a timestamp).
  *  - [[GraftExtensions]] installed (`withExtensions`, the same object a
  *    `spark.sql.extensions` deployment names): the native functions, and
  *    the rule that keeps filter values out of generated code, so a
@@ -73,6 +79,7 @@ object GraftSession {
         shufflePartitions.getOrElse(cores).toString)
       .config("spark.sql.codegen.cache.maxEntries",
         codegenCacheEntries.toString)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .withExtensions(new GraftExtensions)
     master.fold(b)(b.master)
   }

@@ -115,19 +115,14 @@ object Writer {
                           partitionBy: Seq[String]): Unit = {
     require(partitionBy.nonEmpty,
       "overwritePartitions needs partition columns")
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = conf.getOption(key)
-    conf.set(key, "dynamic")
-    try
-      df.write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy(partitionBy: _*)
-        .parquet(path)
-    finally prev match {
-      case Some(v) => conf.set(key, v)
-      case None    => conf.unset(key)
-    }
+    // a per-write option, read before the session's
+    // spark.sql.sources.partitionOverwriteMode: the session's settings
+    // stay as they are for every other write on it
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .option("compression", "zstd")
+      .partitionBy(partitionBy: _*)
+      .parquet(path)
   }
 
   /**

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftPlainSession
 import org.apache.spark.sql.functions.col
 
 import graft.plans.{BindFilterValues, BoundFilterValue, GraftExtensions}
@@ -19,7 +20,8 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.files.maxPartitionBytes" -> "134217728",
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.codegen.cache.maxEntries" ->
-        GraftSession.codegenCacheEntries.toString)
+        GraftSession.codegenCacheEntries.toString,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     expected.foreach { case (k, v) =>
       assert(spark.conf.get(k) == v, k)
     }
@@ -43,5 +45,22 @@ class GraftSessionSpec extends SparkSpec {
     assert(df.count() == 6)
     assert(df.queryExecution.executedPlan.exists(_.expressions.exists(
       _.exists(_.isInstanceOf[BoundFilterValue]))))
+  }
+
+  test("building an events query leaves the session's settings as they " +
+      "were") {
+    val s = GraftPlainSession.of(spark)
+    import s.implicits._
+    val d = tmpDir()
+    val ts = java.sql.Timestamp.from(
+      java.time.Instant.parse("2024-01-01T10:15:00Z"))
+    Seq((1L, ts, 7L, "view", 1.5, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$d/events.parquet")
+    val before = s.conf.getAll
+    val hourly = SparkEntry.queries("q_events_hourly")(s, d)
+    assert(s.conf.getAll == before)
+    assert(hourly.collect().map(_.getString(0)).toSeq ==
+      Seq("2024-01-01 10:00:00"))
   }
 }

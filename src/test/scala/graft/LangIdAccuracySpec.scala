@@ -37,13 +37,13 @@ class LangIdAccuracySpec extends SparkSpec {
     assert(TextAnalysis.charNgramProfiles.size == 50)
     // every profiled language has a planted sentence (und is the
     // deliberate 51st plant with no profile)
-    val plantLangs = SparkEntry.langIdPlants.map(_._1).toSet
+    val plantLangs = RegistryText.langIdPlants.map(_._1).toSet
     val missing = TextAnalysis.charNgramProfiles.keySet -- plantLangs
     assert(missing.isEmpty, s"profiled languages without a plant: $missing")
   }
 
   test("every planted sentence classifies to its label (HOF and native)") {
-    val plants = SparkEntry.langIdPlants
+    val plants = RegistryText.langIdPlants
     val got = classifyAll(plants.map(_._2))
     plants.zip(got).foreach { case ((want, text), (hof, nat)) =>
       assert(hof == want, s"HOF: '$text' → $hof, want $want")
@@ -87,7 +87,7 @@ class LangIdAccuracySpec extends SparkSpec {
       TextAnalysis.charNgramProfiles, dir)
     val loaded = TextAnalysis.loadNgramProfiles(spark, dir)
     assert(loaded == TextAnalysis.charNgramProfiles)
-    val plants = SparkEntry.langIdPlants
+    val plants = RegistryText.langIdPlants
     val got = plants.map(_._2).toDF("t")
       .select(
         TextAnalysis.langIdCharNgram(col("t"), loaded).as("hof"),
@@ -122,11 +122,11 @@ class LangIdAccuracySpec extends SparkSpec {
     assert(r.getString(1) == "xx")
     assert(r.getString(2) == "und")
     // existing languages are untouched by the widening
-    val en = Seq(SparkEntry.langIdPlants.head._2).toDF("t")
+    val en = Seq(RegistryText.langIdPlants.head._2).toDF("t")
       .select(graft.plans.NativeFunctions
         .langIdNgramNative(col("t"), loaded))
       .collect()(0).getString(0)
-    assert(en == SparkEntry.langIdPlants.head._1)
+    assert(en == RegistryText.langIdPlants.head._1)
   }
 
   test("loadNgramProfiles rejects duplicate lang rows and empty tables") {
@@ -148,7 +148,7 @@ class LangIdAccuracySpec extends SparkSpec {
   }
 
   test("accuracy table over all fixtures is 100%") {
-    val all = SparkEntry.langIdPlants ++ confusables
+    val all = RegistryText.langIdPlants ++ confusables
     val got = classifyAll(all.map(_._2))
     val byLang = all.zip(got).groupBy(_._1._1).toSeq.sortBy(_._1)
     val rows = byLang.map { case (lang, xs) =>

@@ -171,7 +171,7 @@ class PropertySpec extends SparkSpec {
     val strings = crafted ++
       (1 to 300).flatMap(_ => gen.sample) ++
       // profile-gram-rich rows so the langid comparison exercises wins
-      SparkEntry.langIdPlants.map(_._2)
+      RegistryText.langIdPlants.map(_._2)
     // independent JVM reference (NOT NativeText — a third opinion):
     // strip the Java \s class at the edges, split interior runs
     def ref(s: String): Seq[String] = {

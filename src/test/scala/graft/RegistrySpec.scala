@@ -14,6 +14,19 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.size == 259)
   }
 
+  test("query names and oracle SQL match the pinned digest") {
+    // SHA-256 over the UTF-8 bytes of one `name<TAB>oracleSql` line per
+    // query, sorted by name and joined with '\n' (no trailing newline).
+    // A refactor of the registry keeps it; a deliberate oracle or name
+    // change recomputes it and says why in CHANGES.md.
+    val lines = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (name, sql) => s"$name\t$sql" }.mkString("\n")
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(digest ==
+      "0aa9e9865e2e3b811fe83372444acc44b2524fe6dcb796f2465fcab7a0079f0b")
+  }
+
   test("no oracle carries a lone '|' outside string literals") {
     // the round-8 oracleSql normalization once included stripMargin,
     // which ate the first pipe of any line-leading '||' (two oracles

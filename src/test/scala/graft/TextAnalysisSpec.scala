@@ -379,7 +379,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("langIdCharNgram classifies every planted sentence (HOF form)") {
-    val plants = SparkEntry.langIdPlants
+    val plants = RegistryText.langIdPlants
     val got = plants.map(_._2).toDF("t")
       .select(TextAnalysis.langIdCharNgram(col("t")))
       .as[String].collect().toSeq
@@ -388,7 +388,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("langIdNgramNative ≡ HOF form on planted sentences and edges") {
-    val texts = SparkEntry.langIdPlants.map(_._2) ++
+    val texts = RegistryText.langIdPlants.map(_._2) ++
       Seq("", " ", "MiXeD Case THE AND ing", "12345 67")
     val both = texts.toDF("t").select(
       TextAnalysis.langIdCharNgram(col("t")).as("hof"),
