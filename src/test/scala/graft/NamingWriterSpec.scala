@@ -58,18 +58,43 @@ class NamingWriterSpec extends SparkSpec {
   test("compact merges a many-small-files dataset, preserving rows") {
     val in = tmpDir() + "/frag.parquet"
     val rows = (1 to 2000).map(i => (i.toLong, s"v$i"))
-    // 40 shards of 50 rows — the accreted-small-files shape
-    rows.grouped(50).foreach(g =>
-      g.toDF("k", "v").coalesce(1).write.mode("append").parquet(in))
-    def parquetFiles(p: String) =
-      new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
+    // 40 shards of 50 rows — the accreted-small-files shape — in Hive
+    // `shard=k` directories, the layout of a cycle of published shards
+    rows.grouped(50).zipWithIndex.foreach { case (g, i) =>
+      g.toDF("k", "v").coalesce(1).write.mode("append")
+        .parquet(f"$in/shard=${i % 4}%03d")
+    }
+    def parquetFiles(p: String): Int = {
+      val fs = new java.io.File(p).listFiles()
+      fs.count(_.getName.endsWith(".parquet")) +
+        fs.filter(_.isDirectory).map(d => parquetFiles(d.getPath)).sum
+    }
     assert(parquetFiles(in) >= 40)
     val out = tmpDir() + "/compact.parquet"
-    graft.sources.Writer.compact(spark, in, out) // 128 MB target → 1 file
+    // 128 MB target → 1 file, in one job: the schema comes from the
+    // footers on the driver and coalesce(1) leaves no Exchange
+    val (_, jobs) = org.apache.spark.GraftJobProbe.jobs(spark.sparkContext)(
+      graft.sources.Writer.compact(spark, in, out))
+    assert(jobs == 1)
     assert(parquetFiles(out) == 1)
-    val got = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == rows.toSet)
+    val back = spark.read.parquet(out)
+    assert(back.schema == spark.read.parquet(in).schema)
+    assert(back.columns.toSeq == Seq("k", "v", "shard"))
+    val got = back.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    assert(got == rows.zipWithIndex.map { case ((k, v), j) =>
+      (k, v, (j / 50) % 4) }.toSet)
+  }
+
+  test("compact names a missing or empty input") {
+    val dir = tmpDir()
+    val missing = intercept[java.io.FileNotFoundException](
+      graft.sources.Writer.compact(spark, s"$dir/absent", s"$dir/o1"))
+    assert(missing.getMessage.contains(s"$dir/absent"))
+    new java.io.File(s"$dir/empty").mkdir()
+    val empty = intercept[IllegalArgumentException](
+      graft.sources.Writer.compact(spark, s"$dir/empty", s"$dir/o2"))
+    assert(empty.getMessage.contains(s"$dir/empty"))
   }
 
   test("partition-by layout prunes at the scan (PartitionFilters)") {
@@ -93,10 +118,19 @@ class NamingWriterSpec extends SparkSpec {
   }
 
   test("bloomFilterCols writes real per-row-group parquet bloom filters") {
+    // singleFile = true writes this local relation on the driver; both
+    // write paths take the same options
+    Seq(false, true).foreach(bloomOnce)
+  }
+
+  private def bloomOnce(singleFile: Boolean): Unit = {
     val p = tmpDir("graft_bloomw") + "/t"
-    Writer.dfToParquet((1L to 1000L).toDF("k")
-      .withColumn("v", org.apache.spark.sql.functions.col("k") * 2),
-      p, bloomFilterCols = Seq("k"), bloomFilterNdv = Map("k" -> 1000L))
+    val (_, jobs) = org.apache.spark.GraftJobProbe.jobs(spark.sparkContext)(
+      Writer.dfToParquet((1L to 1000L).toDF("k")
+        .withColumn("v", org.apache.spark.sql.functions.col("k") * 2),
+        p, singleFile = singleFile,
+        bloomFilterCols = Seq("k"), bloomFilterNdv = Map("k" -> 1000L)))
+    if (singleFile) assert(jobs == 0, "not written on the driver")
     // the sketch must actually be in the file metadata, not just an
     // accepted-and-ignored option
     val file = new java.io.File(p).listFiles
@@ -126,7 +160,7 @@ class NamingWriterSpec extends SparkSpec {
     // a misspelled column must fail fast, not silently skip the sketch
     intercept[IllegalArgumentException] {
       Writer.dfToParquet(Seq((1L, 2L)).toDF("k", "v"), p + "_x",
-        bloomFilterCols = Seq("key"))
+        singleFile = singleFile, bloomFilterCols = Seq("key"))
     }
   }
 }
