@@ -122,7 +122,9 @@ object AggregateEngine {
    * skips row groups whose midpoint lies past it — so a file that grew
    * loses the rows past that length, with no error. Publish a new
    * version under a new file name, as [[graft.sources.Writer]] does, or
-   * call again after the publish.
+   * call again after the publish. A listed file deleted before this call
+   * reads its footer (an overwrite deletes the shard before writing it
+   * again) fails the call with a `FileNotFoundException` naming it.
    */
   def aggregatePqShards(
       spark: SparkSession,
@@ -167,8 +169,9 @@ object AggregateEngine {
     // One read builds both the probe schema and the scan below: the union
     // of every shard's footer (see scaladoc on cross-shard drift), read
     // and merged on the driver with no Spark job. Unreadable schema → "no
-    // columns exist" → empty. Footers giving one column conflicting types
-    // are an error, as in the reference's per-file loop (which fails at
+    // columns exist" → empty; a listed file gone before its footer read
+    // is an error. Footers giving one column conflicting types are an
+    // error, as in the reference's per-file loop (which fails at
     // `pa.concat_tables`).
     val loaded: Option[DataFrame] =
       try GraftFooterSchema.merged(spark, conf, leaves)
@@ -178,6 +181,7 @@ object AggregateEngine {
           throw new IllegalArgumentException(
             s"shards with conflicting column types: ${present.mkString(", ")}",
             e)
+        case e: Exception if fileGone(e).nonEmpty => throw fileGone(e).get
         case NonFatal(_) => None
       }
     val fileSchema: StructType =
@@ -267,14 +271,23 @@ object AggregateEngine {
       dataFilter = dataFilter, aggregate = false,
       handleMissingFile = handleMissingFile)
 
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+
   /** A type conflict between footers (`StructType.merge`, in
     * `GraftFooterSchema.merged`), anywhere in the cause chain. */
   private def isSchemaConflict(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+    causes(e).exists {
       case s: org.apache.spark.SparkThrowable =>
         s.getCondition == "CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE"
       case _ => false
     }
+
+  /** A listed leaf deleted before its footer was read, anywhere in the
+    * cause chain. Read as "no columns", it would give the typed empty
+    * result and lose every other shard's rows too. */
+  private def fileGone(e: Throwable): Option[java.io.FileNotFoundException] =
+    causes(e).collectFirst { case f: java.io.FileNotFoundException => f }
 
   /** The leaf files of the path's glob matches, walked as Spark's file
     * index walks them: a matched directory is listed whatever its name,

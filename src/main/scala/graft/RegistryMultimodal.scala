@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.multimodal.Mp4Shape
+import graft.multimodal.MediaCorpus._
+
 import SparkEntry._
 
 /** Multimodal: image, audio and video decode (all real codecs), and
@@ -39,7 +42,7 @@ private[graft] object RegistryMultimodal {
     Q("q_multimodal_features",
       (s, d) => {
         import graft.multimodal.Multimodal
-        val feats = Multimodal.featurize(Multimodal.syntheticMedia(s, 300))
+        val feats = Multimodal.featurize(planted(s, 300, 1)(mixed))
         feats.toDF()
           .select(col("media_id"), col("kind"), col("width"), col("height"))
       },
@@ -62,7 +65,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.imageNearDuplicates(
-          Multimodal.syntheticImageCorpus(s, nContents = 60, copies = 3),
+          planted(s, nContents = 60, copies = 3)(png),
           maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 60, copies = 3))),
@@ -79,8 +82,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.imageNearDuplicates(
-          Multimodal.syntheticImageCorpusExif(s, nContents = 60,
-            copies = 3), maxHamming = 4)
+          planted(s, nContents = 60, copies = 3)(exifPng), maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 60, copies = 3))),
 
@@ -96,9 +98,8 @@ private[graft] object RegistryMultimodal {
         import s.implicits._
         import graft.multimodal.Multimodal
         val index = Multimodal.imageHashes(
-          Multimodal.syntheticImageCorpus(s, nContents = 40, copies = 1))
-        val batch = Multimodal.syntheticImageCorpus(s, nContents = 50,
-            copies = 1)
+          planted(s, nContents = 40, copies = 1)(png))
+        val batch = planted(s, nContents = 50, copies = 1)(png)
           .filter(r => r.media_id < 10 || r.media_id >= 40)
           .map(r => r.copy(media_id = r.media_id + 1000))
         graft.operators.Dedup.simhashProbeIndex(
@@ -116,7 +117,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.audioNearDuplicates(
-          Multimodal.syntheticAudioCorpus(s, nContents = 40, copies = 3),
+          planted(s, nContents = 40, copies = 3)(tonesWav),
           maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 40, copies = 3))),
@@ -134,8 +135,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.audioNearDuplicates(
-          Multimodal.syntheticAudioCorpusFlac(s, nContents = 40,
-            copies = 3), maxHamming = 4)
+          planted(s, nContents = 40, copies = 3)(tonesFlac), maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 40, copies = 3))),
 
@@ -151,8 +151,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.audioConstellationMatches(
-          Multimodal.syntheticShiftedAudioCorpus(s, nContents = 20,
-            nShifted = 10), minVotes = 100)
+          offset(s, nContents = 20, nCopies = 10,
+            base = 1000)(delayedWav(noiseLsb = 0)), minVotes = 100)
           .select(col("id_a"), col("id_b"))
       },
       Some(shiftedCopiesOracle(nShifted = 10))),
@@ -169,8 +169,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.audioConstellationRatioMatches(
-          Multimodal.syntheticResampledAudioCorpus(s, nContents = 20,
-            nResampled = 10))
+          offset(s, nContents = 20, nCopies = 10, base = 2000)(resampledWav))
           .select(col("id_a"), col("id_b"))
       },
       Some("""SELECT i AS id_a, i + 2000 AS id_b
@@ -184,8 +183,8 @@ private[graft] object RegistryMultimodal {
     Q("q_audio_constellation_incremental",
       (s, d) => {
         import graft.multimodal.Multimodal
-        val corpus = Multimodal.syntheticShiftedAudioCorpus(s,
-          nContents = 20, nShifted = 10)
+        val corpus = offset(s, nContents = 20, nCopies = 10,
+          base = 1000)(delayedWav(noiseLsb = 0))
         val history = corpus.filter(_.media_id < 1000L)
         val batch = corpus.filter(_.media_id >= 1000L)
         Multimodal.audioConstellationProbeIndex(batch,
@@ -204,8 +203,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.audioConstellationMatches(
-          Multimodal.syntheticShiftedAudioCorpusFlac(s, nContents = 20,
-            nShifted = 10), minVotes = 100)
+          offset(s, nContents = 20, nCopies = 10,
+            base = 1000)(delayedFlac), minVotes = 100)
           .select(col("id_a"), col("id_b"))
       },
       Some(shiftedCopiesOracle(nShifted = 10))),
@@ -218,7 +217,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticVideoCorpus(s, nContents = 30, copies = 3),
+          planted(s, nContents = 30, copies = 3)(mjpeg),
           maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
@@ -236,7 +235,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticH264Corpus(s, nContents = 30, copies = 3),
+          planted(s, nContents = 30, copies = 3)(h264),
           maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
@@ -258,7 +257,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3),
+          planted(s, nContents = 30, copies = 3)(mp4(Mp4Shape.Intra)),
           maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
@@ -279,8 +278,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            cabac = true), maxHamming = 4)
+          planted(s, nContents = 30, copies = 3)(mp4(Mp4Shape.Cabac)),
+          maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
 
@@ -299,8 +298,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            cabac = true, deblock = true), maxHamming = 4)
+          planted(s, nContents = 30, copies = 3)(mp4(Mp4Shape.CabacDeblock)),
+          maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
 
@@ -322,8 +321,7 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            deblock = true, transform8x8 = true, scalingMatrix = true),
+          planted(s, nContents = 30, copies = 3)(mp4(Mp4Shape.High8x8)),
           maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
@@ -350,8 +348,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            deblock = true, pSlices = true), maxHamming = 4)
+          planted(s, nContents = 30, copies = 3)(mp4(Mp4Shape.PSlice)),
+          maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
 
@@ -370,9 +368,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            deblock = true, pSlices = true, transform8x8 = true,
-            scalingMatrix = true), maxHamming = 4)
+          planted(s, nContents = 30, copies = 3)(mp4(Mp4Shape.PSlice8x8)),
+          maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
 
@@ -393,8 +390,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            deblock = true, bSlices = true), maxHamming = 4)
+          planted(s, nContents = 30, copies = 3)(mp4(Mp4Shape.BSlice)),
+          maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
 
@@ -412,8 +409,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            deblock = true, bSlices = true, bTemporalWeighted = true),
+          planted(s, nContents = 30, copies = 3)(
+            mp4(Mp4Shape.BSliceTemporalWeighted)),
           maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
@@ -432,8 +429,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            deblock = true, pSlices = true, weighted = true),
+          planted(s, nContents = 30, copies = 3)(
+            mp4(Mp4Shape.PSliceWeighted)),
           maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
@@ -455,8 +452,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(s, nContents = 30, copies = 3,
-            cabac = true, pFiller = 3), maxHamming = 4)
+          planted(s, nContents = 30, copies = 3)(mp4(Mp4Shape.Mixed)),
+          maxHamming = 4)
       },
       Some(plantedCopiesOracle(nContents = 30, copies = 3))),
 
@@ -471,8 +468,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoSequenceMatches(
-          Multimodal.syntheticShiftedVideoCorpus(s, nContents = 12,
-            nShifted = 6), minVotes = 5)
+          offset(s, nContents = 12, nCopies = 6,
+            base = 1000)(shiftedMjpeg), minVotes = 5)
           .select(col("id_a"), col("id_b"))
       },
       Some(shiftedCopiesOracle(nShifted = 6))),
@@ -482,8 +479,8 @@ private[graft] object RegistryMultimodal {
     Q("q_video_sequence_incremental",
       (s, d) => {
         import graft.multimodal.Multimodal
-        val corpus = Multimodal.syntheticShiftedVideoCorpus(s,
-          nContents = 12, nShifted = 6)
+        val corpus = offset(s, nContents = 12, nCopies = 6,
+          base = 1000)(shiftedMjpeg)
         Multimodal.videoSequenceProbeIndex(
           corpus.filter(_.media_id >= 1000L),
           Multimodal.videoFrameHashes(
@@ -502,8 +499,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoSequenceMatches(
-          Multimodal.syntheticShiftedH264Corpus(s, nContents = 12,
-            nShifted = 6), minVotes = 5)
+          offset(s, nContents = 12, nCopies = 6,
+            base = 1000)(shiftedH264), minVotes = 5)
           .select(col("id_a"), col("id_b"))
       },
       Some(shiftedCopiesOracle(nShifted = 6))),
@@ -521,8 +518,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoSequenceMatches(
-          Multimodal.syntheticShiftedMp4Corpus(s, nContents = 12,
-            nShifted = 6), minVotes = 5)
+          offset(s, nContents = 12, nCopies = 6,
+            base = 1000)(shiftedMp4(fragmented = false)), minVotes = 5)
           .select(col("id_a"), col("id_b"))
       },
       Some(shiftedCopiesOracle(nShifted = 6))),
@@ -539,8 +536,8 @@ private[graft] object RegistryMultimodal {
       (s, d) => {
         import graft.multimodal.Multimodal
         Multimodal.videoSequenceMatches(
-          Multimodal.syntheticShiftedMp4Corpus(s, nContents = 12,
-            nShifted = 6, fragmented = true), minVotes = 5)
+          offset(s, nContents = 12, nCopies = 6,
+            base = 1000)(shiftedMp4(fragmented = true)), minVotes = 5)
           .select(col("id_a"), col("id_b"))
       },
       Some(shiftedCopiesOracle(nShifted = 6))))

@@ -123,7 +123,7 @@ object ScaleCurve {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     import graft.functions.{TextAnalysis, TextSearch}
     import graft.operators.{Dedup, Pack, Profile, Similarity}
-    import graft.multimodal.Multimodal
+    import graft.multimodal.{MediaCorpus, Mp4Shape, Multimodal}
 
     // ---- corpora (idempotent: skip factors already materialized) ----
     factors.foreach { k =>
@@ -362,8 +362,8 @@ object ScaleCurve {
       // removal, macroblock assembly), not a fixture shortcut.
       "video_h264" -> { k =>
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticH264Corpus(spark,
-            nContents = 100 * k, copies = 3), maxHamming = 4)
+          MediaCorpus.planted(spark, nContents = 100 * k, copies = 3)(
+            MediaCorpus.h264), maxHamming = 4)
       },
       // MP4 container path scaled by clip count (round 15): the full
       // real-file pipeline — CAVLC intra encode + ISO-BMFF mux on the
@@ -374,8 +374,8 @@ object ScaleCurve {
       // same oracle one container earlier)
       "video_mp4" -> { k =>
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(spark,
-            nContents = 100 * k, copies = 3), maxHamming = 4)
+          MediaCorpus.planted(spark, nContents = 100 * k, copies = 3)(
+            MediaCorpus.mp4(Mp4Shape.Intra)), maxHamming = 4)
       },
       // CABAC + deblocking variant (round 15): the same oracle/shape
       // with arithmetic entropy decoding + the in-loop filter — both
@@ -383,9 +383,8 @@ object ScaleCurve {
       // still linear in clips; compare to video_mp4's exponent
       "video_mp4_cabac" -> { k =>
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(spark,
-            nContents = 100 * k, copies = 3, cabac = true,
-            deblock = true), maxHamming = 4)
+          MediaCorpus.planted(spark, nContents = 100 * k, copies = 3)(
+            MediaCorpus.mp4(Mp4Shape.CabacDeblock)), maxHamming = 4)
       },
       // round-16 variants, same linear-in-clips contract:
       // mixed GOP — each IDR followed by 3 skipped P fillers (the
@@ -393,17 +392,15 @@ object ScaleCurve {
       // filler NAL walk)…
       "video_mp4_mixed" -> { k =>
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(spark,
-            nContents = 100 * k, copies = 3, cabac = true,
-            pFiller = 3), maxHamming = 4)
+          MediaCorpus.planted(spark, nContents = 100 * k, copies = 3)(
+            MediaCorpus.mp4(Mp4Shape.Mixed)), maxHamming = 4)
       },
       // …and the High-profile 8x8-transform + scaling-matrix + deblock
       // shape (per-MB work, still linear in clips)
       "video_mp4_8x8" -> { k =>
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(spark,
-            nContents = 100 * k, copies = 3, deblock = true,
-            transform8x8 = true, scalingMatrix = true), maxHamming = 4)
+          MediaCorpus.planted(spark, nContents = 100 * k, copies = 3)(
+            MediaCorpus.mp4(Mp4Shape.High8x8)), maxHamming = 4)
       },
       // inter pass: real IPPP streams — motion-compensated P decode
       // (quarter-pel interpolation, MV prediction, partition cycle,
@@ -412,10 +409,8 @@ object ScaleCurve {
       // compare the exponent to video_mp4's (same oracle, intra-only)
       "video_mp4_pslice" -> { k =>
         Multimodal.videoNearDuplicates(
-          Multimodal.syntheticMp4Corpus(spark,
-            nContents = 100 * k, copies = 3, deblock = true,
-            pSlices = true, transform8x8 = true,
-            scalingMatrix = true), maxHamming = 4)
+          MediaCorpus.planted(spark, nContents = 100 * k, copies = 3)(
+            MediaCorpus.mp4(Mp4Shape.PSlice8x8)), maxHamming = 4)
       },
       // persisted theta sketch-log build + probe over a scaling
       // corpus: the create is one shuffle of 8-byte keys → per-shard
@@ -439,8 +434,9 @@ object ScaleCurve {
       // synthesized media corpus, scaled by clip count
       "audio_constellation" -> { k =>
         Multimodal.audioConstellationMatches(
-          Multimodal.syntheticShiftedAudioCorpus(spark,
-            nContents = 20 * k, nShifted = 10 * k), minVotes = 100)
+          MediaCorpus.offset(spark, nContents = 20 * k, nCopies = 10 * k,
+            base = 1000)(MediaCorpus.delayedWav(noiseLsb = 0)),
+          minVotes = 100)
           .select(col("id_a"), col("id_b"))
       },
       // round-17 document/codec families: per-row byte walks (build a

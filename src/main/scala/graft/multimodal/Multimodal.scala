@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Checkpoints
@@ -327,7 +327,7 @@ final case class MediaFeatures(media_id: Long, kind: String,
  *  - VIDEO: MJPEG (concatenated baseline JPEG frames — a real
  *    interchange format) splits on SOI/EOI markers and decodes every frame
  *    through ImageIO in [[Codec.decodeVideo]] / [[Codec.splitMjpegFrames]].
- * [[syntheticMedia]] generates real PNG / WAV / MJPEG payloads. H.264
+ * [[MediaCorpus]] generates the test corpora's real payloads. H.264
  * decodes natively for I/P/B slices under CAVLC (and I slices under
  * CABAC), and FLAC decodes natively with CRC-8/CRC-16/MD5
  * verification — neither needs an SPI. The remaining documented
@@ -1044,108 +1044,6 @@ object Multimodal {
     }
   }
 
-  /**
-   * Deterministic synthetic media table for tests/demos. Image rows carry
-   * REAL PNG payloads (deterministic per-pixel pattern, encoded with
-   * `javax.imageio`); audio rows carry REAL WAV payloads (id-keyed sine,
-   * encoded with `javax.sound.sampled`); video rows carry REAL MJPEG
-   * payloads (concatenated per-frame JPEGs).
-   */
-  def syntheticMedia(spark: SparkSession, n: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(n.toLong).as[Long].map { id =>
-      val kind = Seq("image", "audio", "video")(
-        (id % 3).toInt)
-      val w = 64 + (id % 4).toInt * 32
-      val h = 64 + (id % 3).toInt * 32
-      val bytes = kind match {
-        case "image" => syntheticPng(id, w, h)
-        case "audio" => syntheticWav(id)
-        case _ => syntheticMjpeg(id, w, h, frames = 6)
-      }
-      MediaRow(id, kind, bytes,
-        MediaMeta(width = w, height = h,
-          sampleRate = if (kind == "audio") 16000 else 0,
-          nFrames = if (kind == "video") 6 else 1))
-    }
-  }
-
-  /** A real MJPEG payload: `frames` baseline JPEGs back-to-back, each
-    * frame the id-keyed pixel pattern shifted per frame index (so frame
-    * features move over time). */
-  private def syntheticMjpeg(id: Long, w: Int, h: Int,
-                             frames: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    (0 until frames).foreach { f =>
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var x = 0
-      while (x < w) {
-        var y = 0
-        while (y < h) {
-          val r = ((id * 31 + f * 23 + x * 7 + y * 13) % 256).toInt
-          val g = ((id * 17 + f * 5 + x * 3 + y) % 256).toInt
-          val b = ((id + f * 11 + x + y * 11) % 256).toInt
-          img.setRGB(x, y, (r << 16) | (g << 8) | b)
-          y += 1
-        }
-        x += 1
-      }
-      javax.imageio.ImageIO.write(img, "jpg", out)
-    }
-    out.toByteArray
-  }
-
-  /** A real 100 ms WAV (PCM 16-bit mono, 16 kHz): an id-keyed sine —
-    * frequency, amplitude AND a small DC offset vary per id, so decoded
-    * RMS features are distinct across rows (frequency alone isn't
-    * enough: whole-period-aligned frequencies yield identical segment
-    * RMS at equal amplitude). */
-  private def syntheticWav(id: Long, sampleRate: Int = 16000): Array[Byte] = {
-    val freq = 200.0 + (id % 20).toDouble * 50.0
-    val amp = 0.2 + (id % 16).toDouble * 0.04
-    val dc = (id % 97).toDouble / 1000.0
-    val n = sampleRate / 10
-    val pcm = new Array[Byte](n * 2)
-    var i = 0
-    while (i < n) {
-      val v = ((dc + math.sin(2 * math.Pi * freq * i / sampleRate) * amp)
-        * 32767).toInt
-      pcm(2 * i) = (v & 0xFF).toByte
-      pcm(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-      i += 1
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(
-      sampleRate.toFloat, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
-  }
-
-  /** A real PNG with an id-keyed pixel pattern (gradient + id stripes). */
-  private def syntheticPng(id: Long, w: Int, h: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var x = 0
-    while (x < w) {
-      var y = 0
-      while (y < h) {
-        val r = ((id * 31 + x * 7 + y * 13) % 256).toInt
-        val g = ((id * 17 + x * 3 + y) % 256).toInt
-        val b = ((id + x + y * 11) % 256).toInt
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        y += 1
-      }
-      x += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    out.toByteArray
-  }
-
   /** Perceptual hashes for the image rows: `(media_id, phash)` — the
     * fingerprint-once projection (narrow mapPartitions, payloads never
     * shuffle; store this table and re-block on parameter changes, the
@@ -1177,63 +1075,6 @@ object Multimodal {
                           maxBucket: Int = 1000): DataFrame =
     graft.operators.Dedup.simhashPairsFromFingerprints(
       imageHashes(media), "media_id", "phash", maxHamming, maxBucket)
-
-  /**
-   * Deterministic image corpus with planted duplicates: `nContents`
-   * distinct high-frequency pixel patterns, each encoded `copies`
-   * times under DIFFERENT media_ids (`media_id % nContents` = the
-   * content key). Same-content copies are pixel-identical (pHash
-   * Hamming 0); distinct contents are far apart (MultimodalSpec
-   * asserts pairwise distance on this exact fixture), so the
-   * near-dup pair set is a pure function of the id arithmetic —
-   * SQL-replayable for the driver's gate.
-   */
-  def syntheticImageCorpus(spark: SparkSession, nContents: Int,
-                           copies: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(nContents.toLong * copies).as[Long].map { id =>
-      val content = id % nContents
-      val w = 64 + (content % 4).toInt * 16
-      val h = 64 + (content % 3).toInt * 16
-      MediaRow(id, "image", syntheticPng(content, w, h),
-        MediaMeta(w, h, 0, 1))
-    }
-  }
-
-  /**
-   * [[syntheticImageCorpus]] with EXIF-rotated copies: copy set 1
-   * stores each content's pixels rotated 90° CCW and tags
-   * orientation 6 (rotate-90-CW-to-display), copy set 2 stores them
-   * rotated 180° with orientation 3 — the phone-photo re-upload
-   * shape. PNG + eXIf chunk keeps the planting LOSSLESS, so after
-   * [[Exif.normalize]] every copy's pixels are IDENTICAL to the
-   * upright original and the planted pairs sit at pHash Hamming 0 —
-   * the q_image_phash_dedup oracle transfers verbatim. (The JPEG
-   * APP1 leg of the same walk is pinned in MultimodalSpec, where
-   * lossy re-encode keeps it out of the exact oracle.)
-   */
-  def syntheticImageCorpusExif(spark: SparkSession, nContents: Int,
-                               copies: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    require(copies <= 3, "fixture defines orientations for 3 copy sets")
-    spark.range(nContents.toLong * copies).as[Long].map { id =>
-      val content = id % nContents
-      val w = 64 + (content % 4).toInt * 16
-      val h = 64 + (content % 3).toInt * 16
-      val upright = syntheticPng(content, w, h)
-      val copySet = (id / nContents).toInt
-      val bytes = if (copySet == 0) upright else {
-        val o = if (copySet == 1) 6 else 3
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(upright))
-        val stored = Exif.denormalize(img, o)
-        val out = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(stored, "png", out)
-        Exif.withOrientationPng(out.toByteArray, o)
-      }
-      MediaRow(id, "image", bytes, MediaMeta(w, h, 0, 1))
-    }
-  }
 
   /** Video fingerprints for the video rows: `(media_id, vfp)` — the
     * DCT pHash ([[Codec.imagePHash]]) of the clip's MIDDLE frame
@@ -1538,524 +1379,6 @@ object Multimodal {
                               minVotes: Int,
                               maxBucket: Int = 1000): DataFrame =
     offsetVotedProbe(batchHashes, index, minVotes, maxBucket)
-
-  /**
-   * Deterministic audio corpus with planted duplicates: `nContents`
-   * distinct tone SEQUENCES (64 segments, content-keyed frequency per
-   * segment — the ZCR profile is the content's signature), each
-   * encoded `copies` times under different media_ids
-   * (`media_id % nContents` = content). Same-content copies are
-   * sample-identical (fingerprint Hamming 0); distinct contents are
-   * far apart (MultimodalSpec pins the margin on this exact fixture),
-   * so the near-dup pair set is pure id arithmetic.
-   */
-  def syntheticAudioCorpus(spark: SparkSession, nContents: Int,
-                           copies: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(nContents.toLong * copies).as[Long].map { id =>
-      val content = id % nContents
-      MediaRow(id, "audio", toneSequenceWav(content),
-        MediaMeta(0, 0, 16000, 1))
-    }
-  }
-
-  /**
-   * [[syntheticAudioCorpus]] with every payload FLAC-encoded
-   * ([[Flac.fromPcm16]]) instead of WAV-wrapped — SAME tone
-   * sequences, so every downstream fingerprint is sample-identical
-   * to the WAV corpus (FLAC is lossless) and the q_audio_fp_dedup
-   * oracle transfers VERBATIM. This is the codec-agnosticism
-   * contract for the audio family: the LibriSpeech/MLS-class corpora
-   * real pipelines ingest ship as FLAC.
-   */
-  def syntheticAudioCorpusFlac(spark: SparkSession, nContents: Int,
-                               copies: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(nContents.toLong * copies).as[Long].map { id =>
-      val content = id % nContents
-      MediaRow(id, "audio",
-        Flac.fromPcm16(toneSequencePcm(content), 16000),
-        MediaMeta(0, 0, 16000, 1))
-    }
-  }
-
-  /**
-   * Deterministic video corpus with planted duplicates — the
-   * [[syntheticImageCorpus]] construction over real MJPEG payloads
-   * (`media_id % nContents` = content; copies are byte-identical, so
-   * middle-frame pHashes collide at Hamming 0; MultimodalSpec pins
-   * the distinct-content margin on this exact fixture).
-   */
-  def syntheticVideoCorpus(spark: SparkSession, nContents: Int,
-                           copies: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(nContents.toLong * copies).as[Long].map { id =>
-      val content = id % nContents
-      val w = 64 + (content % 4).toInt * 16
-      val h = 64 + (content % 3).toInt * 16
-      MediaRow(id, "video", syntheticMjpeg(content, w, h, frames = 5),
-        MediaMeta(w, h, 0, 5))
-    }
-  }
-
-  /**
-   * Deterministic H.264 video corpus with planted duplicates — the
-   * [[syntheticVideoCorpus]] construction, but each payload is a
-   * spec-valid Annex-B H.264 stream of all-I_PCM IDR frames
-   * ([[H264.encode]]) carrying the SAME per-content pixel pattern as
-   * the MJPEG fixture. Decoded through [[FrameDecoder.Auto]]'s
-   * sniffing dispatch — every video operator (pHash, sequence match,
-   * offset voting, incremental probe) runs on it unchanged, which is
-   * the codec-agnosticism the SPI promises.
-   */
-  def syntheticH264Corpus(spark: SparkSession, nContents: Int,
-                          copies: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(nContents.toLong * copies).as[Long].map { id =>
-      val content = id % nContents
-      val w = 64 + (content % 4).toInt * 16
-      val h = 64 + (content % 3).toInt * 16
-      MediaRow(id, "video", syntheticH264(content, w, h, frames = 5),
-        MediaMeta(w, h, 0, 5))
-    }
-  }
-
-  /**
-   * H.264 analog of [[syntheticShiftedVideoCorpus]]: Annex-B streams
-   * are concatenative just like MJPEG (each fixture frame is a
-   * self-contained IDR picture and parameter sets may repeat), so the
-   * intro-prepended copy is the byte concat of two valid streams —
-   * and the SAME offset-voting matcher finds the planted 3-frame
-   * shift with no codec-specific code.
-   */
-  def syntheticShiftedH264Corpus(spark: SparkSession, nContents: Int,
-                                 nShifted: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    require(nShifted <= nContents, "shifted copies need a source")
-    val ids = spark.range(nContents.toLong)
-      .union(spark.range(1000L, 1000L + nShifted)).as[Long]
-    ids.map { id =>
-      val content = if (id >= 1000L) id - 1000L else id
-      val w = 64 + (content % 4).toInt * 16
-      val h = 64 + (content % 3).toInt * 16
-      val body = syntheticH264(content, w, h, frames = 8)
-      val bytes = if (id >= 1000L)
-        syntheticH264(5000L + content, w, h, frames = 3) ++ body
-      else body
-      MediaRow(id, "video", bytes, MediaMeta(w, h, 0,
-        if (id >= 1000L) 11 else 8))
-    }
-  }
-
-  /** The [[syntheticMjpeg]] per-frame pixel pattern — shared by the
-    * MJPEG, Annex-B and MP4 fixture encoders so the planted-duplicate
-    * structure (and oracle) is identical across containers. */
-  private def fixtureFrames(id: Long, w: Int, h: Int,
-                            frames: Int): Seq[Array[Int]] =
-    (0 until frames).map { f =>
-      val px = new Array[Int](w * h)
-      var x = 0
-      while (x < w) {
-        var y = 0
-        while (y < h) {
-          val r = ((id * 31 + f * 23 + x * 7 + y * 13) % 256).toInt
-          val g = ((id * 17 + f * 5 + x * 3 + y) % 256).toInt
-          val b = ((id + f * 11 + x + y * 11) % 256).toInt
-          px(y * w + x) = (r << 16) | (g << 8) | b
-          y += 1
-        }
-        x += 1
-      }
-      px
-    }
-
-  /** The [[syntheticMjpeg]] pixel pattern, H.264-encoded (I_PCM). */
-  private[graft] def syntheticH264(id: Long, w: Int, h: Int,
-                                   frames: Int): Array[Byte] =
-    H264.encode(w, h, fixtureFrames(id, w, h, frames))
-
-  /** The same pixel pattern as a REAL .mp4 file: CAVLC- or (with
-    * `cabac = true`) CABAC-compressed intra macroblocks
-    * ([[H264.encodeCavlc]]/[[H264.encodeCabac]]) muxed into ISO-BMFF
-    * with avcC + length-prefixed samples ([[Mp4.fromAnnexB]]) — the
-    * shape actual video files arrive in. Deterministic bytes, so
-    * planted copies stay byte-identical and fingerprint at distance
-    * 0 just like the MJPEG/Annex-B fixtures. */
-  private[graft] def syntheticMp4(id: Long, w: Int, h: Int,
-                                  frames: Int,
-                                  cabac: Boolean = false,
-                                  deblock: Boolean = false,
-                                  pFiller: Int = 0,
-                                  transform8x8: Boolean = false,
-                                  scalingMatrix: Boolean = false,
-                                  pSlices: Boolean = false,
-                                  weighted: Boolean = false,
-                                  bSlices: Boolean = false,
-                                  bTemporalWeighted: Boolean = false)
-      : Array[Byte] = {
-    require(!(cabac && transform8x8),
-      "CABAC x transform_8x8 unsupported (see H264 scope)")
-    require(!((pSlices || bSlices) && cabac),
-      "CABAC inter slices unsupported (see H264 scope)")
-    val px = fixtureFrames(id, w, h, frames)
-    val annexB =
-      if (bSlices)
-        // the classic broadcast GOP: I B B P B(…) — non-reference B
-        // pictures between P anchors, two POC-ordered lists, spatial
-        // direct + B_Skip, biprediction; decode order ≠ display
-        // order, so the decoder's POC reordering is load-bearing for
-        // the fingerprint (the middle frame IS a B picture)
-        H264.encodeCavlcB(w, h, px, qp = 26, bBetween = 2,
-          deblock = deblock,
-          forcedMv = Seq((5, 2), (-3, 1), (2, -2)),
-          partitionCycle = true, intraEvery = 7, refsEachWay = 2,
-          directTemporal = bTemporalWeighted,
-          weightedBi = bTemporalWeighted)._1
-      else if (pSlices)
-        // a REAL IPPP stream: frame 0 IDR, the rest motion-compensated
-        // P pictures (planted fractional global MVs exercise the
-        // §8.4.2.2 interpolation; the partition cycle covers Tables
-        // 7-13/7-17; intraEvery is the refresh pattern; deblock
-        // composes the inter §8.7.2.1 bS path; transform8x8 /
-        // scalingMatrix compose the High-profile inter residual)
-        H264.encodeCavlcP(w, h, px, qp = 26, deblock = deblock,
-          forcedMv = Seq((5, 2), (-3, 1), (2, -2), (7, 3)),
-          partitionCycle = true, intraEvery = 7,
-          transform8x8 = transform8x8,
-          scalingMatrix = scalingMatrix, weighted = weighted)._1
-      else if (cabac) H264.encodeCabac(w, h, px, qp = 26,
-        deblock = deblock, scalingMatrix = scalingMatrix)._1
-      else H264.encodeCavlc(w, h, px, qp = 26, deblock = deblock,
-        transform8x8 = transform8x8, scalingMatrix = scalingMatrix)._1
-    // pFiller > 0: the real-world MIXED stream shape — each IDR
-    // followed by that many all-P_Skip filler pictures
-    // (H264.insertInterFiller); since the inter round the fillers
-    // DECODE (motion compensation) as exact copies of their IDR
-    // reference, so planted copies stay fingerprint-identical
-    val withFiller =
-      if (pFiller > 0) H264.insertInterFiller(annexB, pFiller)
-      else annexB
-    Mp4.fromAnnexB(withFiller, w, h)
-  }
-
-  /**
-   * MP4 analog of [[syntheticShiftedH264Corpus]]: unlike Annex-B, MP4
-   * files do NOT byte-concatenate, so the intro-prepended copy is
-   * built the way a real re-edit is — the intro FRAMES are prepended
-   * before encoding and the whole sequence is CAVLC-encoded and muxed
-   * as one file. Each IDR frame is intra-only, so a body frame's
-   * reconstruction is a pure function of its own pixels regardless of
-   * position in the stream — the shifted copy's body frames decode
-   * bit-identically to the source's, and the SAME offset-voting
-   * matcher finds the planted 3-frame shift through the container
-   * demux with no codec- or container-specific code.
-   *
-   * `fragmented = true` muxes each clip as an fMP4 instead
-   * ([[Mp4.fromAnnexBFragmented]] — moof/tfhd/trun sample tables, the
-   * DASH/streaming shape): identical pixels and oracle, third
-   * container for the agnosticism contract.
-   */
-  def syntheticShiftedMp4Corpus(spark: SparkSession, nContents: Int,
-                                nShifted: Int,
-                                fragmented: Boolean = false)
-      : Dataset[MediaRow] = {
-    import spark.implicits._
-    require(nShifted <= nContents, "shifted copies need a source")
-    val ids = spark.range(nContents.toLong)
-      .union(spark.range(1000L, 1000L + nShifted)).as[Long]
-    ids.map { id =>
-      val content = if (id >= 1000L) id - 1000L else id
-      val w = 64 + (content % 4).toInt * 16
-      val h = 64 + (content % 3).toInt * 16
-      val body = fixtureFrames(content, w, h, frames = 8)
-      val frames = if (id >= 1000L)
-        fixtureFrames(5000L + content, w, h, frames = 3) ++ body
-      else body
-      val annexB = H264.encodeCavlc(w, h, frames, qp = 26)._1
-      val bytes = if (fragmented)
-        Mp4.fromAnnexBFragmented(annexB, w, h)
-      else Mp4.fromAnnexB(annexB, w, h)
-      MediaRow(id, "video", bytes, MediaMeta(w, h, 0, frames.size))
-    }
-  }
-
-  /** [[syntheticH264Corpus]] with every payload a real MP4 file of
-    * compressed H.264 — decoded through [[FrameDecoder.Auto]]'s
-    * ftyp sniff and the container demux, no external binding.
-    * `cabac = true` switches the entropy layer to CABAC (the
-    * High-profile shape); pixels and oracle are identical. */
-  def syntheticMp4Corpus(spark: SparkSession, nContents: Int,
-                         copies: Int,
-                         cabac: Boolean = false,
-                         deblock: Boolean = false,
-                         pFiller: Int = 0,
-                         transform8x8: Boolean = false,
-                         scalingMatrix: Boolean = false,
-                         pSlices: Boolean = false,
-                         weighted: Boolean = false,
-                         bSlices: Boolean = false,
-                         bTemporalWeighted: Boolean = false)
-      : Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(nContents.toLong * copies).as[Long].map { id =>
-      val content = id % nContents
-      val w = 64 + (content % 4).toInt * 16
-      val h = 64 + (content % 3).toInt * 16
-      MediaRow(id, "video",
-        syntheticMp4(content, w, h, frames = 5, cabac, deblock,
-          pFiller, transform8x8, scalingMatrix, pSlices, weighted,
-          bSlices, bTemporalWeighted),
-        MediaMeta(w, h, 0, 5))
-    }
-  }
-
-  /**
-   * Video corpus with planted TIME-OFFSET duplicates — the
-   * [[syntheticShiftedAudioCorpus]] construction for video: ids
-   * `0 until nContents` are distinct 8-frame MJPEG clips; ids
-   * `1000 + c` for `c < nShifted` are id `c`'s clip with a 3-frame
-   * content-keyed intro prepended (MJPEG is frame-concatenative, so
-   * the byte concat IS a valid clip). Every content frame recurs at a
-   * constant frame offset of exactly 3 — the case [[videoHashes]]'s
-   * middle-frame fingerprint provably misses (the shifted middle
-   * lands on a different source frame).
-   */
-  def syntheticShiftedVideoCorpus(spark: SparkSession, nContents: Int,
-                                  nShifted: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    require(nShifted <= nContents, "shifted copies need a source")
-    val ids = spark.range(nContents.toLong)
-      .union(spark.range(1000L, 1000L + nShifted)).as[Long]
-    ids.map { id =>
-      val content = if (id >= 1000L) id - 1000L else id
-      val w = 64 + (content % 4).toInt * 16
-      val h = 64 + (content % 3).toInt * 16
-      val body = syntheticMjpeg(content, w, h, frames = 8)
-      val bytes = if (id >= 1000L)
-        syntheticMjpeg(5000L + content, w, h, frames = 3) ++ body
-      else body
-      MediaRow(id, "video", bytes, MediaMeta(w, h, 0,
-        if (id >= 1000L) 11 else 8))
-    }
-  }
-
-  /** A real 1 s WAV whose frequency steps through a content-keyed
-    * pattern: segment s of 64 plays one of 12 tones chosen by a
-    * content-seeded mix — a coarse "melody" the ZCR fingerprint
-    * reads back. */
-  private def toneSequenceWav(content: Long,
-                              sampleRate: Int = 16000): Array[Byte] =
-    wavFromPcm(toneSequencePcm(content, sampleRate), sampleRate)
-
-  private[multimodal] def toneSequencePcm(content: Long,
-                                          sampleRate: Int = 16000): Array[Byte] = {
-    val segs = 64
-    val n = sampleRate
-    val perSeg = n / segs
-    val pcm = new Array[Byte](n * 2)
-    var s = 0
-    while (s < segs) {
-      val mix = content * 1315423911L + s * 2654435761L
-      val tone = math.floorMod(mix ^ (mix >>> 17), 12L)
-      val freq = 300.0 + tone * 90.0
-      var i = 0
-      while (i < perSeg) {
-        val k = s * perSeg + i
-        val v = (math.sin(2 * math.Pi * freq * i / sampleRate) * 0.6
-          * 32767).toInt
-        pcm(2 * k) = (v & 0xFF).toByte
-        pcm(2 * k + 1) = ((v >> 8) & 0xFF).toByte
-        i += 1
-      }
-      s += 1
-    }
-    pcm
-  }
-
-  /** 16-bit mono little-endian PCM bytes → a real WAV container. */
-  private def wavFromPcm(pcm: Array[Byte], sampleRate: Int): Array[Byte] = {
-    val fmt = new javax.sound.sampled.AudioFormat(
-      sampleRate.toFloat, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, pcm.length / 2L)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
-  }
-
-  /** Content-keyed melody PCM for the constellation fixture: 64 equal
-    * segments, each playing one of 128 tone steps (vs
-    * [[toneSequenceWav]]'s 12 — fine enough that two DIFFERENT
-    * contents almost never put the same spectral peak in the same
-    * segment, keeping chance constellation agreement near zero). */
-  private def melodyPcm(content: Long,
-                        sampleRate: Int = 16000): Array[Byte] = {
-    val segs = 64
-    val n = sampleRate
-    val perSeg = n / segs
-    val pcm = new Array[Byte](n * 2)
-    var s = 0
-    while (s < segs) {
-      val mix = content * 2246822519L + s * 3266489917L
-      val tone = math.floorMod(mix ^ (mix >>> 15), 128L)
-      val freq = 300.0 + tone * 18.0
-      var i = 0
-      while (i < perSeg) {
-        val k = s * perSeg + i
-        val v = (math.sin(2 * math.Pi * freq * i / sampleRate) * 0.6
-          * 32767).toInt
-        pcm(2 * k) = (v & 0xFF).toByte
-        pcm(2 * k + 1) = ((v >> 8) & 0xFF).toByte
-        i += 1
-      }
-      s += 1
-    }
-    pcm
-  }
-
-  /**
-   * Audio corpus with planted TIME-OFFSET duplicates — the case the
-   * ZCR profile fingerprint provably misses (a shift moves its segment
-   * grid, flipping far more than `maxHamming` bits) and spectral-peak
-   * constellations catch by construction: ids `0 until nContents` are
-   * distinct melodies; ids `1000 + c` for `c < nShifted` are the same
-   * melody as id `c` with 4096 samples (16 hops at the default 256) of
-   * leading silence, so every landmark recurs at a constant frame
-   * offset of exactly 16.
-   */
-  def syntheticShiftedAudioCorpus(spark: SparkSession, nContents: Int,
-                                  nShifted: Int,
-                                  noiseLsb: Int = 0): Dataset[MediaRow] = {
-    import spark.implicits._
-    require(nShifted <= nContents, "shifted copies need a source")
-    val ids = spark.range(nContents.toLong)
-      .union(spark.range(1000L, 1000L + nShifted)).as[Long]
-    ids.map { id =>
-      val content = if (id >= 1000L) id - 1000L else id
-      val melody = melodyPcm(content)
-      val pcm = if (id >= 1000L) {
-        // copies optionally carry deterministic ±noiseLsb sample noise
-        // (a crude re-encode stand-in: the spectral peak must survive)
-        if (noiseLsb > 0) {
-          var i = 0
-          var state = content * 6364136223846793005L + 1442695040888963407L
-          while (i < melody.length - 1) {
-            state = state * 6364136223846793005L + 1442695040888963407L
-            val n = ((state >>> 33) % (2L * noiseLsb + 1)).toInt - noiseLsb
-            val v = math.max(-32768, math.min(32767,
-              (((melody(i) & 0xFF) | (melody(i + 1) << 8)).toShort: Int)
-                + n))
-            melody(i) = (v & 0xFF).toByte
-            melody(i + 1) = ((v >> 8) & 0xFF).toByte
-            i += 2
-          }
-        }
-        new Array[Byte](4096 * 2) ++ melody
-      } else melody
-      MediaRow(id, "audio", wavFromPcm(pcm, 16000),
-        MediaMeta(0, 0, 16000, 1))
-    }
-  }
-
-  /**
-   * [[syntheticShiftedAudioCorpus]] (noise-free form) with every
-   * payload FLAC-encoded — same melodies, same 4096-sample leading
-   * silence on the 1000+c copies, so the constellation offset-voting
-   * oracle transfers VERBATIM (lossless decode ⇒ identical STFT ⇒
-   * identical landmarks and votes).
-   */
-  def syntheticShiftedAudioCorpusFlac(spark: SparkSession,
-                                      nContents: Int,
-                                      nShifted: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    require(nShifted <= nContents, "shifted copies need a source")
-    val ids = spark.range(nContents.toLong)
-      .union(spark.range(1000L, 1000L + nShifted)).as[Long]
-    ids.map { id =>
-      val content = if (id >= 1000L) id - 1000L else id
-      val melody = melodyPcm(content)
-      val pcm =
-        if (id >= 1000L) new Array[Byte](4096 * 2) ++ melody else melody
-      MediaRow(id, "audio", Flac.fromPcm16(pcm, 16000),
-        MediaMeta(0, 0, 16000, 1))
-    }
-  }
-
-  /** 2-second, 32-segment melody PCM (content-keyed, 128 tone steps):
-    * the RATIO-constellation fixture — longer segments (~4 STFT frames
-    * each) make the run-length event sequence sparse enough that gap
-    * ratios carry signal, which the 1-second/64-segment fixtures'
-    * one-frame-per-segment geometry cannot. */
-  private def melodyPcmLong(content: Long,
-                            sampleRate: Int = 16000): Array[Byte] = {
-    val segs = 32
-    val n = sampleRate * 2
-    val perSeg = n / segs
-    val pcm = new Array[Byte](n * 2)
-    var s = 0
-    while (s < segs) {
-      val mix = content * 2246822519L + s * 3266489917L
-      val tone = math.floorMod(mix ^ (mix >>> 15), 128L)
-      val freq = 300.0 + tone * 18.0
-      var i = 0
-      while (i < perSeg) {
-        val k = s * perSeg + i
-        val v = (math.sin(2 * math.Pi * freq * i / sampleRate) * 0.6
-          * 32767).toInt
-        pcm(2 * k) = (v & 0xFF).toByte
-        pcm(2 * k + 1) = ((v >> 8) & 0xFF).toByte
-        i += 1
-      }
-      s += 1
-    }
-    pcm
-  }
-
-  /** Nearest-neighbor PCM resample by `rate` (>1 = faster + pitched
-    * up): output sample j reads input sample round(j·rate) — the
-    * playback-rate-change model (tempo AND pitch scale together, the
-    * classic radio/speed-adjusted re-upload). 16-bit mono LE. */
-  private def resamplePcm(pcm: Array[Byte], rate: Double): Array[Byte] = {
-    val nIn = pcm.length / 2
-    val nOut = (nIn / rate).toInt
-    val out = new Array[Byte](nOut * 2)
-    var j = 0
-    while (j < nOut) {
-      val src = math.min(nIn - 1, math.round(j * rate).toInt)
-      out(2 * j) = pcm(2 * src)
-      out(2 * j + 1) = pcm(2 * src + 1)
-      j += 1
-    }
-    out
-  }
-
-  /**
-   * Audio corpus with planted RESAMPLED duplicates — the case the
-   * absolute-bin constellation provably misses (a rate change scales
-   * every peak bin and every frame delta, so no landmark hash
-   * survives) and [[audioConstellationRatioMatches]] catches by
-   * construction: ids `0 until nContents` are distinct 2-second
-   * melodies; ids `2000 + c` for `c < nResampled` are the same
-   * melodies played at `ratePct/100` speed (nearest-neighbor
-   * resample — pitch and tempo scale together, the re-upload model).
-   */
-  def syntheticResampledAudioCorpus(spark: SparkSession, nContents: Int,
-                                    nResampled: Int,
-                                    ratePct: Int = 110): Dataset[MediaRow] = {
-    import spark.implicits._
-    require(nResampled <= nContents, "resampled copies need a source")
-    val ids = spark.range(nContents.toLong)
-      .union(spark.range(2000L, 2000L + nResampled)).as[Long]
-    ids.map { id =>
-      val content = if (id >= 2000L) id - 2000L else id
-      val melody = melodyPcmLong(content)
-      val pcm =
-        if (id >= 2000L) resamplePcm(melody, ratePct / 100.0) else melody
-      MediaRow(id, "audio", wavFromPcm(pcm, 16000),
-        MediaMeta(0, 0, 16000, 1))
-    }
-  }
 
   /** Column-level helper: payload size histogram — plumbing sanity. */
   def sizeStats(media: DataFrame, bytesCol: String = "bytes"): DataFrame =

@@ -11,6 +11,21 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 /** Top-level so Spark can derive an Encoder (inner classes cannot). */
 case class EngineRow(f0: String, f2: Long, f4: Option[Double], f5: Long)
 
+/** The local file system under the `vanish:` scheme, where listing a
+  * directory deletes the `vanish-*` files it lists: a shard republished
+  * between a call's listing and its footer read, with no timing race. */
+class VanishOnListFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("vanish:///")
+  override def getScheme: String = "vanish"
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val listed = super.listStatus(f)
+    listed.filter(_.getPath.getName.startsWith("vanish-"))
+      .foreach(st => delete(st.getPath, false))
+    listed
+  }
+}
+
 /**
  * Oracle-differential tests in the reference's own style
  * (`tests/test_parquery.py`): seeded synthetic data, expected values
@@ -438,5 +453,25 @@ class AggregateEngineSpec extends SparkSpec {
     assert(call(path, empty).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap == exp)
     assert(call(path, notes).collect().isEmpty)
+  }
+
+  test("a shard file deleted after the listing fails the call naming " +
+      "it, in place of an empty result") {
+    val dir = tmpDir()
+    data.toDF().write.parquet(s"$dir/a")
+    data.toDF().coalesce(1).write.parquet(s"$dir/b")
+    val part = new java.io.File(s"$dir/b").listFiles()
+      .find(_.getName.startsWith("part-")).get
+    assert(part.renameTo(new java.io.File(s"$dir/b/vanish-0.parquet")))
+    spark.conf.set("fs.vanish.impl",
+      classOf[VanishOnListFileSystem].getName)
+    try {
+      val e = intercept[java.io.FileNotFoundException] {
+        AggregateEngine.aggregatePqShards(spark,
+          Seq(s"vanish://$dir/a", s"vanish://$dir/b"), Seq("f0"),
+          Seq(Seq("f5", "sum", "s")))
+      }
+      assert(e.getMessage.contains("vanish-0.parquet"), e.getMessage)
+    } finally spark.conf.unset("fs.vanish.impl")
   }
 }

@@ -254,12 +254,14 @@ class FlacSpec extends SparkSpec {
 
   test("fixture margin transfers: FLAC corpus fingerprints are " +
       "IDENTICAL to the WAV corpus fingerprints (losslessness)") {
-    import graft.multimodal.Multimodal
+    import graft.multimodal.{MediaCorpus, Multimodal}
     val wav = Multimodal.audioHashes(
-      Multimodal.syntheticAudioCorpus(spark, nContents = 6, copies = 2))
+      MediaCorpus.planted(spark, nContents = 6, copies = 2)(
+        MediaCorpus.tonesWav))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val flac = Multimodal.audioHashes(
-      Multimodal.syntheticAudioCorpusFlac(spark, nContents = 6, copies = 2))
+      MediaCorpus.planted(spark, nContents = 6, copies = 2)(
+        MediaCorpus.tonesFlac))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(wav == flac)
   }

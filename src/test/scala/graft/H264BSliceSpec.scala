@@ -277,9 +277,9 @@ class H264BSliceSpec extends SparkSpec {
   test("fixture margin for the q_video_fp_dedup_mp4_bslice oracle: " +
       "planted copies at Hamming 0, distinct contents > 8 bits " +
       "apart (the fingerprint is a B picture)") {
-    import graft.multimodal.Multimodal
-    val corpus = Multimodal.syntheticMp4Corpus(spark, nContents = 30,
-      copies = 2, deblock = true, bSlices = true)
+    import graft.multimodal.{MediaCorpus, Mp4Shape, Multimodal}
+    val corpus = MediaCorpus.planted(spark, nContents = 30,
+      copies = 2)(MediaCorpus.mp4(Mp4Shape.BSlice))
     val hashes = Multimodal.videoHashes(corpus).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(hashes.size == 60, "every B-coded clip must fingerprint")

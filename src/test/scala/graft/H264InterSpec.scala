@@ -511,9 +511,9 @@ class H264InterSpec extends SparkSpec {
   test("fixture margin for the q_video_fp_dedup_mp4_pslice oracle: " +
       "planted copies at Hamming 0, distinct contents > 8 bits apart " +
       "(the fingerprint is a motion-compensated P frame)") {
-    import graft.multimodal.Multimodal
-    val corpus = Multimodal.syntheticMp4Corpus(spark, nContents = 30,
-      copies = 2, deblock = true, pSlices = true)
+    import graft.multimodal.{MediaCorpus, Mp4Shape, Multimodal}
+    val corpus = MediaCorpus.planted(spark, nContents = 30,
+      copies = 2)(MediaCorpus.mp4(Mp4Shape.PSlice))
     val hashes = Multimodal.videoHashes(corpus).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(hashes.size == 60, "every P-coded clip must fingerprint")

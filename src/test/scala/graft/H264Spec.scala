@@ -1,6 +1,7 @@
 package graft
 
-import graft.multimodal.{FrameDecoder, H264, MediaMeta, MediaRow, Multimodal}
+import graft.multimodal.{FrameDecoder, H264, MediaCorpus, MediaMeta, MediaRow,
+  Multimodal}
 
 /**
  * The partial H.264 path: bit I/O, emulation prevention, SPS/PPS and
@@ -182,19 +183,19 @@ class H264Spec extends SparkSpec {
 
   test("color frames: deterministic, dims preserved, luma preserved " +
       "within chroma-rounding tolerance") {
-    val a = Multimodal.syntheticH264(7L, 64, 64, frames = 2)
-    val b = Multimodal.syntheticH264(7L, 64, 64, frames = 2)
+    val a = H264.encode(64, 64, MediaCorpus.frames(7L, 64, 64, 2))
+    val b = H264.encode(64, 64, MediaCorpus.frames(7L, 64, 64, 2))
     assert(a.toSeq == b.toSeq) // byte-identical copies by construction
     val got = H264.decodeFrames(a)
     assert(got.length == 2)
     assert(got.head._1 == 64 && got.head._2 == 64)
     // different content → different payload bytes
-    val c = Multimodal.syntheticH264(8L, 64, 64, frames = 2)
+    val c = H264.encode(64, 64, MediaCorpus.frames(8L, 64, 64, 2))
     assert(a.toSeq != c.toSeq)
   }
 
   test("looksLikeAnnexB sniffs H.264 but not JPEG/PNG/empty") {
-    val h264 = Multimodal.syntheticH264(1L, 64, 64, 1)
+    val h264 = H264.encode(64, 64, MediaCorpus.frames(1L, 64, 64, 1))
     assert(H264.looksLikeAnnexB(h264))
     assert(!H264.looksLikeAnnexB(Array[Byte](0xFF.toByte, 0xD8.toByte)))
     assert(!H264.looksLikeAnnexB(
@@ -207,13 +208,14 @@ class H264Spec extends SparkSpec {
       "every row") {
     import spark.implicits._
     val h264Frames =
-      FrameDecoder.Auto.frames(Multimodal.syntheticH264(3L, 64, 64, 5))
+      FrameDecoder.Auto.frames(
+        H264.encode(64, 64, MediaCorpus.frames(3L, 64, 64, 5)))
     assert(h264Frames.length == 5)
     // each frame payload is a decodable image (the SPI contract)
     assert(javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(h264Frames(2))) != null)
-    val mixed = Multimodal.syntheticVideoCorpus(spark, 4, 1)
-      .union(Multimodal.syntheticH264Corpus(spark, 4, 1)
+    val mixed = MediaCorpus.planted(spark, 4, 1)(MediaCorpus.mjpeg)
+      .union(MediaCorpus.planted(spark, 4, 1)(MediaCorpus.h264)
         .map(r => r.copy(media_id = r.media_id + 100)))
     val hashes = Multimodal.videoHashes(mixed).collect()
     assert(hashes.length == 8)
@@ -222,7 +224,7 @@ class H264Spec extends SparkSpec {
   test("truncated/corrupt H.264 degrades (skip), not throws, through " +
       "videoHashes") {
     import spark.implicits._
-    val good = Multimodal.syntheticH264(1L, 64, 64, 3)
+    val good = H264.encode(64, 64, MediaCorpus.frames(1L, 64, 64, 3))
     val bad = good.take(good.length / 3) // truncated mid-slice
     val ds = spark.createDataset(Seq(
       MediaRow(0L, "video", good, MediaMeta(64, 64, 0, 3)),
@@ -237,7 +239,7 @@ class H264Spec extends SparkSpec {
     // (0 = I_NxN, 1..24 = I_16x16, 25 = I_PCM); the parser must
     // reject it by name rather than emit garbage. (mb_type 0, the old
     // boundary, is now a DECODED type — CavlcSpec covers it.)
-    val real = Multimodal.syntheticH264(1L, 16, 16, 1)
+    val real = H264.encode(16, 16, MediaCorpus.frames(1L, 16, 16, 1))
     val nals = H264.nalUnits(real)
     val w = new H264.BitWriter()
     w.ue(0); w.ue(7); w.ue(0); w.u(0, 4); w.ue(0); w.u(0, 1)
@@ -354,8 +356,8 @@ class H264Spec extends SparkSpec {
 
   test("fixture margin for the q_video_fp_dedup_h264 oracle: planted " +
       "copies at Hamming 0, distinct contents > 8 bits apart") {
-    val corpus = Multimodal.syntheticH264Corpus(spark, nContents = 30,
-      copies = 3)
+    val corpus = MediaCorpus.planted(spark, nContents = 30,
+      copies = 3)(MediaCorpus.h264)
     val hashes = Multimodal.videoHashes(corpus).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(hashes.size == 90)

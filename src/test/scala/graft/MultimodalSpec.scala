@@ -1,10 +1,11 @@
 package graft
 
-import graft.multimodal.{MediaMeta, MediaRow, Multimodal}
+import graft.multimodal.{MediaCorpus, MediaMeta, MediaRow, Multimodal}
 
 class MultimodalSpec extends SparkSpec {
 
-  private lazy val media = Multimodal.syntheticMedia(spark, 150)
+  private lazy val media =
+    MediaCorpus.planted(spark, 150, 1)(MediaCorpus.mixed)
 
   test("featurize: deterministic features, right dim, batch loop covers all rows") {
     val a = Multimodal.featurize(media, dim = 16, batchSize = 7).collect()
@@ -199,7 +200,7 @@ class MultimodalSpec extends SparkSpec {
     // the q_image_phash_dedup fixture EXACTLY: if any two distinct
     // contents come within the query's maxHamming=4, the driver's
     // oracle would break — this test pins the safety margin
-    val corpus = Multimodal.syntheticImageCorpus(spark, 60, 3)
+    val corpus = MediaCorpus.planted(spark, 60, 3)(MediaCorpus.png)
     val hashes = Multimodal.imageHashes(corpus).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     val byContent = hashes.groupBy(_._1 % 60)
@@ -214,7 +215,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("imageNearDuplicates finds exactly the planted content groups") {
-    val corpus = Multimodal.syntheticImageCorpus(spark, 20, 3)
+    val corpus = MediaCorpus.planted(spark, 20, 3)(MediaCorpus.png)
     val pairs = Multimodal.imageNearDuplicates(corpus, maxHamming = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = (for {
@@ -226,7 +227,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("audio fingerprint: gain change moves few bits, different " +
       "melody many; planted corpus margin holds (oracle guard)") {
-    val corpus = Multimodal.syntheticAudioCorpus(spark, 40, 3)
+    val corpus = MediaCorpus.planted(spark, 40, 3)(MediaCorpus.tonesWav)
     val rows = corpus.collect()
     // copies are sample-identical -> identical fingerprints
     val fps = rows.map(r =>
@@ -268,7 +269,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("video corpus: copies collide, distinct contents far (oracle guard)") {
-    val corpus = Multimodal.syntheticVideoCorpus(spark, 30, 3)
+    val corpus = MediaCorpus.planted(spark, 30, 3)(MediaCorpus.mjpeg)
     val fps = Multimodal.videoHashes(corpus).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0L until 30L).foreach(c =>
@@ -290,22 +291,22 @@ class MultimodalSpec extends SparkSpec {
   test("corrupt payloads are skipped, not fatal, in all hash paths") {
     import spark.implicits._
     val junk = Array.fill[Byte](64)(0x5A)
-    val img = Multimodal.syntheticImageCorpus(spark, 3, 1).collect()
+    val img = MediaCorpus.planted(spark, 3, 1)(MediaCorpus.png).collect()
     val mixed = spark.createDataset(
       img.toSeq :+ MediaRow(99L, "image", junk, MediaMeta(0, 0, 0, 1)))
     assert(Multimodal.imageHashes(mixed).count() == 3)
-    val aud = Multimodal.syntheticAudioCorpus(spark, 3, 1).collect()
+    val aud = MediaCorpus.planted(spark, 3, 1)(MediaCorpus.tonesWav).collect()
     val mixedA = spark.createDataset(
       aud.toSeq :+ MediaRow(99L, "audio", junk, MediaMeta(0, 0, 0, 1)))
     assert(Multimodal.audioHashes(mixedA).count() == 3)
-    val vid = Multimodal.syntheticVideoCorpus(spark, 3, 1).collect()
+    val vid = MediaCorpus.planted(spark, 3, 1)(MediaCorpus.mjpeg).collect()
     val mixedV = spark.createDataset(
       vid.toSeq :+ MediaRow(99L, "video", junk, MediaMeta(0, 0, 0, 1)))
     assert(Multimodal.videoHashes(mixedV).count() == 3)
   }
 
   test("audioNearDuplicates finds exactly the planted content groups") {
-    val corpus = Multimodal.syntheticAudioCorpus(spark, 15, 3)
+    val corpus = MediaCorpus.planted(spark, 15, 3)(MediaCorpus.tonesWav)
     val pairs = Multimodal.audioNearDuplicates(corpus, maxHamming = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = (for {
@@ -317,7 +318,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("constellation matching catches time-offset copies the ZCR " +
       "fingerprint misses; chance collisions stay far below the gate") {
-    val corpus = Multimodal.syntheticShiftedAudioCorpus(spark, 20, 10)
+    val corpus = MediaCorpus.offset(spark, 20, 10,
+      base = 1000)(MediaCorpus.delayedWav(noiseLsb = 0))
     val planted = (0L until 10L).map(c => (c, c + 1000L)).toSet
     // the ZCR profile cannot see a 16-hop delay at any useful radius
     val zcr = Multimodal.audioNearDuplicates(corpus, maxHamming = 4)
@@ -339,7 +341,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("videoSequenceMatches catches intro-prepended copies the " +
       "middle-frame fingerprint misses; probe form agrees") {
-    val corpus = Multimodal.syntheticShiftedVideoCorpus(spark, 12, 6)
+    val corpus = MediaCorpus.offset(spark, 12, 6,
+      base = 1000)(MediaCorpus.shiftedMjpeg)
     val planted = (0L until 6L).map(c => (c, c + 1000L)).toSet
     // middle-frame fingerprint: shifted middle lands on a different
     // source frame — no pair at any useful radius
@@ -364,8 +367,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("constellation matching survives sample noise on the copies " +
       "(re-encode stand-in: spectral peaks outlive ±1% LSB noise)") {
-    val noisy = Multimodal.syntheticShiftedAudioCorpus(spark, 12, 6,
-      noiseLsb = 300)
+    val noisy = MediaCorpus.offset(spark, 12, 6,
+      base = 1000)(MediaCorpus.delayedWav(noiseLsb = 300))
     val planted = (0L until 6L).map(c => (c, c + 1000L)).toSet
     val got = Multimodal.audioConstellationMatches(noisy, minVotes = 100)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
@@ -377,8 +380,8 @@ class MultimodalSpec extends SparkSpec {
   test("ratio constellation primitives: event bins run-compress, " +
       "landmark hash sets survive a resample, match-frac separates " +
       "identical from unrelated sequences") {
-    val corpus = Multimodal.syntheticResampledAudioCorpus(spark,
-      nContents = 3, nResampled = 3).collect()
+    val corpus = MediaCorpus.offset(spark, nContents = 3, nCopies = 3,
+      base = 2000)(MediaCorpus.resampledWav).collect()
       .map(r => r.media_id -> r.bytes).toMap
     // eventBins: the run-compressed peak sequence is far shorter than
     // the frame count and has no adjacent repeats
@@ -414,8 +417,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("ratio constellation catches resampled copies the absolute-bin " +
       "landmarks miss; verify stage separates chance candidates") {
-    val corpus = Multimodal.syntheticResampledAudioCorpus(spark,
-      nContents = 20, nResampled = 10)
+    val corpus = MediaCorpus.offset(spark, nContents = 20, nCopies = 10,
+      base = 2000)(MediaCorpus.resampledWav)
     val planted = (0L until 10L).map(c => (c, c + 2000L)).toSet
     // absolute-bin family: a 1.1x resample scales every peak bin and
     // frame delta, so NO planted pair reaches even the diffuse chance
@@ -638,7 +641,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("audioConstellationProbeIndex: batch vs persisted landmark " +
       "index finds exactly the planted delayed copies") {
-    val corpus = Multimodal.syntheticShiftedAudioCorpus(spark, 20, 10)
+    val corpus = MediaCorpus.offset(spark, 20, 10,
+      base = 1000)(MediaCorpus.delayedWav(noiseLsb = 0))
     val index = Multimodal.audioConstellationHashes(
       corpus.filter(_.media_id < 1000L))
     val batch = corpus.filter(_.media_id >= 1000L)
@@ -743,8 +747,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("EXIF image corpus: planted rotated copies collide at Hamming " +
       "0 (lossless PNG leg), distinct contents stay far") {
-    val corpus = Multimodal.syntheticImageCorpusExif(spark,
-      nContents = 8, copies = 3)
+    val corpus = MediaCorpus.planted(spark, nContents = 8,
+      copies = 3)(MediaCorpus.exifPng)
     val hashes = Multimodal.imageHashes(corpus).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(hashes.size == 24)

@@ -1093,7 +1093,7 @@ class StreamingSpec extends SparkSpec {
 
   test("mediaSequenceIngest: delayed audio copies rejected across AND " +
       "within batches; index persists, history never re-decoded") {
-    import graft.multimodal.{MediaRow, Multimodal}
+    import graft.multimodal.{MediaCorpus, MediaRow, Multimodal}
     import graft.streaming.IngestPipeline
     val inDir = tmpDir()
     val ckDir = tmpDir()
@@ -1104,7 +1104,8 @@ class StreamingSpec extends SparkSpec {
       "meta STRUCT<width INT, height INT, sampleRate INT, nFrames INT>"
     def stream() = spark.readStream.schema(mediaSchema).parquet(inDir)
       .as[MediaRow]
-    val all = Multimodal.syntheticShiftedAudioCorpus(spark, 8, 6)
+    val all = MediaCorpus.offset(spark, 8, 6,
+      base = 1000)(MediaCorpus.delayedWav(noiseLsb = 0))
       .collect().map(r => r.media_id -> r).toMap
     // wave 1: originals 0-3, PLUS a within-batch delayed copy of 2
     // (id 1002) — only 0-3 may land
@@ -1131,7 +1132,7 @@ class StreamingSpec extends SparkSpec {
 
   test("mediaSequenceIngest composes with RATIO hashes: resampled " +
       "re-uploads rejected at the gate, novels admitted") {
-    import graft.multimodal.{MediaRow, Multimodal}
+    import graft.multimodal.{MediaCorpus, MediaRow, Multimodal}
     import graft.streaming.IngestPipeline
     val inDir = tmpDir()
     val ckDir = tmpDir()
@@ -1142,7 +1143,8 @@ class StreamingSpec extends SparkSpec {
       "meta STRUCT<width INT, height INT, sampleRate INT, nFrames INT>"
     def stream() = spark.readStream.schema(mediaSchema).parquet(inDir)
       .as[MediaRow]
-    val all = Multimodal.syntheticResampledAudioCorpus(spark, 8, 6)
+    val all = MediaCorpus.offset(spark, 8, 6,
+      base = 2000)(MediaCorpus.resampledWav)
       .collect().map(r => r.media_id -> r).toMap
     // minVotes 60: planted ratio votes measured 85-113 on this fixture
     // class, chance <= 36 — the vote gate alone separates here (the
